@@ -119,16 +119,12 @@ class Engine:
         # live-statement registry backing system.processes
         # (processes_table.rs:27 keeps a ProcessInfo per running query)
         self._live: dict[str, dict] = {}
-        # ring buffer backing system.tracing (tracing_table.rs:26 reads
-        # structured log spans; here: one record per executed statement)
+        # one StatementRecord per executed statement, backing both
+        # system.query_log and system.tracing (which derives its
+        # bunyan fields from each record at read time)
         import collections
 
-        self._trace: collections.deque = collections.deque(maxlen=512)
-        # structured completed-statement history backing
-        # system.query_log (extension past the reference's system set —
-        # ClickHouse-style; the tracing buffer keeps the reference's
-        # bunyan-line parity, this one keeps typed fields)
-        self._query_log: collections.deque = collections.deque(maxlen=4096)
+        self._statements: collections.deque = collections.deque(maxlen=4096)
         # cluster-membership metadata (clusters/cluster.rs:23-27),
         # mutated by the HTTP API and read by system.clusters; lives
         # in core so the engine never imports the servers layer
@@ -353,32 +349,18 @@ class Engine:
             self._trace_record(pid, s, time.time() - t0, state)
 
     def _trace_record(self, pid: str, query: str, dur_s: float, state: str) -> None:
-        """Append one bunyan-style record to the system.tracing ring
-        buffer — field parity with tracing_table.rs:33-41 (v, name,
-        msg, level, hostname, pid, time); level 20/50 matches the
-        sample line's bunyan numbering (20=debug, 50=error)."""
+        """Append the statement's record to the history that
+        system.query_log and system.tracing read."""
         from datetime import datetime, timezone
 
-        now = datetime.now(timezone.utc).isoformat()
-        self._trace.append(
-            {
-                "v": 0,
-                "name": "fuse-query-spark",
-                "msg": f"{state} in {dur_s * 1000:.3f}ms: {query[:200]}",
-                "level": 50 if state == "Error" else 20,
-                "hostname": "localhost",
-                "pid": int(pid),
-                "time": now,
-            }
-        )
-        self._query_log.append(
-            {
-                "query_id": int(pid),
-                "query": query,
-                "state": state,
-                "duration_ms": round(dur_s * 1000, 3),
-                "event_time": now,
-            }
+        self._statements.append(
+            systbl.StatementRecord(
+                int(pid),
+                query,
+                state,
+                round(dur_s * 1000, 3),
+                datetime.now(timezone.utc).isoformat(),
+            )
         )
 
     def cancel(self, pid: str) -> bool:
@@ -1415,11 +1397,11 @@ class Engine:
             ),
             "contributors": lambda: systbl.contributors_table(self.spark),
             "clusters": lambda: systbl.clusters_table(self.spark, self.cluster),
-            "tracing": lambda: systbl.tracing_table(self.spark, self._trace),
+            "tracing": lambda: systbl.tracing_table(self.spark, self._statements),
             "metrics": lambda: systbl.metrics_table(self.spark),
             "parts": lambda: systbl.parts_table(self.spark, self.catalog),
             "columns": lambda: systbl.columns_table(self.spark, self.catalog),
-            "query_log": lambda: systbl.query_log_table(self.spark, self._query_log),
+            "query_log": lambda: systbl.query_log_table(self.spark, self._statements),
         }
         if name not in factories:
             raise UnknownTable(f"Unknown system table: '{name}'")

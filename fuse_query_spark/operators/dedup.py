@@ -22,6 +22,7 @@ from fuse_query_spark.operators.text import (
     shingles_from_tokens,
     tokens,
 )
+from fuse_query_spark.sources.tables import spread
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:
@@ -46,33 +47,13 @@ def _release_local_checkpoint(df: DataFrame) -> None:
         pass  # GC/ContextCleaner fallback — never fail the query
 
 
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """Repartition before compute-heavy per-row work. Parquet scan
-    partitioning is byte-based (maxPartitionBytes), which under-splits
-    small-but-compute-dense inputs (a 1.5 MB documents file is one
-    partition, but shingling+hashing it is minutes of CPU). Hashing on
-    the id key keeps the later groupBy co-partitioned.
-
-    Gated on the planned split count (r12 verdict finding #2): when
-    the input already has >= defaultParallelism partitions (the
-    100 TB case — thousands of natural scan splits), an unconditional
-    repartition-to-cores would COALESCE it into giant partitions
-    (guide §5 spill risk), so return it untouched. Callers pass
-    near-scan projections (no upstream exchange), so `.rdd` here
-    plans but never executes a stage."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target, key)
-
-
 def _shingle_table(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
     """(_id, _sh) with the token array materialized BELOW the exchange:
     the shuffle writes token arrays, so the shingle lambda above it
     reads a materialized array instead of re-splitting the text per
     element (see shingles_from_tokens)."""
     tok = df.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_toks"))
-    tok = _spread(tok, "_id")
+    tok = spread(tok, "_id")
     return tok.select("_id", shingles_from_tokens(F.col("_toks"), n).alias("_sh"))
 
 
@@ -343,7 +324,7 @@ def simhash(
     r8 — bits=64 crashed at plan build with an opaque lit() error)."""
     if not 1 <= bits <= 63:
         raise ValueError(f"simhash bits must be in [1, 63], got {bits}")
-    ex = _spread(df, id_col).select(id_col, F.explode(tokens(text_col)).alias("_t")).withColumn(
+    ex = spread(df, id_col).select(id_col, F.explode(tokens(text_col)).alias("_t")).withColumn(
         "_h", hasher(F.col("_t"))
     )
     votes = [
@@ -476,7 +457,7 @@ def duplicated_spans(
     from fuse_query_spark.operators.text import ngrams_from_tokens
 
     tok = df.select(F.col(id_col).alias("_id"), tokens(text_col).alias("_toks"))
-    tok = _spread(tok, "_id")
+    tok = spread(tok, "_id")
     g = tok.select(
         "_id", F.explode(ngrams_from_tokens(F.col("_toks"), k)).alias("_g")
     ).select("_id", F.xxhash64("_g").alias("_h"))

@@ -153,10 +153,8 @@ def _fuse_or_map(blobs: DataFrame, gen, schema: str) -> DataFrame:
     producer's batch transform when blobs carries the fusion tag (see
     _tagged_map). The result is tagged again, so 3-stage chains
     (synthesize -> decode -> stats) collapse to one Python stage."""
-    import os as _os
-
     tag = getattr(blobs, "_fq_fuse", None)
-    if tag is None or _os.environ.get("FQ_FUSE_DISABLE"):  # measurement kill-switch
+    if tag is None:
         return _tagged_map(blobs, gen, schema)
     src, prod = tag
 

@@ -378,7 +378,7 @@ def dsir_select(
 
     from pyspark.sql import Window
 
-    from fuse_query_spark.operators.dedup import _spread
+    from fuse_query_spark.sources.tables import spread
 
     # r12 front-end (A/B-adjudicated over four formulations,
     # OPTIMIZATION_r12.md "dsir re-measure"): spread + checkpoint the
@@ -421,7 +421,7 @@ def dsir_select(
     ) >= stop_frac
     base = base.select(id_col, text_col, is_target.alias("_tgt"))
     if base.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
-        d2 = _spread(base, id_col).localCheckpoint(eager=True)
+        d2 = spread(base, id_col).localCheckpoint(eager=True)
     else:
         d2 = base
     carry = [id_col, "_tgt"]

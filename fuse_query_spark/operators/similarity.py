@@ -541,61 +541,21 @@ def random_projection(
     (1/sqrt(out_dim)) * sum_i(+-vec[i]) with deterministic Rademacher
     signs — the cheap pre-step that shrinks ANN/cluster work by
     in_dim/out_dim while preserving pairwise distances within
-    ~1/sqrt(out_dim). Pure Column arithmetic, scan-side, no shuffle,
-    no UDF; each output is a fixed left-associated sum so the result
-    is BIT-EXACT against any engine that evaluates the same formula
-    (and 1/sqrt(16)=0.25 is an exact power of two).
+    ~1/sqrt(out_dim). One scan-side mapInArrow stage, no shuffle: the
+    Catalyst Column form of this fold (16 aggregate/zip_with lambdas
+    over a 64-literal sign array) put ~1k nodes through planning on
+    every run, ~1 s per invocation, while the math itself on the sf0.1
+    corpus (2k rows x 1024 flops) is microseconds (guide §4.2).
+
+    BIT-exactness contract (the oracle hashes doubles exactly): acc
+    starts at 0.0 and adds v[i]*s[i] in index order, float64
+    throughout — the same left-associated sum the DuckDB oracle
+    expression evaluates. x*(+-1.0), the power-of-two scale
+    1/sqrt(16) and float32->float64 widening are all exact. A row
+    whose vector is NULL, has length != in_dim, or holds a NULL
+    element projects to all-NULL.
 
     Returns the input's id column plus proj0..proj{out_dim-1}."""
-    import os
-
-    if not os.environ.get("FQ_RP_ARROW_DISABLE"):
-        return _random_projection_arrow(df, in_dim, out_dim, vec_col, id_col)
-    signs = _rademacher_signs(in_dim, out_dim)
-    scale = 1.0 / (out_dim**0.5)
-    # zip_with + aggregate compiles to a loop (small codegen) instead of
-    # a 1024-node expression tree (18 s of compile); the fold keeps the
-    # same left-associated sum order, and x*(+-1.0) is exact, so the
-    # result stays bit-identical to the unrolled form.
-    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    cols = []
-    for j in range(out_dim):
-        sgn = F.array(*[F.lit(float(signs[i][j])) for i in range(in_dim)])
-        acc = F.aggregate(
-            F.zip_with(vec_d, sgn, lambda x, s: x * s),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        cols.append((acc * F.lit(scale)).alias(f"proj{j}"))
-    return df.select(id_col, *cols)
-
-
-def _random_projection_arrow(
-    df: DataFrame,
-    in_dim: int,
-    out_dim: int,
-    vec_col: str,
-    id_col: str,
-) -> DataFrame:
-    """random_projection's Arrow/NumPy body (guide §4.2): the JVM
-    Column form above is PLANNING-bound, not data-bound — 16
-    aggregate/zip_with lambdas over a 64-literal sign array put ~1k
-    nodes through Catalyst on every run, which costs ~1 s per
-    invocation while the actual math on the sf0.1 corpus (2k rows x
-    1024 flops) is microseconds. One mapInArrow stage with a trivial
-    plan does the same fold in NumPy.
-
-    BIT-exactness contract (the oracle hashes doubles exactly): the
-    accumulation is an explicit per-input-index loop — acc starts at
-    0.0 and adds v[i]*s[i] in index order, float64 throughout — i.e.
-    the SAME left-associated sum the JVM fold and the DuckDB oracle
-    expression evaluate; x*(+-1.0) and the final power-of-two scale
-    multiply are exact, and float32->float64 widening is exact.
-    NULL semantics mirror zip_with/aggregate: any row whose vector is
-    NULL, has length != in_dim, or contains a NULL element projects to
-    all-NULL (the JVM fold yields NULL for exactly those rows).
-    FQ_RP_ARROW_DISABLE=1 restores the JVM Column path (measurement
-    kill-switch, same class as FQ_SPREAD_DISABLE/FQ_FUSE_DISABLE)."""
     import numpy as np
 
     signs = _rademacher_signs(in_dim, out_dim)
@@ -616,41 +576,26 @@ def _random_projection_arrow(
             n = batch.num_rows
             if n == 0:
                 continue
-            flat = vec.flatten()
-            offs = np.asarray(vec.offsets)
-            lens = np.diff(offs)
-            clean = (
-                vec.null_count == 0
-                and flat.null_count == 0
-                and bool((lens == in_dim).all())
-            )
+            # offsets are absolute into vec.values, sliced arrays included
+            offs = np.asarray(vec.offsets, dtype=np.int64)
+            valid = np.diff(offs) == in_dim
+            if vec.null_count:
+                valid &= vec.is_valid().to_numpy(zero_copy_only=False)
+            values = vec.values
+            if values.null_count:
+                seen = np.concatenate(
+                    ([0], np.cumsum(values.is_null().to_numpy(zero_copy_only=False)))
+                )
+                valid &= seen[offs[1:]] == seen[offs[:-1]]
+            mat = np.zeros((n, in_dim), dtype=np.float64)
+            flat = values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+            mat[valid] = flat[offs[:-1][valid, None] + np.arange(in_dim)]
             out = np.zeros((n, out_dim), dtype=np.float64)
-            if clean:
-                vals = flat.to_numpy(zero_copy_only=False).astype(np.float64)
-                mat = vals.reshape(n, in_dim)
-                # index-order accumulation == the JVM/oracle fold
-                for i in range(in_dim):
-                    out += mat[:, i : i + 1] * sign_rows[i]
-                out *= scale
-                cols = [pa.array(out[:, j], type=pa.float64()) for j in range(out_dim)]
-            else:
-                valid = np.zeros(n, dtype=bool)
-                rows = vec.to_pylist()
-                for r, v in enumerate(rows):
-                    if v is None or len(v) != in_dim or any(x is None for x in v):
-                        continue
-                    valid[r] = True
-                    acc = np.zeros(out_dim, dtype=np.float64)
-                    for i, x in enumerate(v):
-                        acc += np.float64(np.float32(x)) * sign_rows[i]
-                    out[r] = acc * scale
-                cols = [
-                    pa.array(
-                        [out[r, j] if valid[r] else None for r in range(n)],
-                        type=pa.float64(),
-                    )
-                    for j in range(out_dim)
-                ]
+            # index-order accumulation == the oracle fold
+            for i in range(in_dim):
+                out += mat[:, i : i + 1] * sign_rows[i]
+            out *= scale
+            cols = [pa.array(out[:, j], mask=~valid) for j in range(out_dim)]
             yield pa.RecordBatch.from_arrays([ids] + cols, schema=_rp_arrow_schema(ids.type, id_col, out_dim))
 
     return narrow.mapInArrow(project, out_schema)

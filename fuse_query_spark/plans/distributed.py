@@ -52,7 +52,7 @@ rewrite) two-phase the same way with no aggregate merges — the
 reference stages GroupBy partial/final regardless of aggregate
 presence (r12). A NO-AGGREGATE
 ``SELECT <exprs> FROM <source> [WHERE …] ORDER BY … LIMIT k`` (k ≤
-FQ_DIST_TOPK_MAX) distributes as the reference's Convergent stage
+DIST_TOPK_MAX_ROWS) distributes as the reference's Convergent stage
 (optimizer_scatters.rs:29-315 inserts one before sort/limit
 pipelines; README.md:79 is the headline shape): each peer runs the
 top-k over its slice — Spark compiles the partial to
@@ -144,7 +144,7 @@ _RESID_AGG = re.compile(
 # statement LOCALLY (Spark's own partial distinct aggregation has no
 # such bound). 4M bigints ≈ 32MB of Arrow per group per peer — the same
 # order as the broadcast gate.
-DISTINCT_STATE_MAX_ELEMS = int(os.environ.get("FQ_DISTINCT_STATE_MAX", 4_000_000))
+DISTINCT_STATE_MAX_ELEMS = 4_000_000
 DISTINCT_OVERFLOW_MARKER = "FQ_DISTINCT_STATE_OVERFLOW"
 
 # sort/limit converge cap (judge r11 ask #3): the coordinator's gather
@@ -152,7 +152,7 @@ DISTINCT_OVERFLOW_MARKER = "FQ_DISTINCT_STATE_OVERFLOW"
 # ships its own top-k partial — optimizer_scatters.rs:29-315 stages a
 # Convergent merge before sort/limit); a k beyond this bound would turn
 # the converge into a full gather, so the statement stays local instead
-DIST_TOPK_MAX_ROWS = int(os.environ.get("FQ_DIST_TOPK_MAX", 1_000_000))
+DIST_TOPK_MAX_ROWS = 1_000_000
 
 # clause keywords the scanner recognizes at top level (depth 0,
 # outside string literals); the set-op keywords only ever force the

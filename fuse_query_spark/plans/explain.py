@@ -54,8 +54,8 @@ def shuffle_count(df: DataFrame, include_repartition: bool = True) -> int:
 
     include_repartition=False excludes exchanges originating from an
     EXPLICIT repartition (REPARTITION_BY_NUM / REPARTITION_BY_COL —
-    the r12 scale-adaptive scan spread, sources/tables.py:
-    spread_table, which no-ops past the file-size gate at scale). The
+    the r12 scale-adaptive scan spread, sources/tables.py:spread,
+    which no-ops past its split-count gate at scale). The
     shuffle-free / bounded-shuffle plan gates assert the absence of
     ACCIDENTAL exchanges; an intentional spread of a one-row-group
     scan is not in that class."""

@@ -6,7 +6,20 @@ plan_parser.rs:105-127).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
+
+
+class StatementRecord(NamedTuple):
+    """One executed statement, as the engine records it on exit; the
+    single source of system.query_log and system.tracing rows."""
+
+    query_id: int
+    query: str
+    state: str
+    duration_ms: float
+    event_time: str
 
 
 def local_values_df(spark: SparkSession, rows, cols) -> DataFrame:
@@ -82,16 +95,12 @@ _QUERY_LOG_SCHEMA = (
 )
 
 
-def query_log_table(spark: SparkSession, records=None) -> DataFrame:
+def query_log_table(spark: SparkSession, records) -> DataFrame:
     """system.query_log: typed completed-statement history (query_id,
     query, state, duration_ms, event_time) — ClickHouse-style extension
-    past the reference's system set; same ring-buffer discipline as
-    system.tracing (engine.py Engine._trace_record appends both)."""
-    rows = [
-        (r["query_id"], r["query"], r["state"], r["duration_ms"], r["event_time"])
-        for r in list(records or [])
-    ]
-    return spark.createDataFrame(rows, _QUERY_LOG_SCHEMA)
+    past the reference's system set. list() snapshots the engine's
+    deque against concurrent appends."""
+    return spark.createDataFrame(list(records), _QUERY_LOG_SCHEMA)
 
 
 def databases_table(spark: SparkSession, catalog) -> DataFrame:
@@ -198,20 +207,25 @@ _TRACING_SCHEMA = (
 )
 
 
-def tracing_table(spark: SparkSession, records=None) -> DataFrame:
-    """system.tracing — LIVE ring buffer of executed statements with
-    timings, field-parity with tracing_table.rs:33-41 (the reference
-    reads bunyan-style structured log lines: v/name/msg/level/
-    hostname/pid/time; its sample row is a per-operator cost span).
-    The engine appends one record per statement (Engine._trace_record);
-    list() snapshots the deque against concurrent appends."""
+def tracing_table(spark: SparkSession, records) -> DataFrame:
+    """system.tracing — the executed-statement history rendered as
+    bunyan-style log lines, field-parity with tracing_table.rs:33-41
+    (v/name/msg/level/hostname/pid/time; the reference's sample row is
+    a per-operator cost span). Level 20/50 follows the sample line's
+    bunyan numbering (20=debug, 50=error)."""
     rows = [
-        (r["v"], r["name"], r["msg"], r["level"], r["hostname"], r["pid"], r["time"])
-        for r in list(records or [])
+        (
+            0,
+            "fuse-query-spark",
+            f"{r.state} in {r.duration_ms:.3f}ms: {r.query[:200]}",
+            50 if r.state == "Error" else 20,
+            "localhost",
+            r.query_id,
+            r.event_time,
+        )
+        for r in list(records)
     ]
-    return spark.createDataFrame(rows, _TRACING_SCHEMA) if rows else spark.createDataFrame(
-        [], _TRACING_SCHEMA
-    )
+    return spark.createDataFrame(rows, _TRACING_SCHEMA)
 
 
 def metrics_table(spark: SparkSession) -> DataFrame:

@@ -1926,7 +1926,7 @@ class TestDistributedSortConverge:
             "SELECT row_number() OVER (ORDER BY number) AS r FROM numbers(1000000) ORDER BY r LIMIT 5",
             # star expansion has no item names to rename
             "SELECT * FROM numbers(1000000) ORDER BY number LIMIT 5",
-            # k beyond the converge cap (FQ_DIST_TOPK_MAX default 1M)
+            # k beyond the converge cap (DIST_TOPK_MAX_ROWS, 1M)
             "SELECT number FROM numbers_mt(100000000) ORDER BY number LIMIT 2000000",
             # LIMIT n BY form (OFFSET distributes since r12)
             "SELECT number FROM numbers(1000000) ORDER BY number LIMIT 2 BY number",

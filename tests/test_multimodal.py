@@ -867,6 +867,32 @@ class TestJpegProgressiveDecode:
             assert (r["width"], r["height"], r["pixel_sum"]) == (8 * bw, 8 * bh, want)
 
 
+def test_python_stage_fusion_matches_chained_plan(spark, sf_dir):
+    """Differential pin for multimodal stage fusion: the fused
+    synthesize->stats chain (one MapInPandas, as the registry builds
+    it) returns the same rows as the chained plan, which a
+    select("*") between the stages forces by dropping the fusion tag."""
+    import re
+
+    from fuse_query_spark.operators.multimodal import (
+        image_pixel_stats,
+        synthesize_jpeg_progressive_blobs,
+    )
+    from fuse_query_spark.sources.tables import spread_table
+
+    docs = spread_table(spark, sf_dir, "documents", "doc_id")
+    fused = image_pixel_stats(synthesize_jpeg_progressive_blobs(docs))
+    chained = image_pixel_stats(synthesize_jpeg_progressive_blobs(docs).select("*"))
+
+    def python_stages(df):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return len(re.findall(r"\bMapInPandas\b", plan))
+
+    assert python_stages(fused) == 1
+    assert python_stages(chained) > 1
+    assert sorted(fused.collect()) == sorted(chained.collect())
+
+
 class TestJpegArithmeticDecode:
     """The T.81 Annex E QM coder + F.2 conditioning models (r7) —
     self-consistency, Huffman-twin equality, and (when a C toolchain

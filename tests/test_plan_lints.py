@@ -257,3 +257,23 @@ def test_driver_priority_schemas_atomic(spark):
         "(explode or cast at the boundary):\n"
         + "\n".join(f"  {n}: {c}" for n, c in sorted(failures.items()))
     )
+
+
+def test_package_reads_only_deployment_env():
+    """No env-var knobs in the package: every line under
+    fuse_query_spark/ that touches os.environ or getenv names one of
+    the deployment settings. A behaviour switch belongs in code (one
+    production path) or in an engine setting visible in
+    system.settings."""
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "fuse_query_spark"
+    allowed = re.compile(r"[\"'](SPARK_GRAFT_CPUS|SPARK_GRAFT_DRIVER_MEM)[\"']")
+    bad = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"os\.environ|getenv", line) and not allowed.search(line)
+    ]
+    assert bad == []

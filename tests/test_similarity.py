@@ -13,6 +13,30 @@ from fuse_query_spark.operators.similarity import (
 from fuse_query_spark.sources.tables import table
 
 
+def _jvm_fold_projection(df, in_dim, out_dim, vec_col="embedding", id_col="vec_id"):
+    """Reference form of random_projection: the JVM Column fold the
+    Arrow body replaced, kept as the bit-exactness oracle."""
+    from fuse_query_spark.operators.similarity import _rademacher_signs
+
+    signs = _rademacher_signs(in_dim, out_dim)
+    scale = 1.0 / (out_dim**0.5)
+    # zip_with + aggregate compiles to a loop (small codegen) instead of
+    # a 1024-node expression tree (18 s of compile); the fold keeps the
+    # same left-associated sum order, and x*(+-1.0) is exact, so the
+    # result stays bit-identical to the unrolled form.
+    vec_d = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    cols = []
+    for j in range(out_dim):
+        sgn = F.array(*[F.lit(float(signs[i][j])) for i in range(in_dim)])
+        acc = F.aggregate(
+            F.zip_with(vec_d, sgn, lambda x, s: x * s),
+            F.lit(0.0),
+            lambda a, x: a + x,
+        )
+        cols.append((acc * F.lit(scale)).alias(f"proj{j}"))
+    return df.select(id_col, *cols)
+
+
 def test_cosine_expression(spark):
     df = spark.createDataFrame([(1, [1.0, 0.0], [0.5, 0.5])], ["id", "a", "b"])
     val = df.select(cosine(F.col("a"), F.col("b")).alias("c")).first()["c"]
@@ -202,37 +226,46 @@ class TestRandomProjection:
         assert a == b
 
     def test_arrow_body_bit_identical_to_jvm_fold(self, spark, sf_dir):
-        """r13: random_projection's Arrow/NumPy body must be BIT-exact
+        """random_projection's Arrow/NumPy body must be BIT-exact
         against the JVM Column fold it replaced (the oracle hashes
         doubles exactly), including the NULL semantics for NULL /
         short / long / NULL-element vectors, which the JVM zip_with +
-        aggregate fold projects to all-NULL."""
-        import os
-
+        aggregate fold projects to all-NULL. Odd rows share one Arrow
+        batch with clean ones (coalesce(1)), for array<float> and for
+        array<double> whose values float32 cannot represent."""
         from pyspark.sql import Row
 
         from fuse_query_spark.operators.similarity import random_projection
         from fuse_query_spark.sources.tables import table
 
-        emb = table(spark, sf_dir, "embeddings")
-        odd = spark.createDataFrame(
-            [
-                Row(vec_id=1, embedding=[float(i) for i in range(64)]),
-                Row(vec_id=2, embedding=None),
-                Row(vec_id=3, embedding=[1.0, 2.0]),
-                Row(vec_id=4, embedding=[float(i) for i in range(63)] + [None]),
-                Row(vec_id=5, embedding=[float(i) for i in range(65)]),
-            ],
-            schema="vec_id bigint, embedding array<float>",
-        )
-        for df in (emb, odd):
-            os.environ["FQ_RP_ARROW_DISABLE"] = "1"
-            try:
-                jvm = random_projection(df, 64, 16).orderBy("vec_id").collect()
-            finally:
-                del os.environ["FQ_RP_ARROW_DISABLE"]
+        def check(df):
+            jvm = _jvm_fold_projection(df, 64, 16).orderBy("vec_id").collect()
             arrow = random_projection(df, 64, 16).orderBy("vec_id").collect()
             assert jvm == arrow
+            return arrow
+
+        emb = table(spark, sf_dir, "embeddings")
+        check(emb)
+        for elem in ("float", "double"):
+            odd = spark.createDataFrame(
+                [
+                    Row(vec_id=-1, embedding=[0.1 * i for i in range(64)]),
+                    Row(vec_id=-2, embedding=None),
+                    Row(vec_id=-3, embedding=[1.0, 2.0]),
+                    Row(vec_id=-4, embedding=[0.1 * i for i in range(63)] + [None]),
+                    Row(vec_id=-5, embedding=[0.1 * i for i in range(65)]),
+                    Row(vec_id=-6, embedding=[0.1 * i - 3.0 for i in range(64)]),
+                ],
+                schema=f"vec_id bigint, embedding array<{elem}>",
+            )
+            mixed = (
+                emb.select("vec_id", F.col("embedding").cast(f"array<{elem}>").alias("embedding"))
+                .limit(30)
+                .unionByName(odd)
+                .coalesce(1)
+            )
+            nulls = [r["vec_id"] for r in check(mixed) if r["proj0"] is None]
+            assert sorted(nulls) == [-5, -4, -3, -2], elem
 
     def test_sign_matrix_balanced(self):
         """md5-parity signs are ~balanced (no constant row/col)."""
