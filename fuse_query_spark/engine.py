@@ -18,6 +18,7 @@ import threading
 import time
 from dataclasses import dataclass, field
 
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType, _parse_datatype_string
 
@@ -29,6 +30,7 @@ from fuse_query_spark.dialect.rewriter import (
 )
 from fuse_query_spark.errors import (
     BadArguments,
+    BadDataValueType,
     DatabaseAlreadyExists,
     QueryAborted,
     TableAlreadyExists,
@@ -38,6 +40,7 @@ from fuse_query_spark.errors import (
 )
 from fuse_query_spark.functions.registry import register_udfs
 from fuse_query_spark.sources import system_tables as systbl
+from fuse_query_spark.sources.tables import local_rows
 
 # SQL/ClickHouse type name → Spark SQL type (sql_common.rs:20-55)
 _COL_TYPES = {
@@ -86,6 +89,9 @@ class TableDef:
     data: DataFrame | None = None  # Memory engine
     view_sql: str | None = None  # View engine: the stored SELECT
     partition_by: tuple[str, ...] = ()  # file engines: hive-style layout
+    # file and Snapshot engines: (key, DataFrame) of the last resolved
+    # relation, reused while Engine._relation_key(self) is unchanged
+    relation: tuple | None = field(default=None, repr=False, compare=False)
 
 
 @dataclass
@@ -500,9 +506,7 @@ class Engine:
 
         tdef = self._snapshot_tdef(m.group(1), "VACUUM")
         deleted = snapshot_vacuum(tdef.location, int(m.group(2) or 1))
-        return self.spark.createDataFrame(
-            [(f,) for f in deleted] or [], "deleted_file STRING"
-        )
+        return local_rows(self.spark, [(f,) for f in deleted], "deleted_file STRING")
 
     def _truncate(self, s: str) -> None:
         """TRUNCATE TABLE — extension: Memory drops its rows, file
@@ -1018,7 +1022,8 @@ class Engine:
             before = len(read_manifest(tdef.location, latest_version(tdef.location))["files"])
             v = snapshot_optimize(self.spark, tdef.location, zorder_by=cols)
             after = read_manifest(tdef.location, v)
-            return self.spark.createDataFrame(
+            return local_rows(
+                self.spark,
                 [(v, before, len(after["files"]), after["operation"])],
                 "version INT, files_before INT, files_after INT, operation STRING",
             )
@@ -1185,7 +1190,7 @@ class Engine:
             finally:
                 con.close()
             view = "__fq_fs_" + re.sub(r"\W", "_", f"{qid}_{sid}_{sink}")
-            self.spark.createDataFrame(tbl).createOrReplaceTempView(view)
+            local_rows(self.spark, tbl).createOrReplaceTempView(view)
             # record for the caller (the Flight stage action) to DROP
             # after materialization: the view holds the full broadcast
             # dim in memory and its name is query-unique, so without
@@ -1308,7 +1313,7 @@ class Engine:
                 # source) that analysis now proves was genuinely
                 # referenced: surface the ORIGINAL typed error, not the
                 # generic not-found
-                for name, orig in getattr(self, "_deferred_view_errors", {}).items():
+                for name, orig in getattr(self._view_local, "deferred", {}).items():
                     if re.search(rf"`?{re.escape(name)}`?", first):
                         raise orig from e
                 raise UnknownTable(first) from e
@@ -1338,12 +1343,18 @@ class Engine:
                 text = staged + "\n\n== Local Physical Plan ==\n" + "\n".join(
                     r[0] for r in local.collect()
                 )
-                return self.spark.createDataFrame([(text,)], "plan: string")
+                return local_rows(self.spark, [(text,)], "plan: string")
         return local
 
     def _register_views(self, s: str) -> None:
         """Register any catalog/system tables the query references as
-        temp views (lazily — DataFrames are lazy, so no data moves).
+        temp views. No rows move, but resolving a table is not free:
+        a file or Snapshot table's relation is reused while its key
+        (declared schema, partition columns, a stat fingerprint of its
+        files; see _relation_key) is unchanged, so a statement over an
+        unchanged table costs one directory walk with stat and submits
+        no footer job. Remote tables re-ask the store for their parts,
+        and views re-expand over their base tables' relations.
 
         The name scan runs over the statement with string literals and
         comments STRIPPED (code-review r8: 'system.logs' inside a
@@ -1353,11 +1364,12 @@ class Engine:
         broken view's name (SELECT 1 AS v after v's base table was
         dropped) must not poison unrelated queries; if the query truly
         references the broken table, Spark's own
-        TABLE_OR_VIEW_NOT_FOUND names it."""
+        TABLE_OR_VIEW_NOT_FOUND names it. The skipped errors are kept
+        per thread, for this thread's _select_locked to re-raise."""
         scan = re.sub(r"'(?:[^']|'')*'", "''", s)  # literals
         scan = re.sub(r"/\*.*?\*/", " ", scan, flags=re.S)  # block comments
         scan = re.sub(r"--[^\n]*", " ", scan)  # line comments
-        self._deferred_view_errors = {}
+        deferred: dict[str, Exception] = {}
         for m in re.finditer(r"\bsystem\.(\w+)", scan):
             name = m.group(1).lower()
             df = self._system_table(name)
@@ -1376,12 +1388,15 @@ class Engine:
                     # broken/unreachable source (see docstring): defer —
                     # if analysis then proves the name was genuinely
                     # referenced, the ORIGINAL error surfaces
-                    self._deferred_view_errors[name] = e
+                    deferred[name] = e
                     try:
                         self.spark.catalog.dropTempView(name)
                     except Exception:
                         pass  # stale earlier registration, best-effort
                     continue
+        # assigned last: a view expanded above registered (and read)
+        # its own deferred errors through this same slot
+        self._view_local.deferred = deferred
 
     def _system_table(self, name: str) -> DataFrame | None:
         if name in ("numbers", "numbers_mt", "numbers_local"):
@@ -1426,93 +1441,139 @@ class Engine:
                 stack.discard(key)
         if tdef.engine == "Memory":
             if tdef.data is None:
-                tdef.data = self.spark.createDataFrame([], tdef.schema)
+                tdef.data = local_rows(self.spark, [], tdef.schema)
             return tdef.data
         if tdef.engine == "Null":
-            return self.spark.createDataFrame([], tdef.schema)
-        if tdef.engine == "Snapshot":
-            from fuse_query_spark.sources.snapshots import snapshot_read
-
-            return snapshot_read(self.spark, tdef.location, schema=tdef.schema)
+            return local_rows(self.spark, [], tdef.schema)
         if tdef.engine == "remote":
             # remote_table.rs read_plan: ask the store for the part
             # list, then scan the parts. Executors read the parquet
             # parts directly (the metastore/object-store split) — the
-            # HTTP hop carries only metadata, never rows.
+            # HTTP hop carries only metadata, never rows. Not cached:
+            # the store offers no cheap fingerprint of its part list.
             if self.store is None:
                 raise UnsupportedStatement(
                     f"Table '{tdef.database}.{tdef.name}' is remote but no store is attached"
                 )
             plan = self.store.read_plan(tdef.database, tdef.name)
             if not plan["parts"]:
-                return self.spark.createDataFrame([], tdef.schema)
+                return local_rows(self.spark, [], tdef.schema)
             return self.spark.read.schema(tdef.schema).parquet(*plan["parts"])
-        if tdef.engine in ("CSV", "Parquet", "JSONEachRow", "ORC", "BinaryFile"):
-            import glob as _glob
-            import os
+        if tdef.engine in ("CSV", "Parquet", "JSONEachRow", "ORC", "BinaryFile", "Snapshot"):
+            # one relation per table, reused until its key changes: the
+            # key costs one directory walk with stat (Snapshot: one
+            # manifest glob), where resolving costs a file listing, a
+            # footer-merge job and the schema-alignment projection
+            key = self._relation_key(tdef)
+            cached = tdef.relation  # one read: another thread may replace it
+            if cached is not None and cached[0] == key:
+                return cached[1]
+            # two threads missing together both resolve; either result
+            # is right for the key it is stored under
+            df = self._resolve_files(tdef, key[-1])
+            tdef.relation = (key, df)
+            return df
+        raise UnsupportedStatement(f"Unknown engine {tdef.engine}")
 
-            if tdef.location is None or (
-                not os.path.exists(tdef.location)
-                and not _glob.glob(tdef.location)  # BinaryFile allows globs
-            ):
-                # freshly created table, nothing appended yet
-                return self.spark.createDataFrame([], tdef.schema)
-            if tdef.engine == "BinaryFile":
-                # read-only ingest engine over raw files (images, audio,
-                # any blob): Spark's binaryFile source yields
-                # (path, modificationTime, length, content) with
-                # pushdown on length; the declared schema picks the
-                # subset. The multimodal operators (mapInPandas decode)
-                # consume `content` directly — blobs stream executor-
-                # side as Arrow batches, never through the driver.
-                df = self.spark.read.format("binaryFile").load(tdef.location)
-                return df.select(
-                    *[F.col(f.name).cast(f.dataType).alias(f.name) for f in tdef.schema]
-                )
-            if tdef.engine == "CSV":
-                return self.spark.read.schema(tdef.schema).csv(tdef.location, header=False)
-            if tdef.engine == "JSONEachRow":
-                if tdef.partition_by:
-                    # partition columns live in directory names, not in
-                    # the JSON documents: let discovery surface them,
-                    # then coerce everything to the declared schema
-                    df = self.spark.read.json(tdef.location)
-                    return df.select(
-                        *[
-                            F.col(f.name).cast(f.dataType).alias(f.name)
-                            for f in tdef.schema
-                        ]
-                    )
-                return self.spark.read.schema(tdef.schema).json(tdef.location)
-            if tdef.engine == "ORC":
-                # capability extension past the reference's format set
-                # (CSV/Parquet/JSON/Null/Memory) — ORC is Spark-native
-                df = self.spark.read.orc(tdef.location)
-                if tdef.schema is not None:
-                    df = self._align_to_schema(df, tdef.schema)
-                return df
-            df = self._read_parquet(
-                tdef.location,
-                table_name=tdef.name,
-                # post-ADD COLUMN, files written before and after the
-                # ALTER disagree on columns; default inference samples
-                # one footer and could drop the new column from the
-                # files that HAVE it. mergeSchema is a footer-only
-                # union (distributed, no data read).
-                merge_schema=tdef.schema is not None,
+    @staticmethod
+    def _relation_key(tdef: TableDef) -> tuple:
+        """What a file or Snapshot table's relation depends on: the
+        declared schema, the partition columns and a fingerprint of the
+        stored files — sorted (path, size, mtime_ns) of every file under
+        the location (a glob for BinaryFile), or for a Snapshot table
+        its newest manifest's version and mtime. Every write path
+        changes the fingerprint, including files written by another
+        process, so no write path has to invalidate anything."""
+        loc = tdef.location
+        files: tuple = ()
+        if tdef.engine == "Snapshot":
+            from fuse_query_spark.sources.snapshots import _manifest_path, latest_version
+
+            v = latest_version(loc)
+            if v is not None:
+                files = (v, os.stat(_manifest_path(loc, v)).st_mtime_ns)
+        elif loc is not None:
+            import glob as _glob
+
+            if os.path.isdir(loc):
+                paths = [os.path.join(d, f) for d, _, fs in os.walk(loc) for f in fs]
+            else:
+                paths = _glob.glob(loc)  # one file, or a BinaryFile glob
+            stats = []
+            for p in sorted(paths):
+                try:
+                    st = os.stat(p)
+                except FileNotFoundError:
+                    continue  # removed while walking
+                stats.append((p, st.st_size, st.st_mtime_ns))
+            files = tuple(stats)
+        return (tdef.schema, tdef.partition_by, files)
+
+    def _resolve_files(self, tdef: TableDef, files: tuple) -> DataFrame:
+        """Build the relation of a file or Snapshot table whose stored
+        files are `files` (the fingerprint part of its relation key)."""
+        if tdef.engine == "Snapshot":
+            from fuse_query_spark.sources.snapshots import snapshot_read
+
+            return snapshot_read(self.spark, tdef.location, schema=tdef.schema)
+        if not files:
+            # freshly created table, nothing appended yet
+            return local_rows(self.spark, [], tdef.schema)
+        if tdef.engine == "BinaryFile":
+            # read-only ingest engine over raw files (images, audio,
+            # any blob): Spark's binaryFile source yields
+            # (path, modificationTime, length, content) with
+            # pushdown on length; the declared schema picks the
+            # subset. The multimodal operators (mapInPandas decode)
+            # consume `content` directly — blobs stream executor-
+            # side as Arrow batches, never through the driver.
+            df = self.spark.read.format("binaryFile").load(tdef.location)
+            return df.select(
+                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in tdef.schema]
             )
-            # reader-schema coercion: the CREATE TABLE's declared types
-            # win over the file's physical types (e.g. alltypes_plain's
-            # un-annotated BYTE_ARRAY reads as BINARY but is declared
-            # varchar) — mirrors the reference's make_data_type coercion
-            # (sql_common.rs). Declared columns absent from the files
-            # null-fill and extra file columns project away: that is
-            # what makes ALTER TABLE ADD/DROP COLUMN metadata-only
-            # (parquet schema evolution — no rewrite of live data).
+        if tdef.engine == "CSV":
+            return self.spark.read.schema(tdef.schema).csv(tdef.location, header=False)
+        if tdef.engine == "JSONEachRow":
+            if tdef.partition_by:
+                # partition columns live in directory names, not in
+                # the JSON documents: let discovery surface them,
+                # then coerce everything to the declared schema
+                df = self.spark.read.json(tdef.location)
+                return df.select(
+                    *[
+                        F.col(f.name).cast(f.dataType).alias(f.name)
+                        for f in tdef.schema
+                    ]
+                )
+            return self.spark.read.schema(tdef.schema).json(tdef.location)
+        if tdef.engine == "ORC":
+            # capability extension past the reference's format set
+            # (CSV/Parquet/JSON/Null/Memory) — ORC is Spark-native
+            df = self.spark.read.orc(tdef.location)
             if tdef.schema is not None:
                 df = self._align_to_schema(df, tdef.schema)
             return df
-        raise UnsupportedStatement(f"Unknown engine {tdef.engine}")
+        df = self._read_parquet(
+            tdef.location,
+            table_name=tdef.name,
+            # post-ADD COLUMN, files written before and after the
+            # ALTER disagree on columns; default inference samples
+            # one footer and could drop the new column from the
+            # files that HAVE it. mergeSchema is a footer-only
+            # union (distributed, no data read).
+            merge_schema=tdef.schema is not None,
+        )
+        # reader-schema coercion: the CREATE TABLE's declared types
+        # win over the file's physical types (e.g. alltypes_plain's
+        # un-annotated BYTE_ARRAY reads as BINARY but is declared
+        # varchar) — mirrors the reference's make_data_type coercion
+        # (sql_common.rs). Declared columns absent from the files
+        # null-fill and extra file columns project away: that is
+        # what makes ALTER TABLE ADD/DROP COLUMN metadata-only
+        # (parquet schema evolution — no rewrite of live data).
+        if tdef.schema is not None:
+            df = self._align_to_schema(df, tdef.schema)
+        return df
 
     def _read_parquet(
         self, path: str, table_name: str | None = None, merge_schema: bool = False
@@ -1915,7 +1976,7 @@ class Engine:
         from fuse_query_spark.functions.registry import _fq_typename
 
         rows = [(f.name, _fq_typename(f.dataType.simpleString()), "NO") for f in tdef.schema]
-        return self.spark.createDataFrame(rows, "Field STRING, Type STRING, Null STRING")
+        return local_rows(self.spark, rows, "Field STRING, Type STRING, Null STRING")
 
     def _show(self, s: str):
         up = s.upper().rstrip()
@@ -1970,7 +2031,7 @@ class Engine:
                 ddl = f"CREATE TABLE {tdef.database}.{tdef.name} ({cols}) ENGINE = {tdef.engine}"
                 if tdef.partition_by:
                     ddl += f" PARTITION BY ({', '.join(tdef.partition_by)})"
-            return self.spark.createDataFrame([(tdef.name, ddl)], "Table STRING, CreateTable STRING")
+            return local_rows(self.spark, [(tdef.name, ddl)], "Table STRING, CreateTable STRING")
         raise UnsupportedStatement(f"Unsupported SHOW: {s}")
 
     # settings whose consumers need an integer; rejected at SET time
@@ -2041,17 +2102,40 @@ class Engine:
                 tuple(item.strip() for item in self._split_cols(t))
                 for t in self._split_tuples(values)
             ]
-            sub_schema = StructType(
-                [StructField(c, tdef.schema[c].dataType, True) for c in colnames]
+        else:
+            rows = [
+                tuple(self._literal_text(v) for v in self._split_cols(t))
+                for t in self._split_tuples(values)
+            ]
+        return self._append(tdef, self._coerce_literals(rows, colnames, tdef.schema))
+
+    def _coerce_literals(self, rows: list[tuple], colnames: list[str], schema: StructType) -> DataFrame:
+        """VALUES rows (one literal text or None per column) as a local
+        relation of the declared column types: the texts load as STRING
+        columns and CAST to each declared type, so coercion follows
+        Spark's cast rules (1 → DOUBLE, '2021-01-02' → DATE, and a
+        DECIMAL from the literal's digits, never through a binary
+        double). The casts fold into the local relation while the plan
+        is optimized, which happens here, on the driver: a value the
+        cast rejects (300 into TINYINT) fails this INSERT as
+        BadDataValueType instead of a later scan."""
+        bad = [r for r in rows if len(r) != len(colnames)]
+        if bad:
+            raise BadArguments(
+                f"VALUES tuple has {len(bad[0])} value(s) but {len(colnames)} "
+                "target column(s) were specified"
             )
-            str_schema = StructType([StructField(c, StringType(), True) for c in colnames])
-            df = self.spark.createDataFrame(rows, str_schema)
-            df = df.select(*[F.col(c).cast(sub_schema[c].dataType).alias(c) for c in colnames])
-            return self._append(tdef, df)
-        rows = [self._parse_tuple(t) for t in self._split_tuples(values)]
-        sub_schema = StructType([tdef.schema[c] for c in colnames])
-        df = self.spark.createDataFrame(rows, sub_schema)
-        return self._append(tdef, df)
+        text = local_rows(
+            self.spark, rows, StructType([StructField(c, StringType(), True) for c in colnames])
+        )
+        try:
+            df = text.selectExpr(
+                *[f"CAST(`{c}` AS {schema[c].dataType.simpleString()}) AS `{c}`" for c in colnames]
+            )
+            df._jdf.queryExecution().optimizedPlan()
+        except PySparkException as e:
+            raise BadDataValueType(str(e).splitlines()[0]) from e
+        return df
 
     def resolve_table(self, name: str) -> TableDef:
         """Catalog lookup for `[db.]table` against the current
@@ -2069,8 +2153,7 @@ class Engine:
         blocks land here). Bounded by the serving socket, so
         driver-side row materialization is inherent to the path."""
         sub_schema = StructType([StructField(c, tdef.schema[c].dataType, True) for c in colnames])
-        df = self.spark.createDataFrame(rows, sub_schema)
-        return self._append(tdef, df)
+        return self._append(tdef, local_rows(self.spark, rows, sub_schema))
 
     def _append(self, tdef: TableDef, df: DataFrame):
         """Table::append_data (interpreter_insert_into.rs:33-45):
@@ -2255,20 +2338,15 @@ class Engine:
         return tuples
 
     @staticmethod
-    def _parse_tuple(t: str) -> tuple:
-        vals = []
-        for raw in Engine._split_cols(t):
-            v = raw.strip()
-            if v.upper() == "NULL":
-                vals.append(None)
-            elif v.startswith("'") and v.endswith("'"):
-                vals.append(v[1:-1])
-            elif re.fullmatch(r"-?\d+", v):
-                vals.append(int(v))
-            elif re.fullmatch(r"-?\d*\.\d+([eE][+-]?\d+)?", v):
-                vals.append(float(v))
-            elif v.upper() in ("TRUE", "FALSE"):
-                vals.append(v.upper() == "TRUE")
-            else:
-                vals.append(v)
-        return tuple(vals)
+    def _literal_text(raw: str) -> str | None:
+        """One VALUES literal as the text its column casts from: NULL
+        is None, a quoted string its body, TRUE/FALSE lower-case, and
+        anything else (numbers) exactly as written."""
+        v = raw.strip()
+        if v.upper() == "NULL":
+            return None
+        if v.startswith("'") and v.endswith("'"):
+            return v[1:-1]
+        if v.upper() in ("TRUE", "FALSE"):
+            return v.lower()
+        return v

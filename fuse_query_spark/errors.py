@@ -45,6 +45,10 @@ class UnknownFunction(FuseQueryError):
     code = 8
 
 
+class BadDataValueType(FuseQueryError):
+    code = 10  # a value that cannot take its column's type (INSERT VALUES)
+
+
 class UnknownTable(FuseQueryError):
     code = 25  # reference: unresolved table/alias references
 

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from fuse_query_spark.sources.tables import local_rows
+
 _SNAPDIR = "_snapshots"
 
 
@@ -174,10 +176,10 @@ def snapshot_read(
     if v is None:
         if schema is None:
             raise ValueError(f"no snapshots at {location} and no schema given")
-        return spark.createDataFrame([], schema)
+        return local_rows(spark, [], schema)
     m = read_manifest(location, v)
     if not m["files"]:
-        return spark.createDataFrame([], schema or m["schema_ddl"])
+        return local_rows(spark, [], schema or m["schema_ddl"])
     paths = [os.path.join(location, f) for f in m["files"]]
     reader = spark.read
     if schema is not None:
@@ -233,7 +235,7 @@ def snapshot_history(spark: SparkSession, location: str) -> DataFrame:
         "version INT, parent INT, operation STRING, n_files INT,"
         " added_files INT, committed_at STRING"
     )
-    return spark.createDataFrame(rows, schema)
+    return local_rows(spark, rows, schema)
 
 
 def snapshot_vacuum(location: str, keep_last: int = 1) -> list[str]:
@@ -376,7 +378,7 @@ def snapshot_read_pruned(
         else:
             kept.append(os.path.join(location, f))
     if not kept:
-        df = spark.createDataFrame([], schema or m["schema_ddl"])
+        df = local_rows(spark, [], schema or m["schema_ddl"])
     else:
         reader = spark.read
         if schema is not None:

@@ -13,6 +13,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, TimestampType, _parse_datatype_string
 
 TABLES = [
     "region",
@@ -62,6 +63,34 @@ def read_parquet_maybe_nanos(
             raise
         spark.conf.set(_NANOS_CONF, "true")
         return reader.parquet(path)
+
+
+def local_rows(spark: SparkSession, rows, schema: StructType | str | None = None) -> DataFrame:
+    """DataFrame over rows the driver holds, built as an Arrow local
+    relation. It plans as LocalTableScan, so no scan of it starts a
+    Python worker; createDataFrame on a Python list plans a Python RDD
+    (`Scan ExistingRDD`) that every later scan unpickles in Python
+    workers. `rows` is a list of tuples in `schema` order (a StructType
+    or a DDL string), or a pyarrow.Table. Values convert by Arrow's
+    rules for the declared types; a naive datetime in a TIMESTAMP
+    column is read as host-local time, as createDataFrame reads it."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) if rows else [()] * len(schema.fields)
+    if len(cols) != len(schema.fields):
+        raise ValueError(f"rows have {len(cols)} values, schema has {len(schema.fields)} fields")
+    arrays = []
+    for values, f, af in zip(cols, schema.fields, arrow):
+        if isinstance(f.dataType, TimestampType):
+            values = [v.astimezone() if v is not None and v.tzinfo is None else v for v in values]
+        arrays.append(pa.array(values, type=af.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -277,3 +277,21 @@ def test_package_reads_only_deployment_env():
         if re.search(r"os\.environ|getenv", line) and not allowed.search(line)
     ]
     assert bad == []
+
+
+def test_engine_builds_driver_rows_as_local_relations():
+    """No createDataFrame call in the engine or the Snapshot source:
+    rows the driver holds go through sources.tables.local_rows, an
+    Arrow local relation (LocalTableScan). createDataFrame on a Python
+    list plans a Python RDD, and every scan of it, for the life of a
+    Memory table, starts Python workers to unpickle the rows."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "fuse_query_spark"
+    bad = [
+        f"{rel}:{n}: {line.strip()}"
+        for rel in ("engine.py", "sources/snapshots.py")
+        for n, line in enumerate((pkg / rel).read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    ]
+    assert bad == []
