@@ -29,6 +29,8 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+from fuse_query_spark.dialect.lexer import mask, outside_literals, split, string_value, strip_comments
+
 
 @dataclass
 class DialectContext:
@@ -92,41 +94,7 @@ _TYPE_NAMES = {
 
 _COMBINATOR_BASES = ("sum", "count", "avg", "min", "max", "uniq")
 
-_IDENT_CALL = re.compile(r"[A-Za-z_][A-Za-z0-9_]*\s*\(")
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split on commas not nested in parens/quotes."""
-    parts, depth, cur, i = [], 0, [], 0
-    in_str: str | None = None
-    while i < len(s):
-        ch = s[i]
-        if in_str:
-            cur.append(ch)
-            if ch == "\\" and i + 1 < len(s):
-                cur.append(s[i + 1])
-                i += 2
-                continue
-            if ch == in_str:
-                in_str = None
-        elif ch in "'\"":
-            in_str = ch
-            cur.append(ch)
-        elif ch == "(":
-            depth += 1
-            cur.append(ch)
-        elif ch == ")":
-            depth -= 1
-            cur.append(ch)
-        elif ch == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    if cur:
-        parts.append("".join(cur).strip())
-    return parts
+_IDENT_CALL = re.compile(r"(?<![\w.])([A-Za-z_][A-Za-z0-9_]*)\s*\(")
 
 
 def _fold_siphash_literal(args: list[str]) -> str | None:
@@ -144,9 +112,9 @@ def _fold_siphash_literal(args: list[str]) -> str | None:
 
     from fuse_query_spark.functions.siphash import _to_signed64, rust_hash_str, siphash
 
-    ms = re.match(r"^'([^']*)'$", a)
-    if ms:
-        return f"CAST({_to_signed64(rust_hash_str(ms.group(1)))} AS BIGINT)"
+    value = string_value(a)
+    if value is not None:
+        return f"CAST({_to_signed64(rust_hash_str(value))} AS BIGINT)"
     # float literals: any form with a '.' or an exponent (1.5, 1., .5,
     # 1e3, -2.5E-1) — ClickHouse types all of these Float64, and the
     # reference hashes the f64 bit pattern
@@ -282,62 +250,48 @@ def _rewrite_call(name: str, args: list[str], ctx: DialectContext) -> str | None
 
 def _rewrite_calls(sql: str, ctx: DialectContext) -> str:
     """One left-to-right pass; on each call site, rewrite the argument
-    list first (recursion), then the call itself."""
-    out = []
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if ch in "'\"`":  # skip string literals + backtick identifiers
-            j = i + 1
-            while j < len(sql) and sql[j] != ch:
-                j += 2 if sql[j] == "\\" else 1  # honor backslash escape
-            out.append(sql[i : j + 1])
-            i = j + 1
-            continue
-        m = _IDENT_CALL.match(sql, i)
-        if m and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] in "_.")):
-            name = m.group(0)[:-1].strip().rstrip()
-            name = re.match(r"[A-Za-z_][A-Za-z0-9_]*", m.group(0)).group(0)
-            # find matching close paren
-            depth, j = 1, m.end()
-            while j < len(sql) and depth:
-                if sql[j] in "'\"":
-                    q = sql[j]
-                    j += 1
-                    while j < len(sql) and sql[j] != q:
-                        j += 2 if sql[j] == "\\" else 1
-                elif sql[j] == "(":
-                    depth += 1
-                elif sql[j] == ")":
-                    depth -= 1
-                j += 1
-            inner = sql[m.end() : j - 1]
-            if name.lower() == "totypename":
-                # infer the reference's type name STATICALLY from the
-                # raw argument (before named-cast rewriting widens
-                # toUInt8 -> SMALLINT etc. and loses unsignedness);
-                # runtime typeof() can never report UInt* because Spark
-                # has no unsigned types (SURVEY §1.2)
-                from fuse_query_spark.dialect.typer import infer_fq_type
+    list first (recursion), then the call itself. Call sites and their
+    parentheses are found in the masked text, so nothing inside a
+    literal or quoted identifier is rewritten."""
+    masked = mask(sql)
+    out, pos = [], 0
+    while (m := _IDENT_CALL.search(masked, pos)) is not None:
+        name = m.group(1)
+        # find matching close paren
+        depth, j = 1, m.end()
+        while j < len(masked) and depth:
+            if masked[j] == "(":
+                depth += 1
+            elif masked[j] == ")":
+                depth -= 1
+            j += 1
+        if depth:
+            break  # unbalanced: left for Spark to reject
+        out.append(sql[pos : m.start()])
+        pos = j
+        inner = sql[m.end() : j - 1]
+        if name.lower() == "totypename":
+            # infer the reference's type name STATICALLY from the
+            # raw argument (before named-cast rewriting widens
+            # toUInt8 -> SMALLINT etc. and loses unsignedness);
+            # runtime typeof() can never report UInt* because Spark
+            # has no unsigned types (SURVEY §1.2)
+            from fuse_query_spark.dialect.typer import infer_fq_type
 
-                inferred = infer_fq_type(inner, allow_number=ctx.numbers_source)
-                if inferred is not None:
-                    out.append(f"'{inferred}'")
-                    i = j
-                    continue
-            inner_rw = _rewrite_calls(inner, ctx)
-            args = _split_top_level(inner_rw) if inner_rw.strip() else []
-            replacement = _rewrite_call(name, args, ctx)
-            if replacement is None:
-                # preserve the original spacing between name and paren
-                # (this path also covers keywords like FROM/OVER + '(')
-                out.append(sql[i : m.end()] + inner_rw + ")")
-            else:
-                out.append(replacement)
-            i = j
-            continue
-        out.append(ch)
-        i += 1
+            inferred = infer_fq_type(inner, allow_number=ctx.numbers_source)
+            if inferred is not None:
+                out.append(f"'{inferred}'")
+                continue
+        inner_rw = _rewrite_calls(inner, ctx)
+        args = split(inner_rw, ",") if inner_rw.strip() else []
+        replacement = _rewrite_call(name, args, ctx)
+        if replacement is None:
+            # preserve the original spacing between name and paren
+            # (this path also covers keywords like FROM/OVER + '(')
+            out.append(sql[m.start() : m.end()] + inner_rw + ")")
+        else:
+            out.append(replacement)
+    out.append(sql[pos:])
     return "".join(out)
 
 
@@ -352,7 +306,7 @@ _LIMIT_BY = re.compile(r"\sLIMIT\s+(\d+)\s+BY\s+(.+?)(\s+LIMIT\s+\d+\s*)?$", re.
 
 def _alias_map(select_list: str) -> dict[str, str]:
     out = {}
-    for item in _split_top_level(select_list):
+    for item in split(select_list, ","):
         m = re.match(r"(?is)^(.*?)\s+AS\s+([A-Za-z_][A-Za-z0-9_]*)$", item.strip())
         if m:
             out[m.group(2)] = m.group(1).strip()
@@ -361,7 +315,8 @@ def _alias_map(select_list: str) -> dict[str, str]:
 
 def _subst_aliases(expr: str, aliases: dict[str, str]) -> str:
     for name, repl in aliases.items():
-        expr = re.sub(rf"\b{re.escape(name)}\b", f"({repl})", expr)
+        pattern = re.compile(rf"\b{re.escape(name)}\b")
+        expr = outside_literals(expr, lambda seg: pattern.sub(lambda _m: f"({repl})", seg))
     return expr
 
 
@@ -374,20 +329,27 @@ def _rewrite_limit_by(s: str) -> str:
     into the partition/order expressions. Falls back to wrapping the
     whole query when it aggregates (GROUP BY), where the window must
     run over the projected result instead.
+
+    Clauses are found in the masked statement and cut from the
+    statement at the same offsets, so a literal holding LIMIT, BY,
+    ORDER BY or FROM is never mistaken for a clause.
     """
-    m = _LIMIT_BY.search(s)
+    masked = mask(s)
+    m = _LIMIT_BY.search(masked)
     if not m:
         return s
-    n, cols, trailing = int(m.group(1)), m.group(2).strip(), m.group(3)
-    inner = s[: m.start()].strip()
+    n, cols, trailing = int(m.group(1)), s[m.start(2) : m.end(2)].strip(), m.group(3)
+    inner, minner = s[: m.start()].strip(), masked[: m.start()].strip()
     outer_limit = f" LIMIT {trailing.strip().split()[1]}" if trailing else ""
-    om = re.search(r"(?is)\bORDER\s+BY\s+(.+)$", inner)
-    order = om.group(1).strip() if om else cols
-    inner_no_order = inner[: om.start()].strip() if om else inner
-    msel = re.match(r"(?is)^SELECT\s+(.*?)\s+FROM\s+(.*)$", inner_no_order)
-    has_group = re.search(r"(?is)\bGROUP\s+BY\b", inner_no_order) is not None
+    om = re.search(r"(?is)\bORDER\s+BY\s+(.+)$", minner)
+    order = inner[om.start(1) :].strip() if om else cols
+    if om:
+        inner, minner = inner[: om.start()].strip(), minner[: om.start()].strip()
+    msel = re.match(r"(?is)^SELECT\s+(.*?)\s+FROM\s+(.*)$", minner)
+    has_group = re.search(r"(?is)\bGROUP\s+BY\b", minner) is not None
     if msel and not has_group:
-        select_list, rest = msel.group(1), msel.group(2)
+        select_list = inner[msel.start(1) : msel.end(1)]
+        rest = inner[msel.start(2) :]
         aliases = _alias_map(select_list)
         cols_sub = _subst_aliases(cols, aliases)
         order_sub = _subst_aliases(order, aliases)
@@ -402,7 +364,7 @@ def _rewrite_limit_by(s: str) -> str:
     # must be part of the projection here
     return (
         f"SELECT * EXCEPT (__fq_rn) FROM (SELECT *, row_number() OVER "
-        f"(PARTITION BY {cols} ORDER BY {order}) AS __fq_rn FROM ({inner_no_order})) "
+        f"(PARTITION BY {cols} ORDER BY {order}) AS __fq_rn FROM ({inner})) "
         f"WHERE __fq_rn <= {n}"
         + (f" ORDER BY {order}" if om else "")
         + outer_limit
@@ -426,7 +388,7 @@ def _alias_rewritten_select_items(s: str, ctx: DialectContext) -> str:
     # subquery in the list would confuse the split — leave those alone)
     if select_list.count("(") != select_list.count(")"):
         return s
-    items = _split_top_level(select_list)
+    items = split(select_list, ",")
     out_items = []
     # probe rewrites only test whether the item WOULD change (to decide
     # aliasing); run them on a throwaway ctx so side-records like
@@ -450,31 +412,6 @@ def _alias_rewritten_select_items(s: str, ctx: DialectContext) -> str:
     return head + ", ".join(out_items) + tail
 
 
-def _outside_strings(s: str, fn) -> str:
-    """Apply fn only to the segments of s outside single/double-quoted
-    literals (regex rewrites must never touch string contents).
-    Backslash escapes inside a literal are honored: 'a\\'b' is ONE
-    literal, so the quote after the backslash must not close it."""
-    out, cur, i, in_str = [], [], 0, None
-    start = 0
-    while i < len(s):
-        ch = s[i]
-        if in_str is None and ch in "'\"":
-            out.append(fn(s[start:i]))
-            in_str = ch
-            start = i
-        elif in_str is not None and ch == "\\":
-            i += 2  # skip the escaped character
-            continue
-        elif in_str is not None and ch == in_str:
-            out.append(s[start : i + 1])
-            in_str = None
-            start = i + 1
-        i += 1
-    out.append(s[start:] if in_str is not None else fn(s[start:]))
-    return "".join(out)
-
-
 _AGG_CALL = re.compile(
     r"(?i)\b(sum|count|avg|min|max|uniq|argmin|argmax|stddev\w*|var\w*)\s*(if|distinct)?\s*\(",
 )
@@ -485,70 +422,25 @@ def _having_without_group_is_where(s: str) -> str:
     filters rows like WHERE (03_0006_select_having.sql: `SELECT * FROM
     numbers_mt(3) HAVING number > 1`). Spark rejects that shape, so
     rewrite HAVING → WHERE when there is no GROUP BY and no aggregate
-    in the select list (global-agg HAVING keeps its meaning)."""
-    if not re.search(r"(?is)\bHAVING\b", s) or re.search(r"(?is)\bGROUP\s+BY\b", s):
+    in the select list (global-agg HAVING keeps its meaning). Keywords
+    are found in the masked statement, so literals are left alone."""
+    masked = mask(s)
+    h = re.search(r"(?is)\bHAVING\b", masked)
+    if h is None or re.search(r"(?is)\bGROUP\s+BY\b", masked):
         return s
-    head = re.split(r"(?is)\bHAVING\b", s)[0]
+    head = masked[: h.start()]
     if _AGG_CALL.search(head):
         return s
-    if re.search(r"(?is)\bWHERE\b", head):
-        # fold into the existing WHERE instead of emitting two filters
-        return re.sub(r"(?is)\bHAVING\b", "AND", s, count=1)
-    return re.sub(r"(?is)\bHAVING\b", "WHERE", s, count=1)
-
-
-def strip_line_comments(s: str) -> str:
-    """Drop `--`-to-end-of-line and `/* ... */` block comments, but
-    never inside quoted string literals: `SELECT 'a--b'` must keep its
-    literal intact, a `;` hidden in a trailing comment must not reach
-    the splitter as statement text, and a backslash-escaped quote
-    ('a\\'--b') must not end the literal early. Block comments are
-    replaced by one space so `a/*x*/b` stays two tokens; an
-    unterminated block comment swallows the rest (MySQL behavior)."""
-    out: list[str] = []
-    i, n, in_str = 0, len(s), None
-    while i < n:
-        ch = s[i]
-        if in_str is None and ch == "-" and s.startswith("--", i):
-            nl = s.find("\n", i)
-            if nl == -1:
-                break
-            i = nl  # the newline itself is kept as whitespace
-            continue
-        if in_str is None and ch == "/" and s.startswith("/*", i):
-            end = s.find("*/", i + 2)
-            if s.startswith("/*+", i):
-                # optimizer hints (/*+ BROADCAST(t) */) are NOT
-                # comments — they must reach spark.sql intact
-                stop = n if end == -1 else end + 2
-                out.append(s[i:stop])
-                i = stop
-                continue
-            out.append(" ")
-            if end == -1:
-                break
-            i = end + 2
-            continue
-        if in_str is not None and ch == "\\" and i + 1 < n:
-            out.append(ch)
-            out.append(s[i + 1])
-            i += 2
-            continue
-        if in_str is None and ch in "'\"":
-            in_str = ch
-        elif in_str is not None and ch == in_str:
-            in_str = None
-        out.append(ch)
-        i += 1
-    return "".join(out)
+    # fold into an existing WHERE instead of emitting two filters
+    word = "AND" if re.search(r"(?is)\bWHERE\b", head) else "WHERE"
+    return s[: h.start()] + word + s[h.end() :]
 
 
 def rewrite_select(sql: str, ctx: DialectContext | None = None, demote_user: bool = True) -> str:
     """fuse-query dialect SELECT → Spark SQL text."""
     ctx = ctx or DialectContext()
     s = sql.strip().rstrip(";").strip()
-    # comments (string-literal-aware — a plain regex would truncate 'a--b')
-    s = strip_line_comments(s)
+    s = strip_comments(s)
     # does this statement read a numbers() source? (gates the typer's
     # `number` -> UInt64 fold; see DialectContext.numbers_source).
     # Assigned, not |=: a ctx reused across statements must not carry
@@ -565,7 +457,7 @@ def rewrite_select(sql: str, ctx: DialectContext | None = None, demote_user: boo
     # column named `user` (which Spark resolves fine — column wins over
     # the keyword), the engine retries with demote_user=False.
     if demote_user:
-        s = _outside_strings(s, lambda seg: re.sub(r"(?i)\buser\b(?!\s*\()", "usr_", seg))
+        s = outside_literals(s, lambda seg: re.sub(r"(?i)\buser\b(?!\s*\()", "usr_", seg))
     s = _having_without_group_is_where(s)
 
     def _table_rewrites(seg: str) -> str:
@@ -578,7 +470,7 @@ def rewrite_select(sql: str, ctx: DialectContext | None = None, demote_user: boo
             seg = re.sub(rf"\b{re.escape(db)}\.(\w+)", rf"{db}__\1", seg)
         return seg
 
-    s = _outside_strings(s, _table_rewrites)
+    s = outside_literals(s, _table_rewrites)
     # LIMIT n BY cols → row_number rewrite (before call rewriting; the
     # wrapped query is rewritten recursively)
     s = _rewrite_limit_by(s)
@@ -589,7 +481,7 @@ def rewrite_select(sql: str, ctx: DialectContext | None = None, demote_user: boo
     # function-call rewrites (bottom-up; string-aware by construction)
     s = _rewrite_calls(s, ctx)
     # ClickHouse type names inside CAST
-    s = _outside_strings(
+    s = outside_literals(
         s, lambda seg: _CAST_TYPE.sub(lambda m: m.group(1) + _TYPE_NAMES[m.group(2).lower()], seg)
     )
     return s

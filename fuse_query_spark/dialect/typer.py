@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import re
 
+from fuse_query_spark.dialect.lexer import STRING_LITERAL
+
 # fq type name -> (bit width, signed?, float?)
 _INT_TYPES = {
     "UInt8": (8, False),
@@ -82,8 +84,8 @@ _NAMED_CAST_FNS = {
 }
 
 _TOKEN = re.compile(
-    r"""\s*(?:
-        (?P<str>'(?:[^'\\]|\\.)*')
+    rf"""\s*(?:
+        (?P<str>{STRING_LITERAL})
       | (?P<num>(?:\d+\.\d*|\.\d+|\d+)(?:[eE][+-]?\d+)?)
       | (?P<id>[A-Za-z_][A-Za-z0-9_]*)
       | (?P<sym>[()+\-*/%,])

@@ -23,11 +23,15 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType, _parse_datatype_string
 
 from fuse_query_spark import session as _session
-from fuse_query_spark.dialect.rewriter import (
-    DialectContext,
-    rewrite_select,
-    strip_line_comments,
+from fuse_query_spark.dialect.lexer import (
+    STRING_LITERAL,
+    mask,
+    quote,
+    split,
+    string_value,
+    strip_comments,
 )
+from fuse_query_spark.dialect.rewriter import DialectContext, rewrite_select
 from fuse_query_spark.errors import (
     BadArguments,
     BadDataValueType,
@@ -235,8 +239,9 @@ class Engine:
         """Execute one or more ';'-separated statements; returns the
         last statement's DataFrame (or None for DDL)."""
         result = None
-        for stmt in self._split(text):
-            result = self._execute(stmt)
+        for stmt in split(text, ";"):
+            if strip_comments(stmt).strip():
+                result = self._execute(stmt)
         return result
 
     def sql_collect(self, text: str):
@@ -247,59 +252,12 @@ class Engine:
         QUERY works on it), and the tracing record bills the real
         execution time. Returns (DataFrame | None, rows | None)."""
         result = None
-        for stmt in self._split(text):
-            result = self._execute(stmt, eager=True)
+        for stmt in split(text, ";"):
+            if strip_comments(stmt).strip():
+                result = self._execute(stmt, eager=True)
         return result if isinstance(result, tuple) else (result, None)
 
     # ---------- dispatch ----------
-
-    @staticmethod
-    def _split(text: str) -> list[str]:
-        # quote- AND comment-aware, with the SAME lexing rules as the
-        # rewriter's scanners (strip_line_comments et al.): a ';'
-        # inside a string literal, a `-- comment; note`, or a
-        # /* block; comment */ must not split the statement, and a
-        # backslash-escaped quote must not end the literal — the
-        # splitter is the first lexer every statement passes through,
-        # so divergent rules here hand truncated fragments downstream.
-        out, cur, in_str, in_comment = [], [], None, False
-        i = 0
-        while i < len(text):
-            ch = text[i]
-            if in_comment:
-                cur.append(ch)
-                if ch == "\n":
-                    in_comment = False
-            elif in_str:
-                cur.append(ch)
-                if ch == "\\" and i + 1 < len(text):
-                    cur.append(text[i + 1])
-                    i += 2
-                    continue
-                if ch == in_str:
-                    in_str = None
-            elif ch == "-" and text.startswith("--", i):
-                in_comment = True
-                cur.append(ch)
-            elif ch == "/" and text.startswith("/*", i):
-                end = text.find("*/", i + 2)
-                stop = len(text) if end == -1 else end + 2
-                cur.append(text[i:stop])
-                i = stop
-                continue
-            elif ch in "'\"":
-                in_str = ch
-                cur.append(ch)
-            elif ch == ";":
-                if "".join(cur).strip():
-                    out.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(ch)
-            i += 1
-        if "".join(cur).strip():
-            out.append("".join(cur).strip())
-        return [s for s in out if strip_line_comments(s).strip()]
 
     _pid_counter = itertools.count(1)
 
@@ -310,7 +268,7 @@ class Engine:
         cancellable Spark job group (AbortStream/KILL analogue —
         stream_abort.rs:19-26), and recording a tracing span on exit
         (tracing_table.rs:26)."""
-        s = strip_line_comments(stmt).strip()
+        s = strip_comments(stmt).strip()
         pid = str(next(Engine._pid_counter))
         self._live[pid] = {
             "query": s,
@@ -569,7 +527,7 @@ class Engine:
 
         if tdef.location:
             descend(tdef.location, 0, "")
-        return systbl.local_values_df(self.spark, parts, ["partition"])
+        return local_rows(self.spark, parts, "partition STRING")
 
     def _partition_prefix(
         self, db: str, table: str, tdef, spec: str
@@ -581,11 +539,12 @@ class Engine:
         if not tdef.partition_by:
             raise UnsupportedStatement(f"Table '{db}.{table}' is not partitioned")
         pairs = []
-        for part in self._split_cols(spec):
-            mm = re.match(r"(?s)^\s*(\w+)\s*=\s*'?([^']*?)'?\s*$", part)
+        for part in split(spec, ","):
+            mm = re.match(r"(?s)^(\w+)\s*=\s*(.+)$", part)
             if not mm:
                 raise UnsupportedStatement(f"Cannot parse partition spec: {part}")
-            pairs.append((mm.group(1), mm.group(2)))
+            value = string_value(mm.group(2))
+            pairs.append((mm.group(1), mm.group(2) if value is None else value))
         expect = tdef.partition_by[: len(pairs)]
         got = tuple(c for c, _ in pairs)
         if got != expect:
@@ -781,7 +740,7 @@ class Engine:
         def _eq(c, v):
             if v is None:
                 return f"{c} IS NULL"
-            return f"{c} = '{str(v).replace(chr(39), chr(39) * 2)}'"
+            return f"{c} = {quote(str(v))}"
 
         member = " OR ".join(
             "(" + " AND ".join(_eq(c, r[c]) for c in tdef.partition_by) + ")"
@@ -856,32 +815,6 @@ class Engine:
 
     _UPDATE = re.compile(r"(?is)^UPDATE\s+([\w.]+)\s+SET\s+(.+)$")
 
-    @staticmethod
-    def _split_top_level_where(rest: str) -> tuple[str, str | None]:
-        """Split \"SET ... [WHERE pred]\" at the first ' WHERE ' OUTSIDE
-        single-quoted literals (code-review r8: the lazy regex bound a
-        'where' inside a SET string literal and mis-split the
-        statement). Doubled '' escapes stay inside the literal."""
-        low = rest.lower()
-        in_q = False
-        i = 0
-        while i < len(low):
-            ch = rest[i]
-            if ch == "'":
-                in_q = not in_q
-                i += 1
-                continue
-            if (
-                not in_q
-                and ch.isspace()
-                and low[i + 1 : i + 6] == "where"
-                and i + 6 < len(low)
-                and low[i + 6].isspace()
-            ):
-                return rest[:i], rest[i + 7 :]
-            i += 1
-        return rest, None
-
     def _update(self, s: str):
         """UPDATE t SET col = expr[, …] [WHERE pred] — extension (the
         reference has no mutations): the correction/backfill write a
@@ -905,14 +838,20 @@ class Engine:
         if not m:
             raise UnsupportedStatement(f"Cannot parse UPDATE: {s[:80]}")
         name, rest = m.groups()
-        set_clause, pred = self._split_top_level_where(rest)
+        # the first WHERE outside literals and parentheses ends the SET list
+        set_clause, pred = rest, None
+        masked = mask(rest)
+        for w in re.finditer(r"(?i)\sWHERE\s", masked):
+            if masked.count("(", 0, w.start()) == masked.count(")", 0, w.start()):
+                set_clause, pred = rest[: w.start()], rest[w.end() :]
+                break
         db, table = self._qualify(name)
         tables = self.catalog.db(db)
         if table not in tables:
             raise UnknownTable(f"Unknown table: '{db}.{table}'")
         tdef = tables[table]
         sets: dict[str, str] = {}
-        for part in self._split_cols(set_clause):
+        for part in split(set_clause, ","):
             eq = part.find("=")
             if eq < 0:
                 raise UnsupportedStatement(f"Cannot parse SET assignment: {part[:60]}")
@@ -1040,14 +979,12 @@ class Engine:
         pairs = self._partition_prefix(db, table, tdef, spec) if spec else []
         label = "/".join(f"{c}={v}" for c, v in pairs) or "<table>"
         target = os.path.join(tdef.location, *[f"{c}={v}" for c, v in pairs])
-        summary_cols = ["partition", "files_before", "files_after", "rows"]
 
         def summary(*vals) -> DataFrame:
-            return systbl.local_values_df(
-                self.spark, [tuple(vals)], summary_cols
-            ).selectExpr(
-                "partition",
-                *[f"CAST({c} AS BIGINT) AS {c}" for c in summary_cols[1:]],
+            return local_rows(
+                self.spark,
+                [vals],
+                "partition STRING, files_before BIGINT, files_after BIGINT, rows BIGINT",
             )
 
         if not os.path.isdir(target):
@@ -1079,18 +1016,17 @@ class Engine:
         system.processes id via Engine.cancel (the reference aborts
         result streams through AbortStream handles,
         stream_abort.rs:19-26)."""
-        m = re.match(r"(?is)^KILL\s+QUERY\s+'?([\w-]+)'?\s*$", s)
-        if not m:
+        m = re.match(r"(?is)^KILL\s+QUERY\s+(.+?)\s*$", s)
+        qid = m and (string_value(m.group(1)) or m.group(1))
+        if not qid or not re.fullmatch(r"[\w-]+", qid):
             raise UnsupportedStatement(f"Unsupported KILL: {s[:60]}")
-        qid = m.group(1)
         killed = self.cancel(qid)
         # LOCAL relation (no Spark job): KILL must work when the pool
-        # is saturated by the very query being killed (see
-        # system_tables.local_values_df)
-        return systbl.local_values_df(
+        # is saturated by the very query being killed
+        return local_rows(
             self.spark,
             [(qid, "killed" if killed else "not_found")],
-            ["query_id", "result"],
+            "query_id STRING, result STRING",
         )
 
     # ---------- SELECT ----------
@@ -1151,8 +1087,9 @@ class Engine:
             return self._select_locked(s, rewritten)
 
     _FLIGHT_STREAM = re.compile(
-        r"(?i)\bflight_stream\s*\(\s*'([^']+)'\s*,\s*'([^']+)'\s*,"
-        r"\s*'([^']+)'\s*,\s*'([^']+)'\s*\)"
+        r"(?i)\bflight_stream\s*\(\s*"
+        + r"\s*,\s*".join([f"({STRING_LITERAL})"] * 4)
+        + r"\s*\)"
     )
 
     def in_stage_action(self) -> bool:
@@ -1202,20 +1139,17 @@ class Engine:
             self._fs_views_tl.views.append(view)
             return view
 
-        from fuse_query_spark.plans.distributed import _mask_literals
-
         out, pos = [], 0
-        for m in self._FLIGHT_STREAM.finditer(_mask_literals(s)):
-            # the call's OWN quoted arguments are literals too — the
-            # masked match located the call site, the argument values
-            # come from the original text at the same offsets (masking
-            # is length-preserving)
-            real = self._FLIGHT_STREAM.match(s, m.start(), m.end())
+        for m in re.finditer(r"(?i)\bflight_stream\s*\(", mask(s)):
+            # the masked text locates call sites outside literals; the
+            # call's own literal arguments are read from the original
+            # text at the same offsets (masking is length-preserving)
+            real = self._FLIGHT_STREAM.match(s, m.start())
             if real is None:
                 continue
             out.append(s[pos : m.start()])
-            out.append(fetch(*real.groups()))
-            pos = m.end()
+            out.append(fetch(*[string_value(a) for a in real.groups()]))
+            pos = real.end()
         out.append(s[pos:])
         return "".join(out)
 
@@ -1356,19 +1290,17 @@ class Engine:
         no footer job. Remote tables re-ask the store for their parts,
         and views re-expand over their base tables' relations.
 
-        The name scan runs over the statement with string literals and
-        comments STRIPPED (code-review r8: 'system.logs' inside a
-        literal raised UnknownTable for a valid query), and a
-        registration that fails is SKIPPED rather than failing the
-        whole statement — a bare word that merely collides with a
-        broken view's name (SELECT 1 AS v after v's base table was
-        dropped) must not poison unrelated queries; if the query truly
-        references the broken table, Spark's own
+        The name scan runs over the masked statement (literal bodies
+        and comments blanked; see lexer.mask), so a name inside a
+        literal ('system.logs') neither raises UnknownTable nor hides
+        the names after it, and a registration that fails is SKIPPED
+        rather than failing the whole statement — a bare word that
+        merely collides with a broken view's name (SELECT 1 AS v after
+        v's base table was dropped) must not poison unrelated queries;
+        if the query truly references the broken table, Spark's own
         TABLE_OR_VIEW_NOT_FOUND names it. The skipped errors are kept
         per thread, for this thread's _select_locked to re-raise."""
-        scan = re.sub(r"'(?:[^']|'')*'", "''", s)  # literals
-        scan = re.sub(r"/\*.*?\*/", " ", scan, flags=re.S)  # block comments
-        scan = re.sub(r"--[^\n]*", " ", scan)  # line comments
+        scan = mask(s)
         deferred: dict[str, Exception] = {}
         for m in re.finditer(r"\bsystem\.(\w+)", scan):
             name = m.group(1).lower()
@@ -1600,14 +1532,14 @@ class Engine:
     _CREATE_TABLE_TAIL = re.compile(
         r"(?is)^\s*(?:ENGINE\s*=\s*(\w+))?\s*"
         r"(?:PARTITION\s+BY\s*\(([^)]*)\))?\s*"
-        r"(?:location\s*=\s*'([^']*)')?\s*$"
+        rf"(?:location\s*=\s*({STRING_LITERAL}))?\s*$"
     )
 
     _CREATE_TABLE_AS = re.compile(
         r"(?is)^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
         r"(?:ENGINE\s*=\s*(\w+))?\s*"
         r"(?:PARTITION\s+BY\s*\(([^)]*)\))?\s*"
-        r"(?:location\s*=\s*'([^']*)')?\s*"
+        rf"(?:location\s*=\s*({STRING_LITERAL}))?\s*"
         r"AS\s+(SELECT\b.*)$"
     )
 
@@ -1655,6 +1587,7 @@ class Engine:
         Schema is inferred from the SELECT; Memory holds the (lazy)
         DataFrame, file engines write it to the location."""
         if_not_exists, name, engine, partition_by, location, select = m.groups()
+        location = location and string_value(location)
         engine = (engine or "Memory").strip()
         db, table = self._qualify(name)
         tables = self.catalog.db(db)
@@ -1714,7 +1647,7 @@ class Engine:
         r"(?is)^CREATE\s+MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
         r"(?:ENGINE\s*=\s*(\w+))?\s*"
         r"(?:PARTITION\s+BY\s*\(([^)]*)\))?\s*"
-        r"location\s*=\s*'([^']*)'\s*"
+        rf"location\s*=\s*({STRING_LITERAL})\s*"
         r"AS\s+(SELECT\b.*)$"
     )
 
@@ -1731,6 +1664,7 @@ class Engine:
         if not m:
             raise UnsupportedStatement(f"Cannot parse CREATE MATERIALIZED VIEW: {s[:80]}")
         if_not_exists, name, engine, partition_by, location, select = m.groups()
+        location = string_value(location)
         engine = (engine or "Parquet").strip()
         if engine not in self._PARTITIONABLE_ENGINES:
             raise UnsupportedStatement(
@@ -1829,6 +1763,7 @@ class Engine:
         if not mt:
             raise UnsupportedStatement(f"Cannot parse CREATE TABLE: {s[:80]}")
         engine, partition_by, location = mt.groups()
+        location = location and string_value(location)
         # reference: missing ENGINE defaults to Null (sql_parser.rs:441-443)
         engine = (engine or "Null").strip()
         db, table = self._qualify(name)
@@ -1868,7 +1803,7 @@ class Engine:
 
     def _parse_schema(self, cols: str) -> StructType:
         fields = []
-        for part in self._split_cols(cols):
+        for part in split(cols, ","):
             mm = re.match(r"(?s)^\s*(\w+)\s+(.+?)\s*$", part)
             if not mm:
                 raise UnsupportedStatement(f"Cannot parse column def: {part}")
@@ -1877,23 +1812,6 @@ class Engine:
             ctype = _COL_TYPES.get(ctype, ctype)
             fields.append(StructField(cname, _parse_datatype_string(ctype), True))
         return StructType(fields)
-
-    @staticmethod
-    def _split_cols(cols: str) -> list[str]:
-        parts, depth, cur = [], 0, []
-        for ch in cols:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append("".join(cur))
-                cur = []
-            else:
-                cur.append(ch)
-        if cur:
-            parts.append("".join(cur))
-        return [p.strip() for p in parts if p.strip()]
 
     def _qualify(self, name: str) -> tuple[str, str]:
         if "." in name:
@@ -2045,7 +1963,10 @@ class Engine:
 
     def _set(self, s: str):
         m = re.match(r"(?is)^SET\s+(\w+)\s*=\s*(.+)$", s)
-        key, value = m.group(1).lower(), m.group(2).strip().strip("'")
+        key, raw = m.group(1).lower(), m.group(2).strip()
+        value = string_value(raw)
+        if value is None:
+            value = raw
         if key in self._INT_SETTINGS:
             try:
                 value = int(value)
@@ -2089,6 +2010,14 @@ class Engine:
             raise UnknownTable(f"Unknown table: '{db}.{table}'")
         tdef = tables[table]
         colnames = [c.strip() for c in cols.split(",")] if cols else [f.name for f in tdef.schema]
+        # one list of item texts per parenthesized tuple; an empty item
+        # or a tuple without parentheses is malformed
+        tuples = [
+            split(t[1:-1], ",") if t[:1] == "(" and t[-1:] == ")" else [""]
+            for t in split(values, ",")
+        ]
+        if any("" in items for items in tuples):
+            raise UnsupportedStatement(f"Cannot parse INSERT VALUES: {values[:80]}")
         if tdef.engine == "remote":
             # Reference parity, deliberately scoped to the remote
             # engine: insert_to_plan (plan_parser.rs:348-371) renders
@@ -2098,15 +2027,19 @@ class Engine:
             # The remote path is the only INSERT observable in the
             # reference suite; the repo's extended engines (Memory/
             # Parquet/CSV/JSON) keep sane literal parsing below.
-            rows = [
-                tuple(item.strip() for item in self._split_cols(t))
-                for t in self._split_tuples(values)
-            ]
+            rows = [tuple(items) for items in tuples]
         else:
-            rows = [
-                tuple(self._literal_text(v) for v in self._split_cols(t))
-                for t in self._split_tuples(values)
-            ]
+
+            def text(raw: str) -> str | None:
+                # the text the column casts from: a string literal's
+                # value, NULL as None, TRUE/FALSE lower-case, and
+                # anything else (numbers) exactly as written
+                value = string_value(raw)
+                if value is not None:
+                    return value
+                return {"NULL": None, "TRUE": "true", "FALSE": "false"}.get(raw.upper(), raw)
+
+            rows = [tuple(text(raw) for raw in items) for items in tuples]
         return self._append(tdef, self._coerce_literals(rows, colnames, tdef.schema))
 
     def _coerce_literals(self, rows: list[tuple], colnames: list[str], schema: StructType) -> DataFrame:
@@ -2309,44 +2242,3 @@ class Engine:
         else:
             raise UnsupportedStatement(f"INSERT OVERWRITE into engine {tdef.engine} not supported")
         return None
-
-    @staticmethod
-    def _split_tuples(values: str) -> list[str]:
-        tuples, depth, cur, in_str = [], 0, [], None
-        for ch in values:
-            if in_str:
-                cur.append(ch)
-                if ch == in_str:
-                    in_str = None
-            elif ch == "'":
-                in_str = ch
-                cur.append(ch)
-            elif ch == "(":
-                depth += 1
-                if depth == 1:
-                    cur = []
-                    continue
-                cur.append(ch)
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    tuples.append("".join(cur))
-                    continue
-                cur.append(ch)
-            elif depth > 0:
-                cur.append(ch)
-        return tuples
-
-    @staticmethod
-    def _literal_text(raw: str) -> str | None:
-        """One VALUES literal as the text its column casts from: NULL
-        is None, a quoted string its body, TRUE/FALSE lower-case, and
-        anything else (numbers) exactly as written."""
-        v = raw.strip()
-        if v.upper() == "NULL":
-            return None
-        if v.startswith("'") and v.endswith("'"):
-            return v[1:-1]
-        if v.upper() in ("TRUE", "FALSE"):
-            return v.lower()
-        return v

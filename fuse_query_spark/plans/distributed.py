@@ -93,6 +93,8 @@ import re
 import uuid
 from dataclasses import dataclass, field
 
+from fuse_query_spark.dialect.lexer import mask, outside_literals, split, unclosed
+
 _AGG_FUNCS = (
     "count", "sum", "min", "max", "avg", "uniq",
     # arg-extrema ship a (cmp, ret) struct extremum partial — the
@@ -208,7 +210,7 @@ def _parse_from_joins(text: str):
     comma joins, subquery sources). Join keywords are located by a
     literal-masked depth-0 scan so an ON condition may contain parens
     and a literal may contain the word JOIN."""
-    masked = _mask_literals(text)
+    masked = mask(text)
     cuts: list[tuple[int, int, str]] = []  # (start, end, join_type)
     depth = 0
     i, n = 0, len(masked)
@@ -250,7 +252,7 @@ def _parse_from_joins(text: str):
         if dm is None:
             return None
         cond = dm.group("cond").strip()
-        if len(_split_top_level(cond)) != 1:
+        if len(split(cond, ",")) != 1:
             return None  # top-level comma in the condition
         jt_norm = "LEFT JOIN" if jt.startswith("LEFT") else "JOIN"
         joins.append((jt_norm, dm, cond))
@@ -266,8 +268,7 @@ BROADCAST_DIM_MAX_BYTES = 64 << 20
 
 def _top_level_clauses(sql: str) -> dict[str, str] | None:
     """Split one comment-stripped statement into its top-level clauses
-    with a LINEAR quote- and paren-aware scan (same literal lexing
-    rules as the dialect layer: backslash escapes honored, keywords
+    with a LINEAR paren-aware scan over the masked statement (keywords
     inside string literals are invisible — advice r9: a `GROUP BY`
     inside a WHERE literal must not mis-split the clauses). Returns
     {clause: text} or None when the statement is not exactly one
@@ -277,24 +278,14 @@ def _top_level_clauses(sql: str) -> dict[str, str] | None:
     front-end (`_STMT`) needed a length cap, a backtick guard and a
     paren-balance patch to stay safe; the scanner is total by
     construction (judge r9 ask #4)."""
+    if unclosed(sql):
+        return None
+    masked = mask(sql)
     marks: list[tuple[str, int, int]] = []
     depth = 0
-    in_str: str | None = None
-    i, n = 0, len(sql)
+    i, n = 0, len(masked)
     while i < n:
-        ch = sql[i]
-        if in_str is not None:
-            if ch == "\\":
-                i += 2
-                continue
-            if ch == in_str:
-                in_str = None
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-            i += 1
-            continue
+        ch = masked[i]
         if ch == "(":
             depth += 1
             i += 1
@@ -306,9 +297,9 @@ def _top_level_clauses(sql: str) -> dict[str, str] | None:
             i += 1
             continue
         if (ch.isalpha() or ch == "_") and (
-            i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_")
+            i == 0 or not (masked[i - 1].isalnum() or masked[i - 1] == "_")
         ):
-            m = _CLAUSE_KW.match(sql, i)
+            m = _CLAUSE_KW.match(masked, i)
             if m:
                 kw = re.sub(r"\s+", " ", m.group(1).upper())
                 if depth > 0:
@@ -324,14 +315,14 @@ def _top_level_clauses(sql: str) -> dict[str, str] | None:
             # skip the whole identifier so a keyword embedded in a
             # longer name (GROUPings) is never matched mid-word
             j = i + 1
-            while j < n and (sql[j].isalnum() or sql[j] == "_"):
+            while j < n and (masked[j].isalnum() or masked[j] == "_"):
                 j += 1
             i = j
             continue
         i += 1
-    if in_str is not None or depth != 0:
+    if depth != 0:
         return None
-    if not marks or marks[0][0] != "SELECT" or sql[: marks[0][1]].strip():
+    if not marks or marks[0][0] != "SELECT" or masked[: marks[0][1]].strip():
         return None
     order = [kw for kw, _s, _e in marks]
     if len(set(order)) != len(order):
@@ -344,13 +335,6 @@ def _top_level_clauses(sql: str) -> dict[str, str] | None:
         out[kw] = sql[e:stop].strip()
     return out
 
-
-def _blank_literals(s: str) -> str:
-    """The statement with string-literal BODIES removed (quotes kept):
-    keyword/reference checks over this text can never false-match
-    inside a literal. Defined via _mask_literals so there is exactly
-    ONE literal lexer to keep correct (code-review r10)."""
-    return _mask_literals(s).replace("\x00", "")
 
 _ITEM_ALIAS = re.compile(r"(?is)^(?P<body>.*?)\s+AS\s+(?P<alias>[A-Za-z_]\w*)\s*$")
 _AGG_CALL = re.compile(
@@ -369,7 +353,7 @@ def _split_filter_suffix(body: str) -> tuple[str, str | None]:
     be exactly one well-nested FILTER clause — anything else (extra
     text, unbalanced cond) leaves the body untouched so the caller's
     structural checks reject it toward the local path."""
-    masked = _mask_literals(body)
+    masked = mask(body)
     m = re.match(r"(?is)^\s*[A-Za-z_]\w*\s*\(", masked)
     if m is None:
         return body, None
@@ -405,70 +389,8 @@ def _norm(s: str) -> str:
     """Whitespace-collapsed and case-folded OUTSIDE string literals:
     ``s || 'A'`` and ``s || 'a'`` are different expressions (advice
     r9 — folding literal case could bind a select item to the wrong
-    group key). Quote characters and literal bodies pass through
-    verbatim; '' / "" doubling stays inside its literal."""
-    out: list[str] = []
-    i, n = 0, len(s)
-    while i < n:
-        c = s[i]
-        if c in ("'", '"'):
-            j = i + 1
-            while j < n:
-                if s[j] == "\\":
-                    # backslash escapes are active in Spark's default
-                    # parser — without this, 'a\'B' closed at the
-                    # escaped quote and the tail case-folded, colliding
-                    # two distinct group exprs (code-review r10; same
-                    # rule as every other lexer in this module)
-                    j += 2
-                    continue
-                if s[j] == c:
-                    if j + 1 < n and s[j + 1] == c:  # doubled-quote escape
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(s[i : min(j + 1, n)])
-            i = j + 1
-        elif c.isspace():
-            if out and out[-1] != " ":
-                out.append(" ")
-            i += 1
-        else:
-            out.append(c.lower())
-            i += 1
-    return "".join(out).strip()
-
-
-def _split_top_level(s: str) -> list[str]:
-    from fuse_query_spark.dialect.rewriter import _split_top_level as split
-
-    return split(s)
-
-
-def _mask_literals(s: str) -> str:
-    """LENGTH-PRESERVING variant of _blank_literals: literal bodies
-    become NUL bytes so regex matches over the masked text carry valid
-    offsets into the original."""
-    out = list(s)
-    i, n, in_str = 0, len(s), None
-    while i < n:
-        ch = s[i]
-        if in_str is not None:
-            if ch == "\\" and i + 1 < n:
-                out[i] = out[i + 1] = "\x00"
-                i += 2
-                continue
-            if ch == in_str:
-                in_str = None
-            else:
-                out[i] = "\x00"
-            i += 1
-            continue
-        if ch in ("'", '"'):
-            in_str = ch
-        i += 1
-    return "".join(out)
+    group key)."""
+    return outside_literals(s, lambda seg: re.sub(r"\s+", " ", seg).lower()).strip()
 
 
 def _expr_pattern(expr: str) -> str:
@@ -487,7 +409,7 @@ def _find_agg_calls(text: str) -> list[tuple[int, int]] | None:
     """Outermost spans of aggregate-function calls in `text` (literals
     masked; balanced-paren extents). None when a call's parens never
     close — the caller treats that as unsupported."""
-    masked = _mask_literals(text)
+    masked = mask(text)
     spans: list[tuple[int, int]] = []
     for m in re.finditer(r"(?i)\b" + _AGG_CALL_NAMES + r"\s*\(", masked):
         if spans and m.start() < spans[-1][1]:
@@ -526,7 +448,7 @@ def _resolve_having(text: str, items: list, group_exprs: list[str]) -> str | Non
         if hit is None:
             return None  # an aggregate with no select twin — local
         repl.append((s0, s1, f"`{hit.name}`"))
-    masked = _mask_literals(text)
+    masked = mask(text)
     # longest group exprs first so `number % 3` wins over a `number` key
     order = sorted(range(len(group_exprs)), key=lambda i: -len(_norm(group_exprs[i])))
     for gi in order:
@@ -656,7 +578,7 @@ def _build_sort_plan(cl, items, fm, tm, jm) -> DistributedAgg | None:
     stmt_text = " ".join(
         x for x in [cl.get("SELECT"), cl.get("WHERE"), order_raw] if x
     )
-    blanked = _blank_literals(stmt_text)
+    blanked = mask(stmt_text)
     if re.search(r"(?i)\b[co]\d+\b", blanked):
         return None
     if re.findall(r"\b[A-Za-z_]\w*\s*\.\s*[A-Za-z_]\w*", blanked):
@@ -668,7 +590,7 @@ def _build_sort_plan(cl, items, fm, tm, jm) -> DistributedAgg | None:
     names_lower = {n: j for j, n in enumerate(lowered)}
     out_terms: list[str] = []
     extra: list[str] = []
-    for term in _split_top_level(order_raw):
+    for term in split(order_raw, ","):
         m = _SORT_TERM.match(term.strip())
         if m is None:
             return None
@@ -696,7 +618,7 @@ def _build_sort_plan(cl, items, fm, tm, jm) -> DistributedAgg | None:
                 # a raw source expression: ships as an extra partial
                 # column o{i} so BOTH stages sort by the same value;
                 # nothing aggregate/window/subquery-shaped may ride
-                be = _blank_literals(e)
+                be = mask(e)
                 if re.search(r"(?i)\bOVER\b|\bSELECT\b", be) or _RESID_AGG.search(be):
                     return None
                 e_spans = _find_agg_calls(e)
@@ -726,7 +648,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
     falls back when the plan has no reschedulable read stage. The
     front-end is the linear clause scanner above, not a statement
     regex (judge r9 ask #4)."""
-    if "`" in _blank_literals(sql):
+    if "`" in mask(sql):
         # a backtick inside an unaliased item would nest inside the
         # final SELECT's backtick-quoted output alias — local path
         # (backticks INSIDE string literals are harmless and stay)
@@ -751,7 +673,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
         if not cl["SELECT"]:
             return None
         bodies = []
-        for raw in _split_top_level(cl["SELECT"]):
+        for raw in split(cl["SELECT"], ","):
             am = _ITEM_ALIAS.match(raw.strip())
             b = (am.group("body") if am else raw).strip()
             bspans = _find_agg_calls(b)
@@ -761,7 +683,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
                 or re.fullmatch(r"[A-Za-z_]\w*\s*\.\s*\*", b)
                 or bspans is None
                 or bspans  # DISTINCT over aggregates — local
-                or _RESID_AGG.search(_blank_literals(b))
+                or _RESID_AGG.search(mask(b))
             ):
                 return None
             bodies.append(b)
@@ -772,18 +694,18 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
     if fm is None and tm is None and jm is None:
         return None  # comma-lists, subquery sources, other join kinds
     group_raw = cl.get("GROUP BY")
-    group_exprs = [g.strip() for g in _split_top_level(group_raw)] if group_raw else []
+    group_exprs = [g.strip() for g in split(group_raw, ",")] if group_raw else []
     norm_groups = [_norm(g) for g in group_exprs]
     items: list[_Item] = []
     has_agg = False
     if not cl.get("SELECT"):
         return None
-    for raw in _split_top_level(cl["SELECT"]):
+    for raw in split(cl["SELECT"], ","):
         raw = raw.strip()
         am = _ITEM_ALIAS.match(raw)
         body, alias = (am.group("body"), am.group("alias")) if am else (raw, None)
         body = body.strip()
-        if re.search(r"(?i)\bOVER\b", _blank_literals(body)):
+        if re.search(r"(?i)\bOVER\b", mask(body)):
             return None  # window function — never two-phase here
         core, fcond = _split_filter_suffix(body)
         call = _AGG_CALL.match(core)
@@ -808,7 +730,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
                 # countIf(cond) counts rows where cond)
                 if fcond is not None:
                     return None  # xIf(...) FILTER (...) — double filter
-                args = [a.strip() for a in _split_top_level(arg)]
+                args = [a.strip() for a in split(arg, ",")]
                 if not args or any(not a for a in args):
                     return None
                 if base in ("argmin", "argmax"):
@@ -843,7 +765,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
                 # min_by/max_by, so guarded-out rows never update the
                 # state). Ties keep min_by/max_by's own
                 # partition-order nondeterminism — same class locally.
-                parts = [a.strip() for a in _split_top_level(arg)]
+                parts = [a.strip() for a in split(arg, ",")]
                 if len(parts) != 2 or any(not p for p in parts):
                     return None
                 ret_e, cmp_e = parts
@@ -860,7 +782,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
             if base in _MOMENT_FUNCS:
                 if distinct:
                     return None  # stddev(DISTINCT x) — local path
-                if len(_split_top_level(arg)) != 1 or arg == "*":
+                if len(split(arg, ",")) != 1 or arg == "*":
                     return None
             if fcond is not None:
                 # If/FILTER folds into the argument as a CASE guard:
@@ -871,7 +793,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
                 # finalize-base, the combinator's own decomposition
                 if arg == "*":
                     arg = "1"
-                if not arg or len(_split_top_level(arg)) != 1:
+                if not arg or len(split(arg, ",")) != 1:
                     return None
                 arg = f"CASE WHEN ({fcond}) THEN ({arg}) END"
             # map (base, distinct) to the internal decomposition:
@@ -888,7 +810,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
             else:
                 func = base
             if func == "uniq" and arg and arg != "*":
-                parts = [a.strip() for a in _split_top_level(arg)]
+                parts = [a.strip() for a in split(arg, ",")]
                 if len(parts) > 1:
                     # multi-arg count(DISTINCT a, b)/uniq(a, b): the
                     # distinct state is the TUPLE set — shipped as a
@@ -904,7 +826,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
                     )
                     arg = f"CASE WHEN {guard} THEN named_struct({fields}) END"
             if func in ("uniq", "sum_distinct", "avg_distinct") and (
-                not arg or arg == "*" or len(_split_top_level(arg)) != 1
+                not arg or arg == "*" or len(split(arg, ",")) != 1
             ):
                 return None
             if arg == "*" and func != "count":
@@ -931,7 +853,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
             ):
                 return None
             col_spans = _find_agg_calls(body)
-            if col_spans is None or col_spans or _RESID_AGG.search(_blank_literals(body)):
+            if col_spans is None or col_spans or _RESID_AGG.search(mask(body)):
                 return None
             items.append(_Item("col", alias or body, body=body))
         else:
@@ -996,7 +918,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
         + join_conds
         if x
     )
-    qual = re.findall(r"\b([A-Za-z_]\w*)\s*\.\s*[A-Za-z_]\w*", _blank_literals(body_text))
+    qual = re.findall(r"\b([A-Za-z_]\w*)\s*\.\s*[A-Za-z_]\w*", mask(body_text))
     if jm is None:
         if qual:
             return None
@@ -1023,7 +945,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
         out_names = {i.name for i in plan.items}
         rewritten_terms = []
         needs_k_rewrite = False
-        for term in _split_top_level(plan.order_by):
+        for term in split(plan.order_by, ","):
             term = term.strip()
             t = _ORDER_TERM.match(term)
             if t and (t.group(1).isdigit() or t.group(1) in out_names):
@@ -1074,7 +996,7 @@ def parse_distributed_agg(sql: str) -> DistributedAgg | None:
             # an item literally named k<i> collides with the gathered
             # key columns the filter layer exposes — local
             return None
-        if any("'" in g or '"' in g for g in group_exprs):
+        if any(mask(g) != g for g in group_exprs):
             # a literal inside a group expr can't be matched through
             # the masked scan; an unsubstituted occurrence would fail
             # analysis at the coordinator on a locally-valid query —

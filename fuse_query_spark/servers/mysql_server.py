@@ -34,6 +34,7 @@ independently.
 from __future__ import annotations
 
 import itertools
+import re
 import socket
 import socketserver
 import struct
@@ -41,6 +42,7 @@ import threading
 import time
 from datetime import date, datetime
 
+from fuse_query_spark.dialect.lexer import mask, quote
 from fuse_query_spark.servers.common import ReusableThreadingTCPServer, first_line
 from fuse_query_spark.servers.metrics import (
     METRIC_MYSQL_PROCESSOR_REQUEST_DURATION,
@@ -208,44 +210,7 @@ def _sql_literal(v) -> str:
         return "TRUE" if v else "FALSE"
     if isinstance(v, (int, float)):
         return repr(v)
-    s = str(v).replace("\\", "\\\\").replace("'", "\\'")
-    return f"'{s}'"
-
-
-def _substitute_params(sql: str, values: list) -> str:
-    """Replace `?` placeholders (outside string literals) with SQL
-    literals — textual prepared-statement execution."""
-    out, in_str, vi = [], None, 0
-    i = 0
-    while i < len(sql):
-        ch = sql[i]
-        if in_str:
-            out.append(ch)
-            if ch == "\\" and i + 1 < len(sql):
-                out.append(sql[i + 1])
-                i += 1
-            elif ch == in_str:
-                in_str = None
-        elif ch == "-" and sql[i : i + 2] == "--":
-            nl = sql.find("\n", i)
-            j = len(sql) if nl < 0 else nl
-            out.append(sql[i:j])
-            i = j - 1
-        elif ch == "/" and sql[i : i + 2] == "/*":
-            end = sql.find("*/", i + 2)
-            j = len(sql) if end < 0 else end + 2
-            out.append(sql[i:j])
-            i = j - 1
-        elif ch in ("'", '"'):
-            in_str = ch
-            out.append(ch)
-        elif ch == "?":
-            out.append(_sql_literal(values[vi]) if vi < len(values) else "NULL")
-            vi += 1
-        else:
-            out.append(ch)
-        i += 1
-    return "".join(out)
+    return quote(str(v))
 
 
 def _text_value(v) -> bytes:
@@ -407,35 +372,9 @@ class _Conn:
 
     # -- prepared statements (textual execution) --
 
-    @staticmethod
-    def _count_params(sql: str) -> int:
-        """`?` placeholders outside string literals AND comments
-        (code-review r8: a '?' inside -- or /* */ was counted and
-        substituted — same lexing rules as Engine._split)."""
-        n, in_str = 0, None
-        i = 0
-        while i < len(sql):
-            ch = sql[i]
-            if in_str:
-                if ch == "\\":
-                    i += 1  # skip escaped char
-                elif ch == in_str:
-                    in_str = None
-            elif ch == "-" and sql[i : i + 2] == "--":
-                nl = sql.find("\n", i)
-                i = len(sql) if nl < 0 else nl
-            elif ch == "/" and sql[i : i + 2] == "/*":
-                end = sql.find("*/", i + 2)
-                i = len(sql) if end < 0 else end + 1
-            elif ch in ("'", '"'):
-                in_str = ch
-            elif ch == "?":
-                n += 1
-            i += 1
-        return n
-
     def _stmt_prepare(self, sql: str) -> None:
-        n_params = self._count_params(sql)
+        # placeholders outside literals, identifiers and comments
+        n_params = mask(sql).count("?")
         sid = next(self._next_stmt_id)
         self._stmts[sid] = [sql, n_params, None]
         # COM_STMT_PREPARE_OK: status, stmt_id, num_columns=0 (result
@@ -525,7 +464,13 @@ class _Conn:
             except (struct.error, IndexError, UnicodeDecodeError):
                 self.send_err("Malformed COM_STMT_EXECUTE payload", errno=1210)
                 return
-        self._run_sql(_substitute_params(sql, values), binary=True)
+        # textual execution: each placeholder takes the next value as a
+        # literal, NULL when the client bound fewer
+        out, pos = [], 0
+        for i, hole in enumerate(re.finditer(r"\?", mask(sql))):
+            out += [sql[pos : hole.start()], _sql_literal(values[i]) if i < len(values) else "NULL"]
+            pos = hole.end()
+        self._run_sql("".join(out) + sql[pos:], binary=True)
 
     def _run_sql(self, sql: str, init_db: bool = False, binary: bool = False) -> None:
         # mysql_interactive_worker.rs:92-101: per-statement duration

@@ -2,6 +2,12 @@
 factories, built at query time from the engine's catalog/settings —
 the same design the reference uses (SHOW is rewritten onto them,
 plan_parser.rs:105-127).
+
+Every table is a local relation of rows the driver holds
+(sources.tables.local_rows), so reading one submits no Spark job and
+needs no task slot. That is an availability property: SHOW
+PROCESSLIST and KILL QUERY must answer while the pool is saturated by
+the query being inspected or killed.
 """
 
 from __future__ import annotations
@@ -9,6 +15,8 @@ from __future__ import annotations
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
+
+from fuse_query_spark.sources.tables import local_rows
 
 
 class StatementRecord(NamedTuple):
@@ -22,30 +30,6 @@ class StatementRecord(NamedTuple):
     event_time: str
 
 
-def local_values_df(spark: SparkSession, rows, cols) -> DataFrame:
-    """All-STRING table as a VALUES literal — plans as LocalTableScan,
-    so .collect() executes ON THE DRIVER with no Spark job and no task
-    slot. This is an availability property, not an optimization:
-    createDataFrame(python_list) yields an ExistingRDD scan whose
-    collect needs a free task slot, so SHOW PROCESSLIST and KILL QUERY
-    built that way BLOCK exactly when the pool is saturated by the
-    query you are trying to inspect or kill (r5 finding — the
-    serving-path deadlock a busy cluster cannot afford)."""
-
-    def lit(v):
-        if v is None:
-            return "CAST(NULL AS STRING)"
-        txt = str(v).replace("\\", "\\\\").replace("'", "\\'")
-        return "'" + txt + "'"
-
-    names = ", ".join(cols)
-    if not rows:
-        nulls = "(" + ", ".join("CAST(NULL AS STRING)" for _ in cols) + ")"
-        return spark.sql(f"SELECT * FROM (VALUES {nulls}) AS t({names}) WHERE 1=0")
-    vals = ", ".join("(" + ", ".join(lit(v) for v in r) + ")" for r in rows)
-    return spark.sql(f"SELECT * FROM (VALUES {vals}) AS t({names})")
-
-
 def tables_table(spark: SparkSession, catalog) -> DataFrame:
     """system.tables: (database, name, engine) — tables_table.rs:21."""
     rows = [
@@ -54,9 +38,7 @@ def tables_table(spark: SparkSession, catalog) -> DataFrame:
         for name, tdef in tables.items()
     ]
     rows += [("system", n, "SystemTables") for n in SYSTEM_TABLE_NAMES]
-    return spark.createDataFrame(rows or [("", "", "")], "database STRING, name STRING, engine STRING").filter(
-        "database != ''"
-    )
+    return local_rows(spark, rows, "database STRING, name STRING, engine STRING")
 
 
 def columns_table(spark: SparkSession, catalog) -> DataFrame:
@@ -84,9 +66,7 @@ def columns_table(spark: SparkSession, catalog) -> DataFrame:
         "database STRING, table STRING, name STRING, type STRING,"
         " position INT, is_partition_key BOOLEAN"
     )
-    return spark.createDataFrame(
-        rows or [("", "", "", "", 0, False)], schema
-    ).filter("database != ''")
+    return local_rows(spark, rows, schema)
 
 
 _QUERY_LOG_SCHEMA = (
@@ -100,34 +80,34 @@ def query_log_table(spark: SparkSession, records) -> DataFrame:
     query, state, duration_ms, event_time) — ClickHouse-style extension
     past the reference's system set. list() snapshots the engine's
     deque against concurrent appends."""
-    return spark.createDataFrame(list(records), _QUERY_LOG_SCHEMA)
+    return local_rows(spark, list(records), _QUERY_LOG_SCHEMA)
 
 
 def databases_table(spark: SparkSession, catalog) -> DataFrame:
     """system.databases: (name) — databases_table.rs:21."""
     rows = [(db,) for db in sorted(catalog.databases)] + [("system",)]
-    return spark.createDataFrame(rows, "name STRING")
+    return local_rows(spark, rows, "name STRING")
 
 
 def functions_table(spark: SparkSession) -> DataFrame:
     """system.functions: (name, is_aggregate) — functions_table.rs:23."""
     from fuse_query_spark.functions.registry import all_function_rows
 
-    return spark.createDataFrame(all_function_rows(), "name STRING, is_aggregate BOOLEAN")
+    return local_rows(spark, all_function_rows(), "name STRING, is_aggregate BOOLEAN")
 
 
 def settings_table(spark: SparkSession, settings: dict) -> DataFrame:
     """system.settings: (name, value, default_value, description) —
     settings_table.rs:21."""
     rows = [(k, str(v.value), str(v.default), v.description) for k, v in settings.items()]
-    return spark.createDataFrame(
-        rows, "name STRING, value STRING, default_value STRING, description STRING"
+    return local_rows(
+        spark, rows, "name STRING, value STRING, default_value STRING, description STRING"
     )
 
 
 def one_table(spark: SparkSession) -> DataFrame:
     """system.one: single row dummy=0 — one_table.rs:21-88."""
-    return spark.range(1).selectExpr("CAST(0 AS TINYINT) AS dummy")
+    return local_rows(spark, [(0,)], "dummy TINYINT")
 
 
 _PROCESSES_SCHEMA = "id STRING, host STRING, state STRING, database STRING, extra_info STRING"
@@ -182,13 +162,11 @@ def processes_table(
                 f"stages={len(jinfo.stageIds)} tasks={done}/{total} active={active}",
             )
         )
-    return local_values_df(
-        spark, rows, ["id", "host", "state", "database", "extra_info"]
-    )
+    return local_rows(spark, rows, _PROCESSES_SCHEMA)
 
 
 def contributors_table(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([("fuse-query-spark",)], "name STRING")
+    return local_rows(spark, [("fuse-query-spark",)], "name STRING")
 
 
 def clusters_table(spark: SparkSession, cluster=None) -> DataFrame:
@@ -199,7 +177,7 @@ def clusters_table(spark: SparkSession, cluster=None) -> DataFrame:
     rows = [(spark.sparkContext.applicationId, "local", 0)]
     if cluster is not None:
         rows += [(n["name"], n["address"], n["priority"]) for n in cluster.get_nodes()]
-    return spark.createDataFrame(rows, "name STRING, address STRING, priority INT")
+    return local_rows(spark, rows, "name STRING, address STRING, priority INT")
 
 
 _TRACING_SCHEMA = (
@@ -225,7 +203,7 @@ def tracing_table(spark: SparkSession, records) -> DataFrame:
         )
         for r in list(records)
     ]
-    return spark.createDataFrame(rows, _TRACING_SCHEMA)
+    return local_rows(spark, rows, _TRACING_SCHEMA)
 
 
 def metrics_table(spark: SparkSession) -> DataFrame:
@@ -237,10 +215,7 @@ def metrics_table(spark: SparkSession) -> DataFrame:
     Histograms surface as <name>_sum / <name>_count rows."""
     from fuse_query_spark.servers.metrics import METRICS
 
-    rows = METRICS.snapshot()
-    return spark.createDataFrame(
-        rows or [("", 0.0)], "metric STRING, value DOUBLE"
-    ).filter("metric != ''")
+    return local_rows(spark, METRICS.snapshot(), "metric STRING, value DOUBLE")
 
 
 def parts_table(spark: SparkSession, catalog) -> DataFrame:
@@ -293,12 +268,10 @@ def parts_table(spark: SparkSession, catalog) -> DataFrame:
                         rows_n if tdef.engine == "Parquet" else None,
                     )
                 )
-    cols = ["database", "name", "partition", "files", "bytes", "rows"]
-    return local_values_df(spark, out, cols).selectExpr(
-        "database",
-        "name",
-        "partition",
-        *[f"CAST({c} AS BIGINT) AS {c}" for c in ("files", "bytes", "rows")],
+    return local_rows(
+        spark,
+        out,
+        "database STRING, name STRING, partition STRING, files BIGINT, bytes BIGINT, rows BIGINT",
     )
 
 

@@ -265,3 +265,13 @@ def test_argminmax_combinators():
     assert "min_by(a, b) FILTER (WHERE c > 1)" in rw("SELECT argMinIf(a, b, c > 1) FROM t")
     assert "max_by(a, b) FILTER (WHERE c)" in rw("SELECT argMaxIf(a, b, c) FROM t")
     assert "min_by(a, b)" in rw("SELECT argMinDistinct(a, b) FROM t")
+
+
+def test_clause_rewrites_leave_literals_alone():
+    """HAVING → WHERE and LIMIT n BY find their keywords and aliases
+    outside string literals: a literal holding them keeps its text."""
+    assert rw("SELECT 'x HAVING y' AS s FROM t") == "SELECT 'x HAVING y' AS s FROM t"
+    assert "row_number" not in rw("SELECT a FROM t WHERE s = 'a LIMIT 1 BY b'")
+    out = rw("SELECT number AS k, 'FROM k' AS f FROM numbers(9) ORDER BY concat(k, 'k') LIMIT 1 BY k")
+    assert "SELECT number AS k, 'FROM k' AS f FROM (SELECT *, row_number()" in out
+    assert "ORDER BY concat((number), 'k'))" in out

@@ -1648,6 +1648,25 @@ def test_broken_view_does_not_poison_unrelated_queries(engine):
 # ---------- INSERT VALUES literal coercion ----------
 
 
+def _parent_split_cols(cols: str) -> list[str]:
+    """The VALUES item splitter the row builder below used (it cut at
+    every top-level comma, quotes or not), kept verbatim with it."""
+    parts, depth, cur = [], 0, []
+    for ch in cols:
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        if ch == "," and depth == 0:
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+    if cur:
+        parts.append("".join(cur))
+    return [p.strip() for p in parts if p.strip()]
+
+
 def _parent_parse_tuple(t: str) -> tuple:
     """The literal parser INSERT VALUES used before literals were cast
     to their column types: Python values by literal shape, handed to
@@ -1655,7 +1674,7 @@ def _parent_parse_tuple(t: str) -> tuple:
     import re
 
     vals = []
-    for raw in Engine._split_cols(t):
+    for raw in _parent_split_cols(t):
         v = raw.strip()
         if v.upper() == "NULL":
             vals.append(None)
@@ -2041,3 +2060,72 @@ class TestLiteralRowsLocalScan:
             self._assert_local(df)
             assert df.collect() == []
             engine.sql("DROP TABLE ls_f")
+
+
+# ---------- one lexer: the engine reads literals as Spark does ----------
+
+
+class TestOneLexer:
+    """Statements whose literals, quoted identifiers or comments the
+    engine once lexed differently from Spark, each with a wrong
+    result or a spurious error."""
+
+    def test_escaped_quote_in_values_keeps_every_row(self, engine):
+        engine.sql("DROP TABLE IF EXISTS lx_esc")
+        engine.sql("CREATE TABLE lx_esc (s String, n Int) ENGINE = Memory")
+        engine.sql(r"INSERT INTO lx_esc VALUES ('it\'s', 1), ('ok', 2)")
+        got = sorted(tuple(r) for r in engine.sql("SELECT s, n FROM lx_esc").collect())
+        assert got == [("it's", 1), ("ok", 2)]
+        engine.sql("DROP TABLE lx_esc")
+
+    def test_comma_inside_literal_in_values_and_set(self, engine):
+        engine.sql("DROP TABLE IF EXISTS lx_comma")
+        engine.sql("CREATE TABLE lx_comma (id Int, s String) ENGINE = Memory")
+        engine.sql("INSERT INTO lx_comma VALUES (1, 'a,b'), (2, 'c')")
+        engine.sql("UPDATE lx_comma SET s = 'x,y' WHERE id = 2")
+        got = sorted(tuple(r) for r in engine.sql("SELECT id, s FROM lx_comma").collect())
+        assert got == [(1, "a,b"), (2, "x,y")]
+        engine.sql("DROP TABLE lx_comma")
+
+    @pytest.mark.parametrize(
+        "literal", ["'a''b'", r"'it\'s'", r"'tab\there'", r"'\101\%'", "\"q\"\"d\"", "'a' 'b'"]
+    )
+    def test_values_literal_stores_the_select_value(self, engine, literal):
+        engine.sql("DROP TABLE IF EXISTS lx_val")
+        engine.sql("CREATE TABLE lx_val (s String) ENGINE = Memory")
+        engine.sql(f"INSERT INTO lx_val VALUES ({literal})")
+        assert one(engine.sql("SELECT s FROM lx_val")) == one(engine.sql(f"SELECT {literal}"))
+        engine.sql("DROP TABLE lx_val")
+
+    def test_backslash_literal_does_not_hide_a_table(self, engine):
+        """A name after an escaped quote is still registered, so the
+        statement reads the table's current rows, not the view an
+        earlier statement registered."""
+        engine.sql("DROP TABLE IF EXISTS lx_seen")
+        engine.sql("CREATE TABLE lx_seen (n Int) ENGINE = Memory")
+        engine.sql("INSERT INTO lx_seen VALUES (1), (2)")
+        assert one(engine.sql("SELECT count(*) FROM lx_seen")) == 2
+        engine.sql("INSERT INTO lx_seen VALUES (3)")
+        row = engine.sql(
+            r"SELECT 'x\'' AS a, (SELECT count(*) FROM lx_seen) AS c, 'y' AS b"
+        ).collect()[0]
+        assert tuple(row) == ("x'", 3, "y")
+        engine.sql("DROP TABLE lx_seen")
+
+    def test_quoted_identifier_and_nested_comment(self, engine):
+        df = engine.sql("SELECT 1 AS `a;b`")
+        assert df.columns == ["a;b"] and one(df) == 1
+        df = engine.sql("SELECT 1 /* a /* b */ c */ AS x")
+        assert df.columns == ["x"] and one(df) == 1
+
+
+def test_system_tables_read_without_jobs(engine):
+    """Every system table is a local relation: reading it submits no
+    Spark job, so it answers while every task slot is busy."""
+    from fuse_query_spark.sources.system_tables import SYSTEM_TABLE_NAMES
+
+    sched = engine.spark.sparkContext._jsc.sc().dagScheduler()
+    for name in SYSTEM_TABLE_NAMES:
+        before = sched.nextJobId()
+        engine.sql_collect(f"SELECT * FROM system.{name}")
+        assert sched.nextJobId() == before, name

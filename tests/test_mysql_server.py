@@ -407,3 +407,12 @@ def test_question_mark_in_comment_not_a_param(client):
     res = client.execute(sid, params=[7])
     cols, rows = res
     assert rows and rows[0][0] in (7, "7", b"7")
+
+
+def test_quote_inside_quoted_identifier_is_not_a_literal(client):
+    """A quote inside a backtick identifier opens no literal, so the
+    placeholder after it is counted and bound."""
+    sid, _ncols, nparams = client.prepare("SELECT `a'b`, ? AS p FROM (SELECT 1 AS `a'b`)")
+    assert nparams == 1
+    _cols, rows = client.execute(sid, [7])
+    assert rows == [[1, 7]]

@@ -35,6 +35,8 @@ query takes the choice away from AQE in a way that can't scale.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from fuse_query_spark.queries import load_registry
@@ -280,7 +282,8 @@ def test_package_reads_only_deployment_env():
 
 
 def test_engine_builds_driver_rows_as_local_relations():
-    """No createDataFrame call in the engine or the Snapshot source:
+    """No createDataFrame call in the engine, the Snapshot source or
+    the system tables:
     rows the driver holds go through sources.tables.local_rows, an
     Arrow local relation (LocalTableScan). createDataFrame on a Python
     list plans a Python RDD, and every scan of it, for the life of a
@@ -290,8 +293,64 @@ def test_engine_builds_driver_rows_as_local_relations():
     pkg = pathlib.Path(__file__).resolve().parent.parent / "fuse_query_spark"
     bad = [
         f"{rel}:{n}: {line.strip()}"
-        for rel in ("engine.py", "sources/snapshots.py")
+        for rel in ("engine.py", "sources/snapshots.py", "sources/system_tables.py")
         for n, line in enumerate((pkg / rel).read_text().splitlines(), 1)
         if "createDataFrame(" in line
     ]
     assert bad == []
+
+
+# A one-character string literal holding a quote, as Python source.
+_QUOTE_CHAR = r"""(?:"'"|'"'|"\\""|'\\'')"""
+_QUOTE_TEST = re.compile(
+    rf"[=!]=\s*{_QUOTE_CHAR}|{_QUOTE_CHAR}\s*[=!]="  # ch == "'"
+    rf"|{_QUOTE_CHAR}\s+(?:not\s+)?in\b"  # "'" in text
+    r"""|\bin\s+(?:"[^"\s]*'[^"\s]*"|'[^'\s]*"[^'\s]*'|"[^"\s]*\\"[^"\s]*")"""  # ch in "'\""
+    rf"|\(\s*{_QUOTE_CHAR}\s*,"  # ch in ("'", '"')
+    rf"|\.(?:startswith|endswith|strip|lstrip|rstrip)\(\s*{_QUOTE_CHAR}"
+    r"""|\[\^\\?['"]"""  # a regex class that stops at a quote: '(?:[^']|'')*'
+)
+
+
+def _quote_tests(pkg) -> list[str]:
+    lexer = pkg / "dialect" / "lexer.py"
+    return [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != lexer
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if _QUOTE_TEST.search(line)
+    ]
+
+
+def test_only_the_lexer_tests_for_quotes():
+    """One module knows what a quote is: no line under
+    fuse_query_spark/ outside dialect/lexer.py tests for a quote
+    character. A scanner of its own would lex some statement
+    differently from the lexer (and from Spark); callers split, mask,
+    strip comments and decode literals through dialect.lexer."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "fuse_query_spark"
+    assert _quote_tests(pkg) == []
+
+
+def test_quote_lint_flags_hand_written_scanners(tmp_path):
+    """The lint recognizes the scanner shapes it forbids."""
+    src = r"""
+if ch in "'\"":
+if ch in "'\"`":
+if ch == "'":
+if ch in ("'", '"'):
+if "'" in g or '"' in g:
+if v.startswith("'") and v.endswith("'"):
+value = raw.strip().strip("'")
+scan = re.sub(r"'(?:[^']|'')*'", "''", s)
+m = re.match(r"^'([^']*)'$", a)
+""".strip().splitlines()
+    (tmp_path / "dialect").mkdir()
+    (tmp_path / "scanner.py").write_text("\n".join(src) + "\n")
+    (tmp_path / "dialect" / "lexer.py").write_text("\n".join(src) + "\n")
+    assert [hit.split(":")[1] for hit in _quote_tests(tmp_path)] == [
+        str(n) for n in range(1, len(src) + 1)
+    ]
