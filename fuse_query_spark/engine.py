@@ -26,7 +26,6 @@ from fuse_query_spark import session as _session
 from fuse_query_spark.dialect.lexer import (
     STRING_LITERAL,
     mask,
-    quote,
     split,
     string_value,
     strip_comments,
@@ -44,6 +43,16 @@ from fuse_query_spark.errors import (
 )
 from fuse_query_spark.functions.registry import register_udfs
 from fuse_query_spark.sources import system_tables as systbl
+from fuse_query_spark.sources.storage import (
+    PARTITIONABLE,
+    Mutation,
+    Storage,
+    partition_columns,
+    partition_path,
+    partition_prefix,
+    read_parquet,
+    storage_for,
+)
 from fuse_query_spark.sources.tables import local_rows
 
 # SQL/ClickHouse type name → Spark SQL type (sql_common.rs:20-55)
@@ -87,15 +96,19 @@ class Setting:
 class TableDef:
     name: str
     database: str
-    engine: str  # CSV | Parquet | JSONEachRow | Null | Memory
+    engine: str  # the ENGINE name, as shown; behaviour is `storage`'s
     schema: StructType
     location: str | None = None
     data: DataFrame | None = None  # Memory engine
     view_sql: str | None = None  # View engine: the stored SELECT
     partition_by: tuple[str, ...] = ()  # file engines: hive-style layout
     # file and Snapshot engines: (key, DataFrame) of the last resolved
-    # relation, reused while Engine._relation_key(self) is unchanged
+    # relation, reused while its key is unchanged (sources/storage.py)
     relation: tuple | None = field(default=None, repr=False, compare=False)
+    storage: Storage = field(init=False, repr=False, compare=False)
+
+    def __post_init__(self):
+        self.storage = storage_for(self.engine)
 
 
 @dataclass
@@ -222,15 +235,13 @@ class Engine:
         """Attach every parquet table in a directory as a Parquet-engine
         catalog table (the reference's `CREATE TABLE … ENGINE = Parquet
         location = …` shape, batched)."""
-        import os
-
         from fuse_query_spark.sources.tables import TABLES
 
         for name in TABLES:
             path = os.path.join(sf_dir, f"{name}.parquet")
             if not os.path.exists(path):
                 continue
-            df = self._read_parquet(path, table_name=name)
+            df = read_parquet(self.spark, path, table_name=name)
             self.catalog.db(db)[name] = TableDef(
                 name=name, database=db, engine="Parquet", schema=df.schema, location=path
             )
@@ -425,18 +436,6 @@ class Engine:
             return self._select(s)
         raise UnsupportedStatement(f"Unsupported statement: {s[:60]}")
 
-    def _snapshot_tdef(self, name: str, verb: str) -> TableDef:
-        db, table = self._qualify(name)
-        tdef = self.catalog.db(db).get(table)
-        if tdef is None:
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
-        if tdef.engine != "Snapshot":
-            raise UnsupportedStatement(
-                f"{verb} needs ENGINE = Snapshot; '{db}.{table}' is "
-                f"ENGINE={tdef.engine}"
-            )
-        return tdef
-
     def _rollback_table(self, s: str) -> None:
         """ROLLBACK TABLE t TO VERSION n — restore an old snapshot's
         file list as a NEW version (history preserved; the rollback is
@@ -448,8 +447,8 @@ class Engine:
             raise UnsupportedStatement(f"Cannot parse ROLLBACK TABLE: {s[:60]}")
         from fuse_query_spark.sources.snapshots import snapshot_rollback
 
-        tdef = self._snapshot_tdef(m.group(1), "ROLLBACK TABLE")
-        snapshot_rollback(tdef.location, int(m.group(2)))
+        tdef = self.resolve_table(m.group(1))
+        snapshot_rollback(tdef.storage.versions(tdef, "ROLLBACK TABLE"), int(m.group(2)))
         return None
 
     def _vacuum(self, s: str) -> DataFrame:
@@ -462,34 +461,17 @@ class Engine:
             raise UnsupportedStatement(f"Cannot parse VACUUM: {s[:60]}")
         from fuse_query_spark.sources.snapshots import snapshot_vacuum
 
-        tdef = self._snapshot_tdef(m.group(1), "VACUUM")
-        deleted = snapshot_vacuum(tdef.location, int(m.group(2) or 1))
+        tdef = self.resolve_table(m.group(1))
+        deleted = snapshot_vacuum(tdef.storage.versions(tdef, "VACUUM"), int(m.group(2) or 1))
         return local_rows(self.spark, [(f,) for f in deleted], "deleted_file STRING")
 
     def _truncate(self, s: str) -> None:
-        """TRUNCATE TABLE — extension: Memory drops its rows, file
-        engines clear the location directory's data files, Null is a
-        no-op; views refuse."""
+        """TRUNCATE TABLE — extension (sources/storage.py)."""
         m = re.match(r"(?is)^TRUNCATE\s+TABLE\s+([\w.]+)\s*$", s)
         if not m:
             raise UnsupportedStatement(f"Cannot parse TRUNCATE: {s[:60]}")
-        db, table = self._qualify(m.group(1))
-        tables = self.catalog.db(db)
-        if table not in tables:
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
-        tdef = tables[table]
-        if tdef.engine == "Memory":
-            tdef.data = None
-        elif tdef.engine in ("Parquet", "CSV", "JSONEachRow", "ORC"):
-            import os
-            import shutil
-
-            if tdef.location and os.path.isdir(tdef.location):
-                shutil.rmtree(tdef.location)
-        elif tdef.engine == "Null":
-            pass
-        else:
-            raise UnsupportedStatement(f"Cannot TRUNCATE engine {tdef.engine}")
+        tdef = self.resolve_table(m.group(1))
+        tdef.storage.truncate(self, tdef)
         return None
 
     def _show_partitions(self, name: str) -> DataFrame:
@@ -499,15 +481,9 @@ class Engine:
         a real deployment this is a metastore listing (partition values
         are metadata, never a data scan — same contract either way).
         """
-        import os
-
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table not in tables:
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
-        tdef = tables[table]
+        tdef = self.resolve_table(name)
         if not tdef.partition_by:
-            raise UnsupportedStatement(f"Table '{db}.{table}' is not partitioned")
+            raise UnsupportedStatement(f"Table '{tdef.database}.{tdef.name}' is not partitioned")
         parts: list[tuple[str]] = []
 
         def descend(path: str, depth: int, prefix: str):
@@ -529,31 +505,6 @@ class Engine:
             descend(tdef.location, 0, "")
         return local_rows(self.spark, parts, "partition STRING")
 
-    def _partition_prefix(
-        self, db: str, table: str, tdef, spec: str
-    ) -> list[tuple[str, str]]:
-        """Parse `col='v'[, col2='w']` and validate it names a PREFIX of
-        the table's partition columns in declaration order — the shared
-        contract for DROP PARTITION and OPTIMIZE … PARTITION: a prefix
-        selects exactly one subtree of the hive layout."""
-        if not tdef.partition_by:
-            raise UnsupportedStatement(f"Table '{db}.{table}' is not partitioned")
-        pairs = []
-        for part in split(spec, ","):
-            mm = re.match(r"(?s)^(\w+)\s*=\s*(.+)$", part)
-            if not mm:
-                raise UnsupportedStatement(f"Cannot parse partition spec: {part}")
-            value = string_value(mm.group(2))
-            pairs.append((mm.group(1), mm.group(2) if value is None else value))
-        expect = tdef.partition_by[: len(pairs)]
-        got = tuple(c for c, _ in pairs)
-        if got != expect:
-            raise UnsupportedStatement(
-                f"Partition spec {got} must be a prefix of the partition "
-                f"columns {tdef.partition_by}"
-            )
-        return pairs
-
     _ALTER_DROP_PARTITION = re.compile(
         r"(?is)^ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+PARTITION\s*\(([^)]*)\)\s*$"
     )
@@ -566,23 +517,16 @@ class Engine:
         columns in order: dropping `(day='d')` on a (day, source)
         layout removes the whole day subtree.
         """
-        import os
         import shutil
 
         m = self._ALTER_DROP_PARTITION.match(s)
         if not m:
             return self._alter_schema(s)
         name, spec = m.groups()
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table not in tables:
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
-        tdef = tables[table]
-        pairs = self._partition_prefix(db, table, tdef, spec)
+        tdef = self.resolve_table(name)
+        pairs = partition_prefix(tdef, spec)
         if tdef.location:
-            target = os.path.join(
-                tdef.location, *[f"{c}={v}" for c, v in pairs]
-            )
+            target = partition_path(self.spark, tdef, pairs)
             if os.path.isdir(target):
                 shutil.rmtree(target)
         return None
@@ -601,14 +545,12 @@ class Engine:
 
     def _alter_schema(self, s: str):
         """ALTER TABLE ADD COLUMN / DROP COLUMN / RENAME TO — extension:
-        metadata-only schema evolution. The declared schema is the
-        reader contract (_table_df null-fills declared-but-absent
-        columns and projects away undeclared ones), so ADD/DROP touch
-        ZERO data files — at 100 TB a column add must not rewrite the
-        table. DROP of a re-added name resurfaces old file data, same
-        as any schema-on-read store; partition columns cannot be
-        dropped (they are the directory layout).
-        """
+        metadata-only schema evolution (readers conform stored files to
+        the declared schema), so ADD/DROP touch ZERO data files — at
+        100 TB a column add must not rewrite the table. DROP of a
+        re-added name resurfaces old file data, same as any
+        schema-on-read store; partition columns cannot be dropped (they
+        are the directory layout)."""
         m = self._ALTER_ADD_COL.match(s)
         if m:
             name, if_not, col_name, col_type = m.groups()
@@ -619,8 +561,7 @@ class Engine:
                 raise UnsupportedStatement(f"Column already exists: '{col_name}'")
             new_field = self._parse_schema(f"{col_name} {col_type}")[0]
             tdef.schema = StructType(list(tdef.schema.fields) + [new_field])
-            if tdef.engine == "Memory" and tdef.data is not None:
-                tdef.data = self._align_to_schema(tdef.data, tdef.schema)
+            tdef.storage.schema_changed(self, tdef)
             return None
         m = self._ALTER_DROP_COL.match(s)
         if m:
@@ -639,23 +580,19 @@ class Engine:
             tdef.schema = StructType(
                 [f for f in tdef.schema.fields if f.name != col_name]
             )
-            if tdef.engine == "Memory" and tdef.data is not None:
-                tdef.data = self._align_to_schema(tdef.data, tdef.schema)
+            tdef.storage.schema_changed(self, tdef)
             return None
         m = self._ALTER_RENAME.match(s)
         if m:
             old, new = m.groups()
-            db, table = self._qualify(old)
+            tdef = self.resolve_table(old)
             new_db, new_table = self._qualify(new)
-            tables = self.catalog.db(db)
-            if table not in tables:
-                raise UnknownTable(f"Unknown table: '{db}.{table}'")
             dest = self.catalog.db(new_db)
             if new_table in dest:
                 raise UnsupportedStatement(
                     f"Table already exists: '{new_db}.{new_table}'"
                 )
-            tdef = tables.pop(table)
+            del self.catalog.db(tdef.database)[tdef.name]
             tdef.name, tdef.database = new_table, new_db
             dest[new_table] = tdef
             return None
@@ -668,150 +605,17 @@ class Engine:
         mutations): the GDPR/expiry delete a long-lived warehouse needs.
         SQL semantics: rows where pred is TRUE are removed; NULL-pred
         rows are KEPT (keep-condition = COALESCE(NOT pred, TRUE), not
-        plain NOT pred).
-
-        Scale posture: on a PARTITION BY table, one pruned scan finds
-        the AFFECTED partitions (distinct partition tuples where pred
-        holds — bounded by partition cardinality), and only those
-        subtrees are rewritten via dynamic overwrite; a delete that
-        touches 3 days of a year rewrites 3 directories. Unpartitioned
-        file tables are fully rewritten through a temp-dir swap; Memory
-        filters its DataFrame; a predicate on partition columns only
-        degenerates to directory removal (generalized DROP PARTITION).
-        """
-        import os
-        import shutil
-
+        plain NOT pred). How each engine rewrites: sources/storage.py."""
         m = self._DELETE.match(s)
         if not m:
             raise UnsupportedStatement(f"Cannot parse DELETE: {s[:80]}")
         name, pred = m.groups()
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table not in tables:
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
-        tdef = tables[table]
-        keep = f"COALESCE(NOT ({pred}), TRUE)"
-        if tdef.engine == "Memory":
-            tdef.data = self._select(f"SELECT * FROM {name} WHERE {keep}")
-            return None
-        if tdef.engine == "Null":
-            return None
-        if tdef.engine == "Snapshot":
-            # MVCC delete: the filtered survivors become a NEW version;
-            # the pre-delete version stays readable via VERSION AS OF
-            # (and restorable via ROLLBACK) — this is the delete shape
-            # a versioned table format gives you for free
-            from fuse_query_spark.sources.snapshots import snapshot_commit
-
-            snapshot_commit(
-                self._align_to_schema(
-                    self._select(f"SELECT * FROM {name} WHERE {keep}"), tdef.schema
-                ),
-                tdef.location,
-                "overwrite",
-            )
-            return None
-        if tdef.engine not in ("Parquet", "CSV", "JSONEachRow", "ORC"):
-            raise UnsupportedStatement(f"Cannot DELETE from engine {tdef.engine}")
-        if tdef.location is None or not os.path.isdir(tdef.location):
-            return None  # nothing written yet
-        if tdef.partition_by:
-            affected, member = self._affected_partitions(name, tdef, pred)
-            if not affected:
-                return None
-            self._swap_partitions(
-                name, tdef, affected,
-                f"SELECT * FROM {name} WHERE ({member}) AND {keep}",
-            )
-            return None
-        self._full_rewrite(tdef, f"SELECT * FROM {name} WHERE {keep}")
+        tdef = self.resolve_table(name)
+        tdef.storage.rewrite(
+            self, tdef,
+            Mutation("DELETE from", name, "*", keep=f"COALESCE(NOT ({pred}), TRUE)", where=pred),
+        )
         return None
-
-    def _affected_partitions(self, name: str, tdef: TableDef, pred: str):
-        """Distinct partition tuples where pred holds (one pruned scan,
-        bounded by partition cardinality) + the membership predicate
-        naming exactly those leaves."""
-        pcols = ", ".join(tdef.partition_by)
-        affected = self._select(
-            f"SELECT DISTINCT {pcols} FROM {name} WHERE ({pred})"
-        ).collect()
-
-        def _eq(c, v):
-            if v is None:
-                return f"{c} IS NULL"
-            return f"{c} = {quote(str(v))}"
-
-        member = " OR ".join(
-            "(" + " AND ".join(_eq(c, r[c]) for c in tdef.partition_by) + ")"
-            for r in affected
-        )
-        return affected, member
-
-    def _partition_leaf(self, tdef: TableDef, row) -> str:
-        """Filesystem leaf for one partition tuple, escaped exactly the
-        way Spark wrote it (ExternalCatalogUtils.escapePathName; NULL →
-        __HIVE_DEFAULT_PARTITION__) — raw str(value) paths miss leaves
-        whose values contain escaped characters, silently leaving the
-        old files (= duplicate rows after the dynamic overwrite)."""
-        esc = self.spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        parts = []
-        for c in tdef.partition_by:
-            v = row[c]
-            val = "__HIVE_DEFAULT_PARTITION__" if v is None else esc.escapePathName(str(v))
-            parts.append(f"{esc.escapePathName(c)}={val}")
-        return os.path.join(tdef.location, *parts)
-
-    def _swap_partitions(self, name: str, tdef: TableDef, affected, stage_sql: str):
-        """Rewrite ONLY the affected leaves: materialize stage_sql (must
-        be bounded to the affected subtrees) to a staging dir BEFORE
-        touching their files (the read and the removal race otherwise),
-        remove the affected leaves, then dynamic-overwrite the staged
-        rows back in."""
-        import os
-        import shutil
-
-        _db, table = self._qualify(name)
-        tmp = os.path.normpath(
-            os.path.join(tdef.location, "..", f".{table}__dml_tmp__")
-        )
-        shutil.rmtree(tmp, ignore_errors=True)
-        staged = self._align_to_schema(self._select(stage_sql), tdef.schema)
-        staged.repartition(*[F.col(c) for c in tdef.partition_by]).write.mode(
-            "overwrite"
-        ).partitionBy(*tdef.partition_by).parquet(tmp)
-        for r in affected:
-            leaf = self._partition_leaf(tdef, r)
-            if os.path.isdir(leaf):
-                shutil.rmtree(leaf)
-        has_parts = any(
-            f.endswith(".parquet") for _r, _d, fs in os.walk(tmp) for f in fs
-        )
-        if has_parts:  # no survivors → the leaf removal WAS the mutation
-            # dynamic overwrite: only the staged rows' leaves rewritten
-            self._overwrite(tdef, self.spark.read.parquet(tmp))
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    def _full_rewrite(self, tdef: TableDef, select_sql: str):
-        """Whole-table rewrite through a temp-dir swap (unpartitioned
-        tables, or mutations that move rows across partitions)."""
-        import os
-        import shutil
-
-        df = self._align_to_schema(self._select(select_sql), tdef.schema)
-        tmp = tdef.location.rstrip("/") + ".__dml_tmp__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        writers = {"Parquet": "parquet", "CSV": "csv", "JSONEachRow": "json", "ORC": "orc"}
-        if tdef.partition_by:
-            df = df.repartition(*[F.col(c) for c in tdef.partition_by])
-            getattr(
-                df.write.mode("overwrite").partitionBy(*tdef.partition_by),
-                writers[tdef.engine],
-            )(tmp)
-        else:
-            getattr(df.write.mode("overwrite"), writers[tdef.engine])(tmp)
-        shutil.rmtree(tdef.location)
-        os.rename(tmp, tdef.location)
 
     _UPDATE = re.compile(r"(?is)^UPDATE\s+([\w.]+)\s+SET\s+(.+)$")
 
@@ -822,18 +626,8 @@ class Engine:
         TRUE get the new values; FALSE **and NULL** predicate rows are
         unchanged (CASE WHEN pred THEN new ELSE old END gives exactly
         that). SET expressions may reference any column and the full
-        dialect function surface.
-
-        Scale posture mirrors DELETE: on a PARTITION BY table whose SET
-        list leaves the partition columns alone, one pruned scan finds
-        the affected partitions and only those subtrees are rewritten
-        via dynamic overwrite. A SET that writes a partition column can
-        MOVE rows between leaves — destination leaves would be blindly
-        replaced by a scoped overwrite — so that case (and flat file
-        tables) takes the whole-table temp-dir swap.
-        """
-        import os
-
+        dialect function surface. A SET that writes a partition column
+        can MOVE rows between leaves, so it is not bounded by pred."""
         m = self._UPDATE.match(s)
         if not m:
             raise UnsupportedStatement(f"Cannot parse UPDATE: {s[:80]}")
@@ -845,11 +639,7 @@ class Engine:
             if masked.count("(", 0, w.start()) == masked.count(")", 0, w.start()):
                 set_clause, pred = rest[: w.start()], rest[w.end() :]
                 break
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table not in tables:
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
-        tdef = tables[table]
+        tdef = self.resolve_table(name)
         sets: dict[str, str] = {}
         for part in split(set_clause, ","):
             eq = part.find("=")
@@ -869,41 +659,10 @@ class Engine:
             else c
             for c in tdef.schema.names
         )
-        if tdef.engine == "Memory":
-            tdef.data = self._align_to_schema(
-                self._select(f"SELECT {proj} FROM {name}"), tdef.schema
-            )
-            return None
-        if tdef.engine == "Null":
-            return None
-        if tdef.engine == "Snapshot":
-            # MVCC update: rewritten rows land as a new version; the
-            # pre-update state stays time-travelable (see _delete)
-            from fuse_query_spark.sources.snapshots import snapshot_commit
-
-            snapshot_commit(
-                self._align_to_schema(
-                    self._select(f"SELECT {proj} FROM {name}"), tdef.schema
-                ),
-                tdef.location,
-                "overwrite",
-            )
-            return None
-        if tdef.engine not in ("Parquet", "CSV", "JSONEachRow", "ORC"):
-            raise UnsupportedStatement(f"Cannot UPDATE engine {tdef.engine}")
-        if tdef.location is None or not os.path.isdir(tdef.location):
-            return None  # nothing written yet
-        moves_partitions = any(c in sets for c in tdef.partition_by or ())
-        if tdef.partition_by and pred is not None and not moves_partitions:
-            affected, member = self._affected_partitions(name, tdef, pred)
-            if not affected:
-                return None
-            self._swap_partitions(
-                name, tdef, affected,
-                f"SELECT {proj} FROM {name} WHERE ({member})",
-            )
-            return None
-        self._full_rewrite(tdef, f"SELECT {proj} FROM {name}")
+        moves_rows = any(c in sets for c in tdef.partition_by)
+        tdef.storage.rewrite(
+            self, tdef, Mutation("UPDATE", name, proj, where=None if moves_rows else pred)
+        )
         return None
 
     _OPTIMIZE = re.compile(
@@ -913,103 +672,23 @@ class Engine:
     )
 
     def _optimize(self, s: str) -> DataFrame:
-        """OPTIMIZE TABLE t [PARTITION (col='v', …)] [FINAL] —
-        small-files compaction for Parquet-engine tables (ClickHouse's
-        part-merge surface mapped onto parquet file geometry; extension
-        — the reference has no OPTIMIZE). Rewrites the selected subtree
-        via sources.sinks.compact_parquet (output file count sized from
-        the input's REAL bytes at 512 MB/file) into a sibling temp dir,
-        then swaps it in, so readers of the old files are never racing
-        a half-written directory. Returns one summary row
-        (partition, files_before, files_after, rows).
+        """OPTIMIZE TABLE t [PARTITION (col='v', …)] [FINAL]
+        [ZORDER BY (cols)] — small-files compaction (ClickHouse's
+        part-merge surface mapped onto file geometry; extension — the
+        reference has no OPTIMIZE). Returns one summary row.
 
         Production posture: every INSERT INTO appends at least one file
         per partition touched, so long-lived partitioned tables need
         this pass; always give PARTITION so the unit of rewrite is one
         subtree (one day), not the whole table.
         """
-        import os
-        import shutil
-
-        from fuse_query_spark.sources.sinks import compact_parquet
-
         m = self._OPTIMIZE.match(s)
         if not m:
             raise UnsupportedStatement(f"Cannot parse OPTIMIZE: {s[:80]}")
         name, spec, _final, zorder = m.groups()
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table not in tables:
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
-        tdef = tables[table]
-        if tdef.engine == "Snapshot":
-            # Snapshot tables compact forward-written (a new version;
-            # time travel to the fragmented history is untouched) and
-            # support ZORDER BY for multi-dimensional file skipping
-            from fuse_query_spark.sources.snapshots import (
-                read_manifest,
-                latest_version,
-                snapshot_optimize,
-            )
-
-            if spec:
-                raise UnsupportedStatement(
-                    "OPTIMIZE PARTITION applies to Parquet-engine tables; "
-                    "Snapshot tables compact whole versions"
-                )
-            cols = [c.strip() for c in zorder.split(",")] if zorder else None
-            before = len(read_manifest(tdef.location, latest_version(tdef.location))["files"])
-            v = snapshot_optimize(self.spark, tdef.location, zorder_by=cols)
-            after = read_manifest(tdef.location, v)
-            return local_rows(
-                self.spark,
-                [(v, before, len(after["files"]), after["operation"])],
-                "version INT, files_before INT, files_after INT, operation STRING",
-            )
-        if zorder:
-            raise UnsupportedStatement(
-                "ZORDER BY needs ENGINE = Snapshot (manifest min/max "
-                "skipping); Parquet-engine OPTIMIZE compacts only"
-            )
-        if tdef.engine != "Parquet" or tdef.location is None:
-            raise UnsupportedStatement(
-                f"OPTIMIZE TABLE supports Parquet-engine tables with a "
-                f"location; '{db}.{table}' is ENGINE={tdef.engine}"
-            )
-        pairs = self._partition_prefix(db, table, tdef, spec) if spec else []
-        label = "/".join(f"{c}={v}" for c, v in pairs) or "<table>"
-        target = os.path.join(tdef.location, *[f"{c}={v}" for c, v in pairs])
-
-        def summary(*vals) -> DataFrame:
-            return local_rows(
-                self.spark,
-                [vals],
-                "partition STRING, files_before BIGINT, files_after BIGINT, rows BIGINT",
-            )
-
-        if not os.path.isdir(target):
-            if pairs:
-                raise UnsupportedStatement(
-                    f"No such partition {label} in '{db}.{table}'"
-                )
-            # empty, never-written table: nothing to compact
-            return summary(label, 0, 0, 0)
-        remaining = tuple((tdef.partition_by or ())[len(pairs):])
-        tmp = target.rstrip("/") + ".__optimize_tmp__"
-        try:
-            stats = compact_parquet(
-                self.spark, target, tmp, partition_by=remaining
-            )
-            shutil.rmtree(target)
-            os.rename(tmp, target)
-        finally:
-            if os.path.isdir(tmp) and not os.path.isdir(target):
-                os.rename(tmp, target)  # swap interrupted: restore
-            elif os.path.isdir(tmp):
-                shutil.rmtree(tmp)
-        return summary(
-            label, stats["files_before"], stats["files_after"], stats["rows"]
-        )
+        tdef = self.resolve_table(name)
+        cols = [c.strip() for c in zorder.split(",")] if zorder else None
+        return tdef.storage.optimize(self, tdef, spec, cols)
 
     def _kill(self, s: str) -> DataFrame:
         """KILL QUERY <id> — cancels the statement with that
@@ -1041,29 +720,26 @@ class Engine:
         view pinned to manifest vN and substitute it for the clause —
         time travel resolves BEFORE dialect rewriting so the rest of
         the query sees a plain relation. Multiple/ mixed versions of
-        the same table in one query work (each pin is its own view)."""
+        the same table in one query work (each pin is its own view).
+        Clauses are found in the masked statement (lexer.mask), so a
+        literal holding `t VERSION AS OF 1` stays a literal."""
         from fuse_query_spark.sources.snapshots import snapshot_read
 
-        def repl(m: re.Match) -> str:
-            name, ver = m.group(1), int(m.group(2))
-            db, tbl = self._qualify(name)
-            tdef = self.catalog.db(db).get(tbl)
-            if tdef is None:
-                raise UnknownTable(f"Unknown table: '{db}.{tbl}'")
-            if tdef.engine != "Snapshot":
-                raise UnsupportedStatement(
-                    f"VERSION AS OF needs ENGINE = Snapshot; "
-                    f"'{db}.{tbl}' is ENGINE={tdef.engine}"
-                )
-            view = f"{db}__{tbl}__v{ver}"
+        if not re.search(r"(?i)\bVERSION\s+AS\s+OF\b", s):
+            return s
+        out, pos = [], 0
+        for m in re.finditer(r"(?is)\b([\w.]+)\s+VERSION\s+AS\s+OF\s+(\d+)\b", mask(s)):
+            tdef = self.resolve_table(m.group(1))
+            ver = int(m.group(2))
+            view = f"{tdef.database}__{tdef.name}__v{ver}"
             snapshot_read(
-                self.spark, tdef.location, version=ver, schema=tdef.schema
+                self.spark, tdef.storage.versions(tdef, "VERSION AS OF"),
+                version=ver, schema=tdef.schema,
             ).createOrReplaceTempView(view)
-            return view
-
-        return re.sub(
-            r"(?is)\b([\w.]+)\s+VERSION\s+AS\s+OF\s+(\d+)\b", repl, s
-        )
+            out += [s[pos : m.start()], view]
+            pos = m.end()
+        out.append(s[pos:])
+        return "".join(out)
 
     def local_select(self, s: str) -> DataFrame:
         """The LOCAL Catalyst plan for a SELECT, bypassing the
@@ -1079,8 +755,7 @@ class Engine:
         distributed parse). Analysis errors propagate: a statement
         that is invalid locally must raise the same typed error on the
         clustered path."""
-        if re.search(r"(?i)\bVERSION\s+AS\s+OF\b", s):
-            s = self._resolve_time_travel(s)
+        s = self._resolve_time_travel(s)
         self._register_views(s)
         rewritten = rewrite_select(s, self._dialect_ctx())
         with self._ordinal_lock:
@@ -1186,8 +861,7 @@ class Engine:
                 return dist
         if "flight_stream" in s.lower() and self.in_stage_action():
             s = self._resolve_flight_streams(s)
-        if re.search(r"(?i)\bVERSION\s+AS\s+OF\b", s):
-            s = self._resolve_time_travel(s)
+        s = self._resolve_time_travel(s)
         self._register_views(s)
         # ClickHouse GROUP BY 1 groups by the CONSTANT 1, not the first
         # select item (03_0003_select_group_by.sql) — disable Spark's
@@ -1285,7 +959,7 @@ class Engine:
         temp views. No rows move, but resolving a table is not free:
         a file or Snapshot table's relation is reused while its key
         (declared schema, partition columns, a stat fingerprint of its
-        files; see _relation_key) is unchanged, so a statement over an
+        files; see sources/storage.py) is unchanged, so a statement over an
         unchanged table costs one directory walk with stat and submits
         no footer job. Remote tables re-ask the store for their parts,
         and views re-expand over their base tables' relations.
@@ -1355,171 +1029,7 @@ class Engine:
         return factories[name]()
 
     def _table_df(self, tdef: TableDef) -> DataFrame:
-        if tdef.engine == "View":
-            # re-expand per query so the view tracks its base tables;
-            # thread-local stack breaks self/cyclic references
-            stack = getattr(self._view_local, "stack", None)
-            if stack is None:
-                stack = self._view_local.stack = set()
-            key = (tdef.database, tdef.name)
-            if key in stack:
-                raise UnsupportedStatement(
-                    f"Recursive view reference: {tdef.database}.{tdef.name}"
-                )
-            stack.add(key)
-            try:
-                return self._select(tdef.view_sql)
-            finally:
-                stack.discard(key)
-        if tdef.engine == "Memory":
-            if tdef.data is None:
-                tdef.data = local_rows(self.spark, [], tdef.schema)
-            return tdef.data
-        if tdef.engine == "Null":
-            return local_rows(self.spark, [], tdef.schema)
-        if tdef.engine == "remote":
-            # remote_table.rs read_plan: ask the store for the part
-            # list, then scan the parts. Executors read the parquet
-            # parts directly (the metastore/object-store split) — the
-            # HTTP hop carries only metadata, never rows. Not cached:
-            # the store offers no cheap fingerprint of its part list.
-            if self.store is None:
-                raise UnsupportedStatement(
-                    f"Table '{tdef.database}.{tdef.name}' is remote but no store is attached"
-                )
-            plan = self.store.read_plan(tdef.database, tdef.name)
-            if not plan["parts"]:
-                return local_rows(self.spark, [], tdef.schema)
-            return self.spark.read.schema(tdef.schema).parquet(*plan["parts"])
-        if tdef.engine in ("CSV", "Parquet", "JSONEachRow", "ORC", "BinaryFile", "Snapshot"):
-            # one relation per table, reused until its key changes: the
-            # key costs one directory walk with stat (Snapshot: one
-            # manifest glob), where resolving costs a file listing, a
-            # footer-merge job and the schema-alignment projection
-            key = self._relation_key(tdef)
-            cached = tdef.relation  # one read: another thread may replace it
-            if cached is not None and cached[0] == key:
-                return cached[1]
-            # two threads missing together both resolve; either result
-            # is right for the key it is stored under
-            df = self._resolve_files(tdef, key[-1])
-            tdef.relation = (key, df)
-            return df
-        raise UnsupportedStatement(f"Unknown engine {tdef.engine}")
-
-    @staticmethod
-    def _relation_key(tdef: TableDef) -> tuple:
-        """What a file or Snapshot table's relation depends on: the
-        declared schema, the partition columns and a fingerprint of the
-        stored files — sorted (path, size, mtime_ns) of every file under
-        the location (a glob for BinaryFile), or for a Snapshot table
-        its newest manifest's version and mtime. Every write path
-        changes the fingerprint, including files written by another
-        process, so no write path has to invalidate anything."""
-        loc = tdef.location
-        files: tuple = ()
-        if tdef.engine == "Snapshot":
-            from fuse_query_spark.sources.snapshots import _manifest_path, latest_version
-
-            v = latest_version(loc)
-            if v is not None:
-                files = (v, os.stat(_manifest_path(loc, v)).st_mtime_ns)
-        elif loc is not None:
-            import glob as _glob
-
-            if os.path.isdir(loc):
-                paths = [os.path.join(d, f) for d, _, fs in os.walk(loc) for f in fs]
-            else:
-                paths = _glob.glob(loc)  # one file, or a BinaryFile glob
-            stats = []
-            for p in sorted(paths):
-                try:
-                    st = os.stat(p)
-                except FileNotFoundError:
-                    continue  # removed while walking
-                stats.append((p, st.st_size, st.st_mtime_ns))
-            files = tuple(stats)
-        return (tdef.schema, tdef.partition_by, files)
-
-    def _resolve_files(self, tdef: TableDef, files: tuple) -> DataFrame:
-        """Build the relation of a file or Snapshot table whose stored
-        files are `files` (the fingerprint part of its relation key)."""
-        if tdef.engine == "Snapshot":
-            from fuse_query_spark.sources.snapshots import snapshot_read
-
-            return snapshot_read(self.spark, tdef.location, schema=tdef.schema)
-        if not files:
-            # freshly created table, nothing appended yet
-            return local_rows(self.spark, [], tdef.schema)
-        if tdef.engine == "BinaryFile":
-            # read-only ingest engine over raw files (images, audio,
-            # any blob): Spark's binaryFile source yields
-            # (path, modificationTime, length, content) with
-            # pushdown on length; the declared schema picks the
-            # subset. The multimodal operators (mapInPandas decode)
-            # consume `content` directly — blobs stream executor-
-            # side as Arrow batches, never through the driver.
-            df = self.spark.read.format("binaryFile").load(tdef.location)
-            return df.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in tdef.schema]
-            )
-        if tdef.engine == "CSV":
-            return self.spark.read.schema(tdef.schema).csv(tdef.location, header=False)
-        if tdef.engine == "JSONEachRow":
-            if tdef.partition_by:
-                # partition columns live in directory names, not in
-                # the JSON documents: let discovery surface them,
-                # then coerce everything to the declared schema
-                df = self.spark.read.json(tdef.location)
-                return df.select(
-                    *[
-                        F.col(f.name).cast(f.dataType).alias(f.name)
-                        for f in tdef.schema
-                    ]
-                )
-            return self.spark.read.schema(tdef.schema).json(tdef.location)
-        if tdef.engine == "ORC":
-            # capability extension past the reference's format set
-            # (CSV/Parquet/JSON/Null/Memory) — ORC is Spark-native
-            df = self.spark.read.orc(tdef.location)
-            if tdef.schema is not None:
-                df = self._align_to_schema(df, tdef.schema)
-            return df
-        df = self._read_parquet(
-            tdef.location,
-            table_name=tdef.name,
-            # post-ADD COLUMN, files written before and after the
-            # ALTER disagree on columns; default inference samples
-            # one footer and could drop the new column from the
-            # files that HAVE it. mergeSchema is a footer-only
-            # union (distributed, no data read).
-            merge_schema=tdef.schema is not None,
-        )
-        # reader-schema coercion: the CREATE TABLE's declared types
-        # win over the file's physical types (e.g. alltypes_plain's
-        # un-annotated BYTE_ARRAY reads as BINARY but is declared
-        # varchar) — mirrors the reference's make_data_type coercion
-        # (sql_common.rs). Declared columns absent from the files
-        # null-fill and extra file columns project away: that is
-        # what makes ALTER TABLE ADD/DROP COLUMN metadata-only
-        # (parquet schema evolution — no rewrite of live data).
-        if tdef.schema is not None:
-            df = self._align_to_schema(df, tdef.schema)
-        return df
-
-    def _read_parquet(
-        self, path: str, table_name: str | None = None, merge_schema: bool = False
-    ) -> DataFrame:
-        """Parquet read (with NANOS-fallback) plus `ts` normalization,
-        applied ONLY to the events table — keying on a column merely
-        named 'ts' would silently re-type an unrelated user table's
-        NTZ/long column (see sources/tables._normalize_event_ts)."""
-        from fuse_query_spark.sources.tables import _normalize_event_ts, read_parquet_maybe_nanos
-
-        df = read_parquet_maybe_nanos(self.spark, path, merge_schema=merge_schema)
-        if table_name == "events" and "ts" in df.columns:
-            df = _normalize_event_ts(df, "ts")
-        return df
+        return tdef.storage.read(self, tdef)
 
     # ---------- DDL ----------
 
@@ -1543,49 +1053,10 @@ class Engine:
         r"AS\s+(SELECT\b.*)$"
     )
 
-    # hive-style partitioned layout: self-describing / name-based file
-    # formats only — positional CSV can't round-trip columns that live
-    # in directory names, not in the files
-    _PARTITIONABLE_ENGINES = ("Parquet", "ORC", "JSONEachRow")
-
-    @classmethod
-    def _parse_partition_by(
-        cls, engine: str, partition_by: str | None, schema: StructType | None
-    ) -> tuple[str, ...]:
-        """Validate a PARTITION BY clause against engine + schema.
-
-        Capability extension past the reference's DDL (sql_parser.rs
-        has no PARTITION BY) motivated by the 100 TB posture: hive-
-        partitioned parquet is how Spark prunes whole directory trees
-        at planning time instead of scanning them (see the
-        PartitionFilters plan gate in test_engine_sql.py).
-        """
-        if not partition_by:
-            return ()
-        cols = tuple(c.strip() for c in partition_by.split(",") if c.strip())
-        if engine not in cls._PARTITIONABLE_ENGINES:
-            raise UnsupportedStatement(
-                f"PARTITION BY requires a partitionable file engine "
-                f"{cls._PARTITIONABLE_ENGINES}, got {engine}"
-            )
-        if schema is not None:
-            known = {f.name for f in schema.fields}
-            missing = [c for c in cols if c not in known]
-            if missing:
-                raise UnsupportedStatement(
-                    f"PARTITION BY column(s) {missing} not in table schema"
-                )
-            if len(cols) == len(schema.fields):
-                raise UnsupportedStatement(
-                    "PARTITION BY cannot cover every column (no data columns left)"
-                )
-        return cols
-
     def _create_table_as(self, m) -> None:
         """CTAS — capability extension: the reference's table_create
         interpreter has no query form (interpreter_table_create.rs).
-        Schema is inferred from the SELECT; Memory holds the (lazy)
-        DataFrame, file engines write it to the location."""
+        Schema is inferred from the SELECT."""
         if_not_exists, name, engine, partition_by, location, select = m.groups()
         location = location and string_value(location)
         engine = (engine or "Memory").strip()
@@ -1602,19 +1073,9 @@ class Engine:
             engine=engine,
             schema=df.schema,
             location=location,
-            partition_by=self._parse_partition_by(engine, partition_by, df.schema),
+            partition_by=partition_columns(engine, partition_by, df.schema),
         )
-        if engine == "Memory":
-            tdef.data = df
-        elif engine == "Null":
-            pass  # discard, reference Null semantics
-        else:
-            if location is None:
-                raise UnsupportedStatement(
-                    f"CREATE TABLE AS with engine {engine} needs a location"
-                )
-            tables[table] = tdef  # register first so _append sees it
-            self._append(tdef, df)
+        tdef.storage.create_as(self, tdef, df)
         tables[table] = tdef
         return None
 
@@ -1666,10 +1127,9 @@ class Engine:
         if_not_exists, name, engine, partition_by, location, select = m.groups()
         location = string_value(location)
         engine = (engine or "Parquet").strip()
-        if engine not in self._PARTITIONABLE_ENGINES:
+        if not storage_for(engine).partitionable:
             raise UnsupportedStatement(
-                f"MATERIALIZED VIEW needs a file engine "
-                f"{self._PARTITIONABLE_ENGINES}, got {engine}"
+                f"MATERIALIZED VIEW needs a file engine {PARTITIONABLE}, got {engine}"
             )
         db, table = self._qualify(name)
         tables = self.catalog.db(db)
@@ -1685,10 +1145,10 @@ class Engine:
             schema=df.schema,
             location=location,
             view_sql=select,
-            partition_by=self._parse_partition_by(engine, partition_by, df.schema),
+            partition_by=partition_columns(engine, partition_by, df.schema),
         )
         tables[table] = tdef
-        self._overwrite(tdef, df)
+        tdef.storage.overwrite(self, tdef, df)
         return None
 
     _REFRESH_MV = re.compile(
@@ -1698,43 +1158,14 @@ class Engine:
 
     def _refresh_materialized_view(self, s: str) -> None:
         """REFRESH MATERIALIZED VIEW mv [PARTITION (col='v', …)] —
-        recompute the stored SELECT and replace the stored data.
-
-        Full form replaces the WHOLE table (vanished groups vanish).
-        The PARTITION form is the scale path: it wraps the stored
-        SELECT in `WHERE col = 'v' …` — Catalyst pushes that predicate
-        down into the view's own plan, so refreshing one day READS one
-        day from a partitioned base and rewrites one subtree, never the
-        table. The subtree is deleted first, then rewritten: after the
-        refresh it equals the recompute exactly, including leaves that
-        dropped out of the result."""
-        import os
-        import shutil
-
+        recompute the stored SELECT and replace the stored data, whole
+        or one partition subtree (sources/storage.File.refresh)."""
         m = self._REFRESH_MV.match(s)
         if not m:
             raise UnsupportedStatement(f"Cannot parse REFRESH: {s[:80]}")
         name, spec = m.groups()
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table not in tables:
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
-        tdef = tables[table]
-        if tdef.view_sql is None or tdef.engine == "View":
-            raise UnsupportedStatement(f"'{db}.{table}' is not a materialized view")
-        if spec:
-            pairs = self._partition_prefix(db, table, tdef, spec)
-            where = " AND ".join(f"{c} = '{v}'" for c, v in pairs)
-            df = self._select(f"SELECT * FROM ({tdef.view_sql}) AS __mv WHERE {where}")
-            target = os.path.join(tdef.location, *[f"{c}={v}" for c, v in pairs])
-            if os.path.isdir(target):
-                shutil.rmtree(target)
-            self._overwrite(tdef, df)  # dynamic: rewrites only present leaves
-        else:
-            df = self._select(tdef.view_sql)
-            if tdef.location and os.path.isdir(tdef.location):
-                shutil.rmtree(tdef.location)
-            self._overwrite(tdef, df)
+        tdef = self.resolve_table(name)
+        tdef.storage.refresh(self, tdef, spec)
         return None
 
     def _create_table(self, s: str):
@@ -1773,17 +1204,7 @@ class Engine:
                 return None
             raise TableAlreadyExists(f"Table '{db}.{table}' already exists")
         schema = self._parse_schema(cols)
-        if engine == "BinaryFile":
-            allowed = ("path", "modificationTime", "length", "content")
-            bad = [f.name for f in schema.fields if f.name not in allowed]
-            if bad:
-                raise UnsupportedStatement(
-                    f"BinaryFile columns must be a subset of {allowed}, got {bad}"
-                )
-            if location is None:
-                raise UnsupportedStatement("BinaryFile table needs a location")
-        if engine == "Snapshot" and location is None:
-            raise UnsupportedStatement("Snapshot table needs a location")
+        storage_for(engine).check_create(schema, location)
         if db in self.catalog.remote_dbs:
             # a remote database stores ALL its tables store-side
             # (remote_database.rs create_table goes through MetaApi;
@@ -1797,7 +1218,7 @@ class Engine:
             engine=engine,
             schema=schema,
             location=location,
-            partition_by=self._parse_partition_by(engine, partition_by, schema),
+            partition_by=partition_columns(engine, partition_by, schema),
         )
         return None
 
@@ -1822,15 +1243,16 @@ class Engine:
     def _drop_table(self, s: str):
         m = re.match(r"(?is)^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.]+)\s*$", s)
         if_exists, name = m.groups()
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table not in tables:
+        try:
+            tdef = self.resolve_table(name)
+        except UnknownTable:
             if if_exists:
                 return None
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
+            raise
+        db, table = tdef.database, tdef.name
         if db in self.catalog.remote_dbs:
             self.store.drop_table(db, table)
-        del tables[table]
+        del self.catalog.db(db)[table]
         self.spark.catalog.dropTempView(table)
         self.spark.catalog.dropTempView(f"{db}__{table}")
         return None
@@ -1881,12 +1303,7 @@ class Engine:
         return None
 
     def _describe(self, s: str):
-        name = s.split()[1].strip()
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table not in tables:
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
-        tdef = tables[table]
+        tdef = self.resolve_table(s.split()[1].strip())
         # Reference DESCRIBE prints its own type names and NO for the
         # (default) non-nullable columns (10_0000_describe_table.result:
         # `a  Int64  NO`); map Spark names through the same table
@@ -1916,40 +1333,14 @@ class Engine:
         if m:
             from fuse_query_spark.sources.snapshots import snapshot_history
 
-            db, table = self._qualify(m.group(1))
-            tdef = self.catalog.db(db).get(table)
-            if tdef is None:
-                raise UnknownTable(f"Unknown table: '{db}.{table}'")
-            if tdef.engine != "Snapshot":
-                raise UnsupportedStatement(
-                    f"SHOW SNAPSHOTS needs ENGINE = Snapshot; "
-                    f"'{db}.{table}' is ENGINE={tdef.engine}"
-                )
-            return snapshot_history(self.spark, tdef.location)
+            tdef = self.resolve_table(m.group(1))
+            return snapshot_history(self.spark, tdef.storage.versions(tdef, "SHOW SNAPSHOTS"))
         m = re.match(r"(?is)^SHOW\s+CREATE\s+TABLE\s+([\w.]+)\s*$", s)
         if m:
-            db, table = self._qualify(m.group(1))
-            tdef = self.catalog.db(db).get(table)
-            if tdef is None:
-                raise UnknownTable(f"Unknown table: '{db}.{table}'")
-            if tdef.engine == "View":
-                ddl = f"CREATE VIEW {tdef.database}.{tdef.name} AS {tdef.view_sql}"
-            elif tdef.view_sql is not None:
-                ddl = (
-                    f"CREATE MATERIALIZED VIEW {tdef.database}.{tdef.name} "
-                    f"ENGINE = {tdef.engine}"
-                )
-                if tdef.partition_by:
-                    ddl += f" PARTITION BY ({', '.join(tdef.partition_by)})"
-                ddl += f" location = '{tdef.location}' AS {tdef.view_sql}"
-            else:
-                cols = ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}" for f in tdef.schema
-                )
-                ddl = f"CREATE TABLE {tdef.database}.{tdef.name} ({cols}) ENGINE = {tdef.engine}"
-                if tdef.partition_by:
-                    ddl += f" PARTITION BY ({', '.join(tdef.partition_by)})"
-            return local_rows(self.spark, [(tdef.name, ddl)], "Table STRING, CreateTable STRING")
+            tdef = self.resolve_table(m.group(1))
+            return local_rows(
+                self.spark, [(tdef.name, tdef.storage.ddl(tdef))], "Table STRING, CreateTable STRING"
+            )
         raise UnsupportedStatement(f"Unsupported SHOW: {s}")
 
     # settings whose consumers need an integer; rejected at SET time
@@ -2004,11 +1395,7 @@ class Engine:
                 return self._insert_select(*ms.groups())
             raise UnsupportedStatement(f"Cannot parse INSERT: {s[:80]}")
         name, cols, values = m.groups()
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table not in tables:
-            raise UnknownTable(f"Unknown table: '{db}.{table}'")
-        tdef = tables[table]
+        tdef = self.resolve_table(name)
         colnames = [c.strip() for c in cols.split(",")] if cols else [f.name for f in tdef.schema]
         # one list of item texts per parenthesized tuple; an empty item
         # or a tuple without parentheses is malformed
@@ -2018,15 +1405,7 @@ class Engine:
         ]
         if any("" in items for items in tuples):
             raise UnsupportedStatement(f"Cannot parse INSERT VALUES: {values[:80]}")
-        if tdef.engine == "remote":
-            # Reference parity, deliberately scoped to the remote
-            # engine: insert_to_plan (plan_parser.rs:348-371) renders
-            # every value tuple via `Expr::Value(v).to_string()` into
-            # an all-Utf8 block — single-quoted strings KEEP their
-            # quotes (09_0001_remote_insert.result pins `'1'  'v1'`).
-            # The remote path is the only INSERT observable in the
-            # reference suite; the repo's extended engines (Memory/
-            # Parquet/CSV/JSON) keep sane literal parsing below.
+        if tdef.storage.keeps_literal_text:  # the remote engine's parity
             rows = [tuple(items) for items in tuples]
         else:
 
@@ -2089,105 +1468,25 @@ class Engine:
         return self._append(tdef, local_rows(self.spark, rows, sub_schema))
 
     def _append(self, tdef: TableDef, df: DataFrame):
-        """Table::append_data (interpreter_insert_into.rs:33-45):
-        Memory unions, Null discards; Parquet/CSV/JSONEachRow append to
-        the location directory (distributed write — rows never hit the
-        driver). Column order is normalized to the declared schema so
-        positional formats (CSV) stay readable."""
-        writers = {"Parquet": "parquet", "CSV": "csv", "JSONEachRow": "json", "ORC": "orc"}
-        if tdef.engine == "Memory":
-            tdef.data = self._table_df(tdef).unionByName(df, allowMissingColumns=True)
-        elif tdef.engine == "Snapshot":
-            from fuse_query_spark.sources.snapshots import snapshot_commit
-
-            snapshot_commit(
-                self._align_to_schema(df, tdef.schema), tdef.location, "append"
-            )
-        elif tdef.engine in writers:
-            if tdef.location is None or "." in tdef.location.rsplit("/", 1)[-1]:
-                raise UnsupportedStatement(
-                    f"INSERT into a single-file {tdef.engine} table; use a directory location"
-                )
-            ordered = self._align_to_schema(df, tdef.schema)
-            if tdef.partition_by:
-                # cluster rows by partition value before the write:
-                # otherwise every task emits a file per partition value
-                # it happens to hold (tasks × |partitions| small files —
-                # the classic partitioned-write trap at fleet scale).
-                # One shuffle buys one file per partition per insert;
-                # if a single partition's data outgrows one task, the
-                # lever is compact_parquet / a salt column, documented
-                # in SCALE.md "Partitioned tables".
-                ordered = ordered.repartition(*[F.col(c) for c in tdef.partition_by])
-            writer = ordered.write.mode("append")
-            if tdef.partition_by:
-                writer = writer.partitionBy(*tdef.partition_by)
-            getattr(writer, writers[tdef.engine])(tdef.location)
-        elif tdef.engine == "remote":
-            # remote_table.rs append_data streams the insert's blocks
-            # to the store. Spark-side: write the blocks as parquet
-            # (distributed — rows never pass through the driver as
-            # rows), then ship the part FILES to the store's data
-            # endpoint. At cluster scale this is a direct executor
-            # write to the store's object prefix; the byte-upload is
-            # the single-process stand-in.
-            if self.store is None:
-                raise UnsupportedStatement(
-                    f"Table '{tdef.database}.{tdef.name}' is remote but no store is attached"
-                )
-            import glob
-            import os
-            import tempfile
-
-            ordered = self._align_to_schema(df, tdef.schema)
-            with tempfile.TemporaryDirectory() as tmp:
-                out = os.path.join(tmp, "blocks")
-                ordered.write.mode("overwrite").parquet(out)
-                for p in sorted(glob.glob(os.path.join(out, "*.parquet"))):
-                    with open(p, "rb") as fh:
-                        self.store.append_parquet(tdef.database, tdef.name, fh.read())
-        elif tdef.engine != "Null":
-            raise UnsupportedStatement(f"INSERT into engine {tdef.engine} not supported")
+        """Table::append_data (interpreter_insert_into.rs:33-45): every
+        INSERT INTO path ends here (sources/storage.py)."""
+        tdef.storage.append(self, tdef, df)
         return None
-
-    @staticmethod
-    def _align_to_schema(df: DataFrame, schema: StructType) -> DataFrame:
-        """Column order/type normalization to the declared schema (so
-        positional formats stay readable and remote parts all share
-        one physical schema)."""
-        return df.select(
-            *[
-                (
-                    F.col(c).cast(schema[c].dataType)
-                    if c in df.columns
-                    else F.lit(None).cast(schema[c].dataType)
-                ).alias(c)
-                for c in schema.names
-            ]
-        )
 
     def _insert_select(
         self, name: str, cols: str | None, select_sql: str, overwrite: bool = False
     ):
         """INSERT INTO t [(cols)] SELECT … — the reference streams
         SELECT output into Table::append_data (interpreter_insert_into
-        .rs:33-45); here the SELECT DataFrame unions into the Memory
-        table (column-name matched, types cast to the declared schema).
+        .rs:33-45); here the SELECT's columns are matched by position
+        and cast to the declared types.
 
-        INSERT OVERWRITE (extension): on a PARTITION BY table this is a
-        *dynamic* partition overwrite — only the partitions present in
-        the SELECT output are replaced, everything else is untouched.
-        That makes day-level reprocessing idempotent: re-running a
-        backfill for one day rewrites that day's directory and nothing
-        else, which is the operational contract partitioned pipelines
-        rely on at fleet scale. Unpartitioned file tables and Memory
-        tables are replaced wholesale.
-        """
-        db, tbl = self._qualify(name)
-        tables = self.catalog.db(db)
-        if tbl not in tables:
-            raise UnknownTable(f"Unknown table: '{db}.{tbl}'")
-        tdef = tables[tbl]
+        INSERT OVERWRITE (extension) is dynamic on a PARTITION BY
+        table: only the partitions present in the SELECT output are
+        replaced, so re-running a backfill for one day rewrites that
+        day's directory and nothing else — the idempotence partitioned
+        pipelines rely on at fleet scale."""
+        tdef = self.resolve_table(name)
         df = self._select(select_sql)
         colnames = [c.strip() for c in cols.split(",")] if cols else [f.name for f in tdef.schema]
         if len(df.columns) != len(colnames):
@@ -2195,11 +1494,9 @@ class Engine:
             # zip() previously dropped extras / null-filled silently
             # (code-review r8)
             raise UnsupportedStatement(
-                f"INSERT INTO {db}.{tbl}: SELECT produces {len(df.columns)} "
+                f"INSERT INTO {tdef.database}.{tdef.name}: SELECT produces {len(df.columns)} "
                 f"column(s) but {len(colnames)} target column(s) were specified"
             )
-        from pyspark.sql import functions as F
-
         # alignment is POSITIONAL (SQL INSERT semantics) — rename first
         # so duplicate SELECT output names (e.g. two literal `1`s) can't
         # trip an ambiguous-reference error
@@ -2211,34 +1508,6 @@ class Engine:
             ]
         )
         if overwrite:
-            return self._overwrite(tdef, aligned)
+            tdef.storage.overwrite(self, tdef, aligned)
+            return None
         return self._append(tdef, aligned)
-
-    def _overwrite(self, tdef: TableDef, df: DataFrame):
-        writers = {"Parquet": "parquet", "CSV": "csv", "JSONEachRow": "json", "ORC": "orc"}
-        if tdef.engine == "Memory":
-            tdef.data = df
-        elif tdef.engine == "Null":
-            pass
-        elif tdef.engine == "Snapshot":
-            from fuse_query_spark.sources.snapshots import snapshot_commit
-
-            snapshot_commit(
-                self._align_to_schema(df, tdef.schema), tdef.location, "overwrite"
-            )
-        elif tdef.engine in writers:
-            if tdef.location is None:
-                raise UnsupportedStatement("INSERT OVERWRITE needs a table location")
-            ordered = self._align_to_schema(df, tdef.schema)
-            if tdef.partition_by:
-                ordered = ordered.repartition(*[F.col(c) for c in tdef.partition_by])
-            writer = ordered.write.mode("overwrite")
-            if tdef.partition_by:
-                # writer-scoped option, not the session conf: concurrent
-                # statements on other tables must not inherit dynamic mode
-                writer = writer.option("partitionOverwriteMode", "dynamic")
-                writer = writer.partitionBy(*tdef.partition_by)
-            getattr(writer, writers[tdef.engine])(tdef.location)
-        else:
-            raise UnsupportedStatement(f"INSERT OVERWRITE into engine {tdef.engine} not supported")
-        return None

@@ -1354,9 +1354,7 @@ def _resolve_parquet_table(engine, name: str):
         tdef = engine.catalog.databases.get(db, {}).get(tbl)
     except Exception:
         return None
-    if tdef is None or tdef.engine != "Parquet" or not tdef.location:
-        return None
-    if getattr(tdef, "partition_by", ()):
+    if tdef is None or not tdef.storage.sliceable(tdef):
         return None
     return tdef
 

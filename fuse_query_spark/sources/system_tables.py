@@ -231,43 +231,11 @@ def parts_table(spark: SparkSession, catalog) -> DataFrame:
     never scan). Pairs with OPTIMIZE TABLE: query system.parts for
     partitions whose file count warrants compaction, then rewrite only
     those subtrees."""
-    import os
-
-    import pyarrow.parquet as pq
-
     out = []
     for db in sorted(catalog.databases):
-        for name in sorted(catalog.databases[db]):
-            tdef = catalog.databases[db][name]
-            if tdef.engine not in ("Parquet", "CSV", "JSONEachRow", "ORC"):
-                continue
-            if not tdef.location or not os.path.isdir(tdef.location):
-                continue
-            leaves: dict[str, list] = {}
-            for root, _dirs, files in os.walk(tdef.location):
-                for f in files:
-                    if f.startswith(("_", ".")):
-                        continue
-                    rel = os.path.relpath(root, tdef.location)
-                    leaf = "" if rel == "." else rel
-                    e = leaves.setdefault(leaf, [0, 0, 0])
-                    p = os.path.join(root, f)
-                    e[0] += 1
-                    e[1] += os.path.getsize(p)
-                    if f.endswith(".parquet"):
-                        e[2] += pq.ParquetFile(p).metadata.num_rows
-            for leaf in sorted(leaves):
-                files_n, bytes_n, rows_n = leaves[leaf]
-                out.append(
-                    (
-                        db,
-                        name,
-                        leaf,
-                        files_n,
-                        bytes_n,
-                        rows_n if tdef.engine == "Parquet" else None,
-                    )
-                )
+        tables = catalog.databases[db]
+        for name in sorted(tables):
+            out += [(db, name, *part) for part in tables[name].storage.parts(tables[name])]
     return local_rows(
         spark,
         out,

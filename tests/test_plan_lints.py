@@ -293,7 +293,9 @@ def test_engine_builds_driver_rows_as_local_relations():
     pkg = pathlib.Path(__file__).resolve().parent.parent / "fuse_query_spark"
     bad = [
         f"{rel}:{n}: {line.strip()}"
-        for rel in ("engine.py", "sources/snapshots.py", "sources/system_tables.py")
+        for rel in (
+            "engine.py", "sources/snapshots.py", "sources/storage.py", "sources/system_tables.py"
+        )
         for n, line in enumerate((pkg / rel).read_text().splitlines(), 1)
         if "createDataFrame(" in line
     ]
@@ -352,5 +354,48 @@ m = re.match(r"^'([^']*)'$", a)
     (tmp_path / "scanner.py").write_text("\n".join(src) + "\n")
     (tmp_path / "dialect" / "lexer.py").write_text("\n".join(src) + "\n")
     assert [hit.split(":")[1] for hit in _quote_tests(tmp_path)] == [
+        str(n) for n in range(1, len(src) + 1)
+    ]
+
+
+# An engine-name comparison: `tdef.engine == "Memory"`, `engine in (…)`.
+_ENGINE_TEST = re.compile(r"\bengine\s*(?:==|!=|not\s+in\b|in\b)")
+
+
+def _engine_tests(pkg) -> list[str]:
+    storage = pkg / "sources" / "storage.py"
+    return [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != storage
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if _ENGINE_TEST.search(line)
+    ]
+
+
+def test_only_storage_compares_engine_names():
+    """One module decides what an engine does: no line under
+    fuse_query_spark/ outside sources/storage.py compares an engine
+    name. Behaviour per engine lives on its storage object
+    (TableDef.storage); tdef.engine is only the name shown."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "fuse_query_spark"
+    assert _engine_tests(pkg) == []
+
+
+def test_engine_lint_flags_name_branches(tmp_path):
+    """The lint recognizes the branch shapes it forbids."""
+    src = """
+if tdef.engine == "Memory":
+elif tdef.engine in writers:
+if tdef.engine not in ("Parquet", "CSV"):
+if engine != "Snapshot":
+if engine in cls._PARTITIONABLE_ENGINES:
+""".strip().splitlines()
+    (tmp_path / "sources").mkdir()
+    (tmp_path / "engine.py").write_text("\n".join(src) + "\nengine._live.get(pid) == 1\n")
+    (tmp_path / "sources" / "storage.py").write_text("\n".join(src) + "\n")
+    assert [hit.split(":")[1] for hit in _engine_tests(tmp_path)] == [
         str(n) for n in range(1, len(src) + 1)
     ]
