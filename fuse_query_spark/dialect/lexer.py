@@ -26,9 +26,10 @@ Rules, as Spark 4.1's parser applies them (checked against pyspark
 - ``--`` comments run to the end of the line; a backslash right
   before the newline continues them. ``/* … */`` comments nest.
   ``/*+ … */`` is an optimizer hint, not a comment.
-- A literal or identifier that never closes runs to the end of the
-  text; Spark rejects it when the statement reaches it. An unclosed
-  block comment also runs to the end (and is stripped with it).
+- A literal, identifier or block comment that never closes runs to
+  the end of the text as an ``open`` token: ``unclosed()`` reports it,
+  ``strip_comments`` keeps it, and Spark rejects the statement that
+  holds it (``SELECT 1 /* x`` is a ParseException, not ``SELECT 1``).
 """
 
 from __future__ import annotations
@@ -82,7 +83,7 @@ def _tokens(sql: str) -> Iterator[tuple[str, int, int]]:
             while depth:
                 edge = _BLOCK_EDGE.search(sql, end)
                 if edge is None:
-                    end = len(sql)
+                    kind, end = "open", len(sql)
                     break
                 depth += 1 if edge.group() == "/*" else -1
                 end = edge.end()
@@ -152,8 +153,8 @@ def mask(sql: str) -> str:
 
 
 def unclosed(sql: str) -> bool:
-    """True when a literal or quoted identifier in ``sql`` never
-    closes."""
+    """True when a literal, quoted identifier or block comment in
+    ``sql`` never closes."""
     return any(kind == "open" for kind, _a, _b in _tokens(sql))
 
 

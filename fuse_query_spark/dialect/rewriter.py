@@ -42,10 +42,13 @@ class DialectContext:
     # side-effect-free: EXPLAIN rewrites without executing, and the
     # demote-user retry path rewrites the same statement twice.
     pending_sleep: list = field(default_factory=list)
-    # set by rewrite_select when the statement reads a numbers()
-    # source — gates the typer's `number` -> UInt64 static fold so a
-    # real table column named `number` is never mistyped
-    numbers_source: bool = False
+    # the numbers() table functions rewrite_select substituted, in
+    # statement order ("numbers", "numbers_mt" or "numbers_local"). It
+    # gates the typer's `number` -> UInt64 static fold, so a real table
+    # column named `number` is never mistyped, and it tells the
+    # distributed planner which kind a Range in the plan came from
+    # (all three become the same Range; numbers_local stays local).
+    numbers_sources: list = field(default_factory=list)
 
 
 _NAMED_CASTS = {
@@ -278,7 +281,7 @@ def _rewrite_calls(sql: str, ctx: DialectContext) -> str:
             # has no unsigned types (SURVEY §1.2)
             from fuse_query_spark.dialect.typer import infer_fq_type
 
-            inferred = infer_fq_type(inner, allow_number=ctx.numbers_source)
+            inferred = infer_fq_type(inner, allow_number=bool(ctx.numbers_sources))
             if inferred is not None:
                 out.append(f"'{inferred}'")
                 continue
@@ -380,13 +383,16 @@ def _alias_rewritten_select_items(s: str, ctx: DialectContext) -> str:
     change an explicit backtick alias of its ORIGINAL text, so result
     column names match the reference's convention (it names output
     columns by the source expression — e.g. `uniq(x)`)."""
-    m = re.match(r"(?is)^(SELECT\s+(?:DISTINCT\s+)?)(.*?)(\s+FROM\s.*|$)", s)
+    # the clause is found in the masked statement and cut from the
+    # statement at the same offsets, so a literal holding FROM or a
+    # paren never ends the select list early
+    m = re.match(r"(?is)^(SELECT\s+(?:DISTINCT\s+)?)(.*?)(\s+FROM\s.*|$)", mask(s))
     if not m:
         return s
-    head, select_list, tail = m.groups()
+    head, select_list, tail = (s[m.start(g) : m.end(g)] for g in (1, 2, 3))
     # only handle a depth-balanced select list (a FROM inside a scalar
     # subquery in the list would confuse the split — leave those alone)
-    if select_list.count("(") != select_list.count(")"):
+    if m.group(2).count("(") != m.group(2).count(")"):
         return s
     items = split(select_list, ",")
     out_items = []
@@ -417,14 +423,32 @@ _AGG_CALL = re.compile(
 )
 
 
-def _having_without_group_is_where(s: str) -> str:
+def _rewrite_numbers(s: str, masked: str, ctx: DialectContext) -> tuple[str, str]:
+    """numbers(N) / numbers_mt(N) / numbers_local(N) table functions →
+    range subqueries, each kind recorded on ``ctx.numbers_sources``.
+    Calls are found in the masked statement ``masked``, so one inside a
+    literal or a quoted identifier is neither rewritten nor recorded;
+    the masked text is spliced alongside (a replacement holds no
+    literal), so it stays the mask of the returned statement."""
+    ctx.numbers_sources = []
+    out, mout, pos = [], [], 0
+    for m in _NUMBERS.finditer(masked):
+        ctx.numbers_sources.append(m.group(1).lower())
+        sub = f"(SELECT id AS number FROM range({m.group(2)}))"
+        out += [s[pos : m.start()], sub]
+        mout += [masked[pos : m.start()], sub]
+        pos = m.end()
+    return "".join(out) + s[pos:], "".join(mout) + masked[pos:]
+
+
+def _having_without_group_is_where(s: str, masked: str) -> str:
     """ClickHouse: HAVING on a non-aggregating, GROUP-BY-less SELECT
     filters rows like WHERE (03_0006_select_having.sql: `SELECT * FROM
     numbers_mt(3) HAVING number > 1`). Spark rejects that shape, so
     rewrite HAVING → WHERE when there is no GROUP BY and no aggregate
     in the select list (global-agg HAVING keeps its meaning). Keywords
-    are found in the masked statement, so literals are left alone."""
-    masked = mask(s)
+    are found in the masked statement ``masked``, so literals are left
+    alone."""
     h = re.search(r"(?is)\bHAVING\b", masked)
     if h is None or re.search(r"(?is)\bGROUP\s+BY\b", masked):
         return s
@@ -441,13 +465,6 @@ def rewrite_select(sql: str, ctx: DialectContext | None = None, demote_user: boo
     ctx = ctx or DialectContext()
     s = sql.strip().rstrip(";").strip()
     s = strip_comments(s)
-    # does this statement read a numbers() source? (gates the typer's
-    # `number` -> UInt64 fold; see DialectContext.numbers_source).
-    # Assigned, not |=: a ctx reused across statements must not carry
-    # a previous statement's flag.
-    ctx.numbers_source = bool(
-        re.search(r"(?i)\b(?:numbers|numbers_mt|numbers_local)\s*\(|\bsystem\.numbers\b", s)
-    )
     # `user` is a bare identifier in the reference dialect
     # (02_0006_function_argmin_argmax.sql aliases a column `user`), and
     # with no matching column Spark's grammar resolves it — even
@@ -458,11 +475,10 @@ def rewrite_select(sql: str, ctx: DialectContext | None = None, demote_user: boo
     # the keyword), the engine retries with demote_user=False.
     if demote_user:
         s = outside_literals(s, lambda seg: re.sub(r"(?i)\buser\b(?!\s*\()", "usr_", seg))
-    s = _having_without_group_is_where(s)
+    s, masked = _rewrite_numbers(s, mask(s), ctx)
+    s = _having_without_group_is_where(s, masked)
 
     def _table_rewrites(seg: str) -> str:
-        # numbers(N) table functions → range subquery
-        seg = _NUMBERS.sub(lambda m: f"(SELECT id AS number FROM range({m.group(2)}))", seg)
         # system.X tables → registered views
         seg = re.sub(r"\bsystem\.(\w+)", r"system__\1", seg)
         # known db-qualified tables → view names

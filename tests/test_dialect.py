@@ -237,6 +237,24 @@ def test_typer_number_gated_on_numbers_source():
     assert "'UInt64'" in out2
 
 
+def test_rewrite_records_the_numbers_sources_it_substituted():
+    """The context lists each numbers() kind the rewrite replaced, in
+    order — all three kinds become the same range() subquery, so the
+    distributed planner reads this record to keep numbers_local local.
+    A literal or a quoted identifier that spells a call is not a
+    source, and stays as written."""
+    ctx = DialectContext()
+    out = rewrite_select(
+        "SELECT a.number AS `numbers(4)` FROM numbers(3) AS a JOIN numbers_local(2) AS b "
+        "ON a.number = b.number WHERE 'numbers_mt(9)' != ''",
+        ctx,
+    )
+    assert ctx.numbers_sources == ["numbers", "numbers_local"]
+    assert "'numbers_mt(9)'" in out and "`numbers(4)`" in out
+    rewrite_select("SELECT 1", ctx)
+    assert ctx.numbers_sources == []
+
+
 def test_cast_as_text_and_varchar_rewrite():
     """sql_common.rs:27-28: Varchar/Text map to Utf8 — the reference's
     own perf suite uses `cast(number as text)`."""

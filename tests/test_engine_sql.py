@@ -2129,3 +2129,29 @@ def test_system_tables_read_without_jobs(engine):
         before = sched.nextJobId()
         engine.sql_collect(f"SELECT * FROM system.{name}")
         assert sched.nextJobId() == before, name
+
+
+def test_select_list_ends_at_the_top_level_from(engine):
+    """The column-naming pass finds the select list on masked offsets:
+    a literal holding FROM does not end it early, so the call after it
+    is still named by its source text."""
+    df = engine.sql("SELECT 'x FROM y', uniq(number) FROM numbers(3)")
+    assert df.columns[1] == "uniq(number)"
+    assert df.collect()[0][1] == 3
+    df2 = engine.sql("SELECT ')', uniq(number) FROM numbers(3)")
+    assert df2.columns[1] == "uniq(number)"
+
+
+def test_numbers_source_read_outside_literals(engine):
+    """Only a numbers() call the rewrite substitutes types `number` as
+    UInt64; the same text inside a literal leaves a real column's type
+    alone."""
+    engine.sql("CREATE TABLE nt (number Int32) ENGINE = Memory")
+    try:
+        engine.sql("INSERT INTO nt VALUES (1)")
+        assert one(engine.sql("SELECT toTypeName(number) FROM nt")) == "Int32"
+        row = engine.sql("SELECT toTypeName(number), 'numbers(1)' FROM nt").collect()[0]
+        assert row[0] == "Int32" and row[1] == "numbers(1)"
+        assert one(engine.sql("SELECT toTypeName(number) FROM numbers(1)")) == "UInt64"
+    finally:
+        engine.sql("DROP TABLE nt")

@@ -100,3 +100,23 @@ def test_mysql_parameter_literal_round_trips(spark, values):
     literals = [_sql_literal(v) for v in values]
     assert [lexer.string_value(lit) for lit in literals] == values
     assert _spark_values(spark, literals) == values
+
+
+def test_unclosed_block_comment_is_an_open_token(spark, engine):
+    """A block comment that never closes is an unclosed token, as Spark
+    sees it: unclosed() reports it, strip_comments keeps it, the
+    statement splitter does not end at a ';' inside it, and the engine
+    rejects the statement instead of running what comes before it."""
+    for text in ("SELECT 1 /* x", "SELECT 1 /* a /* b */", "SELECT 1 /*+ hint"):
+        assert lexer.unclosed(text)
+        assert lexer.strip_comments(text) == text
+        with pytest.raises(Exception):
+            spark.sql(text)
+        with pytest.raises(Exception):
+            engine.sql(text)
+    assert lexer.split("SELECT 1; /* x; y", ";") == ["SELECT 1", "/* x; y"]
+    with pytest.raises(Exception):
+        engine.sql("SELECT 1; /* x")
+    # a closed one is still a comment
+    assert not lexer.unclosed("SELECT 1 /* x */")
+    assert tuple(engine.sql("SELECT 1 /* x */").collect()[0]) == (1,)

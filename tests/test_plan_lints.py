@@ -399,3 +399,21 @@ if engine in cls._PARTITIONABLE_ENGINES:
     assert [hit.split(":")[1] for hit in _engine_tests(tmp_path)] == [
         str(n) for n in range(1, len(src) + 1)
     ]
+
+
+def test_distributed_planner_reads_no_sql_text():
+    """The distributed planner reads the analyzed plan, not statement
+    text: plans/distributed.py imports nothing from the dialect
+    package (no lexer, no rewriter), so it cannot grow a clause
+    scanner of its own again."""
+    import ast
+    import pathlib
+
+    src = pathlib.Path(__file__).resolve().parent.parent / "fuse_query_spark/plans/distributed.py"
+    imported = []
+    for node in ast.walk(ast.parse(src.read_text())):
+        if isinstance(node, ast.ImportFrom):
+            imported.append(node.module or "")
+        elif isinstance(node, ast.Import):
+            imported += [a.name for a in node.names]
+    assert [m for m in imported if m.startswith("fuse_query_spark.dialect")] == []
