@@ -37,6 +37,10 @@ class DialectContext:
     current_db: str = "default"
     version: str = "fuse-query-spark/0.1.0"
     known_dbs: tuple[str, ...] = field(default_factory=tuple)
+    # the system tables a statement may read: `system.X` becomes the
+    # registered view `system__X` for these names only, so `system.x`
+    # inside a backtick alias keeps its text
+    system_tables: tuple[str, ...] = field(default_factory=tuple)
     # sleep() requests recorded during rewriting; the ENGINE performs
     # them once at execution time. Rewriting itself must stay
     # side-effect-free: EXPLAIN rewrites without executing, and the
@@ -479,8 +483,12 @@ def rewrite_select(sql: str, ctx: DialectContext | None = None, demote_user: boo
     s = _having_without_group_is_where(s, masked)
 
     def _table_rewrites(seg: str) -> str:
-        # system.X tables → registered views
-        seg = re.sub(r"\bsystem\.(\w+)", r"system__\1", seg)
+        # known system.X tables → registered views
+        seg = re.sub(
+            r"\bsystem\.(\w+)",
+            lambda m: f"system__{m[1]}" if m[1].lower() in ctx.system_tables else m[0],
+            seg,
+        )
         # known db-qualified tables → view names
         for db in ctx.known_dbs:
             seg = re.sub(rf"\b{re.escape(db)}\.(\w+)", rf"{db}__\1", seg)

@@ -47,10 +47,10 @@ from fuse_query_spark.sources.storage import (
     PARTITIONABLE,
     Mutation,
     Storage,
+    parquet_schema,
     partition_columns,
     partition_path,
     partition_prefix,
-    read_parquet,
     storage_for,
 )
 from fuse_query_spark.sources.tables import local_rows
@@ -102,8 +102,9 @@ class TableDef:
     data: DataFrame | None = None  # Memory engine
     view_sql: str | None = None  # View engine: the stored SELECT
     partition_by: tuple[str, ...] = ()  # file engines: hive-style layout
-    # file and Snapshot engines: (key, DataFrame) of the last resolved
-    # relation, reused while its key is unchanged (sources/storage.py)
+    # file and Snapshot engines: (key, DataFrame, pending) of the last
+    # resolved relation, reused while its key is unchanged; pending: a
+    # small file table not yet made driver-resident (sources/storage.py)
     relation: tuple | None = field(default=None, repr=False, compare=False)
     storage: Storage = field(init=False, repr=False, compare=False)
 
@@ -234,16 +235,20 @@ class Engine:
     def attach_parquet_dir(self, sf_dir: str, db: str = "default") -> None:
         """Attach every parquet table in a directory as a Parquet-engine
         catalog table (the reference's `CREATE TABLE … ENGINE = Parquet
-        location = …` shape, batched)."""
+        location = …` shape, batched). Each schema comes from the file's
+        footer, read on the driver: attaching submits no Spark job."""
         from fuse_query_spark.sources.tables import TABLES
 
         for name in TABLES:
             path = os.path.join(sf_dir, f"{name}.parquet")
             if not os.path.exists(path):
                 continue
-            df = read_parquet(self.spark, path, table_name=name)
             self.catalog.db(db)[name] = TableDef(
-                name=name, database=db, engine="Parquet", schema=df.schema, location=path
+                name=name,
+                database=db,
+                engine="Parquet",
+                schema=parquet_schema(path, table_name=name),
+                location=path,
             )
 
     def sql(self, text: str) -> DataFrame | None:
@@ -712,7 +717,9 @@ class Engine:
 
     def _dialect_ctx(self) -> DialectContext:
         return DialectContext(
-            current_db=self.current_db, known_dbs=tuple(self.catalog.databases)
+            current_db=self.current_db,
+            known_dbs=tuple(self.catalog.databases),
+            system_tables=tuple(self.SYSTEM_TABLES),
         )
 
     def _resolve_time_travel(self, s: str) -> str:
@@ -917,7 +924,8 @@ class Engine:
                 # referenced: surface the ORIGINAL typed error, not the
                 # generic not-found
                 for name, orig in getattr(self._view_local, "deferred", {}).items():
-                    if re.search(rf"`?{re.escape(name)}`?", first):
+                    parts = r"`?\.`?".join(re.escape(p) for p in name.split("."))
+                    if re.search(rf"`?{parts}`?", first):
                         raise orig from e
                 raise UnknownTable(first) from e
             raise
@@ -978,18 +986,24 @@ class Engine:
         deferred: dict[str, Exception] = {}
         for m in re.finditer(r"\bsystem\.(\w+)", scan):
             name = m.group(1).lower()
-            df = self._system_table(name)
-            if df is not None:
-                df.createOrReplaceTempView(f"system__{name}")
+            if name in self.SYSTEM_TABLES:
+                self.SYSTEM_TABLES[name](self).createOrReplaceTempView(f"system__{name}")
+            elif name not in ("numbers", "numbers_mt", "numbers_local"):  # rewritten
+                # maybe no table at all (a backtick alias `system.x`):
+                # the rewriter leaves the name as written
+                deferred[f"system.{name}"] = UnknownTable(f"Unknown system table: '{name}'")
         for db, tables in self.catalog.databases.items():
             for name, tdef in tables.items():
                 try:
+                    df = None  # read once per statement
                     if re.search(rf"\b{re.escape(db)}\.{re.escape(name)}\b", scan):
-                        self._table_df(tdef).createOrReplaceTempView(f"{db}__{name}")
+                        df = self._table_df(tdef)
+                        df.createOrReplaceTempView(f"{db}__{name}")
                     if db == self.current_db and re.search(
                         rf"\b{re.escape(name)}\b", scan
                     ):
-                        self._table_df(tdef).createOrReplaceTempView(name)
+                        df = self._table_df(tdef) if df is None else df
+                        df.createOrReplaceTempView(name)
                 except Exception as e:
                     # broken/unreachable source (see docstring): defer —
                     # if analysis then proves the name was genuinely
@@ -1004,29 +1018,22 @@ class Engine:
         # its own deferred errors through this same slot
         self._view_local.deferred = deferred
 
-    def _system_table(self, name: str) -> DataFrame | None:
-        if name in ("numbers", "numbers_mt", "numbers_local"):
-            return None  # table function, handled by the rewriter
-        factories = {
-            "tables": lambda: systbl.tables_table(self.spark, self.catalog),
-            "databases": lambda: systbl.databases_table(self.spark, self.catalog),
-            "functions": lambda: systbl.functions_table(self.spark),
-            "settings": lambda: systbl.settings_table(self.spark, self.settings),
-            "one": lambda: systbl.one_table(self.spark),
-            "processes": lambda: systbl.processes_table(
-                self.spark, self.current_db, self._live
-            ),
-            "contributors": lambda: systbl.contributors_table(self.spark),
-            "clusters": lambda: systbl.clusters_table(self.spark, self.cluster),
-            "tracing": lambda: systbl.tracing_table(self.spark, self._statements),
-            "metrics": lambda: systbl.metrics_table(self.spark),
-            "parts": lambda: systbl.parts_table(self.spark, self.catalog),
-            "columns": lambda: systbl.columns_table(self.spark, self.catalog),
-            "query_log": lambda: systbl.query_log_table(self.spark, self._statements),
-        }
-        if name not in factories:
-            raise UnknownTable(f"Unknown system table: '{name}'")
-        return factories[name]()
+    # system.X: the rows of each system table, built per statement
+    SYSTEM_TABLES = {
+        "tables": lambda e: systbl.tables_table(e.spark, e.catalog),
+        "databases": lambda e: systbl.databases_table(e.spark, e.catalog),
+        "functions": lambda e: systbl.functions_table(e.spark),
+        "settings": lambda e: systbl.settings_table(e.spark, e.settings),
+        "one": lambda e: systbl.one_table(e.spark),
+        "processes": lambda e: systbl.processes_table(e.spark, e.current_db, e._live),
+        "contributors": lambda e: systbl.contributors_table(e.spark),
+        "clusters": lambda e: systbl.clusters_table(e.spark, e.cluster),
+        "tracing": lambda e: systbl.tracing_table(e.spark, e._statements),
+        "metrics": lambda e: systbl.metrics_table(e.spark),
+        "parts": lambda e: systbl.parts_table(e.spark, e.catalog),
+        "columns": lambda e: systbl.columns_table(e.spark, e.catalog),
+        "query_log": lambda e: systbl.query_log_table(e.spark, e._statements),
+    }
 
     def _table_df(self, tdef: TableDef) -> DataFrame:
         return tdef.storage.read(self, tdef)

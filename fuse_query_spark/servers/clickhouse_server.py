@@ -112,17 +112,13 @@ _WIRE_INSERT = re.compile(
 
 _first_line = first_line  # shared wire-front error rendering
 
-# Spark simpleString -> (ClickHouse type name, value packer).
-# Packers receive a non-None python value and return bytes. Parity
-# with writers/query_writer.rs:140-170: ints/floats map
+# Spark simpleString -> (ClickHouse type name, struct code of the
+# fixed-width column or None for String, value converter). A Data block
+# packs each fixed-width column with one struct call over the converted
+# values. Parity with writers/query_writer.rs:140-170: ints/floats map
 # width-for-width, Utf8 -> String, Boolean -> UInt8, Date32 -> Date,
 # Date64 (timestamps) -> DateTime.
-def _pack_str(v) -> bytes:
-    b = str(v).encode()
-    return _varint(len(b)) + b
-
-
-def _pack_date(v) -> bytes:
+def _date_days(v) -> int:
     if isinstance(v, datetime):
         v = v.date()
     days = (v - _EPOCH_DATE).days
@@ -130,10 +126,10 @@ def _pack_date(v) -> bytes:
         # refuse rather than silently wrap/clamp — same contract as the
         # unsupported-type path (a DB:Exception on the wire)
         raise ValueError(f"Date out of ClickHouse Date range 1970..2149: {v}")
-    return struct.pack("<H", days)
+    return days
 
 
-def _pack_datetime(v) -> bytes:
+def _datetime_epoch(v) -> int:
     """TimestampType values are INSTANTS. PySpark's collect() renders
     them as naive datetimes in the HOST-LOCAL zone (fromInternal uses
     datetime.fromtimestamp — the session timeZone conf does not change
@@ -144,10 +140,10 @@ def _pack_datetime(v) -> bytes:
     epoch = int(v.timestamp())
     if not 0 <= epoch <= 0xFFFFFFFF:
         raise ValueError(f"Timestamp out of ClickHouse DateTime range 1970..2106: {v}")
-    return struct.pack("<I", epoch)
+    return epoch
 
 
-def _pack_datetime_ntz(v) -> bytes:
+def _datetime_ntz_epoch(v) -> int:
     """TIMESTAMP_NTZ is a wall clock without a zone; expose it on the
     wire as that wall clock read in UTC (the server's declared tz)."""
     if isinstance(v, date) and not isinstance(v, datetime):
@@ -157,27 +153,27 @@ def _pack_datetime_ntz(v) -> bytes:
     epoch = int(v.timestamp())
     if not 0 <= epoch <= 0xFFFFFFFF:
         raise ValueError(f"Timestamp out of ClickHouse DateTime range 1970..2106: {v}")
-    return struct.pack("<I", epoch)
+    return epoch
 
 
 _SPARK_TO_CH = {
-    "tinyint": ("Int8", lambda v: struct.pack("<b", int(v))),
-    "smallint": ("Int16", lambda v: struct.pack("<h", int(v))),
-    "int": ("Int32", lambda v: struct.pack("<i", int(v))),
-    "bigint": ("Int64", lambda v: struct.pack("<q", int(v))),
-    "float": ("Float32", lambda v: struct.pack("<f", float(v))),
-    "double": ("Float64", lambda v: struct.pack("<d", float(v))),
-    "string": ("String", _pack_str),
-    "boolean": ("UInt8", lambda v: struct.pack("<B", 1 if v else 0)),
-    "date": ("Date", _pack_date),
-    "timestamp": ("DateTime", _pack_datetime),
-    "timestamp_ntz": ("DateTime", _pack_datetime_ntz),
+    "tinyint": ("Int8", "b", int),
+    "smallint": ("Int16", "h", int),
+    "int": ("Int32", "i", int),
+    "bigint": ("Int64", "q", int),
+    "float": ("Float32", "f", float),
+    "double": ("Float64", "d", float),
+    "string": ("String", None, str),
+    "boolean": ("UInt8", "B", lambda v: 1 if v else 0),
+    "date": ("Date", "H", _date_days),
+    "timestamp": ("DateTime", "I", _datetime_epoch),
+    "timestamp_ntz": ("DateTime", "I", _datetime_ntz_epoch),
 }
 
 def _ch_type_of(spark_simple: str):
-    """(ch_type, packer) for a Spark simpleString, or None. Decimals
-    lower to Float64: the reference's 2021 datavalues has no decimal —
-    its parser types fractional literals Float64
+    """(ch_type, struct code, converter) for a Spark simpleString, or
+    None. Decimals lower to Float64: the reference's 2021 datavalues has
+    no decimal — its parser types fractional literals Float64
     (common/datavalues/src/data_type.rs), so this wire surface exposes
     the same."""
     if spark_simple.startswith("decimal("):
@@ -185,9 +181,9 @@ def _ch_type_of(spark_simple: str):
     return _SPARK_TO_CH.get(spark_simple)
 
 
-# Wire-decoder inverses of the packers above (wire-INSERT path).
+# Wire-decoder inverses of the encoders above (wire-INSERT path).
 # DateTime uses datetime.fromtimestamp — the exact inverse of
-# _pack_datetime's local-instant .timestamp() rendering.
+# _datetime_epoch's local-instant .timestamp() rendering.
 _CH_UNPACK = {
     "Int8": (1, lambda b: struct.unpack("<b", b)[0]),
     "UInt8": (1, lambda b: b[0]),
@@ -202,14 +198,6 @@ _CH_UNPACK = {
     "Date": (2, lambda b: _EPOCH_DATE + _timedelta(days=struct.unpack("<H", b)[0])),
     "DateTime": (4, lambda b: datetime.fromtimestamp(struct.unpack("<I", b)[0])),
 }
-
-_ZERO_OF = {
-    "Int8": b"\x00", "Int16": b"\x00\x00", "Int32": b"\x00" * 4,
-    "Int64": b"\x00" * 8, "Float32": b"\x00" * 4, "Float64": b"\x00" * 8,
-    "String": b"\x00", "UInt8": b"\x00", "Date": b"\x00\x00",
-    "DateTime": b"\x00" * 4,
-}
-
 
 def _varint(n: int) -> bytes:
     out = bytearray()
@@ -306,13 +294,16 @@ class _CHConn:
     def send_end_of_stream(self) -> None:
         self._send(_varint(SERVER_END_OF_STREAM))
 
-    def send_block(self, columns: list[tuple[str, str, bool, object]], rows, lo: int, hi: int) -> None:
+    def send_block(
+        self, columns: list[tuple[str, str, bool, str | None, object]], rows, lo: int, hi: int
+    ) -> None:
         """One server Data packet. columns: (name, ch_type, nullable,
-        packer) — the packer travels with the column because one CH
-        type name can have two encodings (DateTime from timestamp vs
-        timestamp_ntz). rows[lo:hi] is the slice to encode (lo == hi
-        -> header block, query_writer.rs:99-104 sends the empty schema
-        block first)."""
+        struct code, converter) — the converter travels with the column
+        because one CH type name can have two encodings (DateTime from
+        timestamp vs timestamp_ntz). rows[lo:hi] is the slice to encode
+        (lo == hi -> header block, query_writer.rs:99-104 sends the
+        empty schema block first). A fixed-width column is packed by one
+        struct call; a String column value by value."""
         rev = min(self.client_revision, SERVER_REVISION)
         out = bytearray(_varint(SERVER_DATA))
         if rev >= MIN_REVISION_WITH_TEMPORARY_TABLES:
@@ -322,24 +313,22 @@ class _CHConn:
             out += _varint(1) + b"\x00" + _varint(2) + struct.pack("<i", -1) + _varint(0)
         n_rows = hi - lo
         out += _varint(len(columns)) + _varint(n_rows)
-        for ci, (name, ch_type, nullable, pack) in enumerate(columns):
+        for ci, (name, ch_type, nullable, code, conv) in enumerate(columns):
             out += _chstring(name)
             out += _chstring(f"Nullable({ch_type})" if nullable else ch_type)
+            values = [rows[i][ci] for i in range(lo, hi)]
             if nullable:
                 # Nullable(T): null mask first, then values with zero
-                # placeholders in null slots
-                mask = bytearray(n_rows)
-                for i in range(lo, hi):
-                    if rows[i][ci] is None:
-                        mask[i - lo] = 1
-                out += bytes(mask)
-                zero = _ZERO_OF[ch_type]
-                for i in range(lo, hi):
-                    v = rows[i][ci]
-                    out += zero if v is None else pack(v)
+                # (String: empty) placeholders in null slots
+                out += bytes(v is None for v in values)
+            if code is None:
+                for v in values:
+                    out += b"\x00" if v is None and nullable else _chstring(conv(v))
             else:
-                for i in range(lo, hi):
-                    out += pack(rows[i][ci])
+                out += struct.pack(
+                    f"<{n_rows}{code}",
+                    *[0 if v is None and nullable else conv(v) for v in values],
+                )
         self._send(bytes(out))
 
     # -- client-side packet readers --
@@ -605,7 +594,7 @@ class _CHConn:
                 mapped = _ch_type_of(f.dataType.simpleString())
                 if mapped is None:
                     raise ValueError(f"Unsupported column type:{f.dataType.simpleString()}")
-                columns.append((c, mapped[0], bool(f.nullable), mapped[1]))
+                columns.append((c, mapped[0], bool(f.nullable), *mapped[1:]))
         except ValueError as e:
             self.send_exception(str(e))
             return
@@ -695,7 +684,7 @@ class _CHConn:
                 if mapped is None:
                     # query_writer.rs:165-169 verbatim behavior
                     raise ValueError(f"Unsupported column type:{st}")
-                columns.append((f.name, mapped[0], bool(f.nullable), mapped[1]))
+                columns.append((f.name, mapped[0], bool(f.nullable), *mapped[1:]))
         except ValueError as e:
             self.send_exception(str(e))
             return
@@ -714,11 +703,11 @@ class _CHConn:
         except Exception as e:
             # out-of-range Date/DateTime, a None in a column Spark
             # declared non-nullable (TypeError/struct.error in the
-            # packer), or any other serialization fault mid-stream:
+            # encoding), or any other serialization fault mid-stream:
             # the protocol permits an Exception packet after data
             # blocks; refuse loudly instead of dying silently with
             # the error lost (ADVICE r4: only ValueError was caught,
-            # so packer TypeErrors escaped to Handler.handle)
+            # so encoder TypeErrors escaped to Handler.handle)
             self.send_exception(_first_line(e))
             return
         self.send_progress(len(rows), 0)

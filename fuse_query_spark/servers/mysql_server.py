@@ -69,6 +69,9 @@ COM_STMT_EXECUTE = 0x17
 COM_STMT_CLOSE = 0x19
 COM_STMT_RESET = 0x1A
 
+_EOF = b"\xfe" + struct.pack("<HH", 0, 2)  # EOF packet: no warnings, autocommit
+_SEND_BYTES = 1 << 16  # a result set's frames go out per this many bytes
+
 # column types, mirroring the reference's mapping
 # (writers/query_result_writer.rs:42-57: all ints -> MYSQL_TYPE_LONG,
 # floats -> MYSQL_TYPE_FLOAT, Utf8 -> VARCHAR, Boolean -> SHORT,
@@ -265,17 +268,36 @@ class _Conn:
             if length < 0xFFFFFF:
                 return payload
 
-    def send_packet(self, payload: bytes) -> None:
-        # the 3-byte length caps one frame at 0xFFFFFF; larger payloads
-        # MUST be split into max-size frames with a trailing (possibly
-        # empty) remainder frame, per the protocol's packet splitting
+    def frame(self, out: bytearray, payload: bytes) -> None:
+        """Append `payload` to `out` as wire frames. The 3-byte length
+        caps one frame at 0xFFFFFF; larger payloads MUST be split into
+        max-size frames with a trailing (possibly empty) remainder
+        frame, per the protocol's packet splitting."""
         while True:
             chunk, payload = payload[:0xFFFFFF], payload[0xFFFFFF:]
-            head = struct.pack("<I", len(chunk))[:3] + bytes([self.seq & 0xFF])
-            self.sock.sendall(head + chunk)
+            out += struct.pack("<I", len(chunk))[:3]
+            out.append(self.seq & 0xFF)
+            out += chunk
             self.seq += 1
             if len(chunk) < 0xFFFFFF:
-                break
+                return
+
+    def send_packet(self, payload: bytes) -> None:
+        out = bytearray()
+        self.frame(out, payload)
+        self.sock.sendall(out)
+
+    def send_packets(self, payloads) -> None:
+        """Frame `payloads` into one buffer, sent every _SEND_BYTES: a
+        result set costs one send per ~64 KiB, not one per row."""
+        out = bytearray()
+        for payload in payloads:
+            self.frame(out, payload)
+            if len(out) >= _SEND_BYTES:
+                self.sock.sendall(out)
+                out.clear()
+        if out:
+            self.sock.sendall(out)
 
     # -- composite packets --
     def send_ok(self, affected: int = 0) -> None:
@@ -283,7 +305,7 @@ class _Conn:
         self.send_packet(b"\x00" + _lenenc_int(affected) + _lenenc_int(0) + struct.pack("<HH", 2, 0))
 
     def send_eof(self) -> None:
-        self.send_packet(b"\xfe" + struct.pack("<HH", 0, 2))
+        self.send_packet(_EOF)
 
     def send_err(self, msg: str, errno: int = 1105) -> None:
         # truncate WITHOUT splitting a multibyte sequence (code-review
@@ -503,13 +525,15 @@ class _Conn:
             self._write_resultset(fields, rows)
 
     def _write_resultset(self, fields, rows) -> None:
-        self.send_packet(_lenenc_int(len(fields)))
-        for name, dtype in fields:
-            self.send_packet(self._column_def(name, dtype))
-        self.send_eof()
-        for row in rows:
-            self.send_packet(b"".join(_text_value(v) for v in row))
-        self.send_eof()
+        self.send_packets(
+            itertools.chain(
+                [_lenenc_int(len(fields))],
+                (self._column_def(name, dtype) for name, dtype in fields),
+                [_EOF],
+                (b"".join(_text_value(v) for v in row) for row in rows),
+                [_EOF],
+            )
+        )
 
     def _write_binary_resultset(self, fields, rows) -> None:
         """Binary-protocol resultset (COM_STMT_EXECUTE response): 0x00
@@ -517,12 +541,9 @@ class _Conn:
         the declared column type — what strict connectors require from
         a prepared-statement execution."""
         encs = [_binary_type_of(dtype) for _, dtype in fields]
-        self.send_packet(_lenenc_int(len(fields)))
-        for (name, dtype), (coltype, _) in zip(fields, encs):
-            self.send_packet(self._column_def(name, dtype, coltype))
-        self.send_eof()
         n = len(fields)
-        for row in rows:
+
+        def row_packet(row) -> bytes:
             bitmap = bytearray((n + 2 + 7) // 8)
             body = bytearray()
             for i, v in enumerate(row):
@@ -530,8 +551,20 @@ class _Conn:
                     bitmap[(i + 2) // 8] |= 1 << ((i + 2) % 8)
                 else:
                     body += encs[i][1](v)
-            self.send_packet(b"\x00" + bytes(bitmap) + bytes(body))
-        self.send_eof()
+            return b"\x00" + bytes(bitmap) + bytes(body)
+
+        self.send_packets(
+            itertools.chain(
+                [_lenenc_int(len(fields))],
+                (
+                    self._column_def(name, dtype, coltype)
+                    for (name, dtype), (coltype, _) in zip(fields, encs)
+                ),
+                [_EOF],
+                map(row_packet, rows),
+                [_EOF],
+            )
+        )
 
     @staticmethod
     def _column_def(name: str, dtype: str, coltype: int | None = None) -> bytes:

@@ -26,6 +26,9 @@ def tune(spark: SparkSession, cpus: int | None = None) -> SparkSession:
 
     Used both by our own factory and by entry points that receive a
     driver-owned SparkSession: these confs are all runtime-mutable.
+    Static confs are the factory's alone: among them
+    `spark.python.sql.dataFrameDebugging.enabled`, which get_spark
+    turns off and a driver-owned session keeps as its driver set it.
     """
     cpus = cpus or default_parallelism()
     conf = {
@@ -82,6 +85,10 @@ def get_spark(app_name: str = "fuse-query-spark", cpus: int | None = None) -> Sp
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
+        # no DataFrame call-site capture: with it on, every Column
+        # method walks the Python stack and makes py4j calls (~1.6 ms),
+        # and the first capture imports IPython (+22 MB resident)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     return tune(spark, cpus)

@@ -10,14 +10,15 @@ What each kind does (— is refused with UnsupportedStatement):
 ============  ==============  ============  ==============  =========  ===============  ===================
 engine        read            append        overwrite       truncate   DELETE/UPDATE    partition ops
 ============  ==============  ============  ==============  =========  ===============  ===================
-Memory        its rows        union         replace         drop rows  replace rows     —
+Memory        its rows [4]    concat [4]    replace         drop rows  replace rows     —
 Null          empty           discard       discard         no-op      no-op            —
 View          stored SELECT   —             —               —          —                —
-Parquet       files (cached)  write files   replace [1]     rm dir     rewrite [2]      PARTITION BY, DROP,
-                                                                                        OPTIMIZE, REFRESH
-ORC,          files (cached)  write files   replace [1]     rm dir     rewrite [2]      PARTITION BY, DROP,
-JSONEachRow                                                                             REFRESH
-CSV           files (cached)  write files   replace         rm dir     rewrite [2]      —
+Parquet       files (cached,  write files   replace [1]     rm dir     rewrite [2]      PARTITION BY, DROP,
+              resident [5])                                                             OPTIMIZE, REFRESH
+ORC,          files (cached,  write files   replace [1]     rm dir     rewrite [2]      PARTITION BY, DROP,
+JSONEachRow   resident [5])                                                             REFRESH
+CSV           files (cached,  write files   replace         rm dir     rewrite [2]      —
+              resident [5])
 BinaryFile    glob (cached)   —             —               —          —                —
 Snapshot      newest version  commit        commit          —          commit           OPTIMIZE [ZORDER BY];
               (cached)                                                                  versions [3]
@@ -30,6 +31,14 @@ remote        store parts     upload parts  —               —          —  
     are rewritten (an UPDATE that sets a partition column rewrites the
     whole table); otherwise a whole-table temp-dir swap.
 [3] VERSION AS OF, ROLLBACK, VACUUM and SHOW SNAPSHOTS.
+[4] one LocalRelation while every INSERT's rows are local (VALUES,
+    wire blocks): an INSERT concatenates the two row sequences on the
+    JVM, with no Spark job; other input is materialized with
+    localCheckpoint and unioned.
+[5] a table storing fewer than RESIDENT_BYTES is served from one
+    driver-side LocalRelation from its second read under one relation
+    key on: Catalyst answers filters, projections and limits over it
+    on the driver, with no Spark job.
 
 Any other ENGINE name gets `Storage` itself, which refuses everything.
 A file or Snapshot table keeps one resolved relation on
@@ -46,19 +55,39 @@ import re
 import shutil
 from dataclasses import dataclass
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    LongType,
+    MapType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from fuse_query_spark.dialect.lexer import quote, split, string_value
 from fuse_query_spark.errors import UnsupportedStatement
 from fuse_query_spark.sources import snapshots
 from fuse_query_spark.sources.tables import local_rows
 
+# A File table whose stored files add up to fewer bytes than this is
+# served from a driver-side LocalRelation (footnote [5]). Placed by the
+# row and size sweep in SCALE.md "Relation reuse": up to it a point
+# lookup runs ~1.9x and a 50% filter ~1.2x as fast as the file scan,
+# while a grouped aggregate, which ships the rows inside its tasks,
+# stays within ~10% of it; past it both lose.
+RESIDENT_BYTES = 384 * 1024
+
 
 def align_to_schema(df: DataFrame, schema: StructType) -> DataFrame:
     """Column order/type normalization to the declared schema (so
     positional formats stay readable and remote parts all share one
-    physical schema); declared columns df lacks are NULL."""
+    physical schema); declared columns df lacks are NULL. A df that
+    already has the declared names and types is returned as it is."""
+    if [(f.name, f.dataType) for f in df.schema] == [(f.name, f.dataType) for f in schema]:
+        return df
     return df.select(
         *[
             (
@@ -84,6 +113,47 @@ def read_parquet(spark, path: str, table_name: str | None = None, merge_schema: 
     return df
 
 
+def parquet_schema(path: str, table_name: str | None = None) -> StructType:
+    """The schema read_parquet(spark, path, table_name) reads, taken
+    from one footer on the driver instead of a Spark schema-inference
+    job: for a directory, its first data file, as Spark's own inference
+    without mergeSchema. Spark's rules: a timestamp without UTC
+    adjustment is TIMESTAMP_NTZ, INT96 is TIMESTAMP, TIMESTAMP(NANOS) is
+    its raw long (read_parquet_maybe_nanos), the events table's `ts` is
+    normalized to TIMESTAMP, and a file source makes every field
+    nullable."""
+    import pyarrow.parquet as pq
+    import pyarrow.types as pat
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    if os.path.isdir(path):
+        path = os.path.join(path, min(f for f in os.listdir(path) if not f.startswith(("_", "."))))
+    pf = pq.ParquetFile(path)
+    physical = {c.path: c.physical_type for c in pf.schema}
+
+    def spark_type(f) -> DataType:
+        if table_name == "events" and f.name == "ts":
+            return TimestampType()
+        if pat.is_timestamp(f.type) and physical.get(f.name) == "INT96":
+            return TimestampType()
+        if pat.is_timestamp(f.type) and f.type.unit == "ns":
+            return LongType()
+        return from_arrow_type(f.type, prefer_timestamp_ntz=True)
+
+    return StructType([StructField(f.name, _nullable(spark_type(f))) for f in pf.schema_arrow])
+
+
+def _nullable(dt: DataType) -> DataType:
+    """`dt` with every field, element and value nullable."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType)) for f in dt.fields])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
 def _owned(df: DataFrame) -> DataFrame:
     """`df` as rows a Memory table can keep. A plan whose leaves are
     all local (LocalRelation: VALUES, wire INSERT blocks) or already
@@ -98,6 +168,45 @@ def _owned(df: DataFrame) -> DataFrame:
     ):
         return df
     return df.localCheckpoint(eager=True)
+
+
+def _jclass(spark, name: str):
+    """A JVM class by name, with no reflection round trip per package."""
+    return JavaClass(name, spark._jvm._gateway_client)
+
+
+def _attributes(spark, schema):
+    """Fresh output attributes for the columns of a JVM StructType."""
+    return _jclass(spark, "org.apache.spark.sql.catalyst.types.DataTypeUtils").toAttributes(schema)
+
+
+def _dataset(spark, plan) -> DataFrame:
+    jdf = _jclass(spark, "org.apache.spark.sql.classic.Dataset").ofRows(spark._jsparkSession, plan)
+    return DataFrame(jdf, spark)
+
+
+def _resident(df: DataFrame) -> DataFrame:
+    """`df`'s rows as one LocalRelation, built on the JVM from Spark's
+    own read of them: one collect job, and no row enters Python."""
+    spark, jdf = df.sparkSession, df._jdf
+    rows = _jclass(spark, "scala.jdk.javaapi.CollectionConverters").asScala(jdf.collectAsList())
+    local = _jclass(spark, "org.apache.spark.sql.catalyst.plans.logical.LocalRelation")
+    return _dataset(spark, local.fromExternalRows(_attributes(spark, jdf.schema()), rows.toSeq()))
+
+
+def _local_concat(a: DataFrame, b: DataFrame) -> DataFrame | None:
+    """One LocalRelation holding a's rows then b's, when both optimize
+    to a LocalRelation; None otherwise. Both must have the same column
+    types (callers align them to one declared schema). The row
+    sequences are concatenated on the JVM as they are, so no row is
+    converted and no Spark job runs. Every column is nullable, as a
+    union's output is when either side may hold NULL."""
+    la, lb = (x._jdf.queryExecution().optimizedPlan() for x in (a, b))
+    if la.nodeName() != "LocalRelation" or lb.nodeName() != "LocalRelation":
+        return None
+    spark = a.sparkSession
+    output = _attributes(spark, la.schema().asNullable())
+    return _dataset(spark, la.copy(output, la.data().concat(lb.data()), False, la.stream()))
 
 
 # ---------- partitions ----------
@@ -255,7 +364,12 @@ class Memory(Storage):
         return tdef.data
 
     def append(self, eng, tdef, df):
-        tdef.data = self.read(eng, tdef).unionByName(_owned(df), allowMissingColumns=True)
+        rows, new = tdef.data, _owned(align_to_schema(df, tdef.schema))
+        if rows is None:  # nothing stored yet: the new rows are the table
+            tdef.data = new
+            return
+        both = _local_concat(rows, new)
+        tdef.data = rows.union(new) if both is None else both
 
     def overwrite(self, eng, tdef, df):
         tdef.data = _owned(align_to_schema(df, tdef.schema))
@@ -320,18 +434,35 @@ class _Cached(Storage):
     walk with stat (Snapshot: one manifest glob), where resolving costs
     a file listing, a footer-merge job and the schema-alignment
     projection. Subclasses resolve(eng, tdef) a table with stored
-    data."""
+    data.
+
+    A table whose resident(fingerprint) is true becomes a driver-side
+    LocalRelation on its second read under one key: a table read once
+    after each write (an INSERT then a readback) submits no job more
+    than its scan, and one read again pays a single collect."""
 
     def read(self, eng, tdef):
         key = (tdef.schema, tdef.partition_by, self.fingerprint(tdef))
         cached = tdef.relation  # one read: another thread may replace it
         if cached is not None and cached[0] == key:
-            return cached[1]
-        # two threads missing together both resolve; either result is
-        # right for the key it is stored under
-        df = self.resolve(eng, tdef) if key[-1] else local_rows(eng.spark, [], tdef.schema)
-        tdef.relation = (key, df)
+            _, df, pending = cached
+            if pending:
+                df = _resident(df)
+                tdef.relation = (key, df, False)
+            return df
+        # two threads missing together both resolve (or materialize);
+        # either result is right for the key it is stored under
+        if not key[-1]:
+            df, pending = local_rows(eng.spark, [], tdef.schema), False
+        else:
+            df, pending = self.resolve(eng, tdef), self.resident(key[-1])
+        tdef.relation = (key, df, pending)
         return df
+
+    def resident(self, fingerprint: tuple) -> bool:
+        """True when the stored data is small enough to hold on the
+        driver."""
+        return False
 
     def fingerprint(self, tdef) -> tuple:
         """Sorted (path, size, mtime_ns) of every file under the
@@ -432,6 +563,9 @@ class File(_Cached):
         # columns absent from the files null-fill, extra file columns
         # project away — what makes ADD/DROP COLUMN metadata-only
         return align_to_schema(df, tdef.schema)
+
+    def resident(self, fingerprint):
+        return sum(size for _path, size, _mtime in fingerprint) < RESIDENT_BYTES
 
     def sliceable(self, tdef):
         # slicing a hive layout by file loses the path-encoded values

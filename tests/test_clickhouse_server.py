@@ -599,3 +599,110 @@ def test_wire_insert_binary_string_survives(insert_client):
     # the connection is still usable (framing intact)
     _, rows, _, exc2 = c.query("SELECT count(*) AS n FROM wi5")
     assert exc2 is None and rows == [(1,)]
+
+
+# ---------------------------------------------------------------------------
+# Data blocks pack each fixed-width column with one struct call; the
+# per-value packer they replaced is kept here as the differential oracle.
+# ---------------------------------------------------------------------------
+
+
+def _per_value_packers():
+    from datetime import date, datetime, timezone
+
+    def pack_date(v):
+        if isinstance(v, datetime):
+            v = v.date()
+        days = (v - date(1970, 1, 1)).days
+        if not 0 <= days <= 0xFFFF:
+            raise ValueError(f"Date out of ClickHouse Date range 1970..2149: {v}")
+        return struct.pack("<H", days)
+
+    def pack_datetime(v, utc=False):
+        if isinstance(v, date) and not isinstance(v, datetime):
+            v = datetime(v.year, v.month, v.day)
+        if utc and v.tzinfo is None:
+            v = v.replace(tzinfo=timezone.utc)
+        epoch = int(v.timestamp())
+        if not 0 <= epoch <= 0xFFFFFFFF:
+            raise ValueError(f"Timestamp out of ClickHouse DateTime range 1970..2106: {v}")
+        return struct.pack("<I", epoch)
+
+    return {
+        "tinyint": lambda v: struct.pack("<b", int(v)),
+        "smallint": lambda v: struct.pack("<h", int(v)),
+        "int": lambda v: struct.pack("<i", int(v)),
+        "bigint": lambda v: struct.pack("<q", int(v)),
+        "float": lambda v: struct.pack("<f", float(v)),
+        "double": lambda v: struct.pack("<d", float(v)),
+        "string": lambda v: _s(str(v)),
+        "boolean": lambda v: struct.pack("<B", 1 if v else 0),
+        "date": pack_date,
+        "timestamp": pack_datetime,
+        "timestamp_ntz": lambda v: pack_datetime(v, utc=True),
+        "decimal(10,2)": lambda v: struct.pack("<d", float(v)),
+    }
+
+
+def _block_bytes(types, nullable, rows, per_value: bool) -> bytes:
+    from fuse_query_spark.servers.clickhouse_server import _CHConn, _ch_type_of
+
+    class Recorder:
+        sent = b""
+
+        def sendall(self, data):
+            self.sent += bytes(data)
+
+    conn = _CHConn(Recorder(), None)
+    conn.client_revision = CLIENT_REVISION
+    columns = [(f"c{i}", *_ch_type_of(t)[:1], nullable, *_ch_type_of(t)[1:]) for i, t in enumerate(types)]
+    if per_value:
+        packers = _per_value_packers()
+        zero = {"b": 1, "h": 2, "i": 4, "q": 8, "f": 4, "d": 8, "B": 1, "H": 2, "I": 4, None: 1}
+        head = bytearray(_varint(1) + _s("") + _varint(1) + b"\x00" + _varint(2))
+        head += struct.pack("<i", -1) + _varint(0) + _varint(len(columns)) + _varint(len(rows))
+        for ci, (name, ch_type, _n, code, _conv) in enumerate(columns):
+            head += _s(name) + _s(f"Nullable({ch_type})" if nullable else ch_type)
+            if nullable:
+                head += bytes(r[ci] is None for r in rows)
+            for r in rows:
+                v = r[ci]
+                head += b"\x00" * zero[code] if v is None and nullable else packers[types[ci]](v)
+        return bytes(head)
+    conn.send_block(columns, rows, 0, len(rows))
+    return conn.sock.sent
+
+
+@pytest.mark.parametrize("nullable", [False, True], ids=["plain", "nullable"])
+def test_column_packed_block_equals_per_value_packer(nullable):
+    from datetime import date, datetime
+
+    types = ["tinyint", "smallint", "int", "bigint", "float", "double", "string", "boolean",
+             "date", "timestamp", "timestamp_ntz", "decimal(10,2)"]
+    rows = [
+        (i % 100 - 50, i * 7 - 300, i * 1000, i << 33, i / 4, i / 3, f"s{i}", i % 2 == 0,
+         date(2000, 1, 1 + i % 28), datetime(2001, 2, 3, 4, 5, i % 60), datetime(2002, 3, 4, 5, 6, 7),
+         i / 8)
+        for i in range(300)
+    ]
+    if nullable:
+        rows = [tuple(None if (i + j) % 4 == 0 else v for j, v in enumerate(r)) for i, r in enumerate(rows)]
+    assert _block_bytes(types, nullable, rows, per_value=False) == _block_bytes(
+        types, nullable, rows, per_value=True
+    )
+
+
+@pytest.mark.parametrize("kind,value", [
+    ("date", "1960-01-01"), ("date", "2200-01-01"), ("timestamp_ntz", "1960-01-01 00:00:00"),
+])
+def test_column_packed_block_keeps_range_errors(kind, value):
+    from datetime import date, datetime
+
+    v = date.fromisoformat(value) if kind == "date" else datetime.fromisoformat(value)
+    rows = [(None,), (v,)]
+    errors = []
+    for per_value in (False, True):
+        with pytest.raises(ValueError, match="out of ClickHouse") as e:
+            _block_bytes([kind], True, rows, per_value)
+        errors.append(str(e.value))
+    assert errors[0] == errors[1]

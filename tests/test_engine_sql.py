@@ -1334,12 +1334,17 @@ class TestPartitionedTables:
         engine.sql("DROP TABLE mv")
         engine.sql("DROP TABLE mvbase")
 
-    def test_materialized_view_refresh_prunes_base(self, engine, tmp_path):
+    def test_materialized_view_refresh_prunes_base(self, engine, tmp_path, monkeypatch):
         """The scale claim behind REFRESH PARTITION: the injected
         partition predicate pushes down THROUGH the view's aggregate
         into the partitioned base's scan (PartitionFilters), so
         refreshing one day reads one day — gate the plan, then run the
-        refresh and check the recompute landed."""
+        refresh and check the recompute landed. The base stands for a
+        table above RESIDENT_BYTES: a smaller one is read from the
+        driver, with no scan to prune."""
+        from fuse_query_spark.sources import storage
+
+        monkeypatch.setattr(storage, "RESIDENT_BYTES", 0)
         base_loc = str(tmp_path / "mvb_pq")
         mv_loc = str(tmp_path / "mvp_pq")
         engine.sql("DROP TABLE IF EXISTS facts")
@@ -1955,6 +1960,7 @@ class TestRelationCache:
         )
         engine.sql("INSERT INTO rc_same VALUES (1)")
         tdef = engine.resolve_table("rc_same")
+        engine._table_df(tdef)  # the second read of a small table makes it resident
         first = engine._table_df(tdef)
         assert engine._table_df(tdef) is first
         engine.sql("INSERT INTO rc_same VALUES (2)")
@@ -2006,15 +2012,130 @@ class TestRelationCache:
         assert one(engine.sql("SELECT count(*) FROM rc_conc")) == 40
         engine.sql("DROP TABLE rc_conc")
 
-    def test_point_lookup_submits_one_job(self, engine, sf_dir):
+    def test_point_lookup_submits_no_job(self, engine, sf_dir):
         engine.sql("CREATE DATABASE IF NOT EXISTS rc_att ENGINE = Local")
         engine.attach_parquet_dir(sf_dir, db="rc_att")
         stmt = "SELECT o_orderkey, o_custkey FROM rc_att.orders WHERE o_orderkey = 7"
         engine.sql_collect(stmt)  # resolves the relation
+        engine.sql_collect(stmt)  # the second read makes it resident
         _, rows = engine.sql_collect(stmt)
         assert len(rows) == 1
-        assert _jobs_of_last_statement(engine) == 1
+        assert _jobs_of_last_statement(engine) == 0
         engine.sql("DROP DATABASE rc_att")
+
+
+class TestResidentTables:
+    """A File table storing fewer than RESIDENT_BYTES is served from one
+    driver-side LocalRelation from its second read under one relation
+    key; a larger table keeps its file scan. Attaching a corpus reads
+    each footer on the driver."""
+
+    @staticmethod
+    def _plan(engine, stmt):
+        for _ in range(3):  # resolve, materialize, then the plan kept
+            df = engine.sql(stmt)
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    @pytest.fixture(scope="class")
+    def sf001(self, engine, sf_dir):
+        import os
+
+        engine.sql("CREATE DATABASE IF NOT EXISTS rs_att ENGINE = Local")
+        sched = engine.spark.sparkContext._jsc.sc().dagScheduler()
+        start = sched.nextJobId()
+        engine.attach_parquet_dir(os.path.join(os.path.dirname(sf_dir), "sf0.01"), db="rs_att")
+        jobs = sched.nextJobId() - start
+        yield jobs
+        engine.sql("DROP DATABASE rs_att")
+
+    def test_attach_submits_no_job(self, sf001):
+        assert sf001 == 0
+
+    @pytest.mark.parametrize(
+        "stmt",
+        [
+            "SELECT o_orderkey, o_custkey, o_totalprice FROM rs_att.orders WHERE o_orderkey = 7",
+            "SELECT c_custkey, c_name, c_acctbal FROM rs_att.customer WHERE c_custkey = 7",
+        ],
+        ids=["orders", "customer"],
+    )
+    def test_point_lookup_on_sf001_submits_no_job(self, engine, sf001, stmt):
+        for _ in range(3):
+            _, rows = engine.sql_collect(stmt)
+        assert len(rows) == 1
+        assert _jobs_of_last_statement(engine) == 0
+
+    def test_constant_splits_orders_from_lineitem(self, engine, sf001):
+        """orders (281 KB at sf0.01) is resident, lineitem (1.04 MB)
+        keeps its FileScan."""
+        assert "LocalTableScan" in self._plan(engine, "SELECT o_orderkey FROM rs_att.orders WHERE o_custkey = 7")
+        plan = self._plan(engine, "SELECT l_orderkey FROM rs_att.lineitem WHERE l_partkey = 7")
+        assert "FileScan parquet" in plan and "LocalTableScan" not in plan
+
+    @pytest.mark.parametrize("resident_bytes,scan", [(0, "FileScan parquet"), (1 << 40, "LocalTableScan")])
+    def test_small_table_plan_either_side(self, engine, tmp_path, monkeypatch, resident_bytes, scan):
+        from fuse_query_spark.sources import storage
+
+        monkeypatch.setattr(storage, "RESIDENT_BYTES", resident_bytes)
+        engine.sql("DROP TABLE IF EXISTS rs_small")
+        engine.sql(f"CREATE TABLE rs_small (id bigint, v string) ENGINE = Parquet location = '{tmp_path / 'rs'}'")
+        engine.sql("INSERT INTO rs_small VALUES (1, 'a'), (2, 'b')")
+        try:
+            assert scan in self._plan(engine, "SELECT v FROM rs_small WHERE id = 2")
+            assert [tuple(r) for r in engine.sql("SELECT v FROM rs_small WHERE id = 2").collect()] == [("b",)]
+        finally:
+            engine.sql("DROP TABLE rs_small")
+
+    def test_read_once_after_each_write_adds_no_job(self, engine, tmp_path):
+        """INSERT then one readback, repeated: every readback is the
+        first read under its key, so it runs its scan and no collect."""
+        engine.sql("DROP TABLE IF EXISTS rs_once")
+        engine.sql(f"CREATE TABLE rs_once (id bigint) ENGINE = Parquet location = '{tmp_path / 'once'}'")
+        try:
+            for i in range(3):
+                engine.sql(f"INSERT INTO rs_once VALUES ({i})")
+                _, rows = engine.sql_collect("SELECT count(*), sum(id) FROM rs_once")
+                assert tuple(rows[0]) == (i + 1, sum(range(i + 1)))
+                # still the file relation, materialization pending
+                assert engine.resolve_table("rs_once").relation[2]
+        finally:
+            engine.sql("DROP TABLE rs_once")
+
+    @pytest.mark.parametrize("scale", ["sf0.001", "sf0.01", "sf0.1"])
+    def test_attached_schema_is_sparks_inference(self, spark, sf_dir, scale):
+        """The footer schema equals the StructType Spark's reader infers
+        (TIMESTAMP_NTZ for timestamps without UTC adjustment, events.ts
+        normalized to TIMESTAMP) for every corpus file."""
+        import glob
+        import os
+
+        from fuse_query_spark.sources.storage import parquet_schema, read_parquet
+
+        files = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), scale, "*.parquet")))
+        if not files:
+            pytest.skip(f"no {scale} corpus")
+        for path in files:
+            name = os.path.basename(path)[: -len(".parquet")]
+            assert parquet_schema(path, name) == read_parquet(spark, path, table_name=name).schema, path
+
+
+class TestSystemNamesInIdentifiers:
+    """Only known system tables are renamed: `system.x` inside a
+    backtick alias is a column name, and an unknown system table still
+    raises UnknownTable."""
+
+    def test_backtick_alias(self, engine):
+        df = engine.sql("SELECT 2 AS `system.x`")
+        assert df.columns == ["system.x"] and one(df) == 2
+
+    def test_unknown_system_table_raises(self, engine):
+        from fuse_query_spark.errors import UnknownTable
+
+        with pytest.raises(UnknownTable, match="Unknown system table: 'nosuch'"):
+            engine.sql("SELECT * FROM system.nosuch").collect()
+
+    def test_known_system_table_still_reads(self, engine):
+        assert one(engine.sql("SELECT count(*) FROM system.one")) == 1
 
 
 class TestLiteralRowsLocalScan:

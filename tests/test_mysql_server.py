@@ -416,3 +416,77 @@ def test_quote_inside_quoted_identifier_is_not_a_literal(client):
     assert nparams == 1
     _cols, rows = client.execute(sid, [7])
     assert rows == [[1, 7]]
+
+
+# ---------- result-set framing: batched sends, same bytes ----------
+
+
+class _Recorder:
+    """A socket that keeps what is sent, one entry per sendall."""
+
+    def __init__(self):
+        self.sent: list[bytes] = []
+
+    def sendall(self, data) -> None:
+        self.sent.append(bytes(data))
+
+
+def _per_row_resultset(fields, rows, binary: bool) -> list[bytes]:
+    """The result-set writer as it was before batching, kept as the
+    differential oracle: one sendall per frame."""
+    from fuse_query_spark.servers.mysql_server import (
+        _Conn,
+        _binary_type_of,
+        _lenenc_int,
+        _text_value,
+    )
+
+    sock, seq = _Recorder(), [0]
+
+    def send_packet(payload: bytes) -> None:
+        while True:
+            chunk, payload = payload[:0xFFFFFF], payload[0xFFFFFF:]
+            sock.sendall(struct.pack("<I", len(chunk))[:3] + bytes([seq[0] & 0xFF]) + chunk)
+            seq[0] += 1
+            if len(chunk) < 0xFFFFFF:
+                break
+
+    eof = b"\xfe" + struct.pack("<HH", 0, 2)
+    encs = [_binary_type_of(dtype) for _, dtype in fields]
+    send_packet(_lenenc_int(len(fields)))
+    for (name, dtype), (coltype, _) in zip(fields, encs):
+        send_packet(_Conn._column_def(name, dtype, coltype if binary else None))
+    send_packet(eof)
+    n = len(fields)
+    for row in rows:
+        if not binary:
+            send_packet(b"".join(_text_value(v) for v in row))
+            continue
+        bitmap = bytearray((n + 2 + 7) // 8)
+        body = bytearray()
+        for i, v in enumerate(row):
+            if v is None:
+                bitmap[(i + 2) // 8] |= 1 << ((i + 2) % 8)
+            else:
+                body += encs[i][1](v)
+        send_packet(b"\x00" + bytes(bitmap) + bytes(body))
+    send_packet(eof)
+    return sock.sent
+
+
+@pytest.mark.parametrize("binary", [False, True], ids=["text", "binary"])
+def test_batched_resultset_bytes_equal_per_row_writer(binary):
+    """Rows are framed into one buffer sent per ~64 KiB: the byte
+    stream equals the per-row writer's, including NULLs, floats,
+    strings and a row split over two frames (> 0xFFFFFF bytes)."""
+    from fuse_query_spark.servers.mysql_server import _Conn
+
+    fields = [("id", "bigint"), ("x", "double"), ("f", "float"), ("s", "string"), ("d", "decimal(10,2)")]
+    rows = [(i, i / 3, None if i % 5 else 1.5, f"s{i}" * (i % 7), None if i % 3 else "1.25") for i in range(3000)]
+    rows.insert(1500, (-1, None, 2.5, "x" * (0xFFFFFF + 7), None))
+    conn = _Conn(_Recorder(), None)
+    (conn._write_binary_resultset if binary else conn._write_resultset)(fields, rows)
+    want = _per_row_resultset(fields, rows, binary)
+    assert b"".join(conn.sock.sent) == b"".join(want)
+    assert len(want) > 3000 + len(fields)
+    assert len(conn.sock.sent) < 10

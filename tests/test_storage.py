@@ -11,6 +11,7 @@ import pytest
 
 from fuse_query_spark.engine import Engine
 from fuse_query_spark.errors import FuseQueryError, UnknownTable, UnsupportedStatement
+from fuse_query_spark.sources import storage
 
 
 @pytest.fixture(scope="module")
@@ -60,6 +61,28 @@ def test_engine_conformance(engine, tmp_path, eng, part):
     """After each step the table reads what the Memory table reads
     (Null reads empty); a partitioned table's INSERT OVERWRITE replaces
     only the partitions the SELECT writes."""
+    _run_script(engine, tmp_path, eng, part)
+
+
+FILE_ENGINES = [(e, p) for e, p in CONFORMANCE if e not in ("Memory", "Null", "Snapshot")]
+
+
+@pytest.mark.parametrize("resident_bytes", [0, 1 << 40], ids=["file_scans", "resident"])
+@pytest.mark.parametrize(
+    "eng,part", FILE_ENGINES, ids=[e + ("_by_" + p if p else "") for e, p in FILE_ENGINES]
+)
+def test_script_either_side_of_resident_bytes(
+    engine, tmp_path, monkeypatch, resident_bytes, eng, part
+):
+    """The same script, each step's rows read twice, with every table
+    above RESIDENT_BYTES (file scans throughout) and below it (the
+    second read of each key, and the mutations' reads, come from the
+    driver-side LocalRelation): the rows are the same."""
+    monkeypatch.setattr(storage, "RESIDENT_BYTES", resident_bytes)
+    _run_script(engine, tmp_path, eng, part, reads=2)
+
+
+def _run_script(engine, tmp_path, eng, part, reads=1):
     t, ref = f"conf_{eng.lower()}{'_p' if part else ''}", "conf_ref"
     for name in (t, ref):
         engine.sql(f"DROP TABLE IF EXISTS {name}")
@@ -92,7 +115,8 @@ def test_engine_conformance(engine, tmp_path, eng, part):
                     + expect,
                     key=repr,
                 )
-            assert _rows(engine, t) == expect, step
+            for _ in range(reads):
+                assert _rows(engine, t) == expect, step
     finally:
         engine.sql(f"DROP TABLE IF EXISTS {t}")
         engine.sql(f"DROP TABLE IF EXISTS {ref}")
@@ -123,6 +147,24 @@ def test_insert_values_job_counts(engine, tmp_path):
     finally:
         engine.sql("DROP TABLE jc_m")
         engine.sql("DROP TABLE jc_s")
+
+
+def test_memory_table_stays_one_local_relation(engine):
+    """300 one-row INSERTs concatenate into one LocalRelation, each
+    with no Spark job: the readback scans one LocalTableScan, not a
+    300-way union."""
+    engine.sql("DROP TABLE IF EXISTS jc_flat")
+    engine.sql("CREATE TABLE jc_flat (id bigint, s string) ENGINE = Memory")
+    try:
+        for i in range(300):
+            s = "NULL" if i % 7 else f"'{i}'"
+            assert _jobs(engine, f"INSERT INTO jc_flat VALUES ({i}, {s})") == 0
+        df = engine.sql("SELECT count(*), sum(id), count(s) FROM jc_flat")
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("LocalTableScan") == 1 and "Union" not in plan, plan
+        assert tuple(df.collect()[0]) == (300, sum(range(300)), len(range(0, 300, 7)))
+    finally:
+        engine.sql("DROP TABLE jc_flat")
 
 
 # ---------- partition specs address the leaves Spark wrote ----------
