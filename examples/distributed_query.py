@@ -6,8 +6,8 @@ rescheduled) run end-to-end on one machine:
   2. register them on the coordinator (the /v1/cluster/add surface)
   3. run aggregates through Engine.sql — they fan out as per-peer
      partial stages over Flight and finalize coordinator-side
-  4. kill one peer and run again — dispatch_with_retry reassigns the
-     dead peer's slice to the survivor, same result
+  4. kill one peer and run again — the stage runner (run_stages)
+     regroups the source onto the survivor, same result
   5. remove the cluster — the same SQL runs locally, same result
 
 Usage: python examples/distributed_query.py

@@ -22,7 +22,7 @@ from fuse_query_spark.operators.text import (
     shingles_from_tokens,
     tokens,
 )
-from fuse_query_spark.sources.tables import spread
+from fuse_query_spark.sources.tables import local_rows, spread
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:
@@ -618,9 +618,7 @@ def connected_components(
         schema = StructType(
             [StructField(id_col, xt, False), StructField("component", xt, False)]
         )
-        out = spark.createDataFrame(
-            [(v, comp[find(v)]) for v in parent], schema=schema
-        )
+        out = local_rows(spark, [(v, comp[find(v)]) for v in parent], schema)
         return (out, len(parent)) if return_count else out
     # localCheckpoint, NOT persist: each round's plan references the
     # previous labels FOUR times (direct, neighbor-min, both sides of

@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from fuse_query_spark.operators.dedup import _shingle_table
+from fuse_query_spark.sources.tables import local_rows
 
 
 def hash_bucket(col: Column | str, buckets: int = 100) -> Column:
@@ -501,7 +502,7 @@ def dsir_select(
             "dsir_select: target set is empty (no document meets "
             f"stop_frac={stop_frac}); lower stop_frac or check the corpus language"
         )
-    lr = df.sparkSession.createDataFrame(lr_rows, schema=lr_lazy.schema)
+    lr = local_rows(df.sparkSession, lr_rows, lr_lazy.schema)
     scored = (
         dtf.join(F.broadcast(lr), "_f")
         .groupBy(id_col)

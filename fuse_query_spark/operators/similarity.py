@@ -472,6 +472,7 @@ def ivf_index_write(
     an ANN index file: same recall/probe trade-off, served by the
     scan planner instead of a bespoke index reader."""
     from fuse_query_spark.sources.sinks import write_partitioned
+    from fuse_query_spark.sources.tables import local_rows
 
     centroids = _md5_seed_centroids(df, k_cells, vec_col, id_col)
     centroids = ivf_lloyd_refine(df, centroids, iters, vec_col)
@@ -483,8 +484,8 @@ def ivf_index_write(
         assigned, f"{path}/vectors", partition_by=("cell",), overwrite_mode="static"
     )
     spark = df.sparkSession
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centroids)], "cell INT, centroid ARRAY<DOUBLE>"
+    cdf = local_rows(
+        spark, [(i, c) for i, c in enumerate(centroids)], "cell INT, centroid ARRAY<DOUBLE>"
     )
     cdf.coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     return centroids

@@ -21,9 +21,10 @@ CAPABILITY-PARITY path: when the engine's ClusterRegistry (populated
 by the HTTP API, clusters/cluster.rs:23-27) has reachable peers, a
 distributable aggregate query fans out as PrepareShuffleActions — one
 partial-aggregate plan slice per peer over its range of the source —
-is gathered over Arrow Flight one-shot streams (with
-``dispatch_with_retry``'s abort/reassign recovery), and is FINALIZED
-coordinator-side in the local Spark session. Everything else (no
+is gathered over Arrow Flight one-shot streams by the one stage runner
+(``run_stages``: a failed attempt is drained and the partials are
+rebuilt over the surviving peers), and is FINALIZED coordinator-side
+in the local Spark session. Everything else (no
 cluster, unreachable peers, any unsupported shape) falls back to the
 local Catalyst path — same transparent contract as the reference.
 
@@ -112,6 +113,8 @@ import uuid
 from dataclasses import dataclass, field
 
 from py4j.java_gateway import java_import
+
+from fuse_query_spark.sources.tables import local_rows
 
 # aggregate function classes of the analyzed plan -> the partial /
 # finalize decomposition below. argmin/argmax ship a (ret, cmp) pair
@@ -652,30 +655,28 @@ def partial_sql(
     return sql
 
 
-def table_file_slices(location: str, parts: int) -> list[str] | None:
-    """Round-robin the location's parquet data files into `parts`
-    FROM-clause globs (`parquet.`<dir>/{f1,f2}``) — the file is the
-    partition unit the scheduler hands each node. None when the
-    location is a single bare file (nothing to split: every peer would
-    re-decode the whole file for 1/P of the aggregation work) or holds
-    fewer files than peers."""
+def parquet_files(location: str) -> list[str]:
+    """The parquet data files directly under a location directory,
+    sorted; empty for a single bare file (nothing to split: every peer
+    would re-decode the whole file for 1/P of the aggregation work)."""
     import glob as _glob
 
     if not os.path.isdir(location):
-        return None
-    files = sorted(
-        os.path.basename(f)
-        for f in _glob.glob(os.path.join(location, "*.parquet"))
-    )
+        return []
+    return sorted(_glob.glob(os.path.join(os.path.abspath(location), "*.parquet")))
+
+
+def file_slices(files: list[str], parts: int) -> list[str] | None:
+    """Round-robin one directory's `files` into `parts` FROM-clause
+    globs (`parquet.`<dir>/{f1,f2}``) — the file is the partition unit
+    the scheduler hands each node. None when there are fewer files
+    than parts."""
     if len(files) < parts:
         return None
-    groups: list[list[str]] = [[] for _ in range(parts)]
-    for i, f in enumerate(files):
-        groups[i % parts].append(f)
-    root = os.path.abspath(location)
+    root = os.path.dirname(files[0])
     return [
-        "parquet.`" + root + "/{" + ",".join(g) + "}`"
-        for g in groups
+        "parquet.`" + root + "/{" + ",".join(os.path.basename(f) for f in files[i::parts]) + "}`"
+        for i in range(parts)
     ]
 
 
@@ -877,11 +878,7 @@ def _resolve_parquet_table(engine, name: str):
 def _dim_location_bytes(location: str) -> int | None:
     """Total on-disk bytes of the location's parquet files; None when
     there is nothing to read (the broadcast plan would fail)."""
-    import glob as _glob
-
-    if not os.path.isdir(location):
-        return None
-    files = _glob.glob(os.path.join(location, "*.parquet"))
+    files = parquet_files(location)
     if not files:
         return None
     return sum(os.path.getsize(f) for f in files)
@@ -977,7 +974,7 @@ def _validate_finalize(
         pschema = engine.local_select(probe_partial).schema
         elem_types = _elem_types_from_partial(plan, pschema)
         pview = f"__fq_dist_probe_{uuid.uuid4().hex[:12]}"
-        engine.spark.createDataFrame([], pschema).createOrReplaceTempView(pview)
+        local_rows(engine.spark, [], pschema).createOrReplaceTempView(pview)
         try:
             engine.spark.sql(final_sql(plan, pview, elem_types))
         finally:
@@ -994,33 +991,22 @@ class Schedule:
 
     plan: DistributedAgg
     targets: list[str]
-    # stage-0 plan per target; empty for the join form, whose slices
-    # are rebuilt per attempt (join_partials)
-    partials: list[str]
-    elem_types: dict[int, str]
-    fact: object = None  # join form: the sliced fact TableDef
+    # the sliced table's data files (the join form's fact side), fixed
+    # here so that a retry reads the same files as attempt 0
+    files: list[str] = field(default_factory=list)
     dims: list = field(default_factory=list)  # join form: the dim TableDefs
+    elem_types: dict[int, str] = field(default_factory=dict)
 
-    def join_partials(
-        self, targets: list[str], query_id: str, bstages: list[str], bsinks: list[str]
-    ) -> list[str] | None:
-        """Per-target broadcast-join slices: target i joins its fact
-        file glob against sink i of EACH dim's broadcast stage via
-        flight_stream() — the broadcast host is targets[0], where the
-        BroadcastActions run. None → fewer fact files than targets."""
-        slices = table_file_slices(self.fact.location, len(targets))
-        if slices is None:
-            return None
+    def partials(self, peers: list[str], dim_refs: list[list[str]]) -> list[str]:
+        """One partial per peer: the numbers range or the file list
+        regrouped into len(peers) slices. Peer i's slice joins
+        dim_refs[i], one table ref per dim (flight_stream() calls of
+        its broadcast streams at runtime)."""
+        if self.plan.n is not None:
+            return [partial_sql(self.plan, lo, hi) for lo, hi in slice_bounds(self.plan.n, len(peers))]
         return [
-            partial_sql(
-                self.plan,
-                source=s,
-                dim_refs=[
-                    f"flight_stream('{targets[0]}', '{query_id}', '{bst}', '{bsinks[i]}')"
-                    for bst in bstages
-                ],
-            )
-            for i, s in enumerate(slices)
+            partial_sql(self.plan, source=s, dim_refs=refs)
+            for s, refs in zip(file_slices(self.files, len(peers)), dim_refs)
         ]
 
     def final(self, view: str) -> str:
@@ -1032,7 +1018,7 @@ def schedule(engine, df, ctx, targets) -> Schedule | None:
     recognize the analyzed plan, resolve the sliced tables, apply the
     standalone thresholds, ask `targets()` for the peers (the executor
     probes liveness; EXPLAIN takes the registered set and does no
-    I/O), build the per-peer partials, and validate a probe partial
+    I/O), list the sliced table's files, and validate a probe partial
     plus the finalize. None = the local plan runs."""
     try:
         plan = recognize(engine, df, ctx.numbers_sources)
@@ -1043,46 +1029,33 @@ def schedule(engine, df, ctx, targets) -> Schedule | None:
         return None
     if plan is None:
         return None
-    fact, dims, tdef = None, [], None
+    table, dims = None, []
     if plan.dims:
         resolved = _resolve_join_tables(engine, plan)
         if resolved is None:
             return None  # unresolvable / oversized dim → local
-        fact, dims = resolved
+        table, dims = resolved
     elif plan.table is not None:
-        tdef = _resolve_parquet_table(engine, plan.table)
-        if tdef is None:
+        table = _resolve_parquet_table(engine, plan.table)
+        if table is None:
             return None  # not a sliceable catalog parquet table → local
-    if not meets_distribution_threshold(engine, plan, fact or tdef):
+    if not meets_distribution_threshold(engine, plan, table):
         return None  # under min_distributed_rows/bytes — standalone
     peers = targets()
     if not peers:
         return None
-    partials: list[str] = []
-    if plan.dims:
-        slices = table_file_slices(fact.location, len(peers))
-        if slices is None:
-            return None  # fewer fact files than peers → local
-        # the probe reads the dims directly: the broadcast streams do
-        # not exist before dispatch
-        probe = partial_sql(
-            plan,
-            source=slices[0],
-            dim_refs=[f"parquet.`{os.path.abspath(d.location)}`" for d in dims],
-        )
-    elif tdef is not None:
-        sources = table_file_slices(tdef.location, len(peers))
-        if sources is None:
+    sched = Schedule(plan, peers, dims=dims)
+    if table is not None:
+        sched.files = parquet_files(table.location)
+        if len(sched.files) < len(peers):
             return None  # single file / fewer files than peers → local
-        partials = [partial_sql(plan, source=s) for s in sources]
-        probe = partials[0]
-    else:
-        partials = [partial_sql(plan, lo, hi) for lo, hi in slice_bounds(plan.n, len(peers))]
-        probe = partials[0]
-    ok, elem_types = _validate_finalize(engine, plan, probe)
-    if not ok:
-        return None
-    return Schedule(plan, peers, partials, elem_types, fact, dims)
+    # the probe reads the dims directly: the broadcast streams do not
+    # exist before dispatch
+    direct = [f"parquet.`{os.path.abspath(d.location)}`" for d in dims]
+    ok, sched.elem_types = _validate_finalize(
+        engine, plan, sched.partials(peers, [direct] * len(peers))[0]
+    )
+    return sched if ok else None
 
 
 def explain_distributed(engine, df, ctx, nodes: list[dict]) -> str | None:
@@ -1095,17 +1068,16 @@ def explain_distributed(engine, df, ctx, nodes: list[dict]) -> str | None:
     ScattersOptimizer (no liveness probe — EXPLAIN must not do I/O);
     the runtime probe note says what happens when peers are down.
     None when the statement would run locally anyway."""
+    from fuse_query_spark.servers.flight_server import broadcast_refs
+
     addrs = [n["address"] for n in nodes]
     sched = schedule(engine, df, ctx, lambda: addrs)
     if sched is None:
         return None
     plan = sched.plan
     lines = [f"== Distributed Plan (cluster: {len(addrs)} registered peers) =="]
-    partials = sched.partials
+    partials = sched.partials(addrs, broadcast_refs("<query-id>", "stage0", addrs, len(sched.dims)))
     if plan.dims:
-        bsinks = [f"b{i}" for i in range(len(addrs))]
-        bstages = [f"stage0/bcast{d}" for d in range(len(plan.dims))]
-        partials = sched.join_partials(addrs, "<query-id>", bstages, bsinks)
         for d, dim_tdef in enumerate(sched.dims):
             lines.append(
                 f"Stage 0.{d} (BroadcastAction, scatter=broadcast into "
@@ -1144,21 +1116,16 @@ def try_distributed_select(engine, df, ctx, nodes: list[dict]):
     statement's analyzed local DataFrame `df`: returns the finalized
     DataFrame when the statement fanned out across the registered
     cluster, or None to return `df` itself. Raises StageError only
-    when reachable peers fail mid-stage beyond dispatch_with_retry's
-    recovery — never for 'no usable cluster'."""
+    when reachable peers fail mid-stage beyond run_stages' retries —
+    never for 'no usable cluster'."""
     sched = schedule(
         engine, df, ctx, lambda: reachable_peers([n["address"] for n in nodes])
     )
     if sched is None:
         return None
-    plan, peers = sched.plan, sched.targets
     import pyarrow as pa
 
-    from fuse_query_spark.servers.flight_server import (
-        DistinctStateOverflow,
-        dispatch_join_with_retry,
-        dispatch_with_retry,
-    )
+    from fuse_query_spark.servers.flight_server import DistinctStateOverflow, run_stages
 
     query_id = f"dq-{uuid.uuid4().hex[:12]}"
     # KILL QUERY reaches the gather: the executing statement's pid is
@@ -1171,57 +1138,32 @@ def try_distributed_select(engine, df, ctx, nodes: list[dict]):
         if pid is not None
         else None
     )
-    if plan.dims:
-        # multi-stage broadcast join: stage1/bcast{d} runs each dim's
-        # scan once on the first alive peer and registers the FULL
-        # result for every sink (one BroadcastAction per dim —
-        # flight_scatter_broadcast.rs; the reference scheduler walks
-        # arbitrary stage trees, plan_scheduler.rs:96); each peer's
-        # partial then joins its fact slice against its broadcast
-        # streams. Retries regenerate ALL stages under fresh stage ids
-        # (broadcast streams are one-shot).
-        def make_partials(alive: list[str], bstages: list[str], bsinks: list[str]):
-            return sched.join_partials(alive, query_id, bstages, bsinks)
-
-        try:
-            parts = dispatch_join_with_retry(
-                peers, query_id, "stage1",
-                [broadcast_sql(d) for d in sched.dims], make_partials,
-                scatter_expression(plan),
-                assume_alive_first_attempt=True,
-                abort_check=abort_check,
-                _after_dispatch=getattr(engine, "_dist_after_dispatch", None),
-            )
-        except DistinctStateOverflow:
-            return None  # per-group distinct state over the cap — the
-            # statement reruns locally (advice r10); not retryable
-            # distributed, every peer would trip the same guard
-        gathered = pa.concat_tables(list(parts.values()))
-    else:
-        sinks = [f"s{i}" for i in range(len(peers))]
-        try:
-            parts = dispatch_with_retry(
-                peers, query_id, "stage0", sched.partials, sinks, scatter_expression(plan),
-                # reachable_peers just probed this exact set — skip the
-                # redundant attempt-0 re-probe (retries still probe fresh)
-                assume_alive_first_attempt=True,
-                abort_check=abort_check,
-                # test seam (same contract as dispatch_with_retry's): lets a
-                # test kill a peer between an attempt's dispatch and gather —
-                # the only deterministic way to exercise mid-stage recovery
-                # through the Engine.sql surface
-                _after_dispatch=getattr(engine, "_dist_after_dispatch", None),
-            )
-        except DistinctStateOverflow:
-            return None  # see the join branch: rerun locally
-        gathered = pa.concat_tables([parts[s] for s in sinks])
+    try:
+        parts = run_stages(
+            sched.targets,
+            query_id,
+            sched.partials,
+            scatter_expression(sched.plan),
+            # a join chain: one BroadcastAction per dim, each dim's scan
+            # run once (flight_scatter_broadcast.rs)
+            broadcasts=[broadcast_sql(d) for d in sched.dims],
+            abort_check=abort_check,
+            # test seam: lets a test kill a peer between an attempt's
+            # dispatch and gather — the only deterministic way to
+            # exercise mid-stage recovery through the Engine.sql surface
+            _after_dispatch=getattr(engine, "_dist_after_dispatch", None),
+        )
+    except DistinctStateOverflow:
+        return None  # per-group distinct state over the cap — the
+        # statement reruns locally (advice r10); not retryable
+        # distributed, every peer would trip the same guard
+    gathered = pa.concat_tables(list(parts.values()))
     view = f"__fq_dist_{query_id.replace('-', '_')}"
     # straight Arrow -> Spark (PySpark 4 accepts pa.Table): a pandas
     # round-trip here CORRUPTS types — int64 partials with a NULL (an
     # empty slice's keyless max) silently become float64, and NaN/null
     # conflate for double columns (code-review r9)
-    pdf = engine.spark.createDataFrame(gathered)
-    pdf.createOrReplaceTempView(view)
+    local_rows(engine.spark, gathered).createOrReplaceTempView(view)
     try:
         # analysis resolves the view eagerly; the returned plan keeps
         # its own reference, so the catalog entry can go right away

@@ -1,5 +1,6 @@
 """Arrow Flight wire surface: the reference's query-RPC endpoint
-re-expressed over pyarrow.flight against the Spark engine.
+re-expressed over pyarrow.flight against the Spark engine, plus the
+coordinator's one stage runner.
 
 Reference parity (fusequery api/rpc):
 - flight_service.rs:38  FuseQueryFlightService — do_get serves stream
@@ -12,14 +13,20 @@ Reference parity (fusequery api/rpc):
 - flight_actions.rs:15  ShuffleAction {query_id, stage_id, plan,
   sinks, scatters_expression} / BroadcastAction {.. minus scatter},
   JSON in the action body.
-- flight_dispatcher.rs:38  executes the stage plan once and routes
-  the result into named one-shot sink streams: hash-scatter
-  (flight_scatter_hash.rs — the mod-N bucket contract implemented in
-  cluster.scatter_bucket and pinned cross-process by the two-session
-  test in test_engine_sql.py) or broadcast
+- flight_dispatcher.rs:38  FlightDispatcher.prepare executes the stage
+  plan once and routes the result into named one-shot sink streams:
+  hash-scatter (flight_scatter_hash.rs — the mod-N bucket contract
+  implemented in cluster.scatter_bucket and pinned cross-process by
+  the two-session test in test_engine_sql.py) or broadcast
   (flight_scatter_broadcast.rs); get_stream MOVES the receiver out of
   the registry, so a stream is consumable exactly once; an aborted
   dispatcher rejects new stage actions.
+- plan_scheduler.rs:96  run_stages is the coordinator side for every
+  distributed statement (aggregate, sort/limit converge, broadcast
+  join): per attempt it runs the statement's broadcast stages on the
+  first live peer, one partial per live peer scattering into sinks
+  s0..s{P-1}, and gathers every stream; a failed attempt is drained
+  and retried on the surviving peers.
 
 Spark-first mapping: the reference ships a serialized PlanNode and
 rebuilds a pipeline per stage; our plan wire format is the SQL text
@@ -99,11 +106,14 @@ class FlightDispatcher:
 
         return df.to(relax(df.schema)).toArrow()
 
-    def shuffle_action(self, engine, action: dict) -> None:
-        """PrepareShuffleAction: run the plan once, route every row to
-        the sink whose index equals the reference's scatter bucket
-        (modulo(cast(expr AS UInt64), num_sinks) —
-        flight_scatter_hash.rs:80-91 via cluster.scatter_bucket)."""
+    def prepare(self, engine, kind: str, action: dict) -> None:
+        """One stage action: run the plan once, convert the result to
+        Arrow and commit one stream per sink. A PrepareShuffleAction
+        routes every row to the sink whose index equals the
+        reference's scatter bucket (modulo(cast(expr AS UInt64),
+        num_sinks) — flight_scatter_hash.rs:80-91 via
+        cluster.scatter_bucket); a BroadcastAction gives every sink the
+        full result (flight_scatter_broadcast.rs)."""
         from pyspark.sql import functions as F
 
         from fuse_query_spark.cluster import scatter_bucket
@@ -113,48 +123,32 @@ class FlightDispatcher:
         if len(set(sinks)) != len(sinks):
             raise flight.FlightServerError("duplicate sink names in one action")
         if not sinks:
-            raise flight.FlightServerError("ShuffleAction with no sinks")
+            raise flight.FlightServerError(f"{kind} with no sinks")
+        shuffle = kind == "PrepareShuffleAction"
         try:
             with _stage_action_scope(engine):
                 df = engine.sql(action["plan"])
                 if df is None:
                     raise flight.FlightServerError("plan produced no result set")
-                expr = F.expr(action["scatters_expression"])
-                # one execution computes every sink's rows: materialize
-                # to Arrow WITH the bucket column, split by bucket in
-                # Arrow memory
-                tagged = df.withColumn("__fq_bucket", scatter_bucket(expr, len(sinks)))
-                table = self._to_arrow_nullable(tagged)
-        finally:
-            _drop_flight_stream_views(engine)
-        buckets = table.column("__fq_bucket")
-        out_cols = [c for c in table.column_names if c != "__fq_bucket"]
-        parts = {}
-        for i, sink in enumerate(sinks):
-            mask = pa.compute.equal(buckets, pa.scalar(i, buckets.type))
-            parts[sink] = table.filter(mask).select(out_cols)
-        self._set_streams(action["query_id"], action["stage_id"], parts)
-
-    def broadcast_action(self, engine, action: dict) -> None:
-        """BroadcastAction: every sink receives the full result
-        (flight_scatter_broadcast.rs)."""
-        self._require_live()
-        sinks = list(action["sinks"])
-        if len(set(sinks)) != len(sinks):
-            raise flight.FlightServerError("duplicate sink names in one action")
-        if not sinks:
-            raise flight.FlightServerError("BroadcastAction with no sinks")
-        try:
-            with _stage_action_scope(engine):
-                df = engine.sql(action["plan"])
-                if df is None:
-                    raise flight.FlightServerError("plan produced no result set")
+                if shuffle:
+                    # one execution computes every sink's rows:
+                    # materialize to Arrow WITH the bucket column,
+                    # split by bucket in Arrow memory
+                    expr = F.expr(action["scatters_expression"])
+                    df = df.withColumn("__fq_bucket", scatter_bucket(expr, len(sinks)))
                 table = self._to_arrow_nullable(df)
         finally:
             _drop_flight_stream_views(engine)
-        self._set_streams(
-            action["query_id"], action["stage_id"], {s: table for s in sinks}
-        )
+        if shuffle:
+            buckets = table.column("__fq_bucket")
+            table = table.drop_columns("__fq_bucket")
+            parts = {
+                sink: table.filter(pa.compute.equal(buckets, pa.scalar(i, buckets.type)))
+                for i, sink in enumerate(sinks)
+            }
+        else:
+            parts = dict.fromkeys(sinks, table)
+        self._set_streams(action["query_id"], action["stage_id"], parts)
 
     def _set_streams(self, query_id: str, stage_id: str, parts: dict) -> None:
         """Commit a stage's sink streams ATOMICALLY: pre-check every key
@@ -256,10 +250,7 @@ class FuseQueryFlightService(flight.FlightServerBase):
             body = json.loads(action.body.to_pybytes().decode("utf-8"))
         except (UnicodeDecodeError, json.JSONDecodeError) as e:
             raise flight.FlightServerError(f"invalid action body: {e}") from None
-        if kind == "PrepareShuffleAction":
-            self.dispatcher.shuffle_action(self.engine, body)
-        else:
-            self.dispatcher.broadcast_action(self.engine, body)
+        self.dispatcher.prepare(self.engine, kind, body)
         # reference returns a single empty FlightResult (body: vec![])
         return iter([flight.Result(b"")])
 
@@ -320,6 +311,19 @@ def broadcast_action(
     return flight.Action("BroadcastAction", json.dumps(body).encode("utf-8"))
 
 
+
+
+def broadcast_refs(query_id: str, stage: str, peers: list[str], n: int) -> list[list[str]]:
+    """Peer i's table refs to its broadcast streams: sink b{i} of each
+    stage ``{stage}/bcast{d}`` (d < n) on peers[0], where the
+    BroadcastActions run, as the flight_stream() calls a peer's engine
+    resolves inside a stage action."""
+    return [
+        [f"flight_stream('{peers[0]}', '{query_id}', '{stage}/bcast{d}', 'b{i}')" for d in range(n)]
+        for i in range(len(peers))
+    ]
+
+
 class StageError(Exception):
     """Typed coordinator-side stage failure (the analog of the
     reference dispatcher's error channel, flight_dispatcher.rs:54-61:
@@ -338,7 +342,7 @@ class DistinctStateOverflow(Exception):
     partial plan carries when a group's collect_set would exceed
     DISTINCT_STATE_MAX_ELEMS — plans/distributed.py, advice r10). NOT
     retryable: every peer re-executes the same partial and re-trips
-    the same guard, so the retry loops raise this immediately (after
+    the same guard, so the stage runner raises this immediately (after
     draining the attempt) and the coordinator reruns the statement
     locally, where Spark's own partial distinct aggregation has no
     single-row state bound."""
@@ -350,23 +354,47 @@ def _is_distinct_overflow(err: Exception) -> bool:
     return DISTINCT_OVERFLOW_MARKER in str(err)
 
 
-def _drain_remote(addr: str, query_id: str, stage_id: str, sinks: list[str]) -> None:
-    """Best-effort one-shot-stream teardown over a FRESH connection —
-    used by the post-abort watcher after a straggler stage action
-    finally completes on its peer."""
-    try:
-        con = flight.connect(addr)
+class StageCoordinator:
+    """One attempt's Flight clients, one per live peer. Every RPC
+    failure surfaces as a StageError naming its peer. A client
+    connects on its first RPC, so a peer that died after the probe
+    fails that RPC at once instead of stalling a handshake."""
+
+    def __init__(self, peers: list[str]):
+        self.cons = {addr: flight.connect(addr) for addr in peers}
+
+    def close(self) -> None:
+        for con in self.cons.values():
+            try:
+                con.close()
+            except Exception:
+                pass
+
+    def act(self, addr: str, action: flight.Action) -> None:
         try:
-            con.wait_for_available(timeout=5)
-            for s in sinks:
+            list(self.cons[addr].do_action(action))
+        except flight.FlightError as e:
+            raise StageError(addr, e) from e
+
+    def fetch(self, addr: str, query_id: str, stage_id: str, sink: str) -> pa.Table:
+        try:
+            return self.cons[addr].do_get(stream_ticket(query_id, stage_id, sink)).read_all()
+        except flight.FlightError as e:
+            raise StageError(addr, e) from e
+
+    def drain(self, query_id: str, streams) -> None:
+        """Best-effort teardown of (addr, stage_id, sinks) streams.
+        Streams are one-shot (get_stream MOVES the entry out of the
+        peer's registry), so fetching is the wire-level way to drop a
+        stage remotely; without it a failed attempt's streams would sit
+        in the survivors' registries forever. Already-fetched streams
+        answer 'not found' and a dead peer fails fast."""
+        for addr, stage_id, sinks in streams:
+            for sink in sinks:
                 try:
-                    con.do_get(stream_ticket(query_id, stage_id, s)).read_all()
+                    self.fetch(addr, query_id, stage_id, sink)
                 except Exception:
                     pass
-        finally:
-            con.close()
-    except Exception:
-        pass
 
 
 class _ActionRun:
@@ -375,8 +403,8 @@ class _ActionRun:
     its (non-daemon) workers for an atexit join, so a worker blocked
     in a never-answering peer's do_action would block interpreter
     exit (advice r11) — a daemon thread dies with the process, which
-    is the bound the docstring promises. Results are discarded by
-    every caller (the actions return ack bytes only); errors keep."""
+    is the bound the docstring promises. Errors are kept for the
+    caller."""
 
     __slots__ = ("done", "err")
 
@@ -395,15 +423,18 @@ class _ActionRun:
         threading.Thread(target=_run, daemon=True).start()
 
 
-def _run_actions_interruptibly(coord, jobs, abort_check, owned, extra_drains=()) -> None:
-    """Run an attempt's blocking do_action RPCs concurrently while
-    POLLING the abort flag every ~100ms (advice r10: a KILL landing
-    during a long synchronous stage action must surface at the poll
-    interval, not after the slowest peer finishes its whole partial).
-    `jobs` is a list of (thunk, (addr, query_id, stage_id, sinks));
-    `extra_drains` is additional (addr, query_id, stage_id, sinks)
-    tuples the post-abort watcher must ALSO drain — the join dispatch
-    passes its broadcast stages here, because a straggler partial that
+def _run_actions_interruptibly(
+    coord, query_id, jobs, abort_check, owned, extra_drains=()
+) -> None:
+    """Run an attempt's blocking do_action RPCs concurrently — a
+    serial loop would make the stage cost the SUM of the partials
+    instead of their MAX (code-review r9) — while POLLING the abort
+    flag every ~100ms (advice r10: a KILL landing during a long
+    synchronous stage action must surface at the poll interval, not
+    after the slowest peer finishes its whole partial). `jobs` is a
+    list of ((addr, stage_id, sinks), action); `extra_drains` is more
+    (addr, stage_id, sinks) streams the post-abort watcher must ALSO
+    drain — the broadcast stages, because a straggler partial that
     fails after the abort never consumes its b{i} broadcast stream,
     which would otherwise sit on the hosting peer for the peer's
     lifetime (advice r11).
@@ -418,7 +449,7 @@ def _run_actions_interruptibly(coord, jobs, abort_check, owned, extra_drains=())
     a peer that never answers parks them until process death but can
     never block interpreter exit. Raises QueryAborted on abort, else
     the first action error after all actions complete."""
-    runs = [_ActionRun(thunk) for thunk, _info in jobs]
+    runs = [_ActionRun(lambda s=stream, a=action: coord.act(s[0], a)) for stream, action in jobs]
     pending = [r for r in runs if not r.done.is_set()]
     while pending:
         pending[0].done.wait(timeout=0.1)
@@ -426,14 +457,13 @@ def _run_actions_interruptibly(coord, jobs, abort_check, owned, extra_drains=())
         if abort_check is not None and pending and abort_check():
             from fuse_query_spark.errors import QueryAborted
 
-            infos = [info for _t, info in jobs] + list(extra_drains)
+            streams = [stream for stream, _a in jobs] + list(extra_drains)
             still = list(pending)
 
             def _watch():
                 for r in still:
                     r.done.wait()
-                for addr, qid, sid, sinks in infos:
-                    _drain_remote(addr, qid, sid, sinks)
+                coord.drain(query_id, streams)
                 coord.close()
 
             owned["v"] = False
@@ -444,116 +474,11 @@ def _run_actions_interruptibly(coord, jobs, abort_check, owned, extra_drains=())
             raise r.err
 
 
-class StageCoordinator:
-    """Coordinator side of the reference's distributed dispatch loop
-    (plan_scheduler.rs + flight_dispatcher.rs): send peer i its slice
-    of the stage (`plans[i]`) as a PrepareShuffleAction scattering into
-    `sinks`, then gather every (sink x peer) one-shot stream and
-    concatenate per sink — the final result is assembled EXCLUSIVELY
-    from Flight do_get streams.
-
-    Failure semantics (flight_dispatcher.rs:54-61): if any peer dies
-    or errors mid-gather, the whole stage ABORTS — a typed StageError
-    naming the peer surfaces to the caller, and every still-unconsumed
-    stream of this stage on the SURVIVING peers is drained first.
-    Streams are one-shot (get_stream MOVES the entry out of the peer's
-    registry), so draining is the wire-level way to tear the stage
-    down remotely; without it the dead stage's streams would sit in
-    the survivors' registries forever (and poison a retried stage_id:
-    _set_streams rejects re-preparing an existing key)."""
-
-    def __init__(self, peers: list[str], timeout: float = 30.0):
-        self.peers = list(peers)
-        self.cons = []
-        try:
-            for addr in self.peers:
-                con = flight.connect(addr)
-                con.wait_for_available(timeout=timeout)
-                self.cons.append(con)
-        except Exception:
-            self.close()  # don't leak the already-opened clients
-            raise
-
-    def close(self) -> None:
-        for con in self.cons:
-            try:
-                con.close()
-            except Exception:
-                pass
-
-    def dispatch(
-        self,
-        query_id: str,
-        stage_id: str,
-        plans: list[str],
-        sinks: list[str],
-        scatters_expression: str,
-    ) -> None:
-        if len(plans) != len(self.cons):
-            raise ValueError("need exactly one plan slice per peer")
-        for con, plan in zip(self.cons, plans):
-            list(
-                con.do_action(
-                    shuffle_action(query_id, stage_id, plan, sinks, scatters_expression)
-                )
-            )
-
-    def gather(self, query_id: str, stage_id: str, sinks: list[str]) -> dict:
-        """{sink: concatenated pa.Table}. Gather order is sink-major so
-        a mid-stage peer death leaves a genuinely partial stage (some
-        sinks consumed, some not) — the case the cleanup exists for."""
-        fetched: set = set()
-        parts: dict = {s: [] for s in sinks}
-        pi = -1
-        try:
-            for sink in sinks:
-                for pi, con in enumerate(self.cons):
-                    parts[sink].append(
-                        con.do_get(stream_ticket(query_id, stage_id, sink)).read_all()
-                    )
-                    fetched.add((pi, sink))
-        except flight.FlightError as e:
-            dead = pi
-            # drain EVERY peer's unfetched streams, including the one
-            # that raised (code-review r8): a stream-LEVEL error — e.g.
-            # one sink raced its prepare — comes from a peer that is
-            # still alive and still holds its other one-shot streams;
-            # skipping it would leave the stage_id poisoned there. A
-            # truly dead peer just fails these drains fast.
-            for sink2 in sinks:
-                for pj, con2 in enumerate(self.cons):
-                    if (pj, sink2) in fetched:
-                        continue
-                    try:
-                        con2.do_get(stream_ticket(query_id, stage_id, sink2)).read_all()
-                    except flight.FlightError:
-                        pass  # already gone or peer dying — drain is best-effort
-            raise StageError(self.peers[dead], e) from e
-        return {s: pa.concat_tables(t) for s, t in parts.items()}
-
-
-def dispatch_and_gather(
-    peers: list[str],
-    query_id: str,
-    stage_id: str,
-    plans: list[str],
-    sinks: list[str],
-    scatters_expression: str,
-) -> dict:
-    """One-call convenience over StageCoordinator."""
-    coord = StageCoordinator(peers)
-    try:
-        coord.dispatch(query_id, stage_id, plans, sinks, scatters_expression)
-        return coord.gather(query_id, stage_id, sinks)
-    finally:
-        coord.close()
-
-
 def probe_alive(candidates: list[str], timeout: float = 10.0) -> list[str]:
     """Peers that answer a Flight handshake right now, probed
     CONCURRENTLY — a dead peer costs one timeout, not a serial stall
-    each. Shared by both retry loops and the Engine.sql reachability
-    check."""
+    each. Shared by the stage runner's retries and the Engine.sql
+    reachability check."""
     from concurrent.futures import ThreadPoolExecutor
 
     def _probe(p: str) -> str | None:
@@ -569,335 +494,121 @@ def probe_alive(candidates: list[str], timeout: float = 10.0) -> list[str]:
         return [p for p in ex.map(_probe, candidates) if p is not None]
 
 
-def dispatch_with_retry(
+# the first run of a stage plus two retries on the surviving peers
+ATTEMPTS = 3
+
+
+def run_stages(
     peers: list[str],
     query_id: str,
-    stage_id: str,
-    plans: list[str],
-    sinks: list[str],
+    partials,
     scatters_expression: str,
-    max_attempts: int = 3,
-    assume_alive_first_attempt: bool = False,
+    broadcasts: list[str] = (),
     abort_check=None,
     _after_dispatch=None,
 ) -> dict:
-    """Fault-tolerant scatter-gather over StageCoordinator: if a peer
-    dies mid-stage, retry the WHOLE stage on the surviving peers under
-    an attempt-scoped stage_id, with the dead peer's plan slices
-    reassigned round-robin. The scatter is a pure function of the row
-    (mod-N bucket over the same sink list), so re-running a slice on a
-    different peer yields identical bucket contents — the retried
-    result equals the no-failure result. Safe because each attempt
-    uses FRESH stage ids (no collision with the aborted attempt's
-    still-registered streams) and the abort path drains what it can.
+    """Run one distributed statement's stages on the cluster and
+    gather the result as {sink: pa.Table} — the one scheduler every
+    statement form shares (plan_scheduler.rs:96 walks any stage tree).
+    Each attempt takes the live peers (attempt 0 trusts `peers`, which
+    the caller just probed; a retry probes the previous attempt's
+    peers again) and, under attempt-scoped stage ids, runs:
 
-    The reference's dispatcher only aborts (flight_dispatcher.rs:
-    54-61); recovery is the Spark-side extension, same spirit as
-    speculative re-execution of a lost task. Raises the last
-    StageError when no survivor set can complete the stage.
+      <stage>/bcast{d} — broadcasts[d] once on alive[0] as a
+      BroadcastAction; sink b{i} holds the full result for peer i
+      (joins only; the stages dispatch concurrently).
+      <stage>/{i}      — partials(alive, refs)[i] on alive[i] as a
+      PrepareShuffleAction scattering into s0..s{P-1}; refs[i] is
+      peer i's broadcast_refs (one table ref per broadcast stage).
 
-    `_after_dispatch(attempt)` is a test seam invoked between an
-    attempt's dispatch and its gather — the only way a test can kill a
-    peer at the exact point the reference's dispatcher error channel
-    fires (stage live, streams registered, receiver not yet drained)."""
-    assignment = list(zip(peers, plans))  # [(peer, plan)] — slices
-    last_err: Exception | None = None
-    for attempt in range(max_attempts):
-        # probe which peers are reachable right now — CONCURRENTLY (a
-        # dead peer costs one timeout, not a serial stall each), and
-        # not at all on attempt 0 when the caller just probed
-        # (assume_alive_first_attempt; code-review r9: the Engine.sql
-        # path paid two full serial handshake rounds per statement)
-        candidates = list(dict.fromkeys(pr for pr, _ in assignment))
-        if attempt == 0 and assume_alive_first_attempt:
-            alive = candidates
-        else:
-            alive = probe_alive(candidates)
+    then gathers every (peer x sink) stream into its sink. The scatter
+    is a pure function of the row and `partials` regroups the same
+    source over the survivors, so a retried result equals the
+    no-failure result. Each attempt uses FRESH stage ids (no collision
+    with a failed attempt's streams), and a failed attempt's streams —
+    broadcast and output — are drained before it is retried or its
+    error propagates. Recovery is the Spark-side extension to the
+    reference's dispatcher, which only aborts (flight_dispatcher.rs:
+    54-61), in the spirit of speculative re-execution of a lost task.
+
+    A StageError names the failing peer; the last one is raised when
+    no survivor set completes. DistinctStateOverflow is raised at once
+    (every peer would re-trip it), and any other error — a KILL's
+    QueryAborted, an ArrowInvalid from a dispatch thread — is not
+    retried either. `abort_check` is polled between RPCs and every
+    ~100ms during dispatch. `_after_dispatch(attempt)` is a test seam
+    invoked between an attempt's dispatch and its gather — the only
+    way a test can kill a peer at the exact point the reference's
+    dispatcher error channel fires (stage live, streams registered,
+    receiver not yet drained)."""
+    from fuse_query_spark.errors import QueryAborted
+
+    def check_abort():
+        # KILL QUERY lands between RPCs (an in-flight do_get blocks
+        # until the peer answers — the same unit the reference's
+        # AbortStream tears down at a block boundary, stream_abort.rs:
+        # 19-26); the except below drains the attempt
+        if abort_check is not None and abort_check():
+            raise QueryAborted("distributed stage aborted by KILL")
+
+    last_err: StageError | None = None
+    alive = list(peers)
+    for attempt in range(ATTEMPTS):
+        if attempt:
+            alive = probe_alive(alive)
         if not alive:
-            raise last_err or StageError("<all peers>", RuntimeError("no peers reachable"))
-        # reassign: keep a slice on its peer if alive, else round-robin
-        orphans = [pl for pr, pl in assignment if pr not in alive]
-        assignment = [(pr, pl) for pr, pl in assignment if pr in alive]
-        for i, pl in enumerate(orphans):
-            assignment.append((alive[i % len(alive)], pl))
-        stage = stage_id if attempt == 0 else f"{stage_id}~retry{attempt}"
-        try:
-            coord = StageCoordinator(alive)
-        except Exception as e:
-            # a peer died between the probe and the connect — count it
-            # as a failed attempt and let the next probe drop it
-            last_err = StageError("<connect>", e)
-            continue
+            break
+        stage = "stage0" if attempt == 0 else f"stage0~retry{attempt}"
+        bsinks = [f"b{i}" for i in range(len(alive))]
+        sinks = [f"s{i}" for i in range(len(alive))]
+        bstages = [(alive[0], f"{stage}/bcast{d}", bsinks) for d in range(len(broadcasts))]
+        outs = [(addr, f"{stage}/{i}", sinks) for i, addr in enumerate(alive)]
+        plans = partials(alive, broadcast_refs(query_id, stage, alive, len(broadcasts)))
+        coord = StageCoordinator(alive)
         owned = {"v": True}  # flips False when a post-abort watcher
         # takes over the coordinator's connections (stragglers in flight)
         try:
-            # one sub-stage per slice (a peer may carry several after
-            # reassignment; sub-stage ids keep their streams disjoint)
-            subs = [
-                (alive.index(pr), f"{stage}/{si}", pl)
-                for si, (pr, pl) in enumerate(assignment)
-            ]
-            def _drain_attempt():
-                # consume whatever this attempt left behind on
-                # reachable peers (one-shot streams: draining IS the
-                # remote teardown; already-fetched keys just 'not found')
-                for pi2, sid2, _pl2 in subs:
-                    try:
-                        for sink2 in sinks:
-                            try:
-                                coord.cons[pi2].do_get(
-                                    stream_ticket(query_id, sid2, sink2)
-                                ).read_all()
-                            except flight.FlightError:
-                                pass
-                    except Exception:
-                        pass  # that peer is the dead one
-
-            def _check_abort():
-                # KILL QUERY lands between RPCs (an in-flight do_action/
-                # do_get blocks until the peer answers — same unit the
-                # reference's AbortStream tears down at a block boundary,
-                # stream_abort.rs:19-26): drain the attempt's streams so
-                # nothing is left half-consumable, then surface the kill
-                if abort_check is not None and abort_check():
-                    from fuse_query_spark.errors import QueryAborted
-
-                    _drain_attempt()
-                    raise QueryAborted("distributed stage aborted by KILL")
-
-            # dispatch CONCURRENTLY: do_action executes the peer's
-            # whole partial plan synchronously (flight_server.py
-            # shuffle_action), so a serial loop would make the stage
-            # cost the SUM of the partials instead of their MAX — the
-            # opposite of why the query fanned out (code-review r9).
-            # A KILL during the dispatches surfaces at the ~100ms poll
-            # (advice r10), with a watcher owning straggler teardown.
-            _check_abort()
-
-            def _dispatch_one(sub):
-                pi2, sid2, pl2 = sub
-                list(
-                    coord.cons[pi2].do_action(
-                        shuffle_action(query_id, sid2, pl2, sinks, scatters_expression)
-                    )
-                )
-
+            check_abort()
             _run_actions_interruptibly(
                 coord,
+                query_id,
                 [
-                    (
-                        (lambda sub=sub: _dispatch_one(sub)),
-                        (alive[sub[0]], query_id, sub[1], sinks),
-                    )
-                    for sub in subs
+                    (s, broadcast_action(query_id, s[1], plan, bsinks))
+                    for s, plan in zip(bstages, broadcasts)
                 ],
                 abort_check,
                 owned,
             )
-            _check_abort()
+            check_abort()
+            _run_actions_interruptibly(
+                coord,
+                query_id,
+                [
+                    (s, shuffle_action(query_id, s[1], plan, sinks, scatters_expression))
+                    for s, plan in zip(outs, plans)
+                ],
+                abort_check,
+                owned,
+                extra_drains=bstages,
+            )
+            check_abort()
             if _after_dispatch is not None:
                 _after_dispatch(attempt)
             parts: dict[str, list] = {s: [] for s in sinks}
-            for pi, sid, _pl in subs:
+            for addr, sid, _sinks in outs:
                 for sink in sinks:
-                    _check_abort()
-                    parts[sink].append(
-                        coord.cons[pi]
-                        .do_get(stream_ticket(query_id, sid, sink))
-                        .read_all()
-                    )
+                    check_abort()
+                    parts[sink].append(coord.fetch(addr, query_id, sid, sink))
             return {s: pa.concat_tables(t) for s, t in parts.items()}
-        except flight.FlightError as e:
-            if _is_distinct_overflow(e):
-                # deterministic re-failure on every peer — drain and
-                # surface the typed overflow so the coordinator falls
-                # back to local execution (advice r10)
-                _drain_attempt()
-                raise DistinctStateOverflow(str(e)) from e
-            last_err = StageError("<mid-stage>", e)
-            _drain_attempt()
+        except StageError as e:
+            coord.drain(query_id, bstages + outs)
+            if _is_distinct_overflow(e.cause):
+                raise DistinctStateOverflow(str(e.cause)) from e.cause
+            last_err = e
         except Exception:
-            # a non-Flight failure from a dispatch thread (ArrowInvalid,
-            # OSError on a half-closed socket, QueryAborted raced in a
-            # worker) is not retryable — but the attempt's one-shot
-            # streams are already registered on surviving peers and
-            # would otherwise sit there for the peer's lifetime: drain
-            # before propagating (advice r9). QueryAborted from
-            # _check_abort drains twice; harmless — drained keys just
-            # answer 'not found'.
-            _drain_attempt()
+            coord.drain(query_id, bstages + outs)
             raise
         finally:
             if owned["v"]:
                 coord.close()
-    raise last_err
-
-
-def dispatch_join_with_retry(
-    peers: list[str],
-    query_id: str,
-    stage_id: str,
-    broadcast_plans: list[str] | str,
-    make_partials,
-    scatters_expression: str,
-    max_attempts: int = 3,
-    assume_alive_first_attempt: bool = False,
-    abort_check=None,
-    _after_dispatch=None,
-) -> dict:
-    """Multi-stage broadcast-join dispatch (the scatter kinds the
-    reference's ScattersOptimizer plans — optimizer_scatters.rs picks
-    hash vs broadcast per stage, api/rpc/flight_scatter_broadcast.rs
-    expands a stage result to every sink, and plan_scheduler.rs:96
-    walks arbitrary stage trees — so a join CHAIN gets one
-    BroadcastAction stage per dim):
-
-      stage <id>/bcast{d} — broadcast_plans[d] runs ONCE on the first
-      alive peer as a BroadcastAction; every sink b{i} receives the
-      full result (dim d's table). The d stages dispatch concurrently.
-      stage <id>/{i}      — peer i's partial plan (from
-      `make_partials(alive, bstages, bsinks)`) joins its fact slice
-      against its broadcast streams and scatters into s{0..P-1}.
-
-    Recovery mirrors dispatch_with_retry, but a retry regenerates ALL
-    stages under fresh stage ids: broadcast streams are one-shot, and
-    the broadcast host itself may be the dead peer — make_partials is
-    re-invoked with the survivor set so slices AND stream refs rebind.
-    Raises the last StageError when no survivor set completes; drains
-    every failed attempt's streams (broadcast and output) before
-    retrying or propagating. A bare string `broadcast_plans` is
-    accepted as a one-stage chain."""
-    last_err: Exception | None = None
-    candidates = list(peers)
-    for attempt in range(max_attempts):
-        if attempt == 0 and assume_alive_first_attempt:
-            alive = list(candidates)
-        else:
-            alive = probe_alive(candidates)
-        if not alive:
-            raise last_err or StageError("<all peers>", RuntimeError("no peers reachable"))
-        stage = stage_id if attempt == 0 else f"{stage_id}~retry{attempt}"
-        bplans = (
-            [broadcast_plans] if isinstance(broadcast_plans, str)
-            else list(broadcast_plans)
-        )
-        bstages = [f"{stage}/bcast{d}" for d in range(len(bplans))]
-        bsinks = [f"b{i}" for i in range(len(alive))]
-        osinks = [f"s{i}" for i in range(len(alive))]
-        plans = make_partials(alive, bstages, bsinks)
-        if plans is None:
-            raise last_err or StageError(
-                "<plan>", RuntimeError("no fact slices for the surviving peers")
-            )
-        try:
-            coord = StageCoordinator(alive)
-        except Exception as e:
-            last_err = StageError("<connect>", e)
-            continue
-        owned = {"v": True}
-        try:
-            def _drain_attempt():
-                # unconsumed broadcast streams live on the hosting peer
-                # (a peer consumes its own b{i} while executing its
-                # partial); output streams live everywhere — drain both
-                for bst in bstages:
-                    for b in bsinks:
-                        try:
-                            coord.cons[0].do_get(
-                                stream_ticket(query_id, bst, b)
-                            ).read_all()
-                        except Exception:
-                            pass
-                for pi in range(len(alive)):
-                    for sink in osinks:
-                        try:
-                            coord.cons[pi].do_get(
-                                stream_ticket(query_id, f"{stage}/{pi}", sink)
-                            ).read_all()
-                        except Exception:
-                            pass
-
-            def _check_abort():
-                if abort_check is not None and abort_check():
-                    from fuse_query_spark.errors import QueryAborted
-
-                    _drain_attempt()
-                    raise QueryAborted("distributed stage aborted by KILL")
-
-            _check_abort()
-            # the broadcast stages prepare on one peer — each a full
-            # dim scan, dispatched concurrently and abort-polled
-            # (advice r10); one BroadcastAction per dim in the chain
-            _run_actions_interruptibly(
-                coord,
-                [
-                    (
-                        (lambda bst=bst, bpl=bpl: list(
-                            coord.cons[0].do_action(
-                                broadcast_action(query_id, bst, bpl, bsinks)
-                            )
-                        )),
-                        (alive[0], query_id, bst, bsinks),
-                    )
-                    for bst, bpl in zip(bstages, bplans)
-                ],
-                abort_check,
-                owned,
-            )
-            _check_abort()
-
-            def _dispatch_one(pi: int):
-                list(
-                    coord.cons[pi].do_action(
-                        shuffle_action(
-                            query_id, f"{stage}/{pi}", plans[pi], osinks,
-                            scatters_expression,
-                        )
-                    )
-                )
-
-            _run_actions_interruptibly(
-                coord,
-                [
-                    (
-                        (lambda pi=pi: _dispatch_one(pi)),
-                        (alive[pi], query_id, f"{stage}/{pi}", osinks),
-                    )
-                    for pi in range(len(alive))
-                ],
-                abort_check,
-                owned,
-                # a straggler partial that FAILS after the abort never
-                # consumes its b{i} broadcast stream — the watcher must
-                # drain the broadcast stages too or they sit on the
-                # hosting peer for its lifetime (advice r11)
-                extra_drains=[
-                    (alive[0], query_id, bst, bsinks) for bst in bstages
-                ],
-            )
-            _check_abort()
-            if _after_dispatch is not None:
-                _after_dispatch(attempt)
-            parts: dict[str, list] = {s: [] for s in osinks}
-            for pi in range(len(alive)):
-                for sink in osinks:
-                    _check_abort()
-                    parts[sink].append(
-                        coord.cons[pi]
-                        .do_get(stream_ticket(query_id, f"{stage}/{pi}", sink))
-                        .read_all()
-                    )
-            return {s: pa.concat_tables(t) for s, t in parts.items()}
-        except flight.FlightError as e:
-            if _is_distinct_overflow(e):
-                _drain_attempt()
-                raise DistinctStateOverflow(str(e)) from e
-            last_err = StageError("<mid-stage>", e)
-            _drain_attempt()
-        except Exception:
-            _drain_attempt()
-            raise
-        finally:
-            if owned["v"]:
-                coord.close()
-    raise last_err
+    raise last_err or StageError("<all peers>", RuntimeError("no peers reachable"))

@@ -12,8 +12,10 @@ and broadcast threshold keeps dimension tables out of shuffles.
 
 from __future__ import annotations
 
+import logging
 import os
 
+from pyspark.logger import PySparkLogger
 from pyspark.sql import SparkSession
 
 
@@ -91,4 +93,10 @@ def get_spark(app_name: str = "fuse-query-spark", cpus: int | None = None) -> Sp
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
+    # PySpark logs every captured SQL/DataFrame exception's message and
+    # whole Java stack (~8 KB of JSON) at ERROR through these two
+    # loggers; the exception still reaches the caller, so a wire client
+    # sending bad SQL does not fill the server log
+    for name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger"):
+        PySparkLogger.getLogger(name).setLevel(logging.CRITICAL)
     return tune(spark, cpus)

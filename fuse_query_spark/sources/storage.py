@@ -100,14 +100,16 @@ def align_to_schema(df: DataFrame, schema: StructType) -> DataFrame:
     )
 
 
-def read_parquet(spark, path: str, table_name: str | None = None, merge_schema: bool = False):
+def read_parquet(spark, path: str, table_name: str | None = None, schema: StructType | None = None):
     """Parquet read (with NANOS-fallback) plus `ts` normalization,
     applied ONLY to the events table — keying on a column merely
     named 'ts' would silently re-type an unrelated user table's
-    NTZ/long column (see sources/tables._normalize_event_ts)."""
+    NTZ/long column (see sources/tables._normalize_event_ts). With a
+    reader `schema` no footer is read at planning time, so no
+    schema-inference job runs."""
     from fuse_query_spark.sources.tables import _normalize_event_ts, read_parquet_maybe_nanos
 
-    df = read_parquet_maybe_nanos(spark, path, merge_schema=merge_schema)
+    df = read_parquet_maybe_nanos(spark, path, schema=schema)
     if table_name == "events" and "ts" in df.columns:
         df = _normalize_event_ts(df, "ts")
     return df
@@ -126,9 +128,7 @@ def parquet_schema(path: str, table_name: str | None = None) -> StructType:
     import pyarrow.types as pat
     from pyspark.sql.pandas.types import from_arrow_type
 
-    if os.path.isdir(path):
-        path = os.path.join(path, min(f for f in os.listdir(path) if not f.startswith(("_", "."))))
-    pf = pq.ParquetFile(path)
+    pf = pq.ParquetFile(_first_data_file(path))
     physical = {c.path: c.physical_type for c in pf.schema}
 
     def spark_type(f) -> DataType:
@@ -141,6 +141,21 @@ def parquet_schema(path: str, table_name: str | None = None) -> StructType:
         return from_arrow_type(f.type, prefer_timestamp_ntz=True)
 
     return StructType([StructField(f.name, _nullable(spark_type(f))) for f in pf.schema_arrow])
+
+
+def _first_data_file(path: str) -> str | None:
+    """`path` itself, or a directory's first data file in sorted walk
+    order (partition directories included); hidden and `_`-prefixed
+    entries are skipped, as Spark's file index skips them. None when
+    the directory holds no data file."""
+    if not os.path.isdir(path):
+        return path
+    for d, dirs, files in os.walk(path):
+        dirs[:] = sorted(x for x in dirs if not x.startswith(("_", ".")))
+        data = sorted(f for f in files if not f.startswith(("_", ".")))
+        if data:
+            return os.path.join(d, data[0])
+    return None
 
 
 def _nullable(dt: DataType) -> DataType:
@@ -546,11 +561,18 @@ class File(_Cached):
         if self.fmt == "json" and not tdef.partition_by:
             return spark.read.schema(tdef.schema).json(loc)
         if self.fmt == "parquet":
-            # post-ADD COLUMN, files written before and after the ALTER
-            # disagree on columns; default inference samples one footer
-            # and could drop the new column from the files that HAVE it.
-            # mergeSchema is a footer-only union (no data read).
-            df = read_parquet(spark, loc, table_name=tdef.name, merge_schema=True)
+            # the reader schema, built on the driver from one footer
+            # with no Spark job: each declared column reads as the
+            # footer stores it (the coercion below then applies), or as
+            # declared where that footer lacks it — a file written
+            # before ADD COLUMN, or a partition column. Files that
+            # disagree on columns still read each column by name.
+            first = _first_data_file(loc)
+            footer = {f.name.lower(): f.dataType for f in parquet_schema(first)} if first else {}
+            reader = StructType(
+                [StructField(f.name, footer.get(f.name.lower(), f.dataType)) for f in tdef.schema.fields]
+            )
+            df = read_parquet(spark, loc, table_name=tdef.name, schema=reader)
         else:
             # ORC, and partitioned JSON, whose partition columns live in
             # directory names, not in the documents: discovery surfaces

@@ -36,7 +36,7 @@ _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
 def read_parquet_maybe_nanos(
-    spark: SparkSession, path: str, merge_schema: bool = False
+    spark: SparkSession, path: str, schema: StructType | None = None
 ) -> DataFrame:
     """Parquet read that tolerates legacy TIMESTAMP(NANOS) columns.
 
@@ -47,14 +47,10 @@ def read_parquet_maybe_nanos(
     leave it on for the session, because the flag ONLY changes the
     handling of NANOS columns (which are otherwise unreadable) and
     restoring it would race any still-lazy scan planned under it.
+    A reader `schema` typing a NANOS column BIGINT reads the raw ns
+    longs with the conf off.
     """
-    reader = spark.read
-    if merge_schema:
-        # footer-only union across files: required after ALTER TABLE
-        # ADD COLUMN, where pre-ALTER files lack the new column and
-        # single-footer inference could drop it from the files that
-        # have it
-        reader = reader.option("mergeSchema", "true")
+    reader = spark.read if schema is None else spark.read.schema(schema)
     try:
         return reader.parquet(path)
     except Exception as e:  # AnalysisException, but match on message

@@ -7,8 +7,8 @@ Layer 1: recognizer/SQL-generation tests (one Spark session, no
 peers): the recognizer reads each statement's analyzed plan, so a
 statement that fails analysis never reaches it and counts as local.
 Layer 2: two peer JVMs behind the engine's ClusterRegistry, result
-equality with local execution, kill-one-peer recovery through
-dispatch_with_retry, and the unreachable-registry local fallback.
+equality with local execution, kill-one-peer recovery through the
+stage runner (run_stages), and the unreachable-registry local fallback.
 """
 
 import pytest
@@ -149,13 +149,13 @@ class TestParser:
         )
 
     def test_table_file_slices_round_robin(self, tmp_path):
-        from fuse_query_spark.plans.distributed import table_file_slices
+        from fuse_query_spark.plans.distributed import file_slices, parquet_files
 
         d = tmp_path / "t"
         d.mkdir()
         for i in range(5):
             (d / f"part-{i}.parquet").write_bytes(b"")
-        slices = table_file_slices(str(d), 2)
+        slices = file_slices(parquet_files(str(d)), 2)
         assert len(slices) == 2
         names = [s.split("{", 1)[1].rstrip("`}").split(",") for s in slices]
         assert sorted(n for g in names for n in g) == sorted(
@@ -163,8 +163,14 @@ class TestParser:
         )
         assert not set(names[0]) & set(names[1])
         # single bare file / too few files -> None (nothing to split)
-        assert table_file_slices(str(d / "part-0.parquet"), 2) is None
-        assert table_file_slices(str(d), 6) is None
+        assert file_slices(parquet_files(str(d / "part-0.parquet")), 2) is None
+        assert file_slices(parquet_files(str(d)), 6) is None
+        # the same file list regroups onto fewer peers (a retry on the
+        # survivors reads exactly the files attempt 0 read)
+        one = file_slices(parquet_files(str(d)), 1)
+        assert sorted(one[0].split("{", 1)[1].rstrip("`}").split(",")) == sorted(
+            n for g in names for n in g
+        )
 
     def test_parser_is_total_on_garbage(self, l1):
         """The hook runs on every SELECT of a clustered engine: the
@@ -583,9 +589,9 @@ class TestDistributedEngineSql:
 
     def test_kill_one_peer_mid_stage_recovers(self, engine, spark):
         """Kill a peer between dispatch and gather (the seam
-        dispatch_with_retry exposes): the retry reassigns the dead
-        peer's slice to the survivor and Engine.sql still returns the
-        exact no-failure result."""
+        run_stages exposes): the retry regroups the numbers range onto
+        the survivor and Engine.sql still returns the exact no-failure
+        result."""
         from conftest import spawn_peer
 
         p0, port0 = spawn_peer()
@@ -615,6 +621,50 @@ class TestDistributedEngineSql:
             engine._dist_after_dispatch = None
             engine.cluster.remove_node("k0")
             engine.cluster.remove_node("k1")
+            for p in (p0, p1):
+                p.terminate()
+                try:
+                    p.wait(timeout=30)
+                except Exception:
+                    p.kill()
+
+
+    def test_kill_one_peer_mid_table_stage_recovers(self, engine, tmp_path):
+        """An aggregate over a file-sliced catalog Parquet table, one
+        peer killed between dispatch and gather: the retry regroups the
+        file list fixed at schedule time onto the survivor, which then
+        reads every file, and Engine.sql returns the no-failure rows."""
+        from conftest import spawn_peer
+
+        loc = str(tmp_path / "kill_t")
+        engine.sql(
+            f"CREATE TABLE kill_t ENGINE = Parquet location = '{loc}' AS "
+            "SELECT number % 7 AS g, number AS v FROM numbers(50000)"
+        )
+        q = "SELECT g AS g, sum(v) AS s, count(*) AS c FROM kill_t GROUP BY g"
+        want = {tuple(r) for r in engine.sql(q).collect()}
+        p0, port0 = spawn_peer()
+        p1, port1 = spawn_peer()
+        engine.cluster.add_node("k0", 5, f"grpc://localhost:{port0}")
+        engine.cluster.add_node("k1", 5, f"grpc://localhost:{port1}")
+        seen = []
+
+        def _kill_once(attempt):
+            seen.append(attempt)
+            if attempt == 0:
+                p1.kill()
+                p1.wait(timeout=30)
+
+        engine._dist_after_dispatch = _kill_once
+        try:
+            got = {tuple(r) for r in engine.sql(q).collect()}
+            assert seen == [0, 1], seen
+            assert got == want and len(got) == 7
+        finally:
+            engine._dist_after_dispatch = None
+            engine.cluster.remove_node("k0")
+            engine.cluster.remove_node("k1")
+            engine.sql("DROP TABLE kill_t")
             for p in (p0, p1):
                 p.terminate()
                 try:

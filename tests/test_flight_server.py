@@ -180,9 +180,9 @@ class TestDispatcherAbort:
             "scatters_expression": "1",
         }
         with pytest.raises(flight.FlightUnavailableError):
-            d.shuffle_action(engine, action)
+            d.prepare(engine, "PrepareShuffleAction", action)
         with pytest.raises(flight.FlightUnavailableError):
-            d.broadcast_action(engine, action)
+            d.prepare(engine, "BroadcastAction", action)
 
 
 class TestConcurrency:
@@ -295,162 +295,149 @@ def _spawn_peer(cpus: int = 2):
     return spawn_peer(cpus)
 
 
+def _stop(*procs):
+    for p in procs:
+        if p.poll() is None:
+            p.terminate()
+        p.wait(timeout=30)
+
+
+def _numbers_partials(n: int):
+    """A run_stages partials callback: numbers [0, n) split into one
+    contiguous range per live peer, rows (n, v = n % 7)."""
+
+    def partials(alive, _refs):
+        step = -(-n // len(alive))
+        return [
+            f"SELECT number AS n, number % 7 AS v FROM numbers({n}) "
+            f"WHERE number >= {i * step} AND number < {(i + 1) * step}"
+            for i in range(len(alive))
+        ]
+
+    return partials
+
+
+def _check_buckets(parts, n: int) -> None:
+    """Sink s{i} holds exactly the rows whose bucket is i, and the
+    sinks together hold every row once."""
+    rows: list = []
+    for i, sink in enumerate(parts):
+        assert sink == f"s{i}"
+        ns = parts[sink].column("n").to_pylist()
+        assert ns and all(x % len(parts) == i for x in ns), sink
+        rows += zip(ns, parts[sink].column("v").to_pylist())
+    assert sorted(rows) == [(x, x % 7) for x in range(n)]
+
+
 class TestDistributedStageMultiPeer:
     """r7 judge ask #6: the two-process test pins the happy path; the
     reference's dispatcher also defines abort semantics
-    (flight_dispatcher.rs:54-61). A 3-bucket scatter across TWO peer
-    JVMs plus this coordinator, then the same topology with one peer
-    killed mid-stage."""
+    (flight_dispatcher.rs:54-61). A scatter across TWO peer JVMs plus
+    this coordinator through the stage runner, then the same topology
+    with peers killed mid-stage."""
 
-    def test_three_bucket_scatter_across_two_peers(self):
+    def test_scatter_buckets_across_two_peers(self):
         """Each peer runs its slice of the source (the reference's
         PlanScheduler splits the read among nodes), both scatter into
-        the SAME 3 buckets; the coordinator gathers all 6 one-shot
+        the SAME buckets s0, s1; the runner gathers all 4 one-shot
         streams and reassembles — per-bucket contract AND total
         recovery, assembled exclusively from Flight streams."""
-        from fuse_query_spark.servers.flight_server import dispatch_and_gather
+        from fuse_query_spark.servers.flight_server import run_stages
 
         p0, port0 = _spawn_peer()
         p1, port1 = _spawn_peer()
         try:
-            sinks = ["b0", "b1", "b2"]
-            plans = [
-                "SELECT number AS n, number % 7 AS v FROM numbers(500)",
-                "SELECT number + 500 AS n, (number + 500) % 7 AS v FROM numbers(500)",
-            ]
-            parts = dispatch_and_gather(
+            parts = run_stages(
                 [f"grpc://localhost:{port0}", f"grpc://localhost:{port1}"],
-                "qm", "stage0", plans, sinks, "n",
+                "qm", _numbers_partials(1000), "n",
             )
-            rows: list = []
-            for i, sink in enumerate(sinks):
-                ns = parts[sink].column("n").to_pylist()
-                assert ns and all(n % 3 == i for n in ns), sink
-                rows += zip(ns, parts[sink].column("v").to_pylist())
-            assert sorted(rows) == [(n, n % 7) for n in range(1000)]
+            assert list(parts) == ["s0", "s1"]
+            _check_buckets(parts, 1000)
         finally:
-            for p in (p0, p1):
-                p.terminate()
-                p.wait(timeout=30)
+            _stop(p0, p1)
 
     def test_peer_death_mid_stage_typed_error_and_cleanup(self):
-        """Kill one peer after the stage is prepared everywhere but
-        before its streams are drained: the coordinator must surface a
-        TYPED StageError naming the dead peer, and the stage's
-        remaining one-shot streams on the SURVIVING peer must be gone
-        afterwards (drained by the abort path — a later fetch says
-        'Stream is not found', and the stage_id is re-preparable)."""
-        from fuse_query_spark.servers.flight_server import (
-            StageCoordinator,
-            StageError,
-        )
-
-        p0, port0 = _spawn_peer()
-        p1, port1 = _spawn_peer()
-        try:
-            sinks = ["b0", "b1", "b2"]
-            plans = [
-                "SELECT number AS n FROM numbers(300)",
-                "SELECT number + 300 AS n FROM numbers(300)",
-            ]
-            coord = StageCoordinator(
-                [f"grpc://localhost:{port0}", f"grpc://localhost:{port1}"]
-            )
-            try:
-                coord.dispatch("qf", "stage0", plans, sinks, "n")
-                p1.kill()  # peer dies with the stage live, streams unread
-                p1.wait(timeout=30)
-                with pytest.raises(StageError) as ei:
-                    coord.gather("qf", "stage0", sinks)
-                assert f"localhost:{port1}" in ei.value.peer
-                assert isinstance(ei.value.cause, flight.FlightError)
-            finally:
-                coord.close()
-            # surviving peer: every stream of the aborted stage is gone
-            con = flight.connect(f"grpc://localhost:{port0}")
-            con.wait_for_available(timeout=10)
-            for sink in sinks:
-                with pytest.raises(flight.FlightError, match="not found"):
-                    con.do_get(stream_ticket("qf", "stage0", sink)).read_all()
-            # and the stage_id is re-preparable on the survivor (no
-            # half-dead keys poisoning a retry — _set_streams would
-            # reject a collision)
-            list(
-                con.do_action(
-                    shuffle_action("qf", "stage0", plans[0], sinks, "n")
-                )
-            )
-            tab = con.do_get(stream_ticket("qf", "stage0", "b0")).read_all()
-            assert all(n % 3 == 0 for n in tab.column("n").to_pylist())
-            con.close()
-        finally:
-            for p in (p0, p1):
-                if p.poll() is None:
-                    p.terminate()
-                p.wait(timeout=30)
-
-
-class TestStageRetry:
-    def test_peer_death_recovers_on_survivor(self):
-        """Fault-tolerant scatter-gather (r8, the recovery layer over
-        the abort semantics): kill one of two peers after the first
-        attempt's stage is prepared; dispatch_with_retry must complete
-        the stage on the survivor — the dead peer's plan slice
-        reassigned — and the final result must equal the no-failure
-        result exactly."""
-        from fuse_query_spark.servers.flight_server import (
-            StageCoordinator,
-            dispatch_with_retry,
-        )
+        """Peer 0 dies with attempt 0 live (streams registered, none
+        read): the gather fails, attempt 0's streams on the SURVIVOR are
+        drained before the retry (a fetch says 'not found') and their
+        stage id is re-preparable. Peer 1 then dies during attempt 1, no
+        peer is left, and the runner raises a TYPED StageError naming
+        the peer whose stream failed — not a placeholder."""
+        from fuse_query_spark.servers.flight_server import StageError, run_stages
 
         p0, port0 = _spawn_peer()
         p1, port1 = _spawn_peer()
         peers = [f"grpc://localhost:{port0}", f"grpc://localhost:{port1}"]
-        sinks = ["b0", "b1", "b2"]
-        plans = [
-            "SELECT number AS n, number % 7 AS v FROM numbers(400)",
-            "SELECT number + 400 AS n, (number + 400) % 7 AS v FROM numbers(400)",
-        ]
-        try:
-            # prepare attempt 0's streams on both peers, then kill peer1
-            # BEFORE any gather — dispatch_with_retry's first attempt
-            # will fail against the dead peer and must recover
-            pre = StageCoordinator(peers)
-            pre.dispatch("qr", "stage0/0", [plans[0], "SELECT 1 AS n"], sinks, "n")
-            pre.close()
+        checked = []
+
+        def seam(attempt):
+            if attempt == 0:
+                p0.kill()
+                p0.wait(timeout=30)
+                return
+            con = flight.connect(peers[1])
+            try:
+                # attempt 0's streams on the survivor: drained
+                for sink in ("s0", "s1"):
+                    with pytest.raises(flight.FlightError, match="not found"):
+                        con.do_get(stream_ticket("qf", "stage0/1", sink)).read_all()
+                # and the stage id is re-preparable (no half-dead keys
+                # poisoning it — _set_streams would reject a collision)
+                plan = "SELECT number AS n FROM numbers(10)"
+                list(con.do_action(shuffle_action("qf", "stage0/1", plan, ["s0"], "n")))
+                tab = con.do_get(stream_ticket("qf", "stage0/1", "s0")).read_all()
+                assert tab.column("n").to_pylist() == list(range(10))
+            finally:
+                con.close()
+            checked.append(attempt)
             p1.kill()
             p1.wait(timeout=30)
-            parts = dispatch_with_retry(
-                peers, "qr2", "stage0", plans, sinks, "n", max_attempts=3
-            )
-            rows = []
-            for i, sink in enumerate(sinks):
-                ns = parts[sink].column("n").to_pylist()
-                assert ns and all(n % 3 == i for n in ns), sink
-                rows += zip(ns, parts[sink].column("v").to_pylist())
-            assert sorted(rows) == [(n, n % 7) for n in range(800)]
+
+        try:
+            with pytest.raises(StageError) as ei:
+                run_stages(peers, "qf", _numbers_partials(600), "n", _after_dispatch=seam)
+            assert checked == [1]
+            assert ei.value.peer == peers[1]
+            assert isinstance(ei.value.cause, flight.FlightError)
         finally:
-            for p in (p0, p1):
-                if p.poll() is None:
-                    p.terminate()
-                p.wait(timeout=30)
+            _stop(p0, p1)
+
+
+class TestStageRetry:
+    def test_peer_death_recovers_on_survivor(self):
+        """A peer that died after the caller's probe: attempt 0 trusts
+        the probe, its dispatch to the dead peer fails, and attempt 1
+        completes the stage on the survivor — the whole source
+        regrouped onto it — with the no-failure result."""
+        from fuse_query_spark.servers.flight_server import run_stages
+
+        p0, port0 = _spawn_peer()
+        p1, port1 = _spawn_peer()
+        peers = [f"grpc://localhost:{port0}", f"grpc://localhost:{port1}"]
+        seen = []
+        try:
+            p1.kill()
+            p1.wait(timeout=30)
+            parts = run_stages(
+                peers, "qr", _numbers_partials(800), "n", _after_dispatch=seen.append
+            )
+            assert seen == [1]  # attempt 0 never finished its dispatch
+            assert list(parts) == ["s0"]
+            _check_buckets(parts, 800)
+        finally:
+            _stop(p0, p1)
 
     def test_mid_stage_death_retries_and_completes(self):
         """The full recovery path: attempt 0 dispatches to BOTH peers
         successfully, peer1 is killed between dispatch and gather (the
         test seam), the gather fails mid-stream, the attempt's leftover
         streams are drained, and attempt 1 completes the whole stage on
-        the survivor with the dead peer's slice reassigned."""
-        from fuse_query_spark.servers.flight_server import dispatch_with_retry
+        the survivor."""
+        from fuse_query_spark.servers.flight_server import run_stages
 
         p0, port0 = _spawn_peer()
         p1, port1 = _spawn_peer()
         peers = [f"grpc://localhost:{port0}", f"grpc://localhost:{port1}"]
-        sinks = ["b0", "b1", "b2"]
-        plans = [
-            "SELECT number AS n FROM numbers(300)",
-            "SELECT number + 300 AS n FROM numbers(300)",
-        ]
 
         def kill_peer1(attempt):
             if attempt == 0:
@@ -458,35 +445,20 @@ class TestStageRetry:
                 p1.wait(timeout=30)
 
         try:
-            parts = dispatch_with_retry(
-                peers, "qm2", "stage0", plans, sinks, "n",
-                max_attempts=3, _after_dispatch=kill_peer1,
+            parts = run_stages(
+                peers, "qm2", _numbers_partials(600), "n", _after_dispatch=kill_peer1
             )
-            ns = sorted(
-                n for sink in sinks for n in parts[sink].column("n").to_pylist()
-            )
-            assert ns == list(range(600))
-            for i, sink in enumerate(sinks):
-                assert all(n % 3 == i for n in parts[sink].column("n").to_pylist())
+            _check_buckets(parts, 600)
         finally:
-            for p in (p0, p1):
-                if p.poll() is None:
-                    p.terminate()
-                p.wait(timeout=30)
+            _stop(p0, p1)
 
     def test_all_peers_dead_raises_stage_error(self):
-        from fuse_query_spark.servers.flight_server import (
-            StageError,
-            dispatch_with_retry,
-        )
+        from fuse_query_spark.servers.flight_server import StageError, run_stages
 
-        with pytest.raises(StageError):
-            dispatch_with_retry(
-                ["grpc://localhost:1", "grpc://localhost:2"],
-                "qx", "s0",
-                ["SELECT 1 AS n", "SELECT 2 AS n"],
-                ["b0"], "n", max_attempts=2,
-            )
+        peers = ["grpc://localhost:1", "grpc://localhost:2"]
+        with pytest.raises(StageError) as ei:
+            run_stages(peers, "qx", _numbers_partials(10), "n")
+        assert ei.value.peer in peers
 
     def test_non_flight_failure_drains_before_propagating(self):
         """A non-Flight exception after dispatch (an ArrowInvalid from a
@@ -496,51 +468,32 @@ class TestStageRetry:
         drained from the surviving peers; otherwise they sit in the
         registries for the peer's lifetime and poison the stage id
         (advice r9)."""
-        import pyarrow.flight as flight
-
-        from fuse_query_spark.servers.flight_server import (
-            StageCoordinator,
-            dispatch_with_retry,
-            stream_ticket,
-        )
+        from fuse_query_spark.servers.flight_server import run_stages
 
         p0, port0 = _spawn_peer()
         p1, port1 = _spawn_peer()
         peers = [f"grpc://localhost:{port0}", f"grpc://localhost:{port1}"]
-        sinks = ["b0", "b1"]
-        plans = [
-            "SELECT number AS n FROM numbers(100)",
-            "SELECT number + 100 AS n FROM numbers(100)",
-        ]
 
         def boom(attempt):
             raise ValueError("worker blew up after dispatch")
 
         try:
             with pytest.raises(ValueError):
-                dispatch_with_retry(
-                    peers, "qnf", "stage0", plans, sinks, "n",
-                    max_attempts=3, _after_dispatch=boom,
-                )
+                run_stages(peers, "qnf", _numbers_partials(200), "n", _after_dispatch=boom)
             # every (peer, sink) stream of the failed attempt is gone
             for addr in peers:
                 con = flight.connect(addr)
-                for sink in sinks:
-                    with pytest.raises(flight.FlightError, match="not found"):
-                        con.do_get(stream_ticket("qnf", "stage0/0", sink)).read_all()
-                    with pytest.raises(flight.FlightError, match="not found"):
-                        con.do_get(stream_ticket("qnf", "stage0/1", sink)).read_all()
+                for sid in ("stage0/0", "stage0/1"):
+                    for sink in ("s0", "s1"):
+                        with pytest.raises(flight.FlightError, match="not found"):
+                            con.do_get(stream_ticket("qnf", sid, sink)).read_all()
+                # and the stage id is not poisoned: the same query/stage
+                # re-dispatches cleanly
+                plan = "SELECT number AS n FROM numbers(10)"
+                list(con.do_action(shuffle_action("qnf", "stage0/0", plan, ["s0", "s1"], "n")))
                 con.close()
-            # and the stage id is not poisoned: the same query/stage
-            # re-dispatches cleanly
-            coord = StageCoordinator(peers)
-            coord.dispatch("qnf", "stage0/0", plans, sinks, "n")
-            coord.close()
         finally:
-            for p in (p0, p1):
-                if p.poll() is None:
-                    p.terminate()
-                p.wait(timeout=30)
+            _stop(p0, p1)
 
 
 class TestFlightStreamGating:

@@ -282,8 +282,8 @@ def test_package_reads_only_deployment_env():
 
 
 def test_engine_builds_driver_rows_as_local_relations():
-    """No createDataFrame call in the engine, the Snapshot source or
-    the system tables:
+    """No createDataFrame call in the engine, the Snapshot source, the
+    system tables, the operators or the plans:
     rows the driver holds go through sources.tables.local_rows, an
     Arrow local relation (LocalTableScan). createDataFrame on a Python
     list plans a Python RDD, and every scan of it, for the life of a
@@ -291,12 +291,17 @@ def test_engine_builds_driver_rows_as_local_relations():
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "fuse_query_spark"
-    bad = [
-        f"{rel}:{n}: {line.strip()}"
+    files = [
+        pkg / rel
         for rel in (
             "engine.py", "sources/snapshots.py", "sources/storage.py", "sources/system_tables.py"
         )
-        for n, line in enumerate((pkg / rel).read_text().splitlines(), 1)
+    ]
+    files += sorted((pkg / "operators").glob("*.py")) + sorted((pkg / "plans").glob("*.py"))
+    bad = [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in files
+        for n, line in enumerate(path.read_text().splitlines(), 1)
         if "createDataFrame(" in line
     ]
     assert bad == []

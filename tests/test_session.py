@@ -36,3 +36,39 @@ def test_factory_session_captures_no_call_sites():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.split() == ["false", "False", "False"]
+
+
+def test_failed_statement_logs_no_query_context(spark):
+    """A failed statement raises its typed error but logs nothing
+    through PySpark's query-context loggers, which would otherwise
+    write the whole Java stack at ERROR for every bad statement."""
+    import logging
+
+    import pytest
+    from pyspark.logger import PySparkLogger
+
+    from fuse_query_spark.engine import Engine
+    from fuse_query_spark.errors import UnknownTable
+
+    records = []
+
+    class Keep(logging.Handler):
+        def emit(self, record):
+            records.append(record)
+
+    loggers = [
+        PySparkLogger.getLogger(name)
+        for name in ("SQLQueryContextLogger", "DataFrameQueryContextLogger")
+    ]
+    handler = Keep(level=logging.DEBUG)
+    for lg in loggers:
+        lg.addHandler(handler)
+    try:
+        with pytest.raises(UnknownTable):
+            Engine(spark).sql("SELECT * FROM system.nosuch")
+        with pytest.raises(Exception, match="no_such_col"):
+            spark.sql("SELECT no_such_col FROM range(1)")
+    finally:
+        for lg in loggers:
+            lg.removeHandler(handler)
+    assert records == []

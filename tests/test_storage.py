@@ -149,6 +149,16 @@ def test_insert_values_job_counts(engine, tmp_path):
         engine.sql("DROP TABLE jc_s")
 
 
+def test_first_read_of_attached_parquet_runs_only_its_scan(spark, sf_dir):
+    """Attaching reads each footer on the driver, and the first read
+    builds its reader schema from a footer as well: the first point
+    lookup on an attached table submits one Spark job, its scan, and
+    no schema-inference job."""
+    e = Engine(spark)
+    e.attach_parquet_dir(sf_dir)
+    assert _jobs(e, "SELECT o_orderstatus FROM orders WHERE o_orderkey = 1") == 1
+
+
 def test_memory_table_stays_one_local_relation(engine):
     """300 one-row INSERTs concatenate into one LocalRelation, each
     with no Spark job: the readback scans one LocalTableScan, not a
