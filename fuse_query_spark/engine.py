@@ -823,7 +823,6 @@ class Engine:
 
             con = flight.connect(addr if "://" in addr else f"grpc://{addr}")
             try:
-                con.wait_for_available(timeout=10)
                 tbl = con.do_get(stream_ticket(qid, sid, sink)).read_all()
             finally:
                 con.close()

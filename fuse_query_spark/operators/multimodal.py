@@ -10,18 +10,18 @@ Pixel decode is REAL for PPM (raw RGB), uncompressed 24-bit BMP,
 8-bit truecolor PNG (chunk walk + CRC verify + stdlib-zlib inflate +
 scanline unfiltering — _png_pixels), and global-color-table GIF
 (container walk + a full pure-Python LZW codec — _gif_pixels /
-_lzw_decode), and BASELINE JPEG — grayscale AND 4:4:4 color (marker
-walk, DHT-driven canonical Huffman entropy decode with byte
-unstuffing, interleaved MCUs with per-component DC predictors at ANY
-integer sampling layout incl. 4:2:0, dequant, 8x8 IDCT, chroma
-upsample, JFIF YCbCr→RGB — _jpeg_pixels), PROGRESSIVE (SOF2)
-JPEG (multi-scan spectral selection + successive approximation with
-EOB runs and refinement bits — _jpeg_pixels_progressive, r6), and
-ARITHMETIC-coded JPEG, both sequential SOF9 AND progressive SOF10
-(T.81 Annex E QM coder + section F.2/G.2 conditioning models,
-validated byte-exact against libjpeg — _jpeg_pixels_arith /
-_jpeg_pixels_arith_prog, r7); only lossless (SOF3/11) JPEG still
-needs a library and raises NotImplementedError. Frame
+_lzw_decode), and JPEG through one codec core (_jpeg_pixels): one
+marker walk (_jpeg_segments), one coefficient decoder (_jpeg_coefs)
+for BASELINE grayscale and color at ANY integer sampling layout incl.
+4:2:0 (DHT-driven canonical Huffman entropy decode with byte
+unstuffing, interleaved MCUs with per-component DC predictors),
+PROGRESSIVE SOF2 (multi-scan spectral selection + successive
+approximation with EOB runs and refinement bits, r6) and
+ARITHMETIC-coded sequential SOF9 AND progressive SOF10 (T.81 Annex E
+QM coder + section F.2/G.2 conditioning models, r7) — all validated
+at the coefficient level against libjpeg — and one dequant, 8x8
+IDCT, chroma upsample, JFIF YCbCr→RGB tail; only lossless (SOF3/11)
+JPEG still needs a library and raises NotImplementedError. Frame
 sampling is REAL over the concatenated-P6 toy video container
 synthesized here (parse frame boundaries, emit every Nth).
 
@@ -87,27 +87,12 @@ def parse_image_header(b: bytes) -> tuple[int, int, str] | None:
 
 
 def _jpeg_dims(b: bytes) -> tuple[int, int] | None:
-    """(width, height) from the first SOFn marker — the JPEG header
-    walk (segments are length-prefixed, entropy data comes only after
-    SOS so the walk never needs unstuffing)."""
-    pos = 2
-    while pos + 4 <= len(b):
-        if b[pos] != 0xFF:
-            return None
-        marker = b[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
-            if pos + 9 > len(b):
-                return None
-            h, w = struct.unpack(">HH", b[pos + 5 : pos + 9])
-            return w, h
-        if marker in (0xDA, 0xD9):
-            return None
-        seglen = struct.unpack(">H", b[pos + 2 : pos + 4])[0]
-        pos += 2 + seglen
-    return None
+    """(width, height) from the first SOFn frame header, or None."""
+    sof = _jpeg_frame_header(b)
+    if sof is None or len(sof[1]) < 5:
+        return None
+    h, w = struct.unpack(">HH", sof[1][1:5])
+    return w, h
 
 
 def _ppm_frame(data: bytes, off: int) -> tuple[int, int, int, int, int]:
@@ -340,33 +325,17 @@ def decode_audio_meta(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return _fuse_or_map(blobs, _meta, AUDIO_META_SCHEMA)
 
 
-def decode_image_pixels(
-    blobs: DataFrame, id_col: str = "doc_id", decoder: str = "pure"
-) -> DataFrame:
-    """REAL pixel decode to (doc_id, width, height, pixels) RGB.
-
-    decoder="pure" (default): the dependency-free decoders in this
-    module — PPM (header parse + slice), uncompressed 24-bit BMP, PNG
-    (all five filters, interlace), GIF (incl. interlaced/local
-    palette), JPEG (baseline/progressive/arithmetic). Truncated bodies
-    raise instead of returning a short buffer; lossless JPEG raises as
-    the documented codec boundary (quarantine-routable).
-
-    decoder="library": the SAME mapInPandas batch contract over
-    PIL/Pillow (convert("RGB")) for deployments that can take the
-    dependency — covers the lossless-JPEG boundary and trades pure
-    portability for libjpeg/zlib speed. Import happens inside the
-    worker batches, so the option costs nothing unless selected; tests
-    are dependency-gated (skip without PIL) and assert per-byte
-    equality with the pure decoders on the synthesized corpora (the C
-    reference harness, tools/jpeg_ref_harness.c, already pins the pure
-    JPEG path to libjpeg output byte-for-byte, so the two decoders
-    agree wherever both decode)."""
-    if decoder not in ("pure", "library"):
-        raise ValueError(f"unknown decoder {decoder!r}: expected 'pure' or 'library'")
+def decode_image_pixels(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """REAL pixel decode to (doc_id, width, height, pixels) RGB with the
+    dependency-free decoders in this module — PPM (header parse +
+    slice), uncompressed 24-bit BMP, PNG (all five filters, interlace),
+    GIF (incl. interlaced/local palette), JPEG (baseline/progressive/
+    arithmetic). Truncated bodies raise instead of returning a short
+    buffer; lossless JPEG raises as the documented codec boundary
+    (quarantine-routable)."""
 
     def _pixels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return _decode_pixel_batches(batches, id_col, decoder)
+        return _decode_pixel_batches(batches, id_col)
 
     return _fuse_or_map(
         blobs, _pixels, "doc_id LONG, width INT, height INT, pixels BINARY"
@@ -374,7 +343,7 @@ def decode_image_pixels(
 
 
 def _decode_pixel_batches(
-    batches: Iterator[pd.DataFrame], id_col: str, decoder: str
+    batches: Iterator[pd.DataFrame], id_col: str
 ) -> Iterator[pd.DataFrame]:
     """The batch transform behind decode_image_pixels, module-level so
     image_pixel_stats can FUSE it with its stats transform inside ONE
@@ -382,29 +351,6 @@ def _decode_pixel_batches(
     Python Arrow round trip (~0.2 s/stage flat at bench scale, guide
     §4 — the pixels column is the largest intermediate and never needs
     to cross the boundary when the consumer is an aggregate)."""
-    if decoder == "library":
-        import io
-
-        from PIL import Image  # dependency-gated: worker-side import
-
-        for pdf in batches:
-            ids, ws, hs, px = [], [], [], []
-            for doc_id, b in zip(pdf[id_col], pdf["content"]):
-                data = bytes(b)
-                try:
-                    im = Image.open(io.BytesIO(data))
-                    rgb = im.convert("RGB")
-                except Exception as e:
-                    raise ValueError(f"doc {doc_id}: {e}") from None
-                ids.append(doc_id)
-                ws.append(rgb.width)
-                hs.append(rgb.height)
-                px.append(rgb.tobytes())
-            yield pd.DataFrame(
-                {"doc_id": ids, "width": ws, "height": hs, "pixels": px}
-            )
-        return
-
     for pdf in batches:
         ids, ws, hs, px = [], [], [], []
         for doc_id, b in zip(pdf[id_col], pdf["content"]):
@@ -713,8 +659,7 @@ def synthesize_png_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 
 def image_pixel_stats(
-    blobs: DataFrame, id_col: str = "doc_id", weighted: bool = False,
-    decoder: str = "pure",
+    blobs: DataFrame, id_col: str = "doc_id", weighted: bool = False
 ) -> DataFrame:
     """Decode pixels (PPM/BMP/PNG — whatever decode_image_pixels
     handles) and emit closed-form-verifiable per-image statistics:
@@ -725,8 +670,7 @@ def image_pixel_stats(
     POSITION-weighted sum (sum of i*byte_i) is added: the plain sum is
     invariant under row permutation, so it cannot catch a wrong
     de-interlace row mapping — the weighted sum moves under ANY
-    reordering of the decoded bytes. `decoder`: see
-    decode_image_pixels — 'library' runs the same stats over PIL.
+    reordering of the decoded bytes.
 
     Decode and stats run FUSED in one mapInPandas (r13): chaining two
     MapInPandas nodes is two JVM->Python Arrow round trips, and the
@@ -734,11 +678,9 @@ def image_pixel_stats(
     just to be summed (guide §4; each chained stage measured as a
     flat ~0.2 s at bench scale). Same batch transforms, composed
     iterator-to-iterator inside one Python worker."""
-    if decoder not in ("pure", "library"):
-        raise ValueError(f"unknown decoder {decoder!r}: expected 'pure' or 'library'")
 
     def _stats(raw: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in _decode_pixel_batches(raw, id_col, decoder):
+        for pdf in _decode_pixel_batches(raw, id_col):
             arrs = [np.frombuffer(bytes(p), np.uint8) for p in pdf["pixels"]]
             cols = {
                 "doc_id": pdf["doc_id"],
@@ -765,29 +707,30 @@ def image_pixel_stats(
 # the documented codec boundary and routes to quarantine below.
 _JPEG_DECODABLE_SOF = {0xC0, 0xC2, 0xC9, 0xCA}
 _JPEG_LOSSLESS_SOF = {0xC3, 0xC7, 0xCB, 0xCF}
+# every SOFn: 0xC0..0xCF less DHT (0xC4), JPG (0xC8) and DAC (0xCC)
+_JPEG_SOF = set(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
+def _jpeg_frame_header(b: bytes) -> tuple[int, bytes] | None:
+    """(SOFn marker, frame header body) of a JPEG stream's frame, or
+    None if no frame header precedes the first scan or the segment walk
+    is malformed. Header-only: classification never risks a decode."""
+    try:
+        for marker, seg, _end in _jpeg_segments(b):
+            if marker in _JPEG_SOF:
+                return marker, seg
+            if marker == 0xDA:
+                return None
+    except ValueError:
+        return None
+    return None
 
 
 def jpeg_sof_marker(b: bytes) -> int | None:
     """First SOFn marker byte of a JPEG stream (0xC0..0xCF minus DHT/
-    DAC), or None if the stream has no frame header. The same walk
-    _jpeg_dims does, kept separate so classification never risks a
-    decode."""
-    if b[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    while pos + 3 < len(b):
-        if b[pos] != 0xFF:
-            return None
-        marker = b[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            return marker
-        if marker in (0xDA, 0xD9):
-            return None
-        pos += 2 + struct.unpack(">H", b[pos + 2 : pos + 4])[0]
-    return None
+    JPG/DAC), or None if the stream has no frame header."""
+    sof = _jpeg_frame_header(b)
+    return None if sof is None else sof[0]
 
 
 def image_pixel_stats_quarantine(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1163,18 +1106,21 @@ def synthesize_gif_interlaced_blobs(df: DataFrame, id_col: str = "doc_id") -> Da
     return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
 
 
-# --- Real baseline JPEG decode, grayscale (r5, late) ----------------------
-# The "JPEG needs a library" boundary is narrower than it looks: for
-# BASELINE GRAYSCALE the whole pipeline — marker walk, DQT/DHT/SOF0/
-# SOS parse, canonical Huffman entropy decode with byte-unstuffing,
-# coefficient dequant, 8x8 IDCT (numpy), level shift — is implemented
-# here for real. The synthesized corpus carries its own DHT tables, so
-# nothing depends on the spec's example tables. Color (any integer
-# sampling layout) landed in r5, progressive (SOF2) in r6, and
-# arithmetic entropy coding in r7 — sequential SOF9 AND progressive
-# SOF10, see the arithmetic sections below; what still needs a
-# library: lossless (SOF3/SOF11) only, which routes to the typed
-# quarantine path (image_pixel_stats_quarantine) instead of failing.
+# --- Real JPEG decode: one codec core for four coding modes ------------------
+# The "JPEG needs a library" boundary is narrower than it looks: the
+# whole pipeline — marker walk, DQT/DHT/DAC/SOF/SOS parse, entropy
+# decode with byte-unstuffing, coefficient dequant, 8x8 IDCT (numpy),
+# level shift — is implemented here for real. The synthesized corpus
+# carries its own tables, so nothing depends on the spec's example
+# tables. Baseline grayscale landed in r5, color (any integer sampling
+# layout) late in r5, progressive (SOF2) in r6, and arithmetic entropy
+# coding in r7 — sequential SOF9 AND progressive SOF10. T.81 gives all
+# four one frame and scan syntax (Annex B), so one segment walk
+# (_jpeg_segments), one coefficient decoder (_jpeg_coefs) with two
+# entropy coders (_HuffmanScan, _ArithmeticScan) and one pixel tail
+# (_jpeg_pixels) serve them all. What still needs a library: lossless
+# (SOF3/SOF11) only, which routes to the typed quarantine path
+# (image_pixel_stats_quarantine) instead of failing.
 
 _ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -1182,6 +1128,8 @@ _ZIGZAG = [
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ]
+# natural (row-major) position -> zigzag index: the gather undoing _ZIGZAG
+_UNZIGZAG = np.argsort(_ZIGZAG)
 
 # Our canonical tables (carried in DHT — any table-driven decoder,
 # including this one, reads them from the file): DC categories 0..11
@@ -1315,28 +1263,6 @@ def _encode_block(w: _BitWriter, coeffs: list[int], prev_dc: int, dc_codes, ac_c
     return coeffs[0]
 
 
-def _decode_block(r: _BitReader, prev_dc: int, dc_tbl, ac_tbl) -> tuple[list[int], int]:
-    coeffs = [0] * 64
-    size = r.huff(dc_tbl)
-    dc = prev_dc + (_extend(r.bits(size), size) if size else 0)
-    coeffs[0] = dc
-    i = 1
-    while i < 64:
-        rs = r.huff(ac_tbl)
-        if rs == 0x00:  # EOB
-            break
-        if rs == 0xF0:  # ZRL
-            i += 16
-            continue
-        run, size = rs >> 4, rs & 0x0F
-        i += run
-        if i > 63 or size == 0:
-            raise ValueError("corrupt JPEG AC run")
-        coeffs[i] = _extend(r.bits(size), size)
-        i += 1
-    return coeffs, dc
-
-
 _IDCT_MATRIX = None
 
 
@@ -1377,35 +1303,157 @@ def _huff_decode_table(payload: bytes) -> dict:
     return {(c, ln): sym for sym, (c, ln) in codes.items()}
 
 
-def _jpeg_pixels(data: bytes) -> tuple[int, int, bytes]:
-    """REAL baseline JPEG decode — GRAYSCALE and COLOR at ANY integer
-    sampling-factor layout (4:4:4, 4:2:0, 4:2:2, ...): marker walk →
-    DQT/DHT/SOF0/SOS → canonical Huffman entropy decode (tables read
-    from the file's own DHT, per-component DC predictors) → interleaved
-    MCUs of hi*vi blocks per component → dequant in zigzag order →
-    8x8 IDCT → nearest-neighbor chroma upsample → level shift/clamp →
-    JFIF YCbCr→RGB (gray replicates). Progressive (SOF2) dispatches
-    to _jpeg_pixels_progressive, arithmetic SOF9/SOF10 to the QM-coder
-    decoders; only lossless (SOF3/SOF11) raises NotImplementedError —
-    the remaining library boundary."""
-    import numpy as np
-
+def _jpeg_segments(data: bytes) -> Iterator[tuple[int, bytes, int]]:
+    """Walk a JPEG stream's marker segments (T.81 B.1.1): yield
+    (marker, body, end) for each length-prefixed segment in stream
+    order, `end` being the offset just past it, and stop at EOI or the
+    end of the data. The one reader of segment lengths: the header
+    probes and the decoder all walk through here. After an SOS segment
+    the walk steps over the scan's entropy-coded data, whose only
+    markers are RSTn (B.1.1.5), so a scan decoder starts at that SOS's
+    `end` and never reports where it stopped. SOI, TEM and stray RSTn
+    carry no length and are skipped."""
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[tuple[int, int], dict] = {}
-    w = h = None
-    restart_interval = 0
-    comps: list[dict] = []  # SOF order: {cid, tq, dc, ac}
-    while pos + 4 <= len(data):
+    while pos + 2 <= len(data):
         if data[pos] != 0xFF:
             raise ValueError("bad JPEG marker alignment")
         marker = data[pos + 1]
         if marker == 0xD9:  # EOI
-            raise ValueError("JPEG has no scan data")
-        seglen = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        seg = data[pos + 4 : pos + 2 + seglen]
+            return
+        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+            pos += 2
+            continue
+        if pos + 4 > len(data):
+            raise ValueError("truncated JPEG segment")
+        end = pos + 2 + (data[pos + 2] << 8 | data[pos + 3])
+        if end < pos + 4 or end > len(data):
+            raise ValueError("truncated JPEG segment")
+        yield marker, data[pos + 4 : end], end
+        pos = end
+        if marker == 0xDA:  # skip the scan's entropy-coded data
+            pos = _jpeg_next_marker(data, end)
+            while pos + 1 < len(data) and 0xD0 <= data[pos + 1] <= 0xD7:
+                pos = _jpeg_next_marker(data, pos + 2)
+
+
+def _jpeg_next_marker(data: bytes, p: int) -> int:
+    """Offset of the first marker at or after `p` in entropy-coded
+    data — a 0xFF followed by neither a stuffed 0x00 nor a fill 0xFF —
+    or len(data) if there is none."""
+    while True:
+        p = data.find(b"\xff", p)
+        if p < 0 or p + 1 >= len(data):
+            return len(data)
+        if data[p + 1] not in (0x00, 0xFF):
+            return p
+        p += 1
+
+
+def _jpeg_restart(data: bytes, pos: int, m: int) -> int:
+    """Consume the m-th restart marker of a scan (m >= 1): the first
+    marker at or after `pos` must be RST((m-1) mod 8). A dropped or
+    duplicated restart segment in a corrupt file raises instead of
+    resyncing to the wrong interval and decoding garbage silently —
+    libjpeg's behavior. Returns the offset where the next interval's
+    entropy-coded data starts."""
+    p = _jpeg_next_marker(data, pos)
+    if p + 1 >= len(data) or not 0xD0 <= data[p + 1] <= 0xD7:
+        raise ValueError("expected JPEG restart marker")
+    want = 0xD0 + (m - 1) % 8
+    if data[p + 1] != want:
+        raise ValueError(
+            f"JPEG restart marker out of sequence: got RST{data[p + 1] - 0xD0}, "
+            f"expected RST{want - 0xD0}"
+        )
+    return p + 2
+
+
+def _jpeg_layout(w: int, h: int, sampling) -> tuple[list[dict], int, int]:
+    """Block geometry of a w x h frame (T.81 A.1-A.2) from each
+    component's sampling byte (hi << 4 | vi): per component its
+    factors, its own block grid bw x bh (ceil of the component's sample
+    dims / 8 — what a single-component scan covers) and the MCU-padded
+    grid gw x gh that interleaved scans fill; plus the MCU grid.
+    Shared by the decoder and the encoders, so both walk one order."""
+    comps = [{"hi": s >> 4, "vi": s & 0x0F} for s in sampling]
+    for c in comps:
+        if not (1 <= c["hi"] <= 4 and 1 <= c["vi"] <= 4):
+            raise ValueError(f"bad JPEG sampling factors {c['hi']}x{c['vi']}")
+    hmax = max(c["hi"] for c in comps)
+    vmax = max(c["vi"] for c in comps)
+    if any(hmax % c["hi"] or vmax % c["vi"] for c in comps):
+        raise NotImplementedError("non-integer chroma sampling ratios")
+    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
+    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
+    for c in comps:
+        cw = (w * c["hi"] + hmax - 1) // hmax
+        ch = (h * c["vi"] + vmax - 1) // vmax
+        c["bw"], c["bh"] = (cw + 7) // 8, (ch + 7) // 8
+        c["gw"], c["gh"] = mcus_x * c["hi"], mcus_y * c["vi"]
+    return comps, mcus_x, mcus_y
+
+
+def _jpeg_scan_blocks(comps, mcus_x, mcus_y, interval=0, restart=None):
+    """The blocks of one scan in T.81 coding order (A.2.2-A.2.3), as
+    (scan-component index, block index) pairs; a block index counts in
+    raster order over the component's MCU-padded grid (gw wide). An
+    interleaved scan walks the MCU grid, hi*vi blocks per component in
+    raster order within the MCU; a single-component scan walks that
+    component's own block grid, one block per coding unit. restart(m)
+    runs before the first unit of the m-th restart interval (DRI counts
+    coding units). The decoder and the baseline encoder both walk it."""
+    if len(comps) == 1:
+        c = comps[0]
+        mcus_x, mcus_y = c["bw"], c["bh"]
+        mcu = [(0, c["gw"], 1, 0)]
+    else:
+        # each block of an MCU: its component, the grid blocks per MCU
+        # row and per MCU column, and its offset from the MCU's corner
+        mcu = [
+            (si, c["vi"] * c["gw"], c["hi"], v * c["gw"] + u)
+            for si, c in enumerate(comps)
+            for v in range(c["vi"])
+            for u in range(c["hi"])
+        ]
+    n = 0
+    for my in range(mcus_y):
+        for mx in range(mcus_x):
+            if interval and n and n % interval == 0:
+                restart(n // interval)
+            n += 1
+            for si, mcu_rows, hi, off in mcu:
+                yield si, my * mcu_rows + mx * hi + off
+
+
+def _jpeg_coefs(data: bytes) -> tuple[int, int, list[dict]]:
+    """Entropy-decode a JPEG to its quantized DCT coefficients: one
+    walk over DQT, DHT, DAC, DRI, SOF0/SOF2/SOF9/SOF10 and SOS for all
+    four coding processes, which share T.81's frame and scan syntax
+    (Annex B) and differ only in the entropy coder — Huffman (Annexes
+    F.2/G.2, _HuffmanScan) or the QM coder (F.1.4/G.1.3,
+    _ArithmeticScan). Each scan decodes its spectral band [Ss, Se] at
+    successive-approximation bits [Ah, Al] into the components'
+    coefficient grids; a sequential scan is the one full band Ss=0,
+    Se=63, Ah=Al=0. DHT/DRI may be redefined between scans.
+
+    Returns (width, height, comps): per component its sampling factors
+    "hi"/"vi", quant table "q" and "coef", an int32[gh, gw, 64]
+    zigzag-indexed grid over the MCU-padded block grid — exposed at
+    this level so tests compare coefficients byte-exact against
+    libjpeg's dump (pixel space would blur the comparison through two
+    different IDCT roundings). Only lossless and the other SOFn frames
+    raise NotImplementedError — the remaining library boundary."""
+    qtables: dict[int, list[int]] = {}
+    htables: dict[tuple[int, int], dict] = {}
+    dc_cond = {t: (0, 1) for t in range(4)}  # DAC defaults: L=0, U=1
+    ac_cond = {t: 5 for t in range(4)}  # Kx = 5
+    restart_interval = 0
+    comps: list[dict] = []  # SOF order
+    by_cid: dict[int, dict] = {}
+    sof = w = h = mcus_x = mcus_y = scans = 0
+    for marker, seg, end in _jpeg_segments(data):
         if marker == 0xDB:  # DQT
             p = 0
             while p < len(seg):
@@ -1421,116 +1469,118 @@ def _jpeg_pixels(data: bytes) -> tuple[int, int, bytes]:
                 n = sum(seg[p + 1 : p + 17])
                 htables[(tc, th)] = _huff_decode_table(bytes(seg[p : p + 17 + n]))
                 p += 17 + n
-        elif marker == 0xC0:  # SOF0 baseline
+        elif marker == 0xCC:  # DAC: arithmetic conditioning
+            p = 0
+            while p < len(seg):
+                tc, tb, cs = seg[p] >> 4, seg[p] & 0x0F, seg[p + 1]
+                if tc == 0:
+                    dc_cond[tb] = (cs & 0x0F, cs >> 4)
+                else:
+                    ac_cond[tb] = cs
+                p += 2
+        elif marker == 0xDD:  # DRI: restart interval in MCUs
+            restart_interval = struct.unpack(">H", seg[:2])[0]
+        elif marker in _JPEG_SOF:
+            if marker not in _JPEG_DECODABLE_SOF:
+                raise NotImplementedError(
+                    f"SOF{marker - 0xC0}: extended-sequential-Huffman/lossless/"
+                    "hierarchical JPEG unsupported (baseline SOF0, progressive "
+                    "SOF2, sequential-arithmetic SOF9, and progressive-arithmetic "
+                    "SOF10 decode are real)"
+                )
+            if comps:
+                raise ValueError("JPEG has more than one frame header")
             prec, h, w, ncomp = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
             if prec != 8:
                 raise NotImplementedError("only 8-bit JPEG supported")
             if ncomp not in (1, 3):
                 raise NotImplementedError(f"{ncomp}-component JPEG unsupported")
-            for ci in range(ncomp):
-                cid, sampling, tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = sampling >> 4, sampling & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"bad JPEG sampling factors {hi}x{vi}")
-                comps.append({"cid": cid, "tq": tq, "hi": hi, "vi": vi})
-        elif marker == 0xC2:  # SOF2: progressive has its own scan loop
-            return _jpeg_pixels_progressive(data)
-        elif marker == 0xC9:  # SOF9: arithmetic has its own entropy coder (r7)
-            return _jpeg_pixels_arith(data)
-        elif marker == 0xCA:  # SOF10: progressive-arithmetic (r7, late)
-            return _jpeg_pixels_arith_prog(data)
-        elif marker in (0xC1, 0xC3, 0xCB):
-            raise NotImplementedError(
-                "extended-sequential-Huffman/lossless JPEG unsupported "
-                "(baseline SOF0, progressive SOF2, sequential-arithmetic "
-                "SOF9, and progressive-arithmetic SOF10 decode are real)"
-            )
-        elif marker == 0xDD:  # DRI: restart interval in MCUs
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:  # SOS
-            ns = seg[0]
-            if ns != len(comps):
-                raise NotImplementedError("non-interleaved scans unsupported")
+            sof = marker
+            comps, mcus_x, mcus_y = _jpeg_layout(w, h, seg[7 : 6 + 3 * ncomp : 3])
+            for ci, c in enumerate(comps):
+                c["cid"], c["tq"] = seg[6 + 3 * ci], seg[8 + 3 * ci]
+                c["coef"] = np.zeros((c["gh"] * c["gw"], 64), np.int32)
             by_cid = {c["cid"]: c for c in comps}
+        elif marker == 0xDA:  # SOS: one scan
+            if not comps:
+                raise ValueError("JPEG SOS before SOF")
+            ns = seg[0]
+            scan, sel = [], []
             for si in range(ns):
                 cid, tids = seg[1 + 2 * si], seg[2 + 2 * si]
                 if cid not in by_cid:
                     raise ValueError("SOS names unknown component")
-                by_cid[cid]["dc"], by_cid[cid]["ac"] = tids >> 4, tids & 0x0F
-            pos = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-    else:
-        raise ValueError("JPEG missing SOS")
-    if w is None or not comps:
-        raise ValueError("JPEG missing SOF0")
+                if tids & 0xCC:  # a DC or AC table selector above 3
+                    raise ValueError("bad JPEG entropy table selector")
+                scan.append(by_cid[cid])
+                sel.append((tids >> 4, tids & 0x0F))
+            ss, se, ahal = seg[1 + 2 * ns : 4 + 2 * ns]
+            ah, al = ahal >> 4, ahal & 0x0F
+            if sof in (0xC0, 0xC9):  # sequential: each block's DC and all its ACs
+                ss, se, ah, al = 0, 63, 0, 0
+            elif ss == 0 and se != 0:
+                raise ValueError("progressive DC scan with Se != 0")
+            elif ss and len(scan) != 1:
+                raise ValueError("progressive AC scan must be single-component")
+            coefs = [c["coef"] for c in scan]
+            if sof in (0xC0, 0xC2):
+                coder = _HuffmanScan(data, end, coefs, sel, htables, ss, se, ah)
+            else:
+                coder = _ArithmeticScan(data, end, coefs, sel, dc_cond, ac_cond)
+            dc = (coder.dc_refine if ah else coder.dc_first) if ss == 0 else None
+            ac = (coder.ac_refine if ah else coder.ac_first) if se else None
+            k0 = max(ss, 1)  # the AC band; a sequential scan's DC comes first
+            try:
+                for si, i in _jpeg_scan_blocks(scan, mcus_x, mcus_y, restart_interval, coder.restart):
+                    if dc:
+                        dc(si, i, al)
+                    if ac:
+                        ac(si, i, k0, se, al)
+            except OverflowError:  # a corrupt DC category or predictor past int32
+                raise ValueError("corrupt JPEG: coefficient out of range") from None
+            scans += 1
+    if not comps:
+        raise ValueError("JPEG missing SOF")
+    if not scans:
+        raise ValueError("JPEG has no scan data")
     for c in comps:
         if c["tq"] not in qtables:
             raise ValueError("JPEG missing DQT for a component")
         c["q"] = qtables[c["tq"]]
-        c["dc_tbl"] = htables.get((0, c.get("dc", 0)))
-        c["ac_tbl"] = htables.get((1, c.get("ac", 0)))
-        if c["dc_tbl"] is None or c["ac_tbl"] is None:
-            raise ValueError("JPEG missing Huffman tables")
+        c["coef"] = c["coef"].reshape(c["gh"], c["gw"], 64)
+    return w, h, comps
+
+
+def _jpeg_pixels(data: bytes) -> tuple[int, int, bytes]:
+    """REAL JPEG decode — baseline (SOF0), progressive (SOF2) and
+    arithmetic-coded sequential/progressive (SOF9/SOF10), GRAYSCALE and
+    COLOR at ANY integer sampling layout (4:4:4, 4:2:0, 4:2:2, ...):
+    _jpeg_coefs, then dequant and 8x8 IDCT batched over each
+    component's block grid, then _jpeg_finish (chroma upsample, level
+    shift/clamp, JFIF YCbCr→RGB). Only lossless (SOF3/SOF11) and the
+    other SOFn raise NotImplementedError — the remaining library
+    boundary."""
+    w, h, comps = _jpeg_coefs(data)
     a = _idct_matrix()
+    planes = []
+    for c in comps:
+        gh, gw = c["gh"], c["gw"]
+        # dequant, then zigzag -> natural order
+        f = (c["coef"] * np.array(c["q"], np.float64))[:, :, _UNZIGZAG]
+        # pixel[i,j] = sum_{u,v} a[u,i] f[u,v] a[v,j] per block: a.T @ f @
+        # a batched over the (gh, gw) blocks, without einsum's per-call
+        # path search (~20% of the decode profile)
+        px = (a.T @ f.reshape(gh, gw, 8, 8)) @ a
+        planes.append(px.transpose(0, 2, 1, 3).reshape(gh * 8, gw * 8) + 128.0)
+    return _jpeg_finish(planes, comps, w, h)
+
+
+def _jpeg_finish(planes, comps, w, h) -> tuple[int, int, bytes]:
+    """JPEG reconstruction tail: nearest-neighbor chroma upsample to
+    the full grid, crop to the frame, level-clamped JFIF YCbCr→RGB
+    (grayscale replicates)."""
     hmax = max(c["hi"] for c in comps)
     vmax = max(c["vi"] for c in comps)
-    if any(hmax % c["hi"] or vmax % c["vi"] for c in comps):
-        raise NotImplementedError("non-integer chroma sampling ratios")
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    planes = [
-        np.zeros((mcus_y * 8 * c["vi"], mcus_x * 8 * c["hi"])) for c in comps
-    ]
-    r = _BitReader(data, pos)
-    prev_dc = [0] * len(comps)
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                # RSTn: byte-align, consume the marker, reset every
-                # component's DC predictor (spec F.2.1.3.1) — camera
-                # files emit these every few MCU rows for resync
-                r.n = 0
-                if (
-                    r.pos + 2 > len(r.data)
-                    or r.data[r.pos] != 0xFF
-                    or not 0xD0 <= r.data[r.pos + 1] <= 0xD7
-                ):
-                    raise ValueError("expected JPEG restart marker")
-                # sequence check (r8, mirrors the arith paths): the
-                # m-th restart carries RST((m-1) mod 8)
-                want = 0xD0 + (mcu_count // restart_interval - 1) % 8
-                if r.data[r.pos + 1] != want:
-                    raise ValueError(
-                        "JPEG restart marker out of sequence: got "
-                        f"RST{r.data[r.pos + 1] - 0xD0}, expected RST{want - 0xD0}"
-                    )
-                r.pos += 2
-                prev_dc = [0] * len(comps)
-            mcu_count += 1
-            # interleaved MCU: hi*vi blocks per component, raster order
-            for ci, c in enumerate(comps):
-                for byi in range(c["vi"]):
-                    for bxi in range(c["hi"]):
-                        zz, prev_dc[ci] = _decode_block(
-                            r, prev_dc[ci], c["dc_tbl"], c["ac_tbl"]
-                        )
-                        f = np.zeros((8, 8))
-                        for i in range(64):
-                            f[_ZIGZAG[i] // 8, _ZIGZAG[i] % 8] = zz[i] * c["q"][i]
-                        y0 = (my * c["vi"] + byi) * 8
-                        x0 = (mx * c["hi"] + bxi) * 8
-                        planes[ci][y0 : y0 + 8, x0 : x0 + 8] = a.T @ f @ a + 128.0
-    return _jpeg_finish(planes, comps, w, h, hmax, vmax)
-
-
-def _jpeg_finish(planes, comps, w, h, hmax, vmax) -> tuple[int, int, bytes]:
-    """Shared JPEG reconstruction tail (baseline + progressive):
-    nearest-neighbor chroma upsample to the full grid, crop to the
-    frame, level-clamped JFIF YCbCr→RGB (grayscale replicates)."""
-    import numpy as np
-
     for ci, c in enumerate(comps):
         fy, fx = vmax // c["vi"], hmax // c["hi"]
         if fy > 1 or fx > 1:
@@ -1550,34 +1600,65 @@ def _jpeg_finish(planes, comps, w, h, hmax, vmax) -> tuple[int, int, bytes]:
     return w, h, np.clip(np.rint(rgb), 0, 255).astype("uint8").tobytes()
 
 
-def _jpeg_encode_gray(
-    blocks_zz: list[list[int]], w: int, h: int, q: list[int]
+def _jpeg_seg(marker: int, body: bytes) -> bytes:
+    """One length-prefixed marker segment — every encoder's writer."""
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+
+def _jpeg_sos(cids, ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS for components `cids` (all on entropy tables 0) coding band
+    [ss, se] at successive-approximation bits ah/al."""
+    body = bytes([len(cids)]) + b"".join(bytes([cid, 0x00]) for cid in cids)
+    return _jpeg_seg(0xDA, body + bytes([ss, se, (ah << 4) | al]))
+
+
+def _jpeg_header(sof: int, w: int, h: int, q: list[int], sampling) -> bytearray:
+    """SOI, one DQT shared by every component, and the frame header with
+    its entropy-coder tables: our canonical DHT before a Huffman frame
+    (the progressive AC symbol set for SOF2), the default DAC
+    conditioning, spelled out, after an arithmetic one. Component ids
+    run 1..n, each with its sampling byte hi << 4 | vi."""
+    out = bytearray(b"\xff\xd8") + _jpeg_seg(0xDB, bytes([0x00]) + bytes(q))
+    if sof in (0xC0, 0xC2):
+        ac_bits, ac_vals = (
+            (_JPEG_AC_BITS, _JPEG_AC_VALS) if sof == 0xC0
+            else (_JPEG_AC_PROG_BITS, _JPEG_AC_PROG_VALS)
+        )
+        out += _jpeg_seg(
+            0xC4,
+            bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
+            + bytes([0x10]) + bytes(ac_bits) + bytes(ac_vals),
+        )
+    comps = b"".join(bytes([ci + 1, s, 0]) for ci, s in enumerate(sampling))
+    out += _jpeg_seg(sof, bytes([8]) + struct.pack(">HH", h, w) + bytes([len(sampling)]) + comps)
+    if sof in (0xC9, 0xCA):
+        out += _jpeg_seg(0xCC, bytes([0x00, 0x10, 0x10, 5]))  # DC: L=0,U=1; AC: Kx=5
+    return out
+
+
+def _jpeg_encode_baseline(
+    comp_blocks: list[list[list[int]]], w: int, h: int, q: list[int], sampling=None
 ) -> bytes:
-    """Assemble a valid baseline grayscale JPEG from quantized zigzag
-    coefficient blocks (raster order): DQT + our canonical DHT tables
-    + SOF0 + SOS + Huffman entropy data with byte stuffing. General —
-    arbitrary AC runs encode too (roundtrip with _jpeg_pixels'
-    entropy decoder is property-tested at the coefficient level)."""
+    """Assemble a valid baseline (SOF0) JPEG from quantized zigzag
+    coefficient blocks: 1 or 3 components at any integer sampling
+    layout (`sampling`: each component's byte hi << 4 | vi, all 1x1
+    by default — 4:2:0 is [0x22, 0x11, 0x11]), each component's blocks
+    in raster order over its MCU-padded block grid. Shared quant +
+    canonical Huffman tables, one scan in the decoder's own unit order
+    (_jpeg_scan_blocks) with per-component DC predictors. General —
+    arbitrary AC runs encode too (roundtrip with _jpeg_coefs is
+    property-tested at the coefficient level)."""
+    sampling = sampling or [0x11] * len(comp_blocks)
+    comps, mcus_x, mcus_y = _jpeg_layout(w, h, sampling)
     dc_codes = _canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
     wtr = _BitWriter()
-    prev_dc = 0
-    for zz in blocks_zz:
-        prev_dc = _encode_block(wtr, zz, prev_dc, dc_codes, ac_codes)
-    entropy = wtr.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes(q))
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sof = seg(0xC0, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]))
-    sos = seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + dht + sof + sos + entropy + b"\xff\xd9"
+    prev = [0] * len(comps)
+    for si, i in _jpeg_scan_blocks(comps, mcus_x, mcus_y):
+        prev[si] = _encode_block(wtr, comp_blocks[si][i], prev[si], dc_codes, ac_codes)
+    out = _jpeg_header(0xC0, w, h, q, sampling)
+    out += _jpeg_sos(range(1, len(comps) + 1), 0, 63, 0, 0) + wtr.flush() + b"\xff\xd9"
+    return bytes(out)
 
 
 def _jpeg_bytes(doc_id: int) -> bytes:
@@ -1597,7 +1678,7 @@ def _jpeg_bytes(doc_id: int) -> bytes:
             zz = [0] * 64
             zz[0] = (doc_id + bx + 3 * by) % 64 - 32
             blocks.append(zz)
-    return _jpeg_encode_gray(blocks, bw * 8, bh * 8, q)
+    return _jpeg_encode_baseline([blocks], bw * 8, bh * 8, q)
 
 
 def synthesize_jpeg_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1624,19 +1705,15 @@ def _jpeg_lossless_bytes(doc_id: int) -> bytes:
     marker and _jpeg_dims read them), the sample data is never
     decoded."""
     w, h = 8 * (1 + doc_id % 3), 8 * (1 + doc_id % 2)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
     # SOF3: precision 8, 1 component, 1x1 sampling; lossless frames
     # carry no quant table (Tq=0 by convention)
-    sof = seg(0xC3, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]))
-    dht = seg(
+    sof = _jpeg_seg(0xC3, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]))
+    dht = _jpeg_seg(
         0xC4,
         bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS),
     )
     # SOS for lossless: predictor selector 1, point transform 0
-    sos = seg(0xDA, bytes([1, 1, 0x00, 1, 0, 0]))
+    sos = _jpeg_seg(0xDA, bytes([1, 1, 0x00, 1, 0, 0]))
     return b"\xff\xd8" + dht + sof + sos + b"\x00\x3f" + b"\xff\xd9"
 
 
@@ -1660,42 +1737,6 @@ def synthesize_jpeg_mixed_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFr
     return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
 
 
-def _jpeg_encode_color(
-    comp_blocks: list[list[list[int]]], w: int, h: int, q: list[int]
-) -> bytes:
-    """Assemble a valid baseline 4:4:4 color JPEG: 3 components (1x1
-    sampling, shared quant + Huffman tables — legal and compact),
-    interleaved MCUs with per-component DC predictors."""
-    dc_codes = _canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    wtr = _BitWriter()
-    prev = [0, 0, 0]
-    n_blocks = len(comp_blocks[0])
-    for b in range(n_blocks):
-        for ci in range(3):
-            prev[ci] = _encode_block(
-                wtr, comp_blocks[ci][b], prev[ci], dc_codes, ac_codes
-            )
-    entropy = wtr.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    dqt = seg(0xDB, bytes([0x00]) + bytes(q))
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sof = seg(
-        0xC0,
-        bytes([8]) + struct.pack(">HH", h, w)
-        + bytes([3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0]),
-    )
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + dht + sof + sos + entropy + b"\xff\xd9"
-
-
 def _jpeg_color_bytes(doc_id: int) -> bytes:
     """Deterministic valid baseline COLOR JPEG per doc (4:4:4): same
     flat-block geometry as _jpeg_bytes, luma DC as there, chroma DCs
@@ -1714,7 +1755,7 @@ def _jpeg_color_bytes(doc_id: int) -> bytes:
             zz[0] = (doc_id + bx + 3 * by) % 64 - 32
             y_blocks.append(zz)
             zero_blocks.append([0] * 64)
-    return _jpeg_encode_color(
+    return _jpeg_encode_baseline(
         [y_blocks, zero_blocks, list(zero_blocks)], bw * 8, bh * 8, q
     )
 
@@ -1734,373 +1775,137 @@ def synthesize_jpeg_color_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFr
     return _tagged_map(df.select(id_col), _gen, "doc_id LONG, content BINARY")
 
 
-def _jpeg_encode_420(
-    y_blocks: list[list[int]],
-    cb_blocks: list[list[int]],
-    cr_blocks: list[list[int]],
-    mcus_x: int,
-    mcus_y: int,
-    q: list[int],
-) -> bytes:
-    """Assemble a valid baseline 4:2:0 color JPEG (Y at 2x2, chroma at
-    1x1): each MCU carries 4 Y blocks (raster order within the MCU)
-    then Cb then Cr. `y_blocks` is raster order over the FULL Y block
-    grid (2*mcus_x wide); chroma lists are raster over the MCU grid."""
-    dc_codes = _canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_codes = _canonical_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-    wtr = _BitWriter()
-    prev = [0, 0, 0]
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            for byi in range(2):
-                for bxi in range(2):
-                    yb = y_blocks[(my * 2 + byi) * (mcus_x * 2) + mx * 2 + bxi]
-                    prev[0] = _encode_block(wtr, yb, prev[0], dc_codes, ac_codes)
-            prev[1] = _encode_block(
-                wtr, cb_blocks[my * mcus_x + mx], prev[1], dc_codes, ac_codes
-            )
-            prev[2] = _encode_block(
-                wtr, cr_blocks[my * mcus_x + mx], prev[2], dc_codes, ac_codes
-            )
-    entropy = wtr.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    w, h = mcus_x * 16, mcus_y * 16
-    dqt = seg(0xDB, bytes([0x00]) + bytes(q))
-    dht = seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS),
-    )
-    sof = seg(
-        0xC0,
-        bytes([8]) + struct.pack(">HH", h, w)
-        + bytes([3, 1, 0x22, 0, 2, 0x11, 0, 3, 0x11, 0]),
-    )
-    sos = seg(0xDA, bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0]))
-    return b"\xff\xd8" + dqt + dht + sof + sos + entropy + b"\xff\xd9"
-
-
 # --- Progressive (SOF2) JPEG decode + encode (r6) ----------------------
 # Closes the last real-crawl image-input class that errored. The scan
 # machinery follows ITU-T T.81 Annex G (spectral selection + successive
 # approximation): DC-first/DC-refine scans (interleaved or single
 # component), AC-first scans with EOB-run coding, AC-refinement scans
 # with zero-history runs and correction bits. Coefficients accumulate
-# across scans in per-component block grids; dequant/IDCT/upsample/
-# color conversion reuse the baseline path's machinery (_jpeg_finish).
+# across scans in per-component block grids (_jpeg_coefs); dequant/
+# IDCT/upsample/color conversion are the one tail (_jpeg_pixels).
 # Huffman progressive, which is what cjpeg/libjpeg -progressive
-# emits, decodes for real here; sequential-arithmetic (SOF9) AND
-# progressive-arithmetic (SOF10) decode via the QM coder sections
-# below (r7). The remaining boundary is lossless (SOF3/SOF11) only.
+# emits, decodes for real here, and sequential Huffman is its one
+# full-band scan; the arithmetic coder below decodes SOF9 and SOF10
+# (r7). The remaining boundary is lossless (SOF3/SOF11) only.
 
-def _jpeg_pixels_progressive(data: bytes) -> tuple[int, int, bytes]:
-    """REAL progressive JPEG decode: multi-scan marker walk (DHT/DRI
-    may be redefined between scans), per-scan spectral band [Ss,Se] and
-    successive-approximation [Ah,Al] state, EOB-run + refinement-bit
-    entropy decode, then the shared dequant/IDCT/upsample/YCbCr tail.
-    General integer sampling layouts; restart markers reset both DC
-    predictors and the EOB run."""
-    import numpy as np
+class _HuffmanScan(_BitReader):
+    """Huffman entropy decoding of one scan (T.81 F.2.2 sequential, G.2
+    progressive) for _jpeg_coefs: a bit reader over the scan's
+    entropy-coded data with per-component DC predictors and the EOB
+    run. Tables come from the scan's DHT selectors `sel` = [(td, ta),
+    ...] and must exist for every pass the scan's band [ss, se] at Ah
+    = `ah` codes. Each method decodes one block's part of the scan into
+    row i of scan component si's zigzag coefficient store coefs[si]."""
 
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    htables: dict[tuple[int, int], dict] = {}
-    w = h = None
-    restart_interval = 0
-    comps: list[dict] = []
-    coefs: list = []  # per comp: int32[bh_full, bw_full, 64] zigzag
-    mcus_x = mcus_y = hmax = vmax = 0
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:  # EOI
-            break
-        if 0xD0 <= marker <= 0xD7:  # stray restart between scans
-            pos += 2
-            continue
-        if pos + 4 > len(data):
-            raise ValueError("truncated JPEG segment")
-        seglen = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        seg = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:  # DQT
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                qtables[tq] = list(seg[p + 1 : p + 65])
-                p += 65
-        elif marker == 0xC4:  # DHT (legal between scans in progressive)
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 0x0F
-                n = sum(seg[p + 1 : p + 17])
-                htables[(tc, th)] = _huff_decode_table(bytes(seg[p : p + 17 + n]))
-                p += 17 + n
-        elif marker == 0xC2:  # SOF2
-            prec, h, w, ncomp = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            if prec != 8:
-                raise NotImplementedError("only 8-bit JPEG supported")
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG unsupported")
-            for ci in range(ncomp):
-                cid, sampling, tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = sampling >> 4, sampling & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"bad JPEG sampling factors {hi}x{vi}")
-                comps.append({"cid": cid, "tq": tq, "hi": hi, "vi": vi})
-            hmax = max(c["hi"] for c in comps)
-            vmax = max(c["vi"] for c in comps)
-            if any(hmax % c["hi"] or vmax % c["vi"] for c in comps):
-                raise NotImplementedError("non-integer chroma sampling ratios")
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            for c in comps:
-                # non-interleaved scans cover the REAL block grid
-                # (ceil of the component's sample dims / 8); interleaved
-                # DC scans cover the MCU-padded full grid
-                cw = (w * c["hi"] + hmax - 1) // hmax
-                ch = (h * c["vi"] + vmax - 1) // vmax
-                c["bw"], c["bh"] = (cw + 7) // 8, (ch + 7) // 8
-                c["pred"] = 0
-                coefs.append(
-                    np.zeros((mcus_y * c["vi"], mcus_x * c["hi"], 64), np.int32)
-                )
-        elif marker in (0xC0, 0xC1, 0xC3, 0xC9, 0xCA, 0xCB):
-            raise ValueError("mixed/unsupported SOF in progressive decode")
-        elif marker == 0xDD:  # DRI
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:  # SOS: one progressive scan
-            if not comps:
-                raise ValueError("JPEG SOS before SOF2")
-            ns = seg[0]
-            scan = []
-            by_cid = {c["cid"]: (i, c) for i, c in enumerate(comps)}
-            for si in range(ns):
-                cid, tids = seg[1 + 2 * si], seg[2 + 2 * si]
-                if cid not in by_cid:
-                    raise ValueError("SOS names unknown component")
-                ci, c = by_cid[cid]
-                scan.append((ci, c, tids >> 4, tids & 0x0F))
-            ss, se, ahal = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
-            ah, al = ahal >> 4, ahal & 0x0F
-            r = _BitReader(data, pos + 2 + seglen)
-            _jpeg_decode_prog_scan(
-                r, scan, ss, se, ah, al, htables, coefs,
-                restart_interval, mcus_x, mcus_y,
-            )
-            # advance to the next true marker after the entropy data
-            # (skip stuffed FF00s and any trailing restart markers)
-            p = r.pos
-            while p + 1 < len(data):
-                if data[p] == 0xFF and data[p + 1] not in (0x00,) and not (
-                    0xD0 <= data[p + 1] <= 0xD7
-                ):
-                    break
-                p += 1
-            pos = p
-            continue
-        pos += 2 + seglen
-    if w is None or not comps:
-        raise ValueError("JPEG missing SOF2")
-    # reconstruction: dequant + IDCT every block of every component
-    a = _idct_matrix()
-    planes = []
-    for ci, c in enumerate(comps):
-        if c["tq"] not in qtables:
-            raise ValueError("JPEG missing DQT for a component")
-        q = np.array(qtables[c["tq"]], np.float64)
-        grid = coefs[ci].astype(np.float64) * q  # (bh, bw, 64) dequant
-        bh_full, bw_full = grid.shape[:2]
-        f = np.zeros((bh_full, bw_full, 8, 8))
-        zz_rows = [z // 8 for z in _ZIGZAG]
-        zz_cols = [z % 8 for z in _ZIGZAG]
-        f[:, :, zz_rows, zz_cols] = grid
-        # pixel[i,j] = sum_{u,v} a[u,i] f[u,v] a[v,j] per block, batched
-        # a.T @ f @ a batched over (bh, bw) blocks — identical
-        # contraction order to the baseline per-block path, without
-        # einsum's per-call path search (~20% of the decode profile)
-        px = (a.T @ f) @ a
-        plane = px.transpose(0, 2, 1, 3).reshape(bh_full * 8, bw_full * 8) + 128.0
-        planes.append(plane)
-    return _jpeg_finish(planes, comps, w, h, hmax, vmax)
+    def __init__(self, data: bytes, pos: int, coefs, sel, htables: dict, ss: int, se: int, ah: int):
+        _BitReader.__init__(self, data, pos)
+        self.coefs = coefs
+        self.dc_tbl = [htables.get((0, td)) for td, _ta in sel]
+        self.ac_tbl = [htables.get((1, ta)) for _td, ta in sel]
+        if (ss == 0 and ah == 0 and None in self.dc_tbl) or (se and None in self.ac_tbl):
+            raise ValueError("JPEG missing Huffman table for scan")
+        self.preds = [0] * len(sel)
+        self.eobrun = 0
 
+    def restart(self, m: int) -> None:
+        # RSTn: byte-align, consume the marker, reset every component's
+        # DC predictor (spec F.2.1.3.1) and the EOB run — camera files
+        # emit these every few MCU rows for resync
+        self.pos, self.n = _jpeg_restart(self.data, self.pos, m), 0
+        self.preds = [0] * len(self.preds)
+        self.eobrun = 0
 
-def _jpeg_decode_prog_scan(
-    r: _BitReader, scan, ss, se, ah, al, htables, coefs,
-    restart_interval, mcus_x, mcus_y,
-):
-    """Decode one progressive scan's entropy data into the coefficient
-    grids. scan = [(ci, comp, td, ta), ...]."""
-    state = {"eobrun": 0}
+    def dc_first(self, si: int, i: int, al: int) -> None:
+        """DC, first (or only) pass: diff-coded, at reduced precision
+        2^Al in a progressive scan."""
+        size = self.huff(self.dc_tbl[si])
+        if size:
+            self.preds[si] += _extend(self.bits(size), size)
+        self.coefs[si][i, 0] = self.preds[si] << al
 
-    def _restart(preds, ordinal):
-        r.n = 0  # byte-align
-        if (
-            r.pos + 2 > len(r.data)
-            or r.data[r.pos] != 0xFF
-            or not 0xD0 <= r.data[r.pos + 1] <= 0xD7
-        ):
-            raise ValueError("expected JPEG restart marker")
-        # sequence check (r8): the m-th restart carries RST((m-1) mod 8)
-        want = 0xD0 + (ordinal - 1) % 8
-        if r.data[r.pos + 1] != want:
-            raise ValueError(
-                "JPEG restart marker out of sequence: got "
-                f"RST{r.data[r.pos + 1] - 0xD0}, expected RST{want - 0xD0}"
-            )
-        r.pos += 2
-        for i in range(len(preds)):
-            preds[i] = 0
-        state["eobrun"] = 0
+    def dc_refine(self, si: int, i: int, al: int) -> None:
+        """DC refinement: one raw bit per block."""
+        if self.bit():
+            self.coefs[si][i, 0] |= 1 << al
 
-    if ss == 0:  # DC scan (Se must be 0 in progressive)
-        if se != 0:
-            raise ValueError("progressive DC scan with Se != 0")
-        preds = [0] * len(scan)
-        if len(scan) > 1:
-            units = [(my, mx) for my in range(mcus_y) for mx in range(mcus_x)]
-        else:
-            ci, c, td, ta = scan[0]
-            units = [(by, bx) for by in range(c["bh"]) for bx in range(c["bw"])]
-        for ui, unit in enumerate(units):
-            if restart_interval and ui and ui % restart_interval == 0:
-                _restart(preds, ui // restart_interval)
-            if len(scan) > 1:  # interleaved MCU: hi*vi blocks per comp
-                my, mx = unit
-                for si, (ci, c, td, ta) in enumerate(scan):
-                    for byi in range(c["vi"]):
-                        for bxi in range(c["hi"]):
-                            by, bx = my * c["vi"] + byi, mx * c["hi"] + bxi
-                            _dc_prog_block(
-                                r, coefs[ci], by, bx, ah, al, preds, si,
-                                htables, td,
-                            )
-            else:
-                ci, c, td, ta = scan[0]
-                by, bx = unit
-                _dc_prog_block(r, coefs[ci], by, bx, ah, al, preds, 0, htables, td)
-        return
-    # AC scan: single component, non-interleaved
-    if len(scan) != 1:
-        raise ValueError("progressive AC scan must be single-component")
-    ci, c, td, ta = scan[0]
-    ac_tbl = htables.get((1, ta))
-    if ah == 0 and ac_tbl is None:
-        raise ValueError("JPEG missing AC Huffman table for scan")
-    grid = coefs[ci]
-    n = 0
-    for by in range(c["bh"]):
-        for bx in range(c["bw"]):
-            if restart_interval and n and n % restart_interval == 0:
-                _restart([], n // restart_interval)
-            n += 1
-            if ah == 0:
-                _ac_first_block(r, grid, by, bx, ss, se, al, ac_tbl, state)
-            else:
-                if ac_tbl is None:
-                    raise ValueError("JPEG missing AC Huffman table for scan")
-                _ac_refine_block(r, grid, by, bx, ss, se, al, ac_tbl, state)
-
-
-def _dc_prog_block(r, grid, by, bx, ah, al, preds, si, htables, td):
-    if ah == 0:  # first DC scan: diff-coded at reduced precision
-        dc_tbl = htables.get((0, td))
-        if dc_tbl is None:
-            raise ValueError("JPEG missing DC Huffman table for scan")
-        size = r.huff(dc_tbl)
-        diff = _extend(r.bits(size), size) if size else 0
-        preds[si] += diff
-        grid[by, bx, 0] = preds[si] << al
-    else:  # DC refinement: one raw bit per block
-        if r.bit():
-            grid[by, bx, 0] |= 1 << al
-
-
-def _ac_first_block(r, grid, by, bx, ss, se, al, ac_tbl, state):
-    """AC first scan (Ah=0): baseline-style run/size pairs scaled by
-    2^Al, plus EOBn codes carrying runs of all-zero bands."""
-    if state["eobrun"] > 0:
-        state["eobrun"] -= 1
-        return
-    blk = grid[by, bx]
-    k = ss
-    while k <= se:
-        rs = r.huff(ac_tbl)
-        run, size = rs >> 4, rs & 0x0F
-        if size == 0:
-            if run != 15:  # EOBn: band ends; run covers 2^r-1 more blocks
-                state["eobrun"] = (1 << run) - 1
-                if run:
-                    state["eobrun"] += r.bits(run)
-                return
-            k += 16  # ZRL
-            continue
-        k += run
-        if k > se:
-            raise ValueError("corrupt progressive JPEG AC run")
-        blk[k] = _extend(r.bits(size), size) << al
-        k += 1
-
-
-def _ac_refine_block(r, grid, by, bx, ss, se, al, ac_tbl, state):
-    """AC refinement scan (Ah=Al+1): newly-significant coefficients
-    arrive as (run,1) symbols whose run counts ZERO-HISTORY positions;
-    every already-nonzero position traversed absorbs one correction
-    bit (T.81 G.1.2.3; the libjpeg-compatible Huffman refinement)."""
-    p1, m1 = 1 << al, -1 << al
-    row = grid[by, bx]
-    # plain-int working copy: the loop below reads/writes single
-    # elements, and numpy scalar indexing is ~10x a list's (r12 opt —
-    # this function was 45% of the progressive decode profile)
-    blk = row.tolist()
-    k = ss
-    if state["eobrun"] == 0:
+    def ac_first(self, si: int, i: int, ss: int, se: int, al: int) -> None:
+        """AC first (or only) pass (Ah=0): baseline-style run/size pairs
+        scaled by 2^Al, plus EOBn codes carrying runs of all-zero bands
+        (a sequential table codes only EOB = EOB0)."""
+        if self.eobrun > 0:
+            self.eobrun -= 1
+            return
+        ac_tbl, blk = self.ac_tbl[si], self.coefs[si][i]
+        k = ss
         while k <= se:
-            rs = r.huff(ac_tbl)
+            rs = self.huff(ac_tbl)
             run, size = rs >> 4, rs & 0x0F
-            sval = 0
-            if size:
-                if size != 1:
-                    raise ValueError("corrupt AC refinement symbol")
-                sval = p1 if r.bit() else m1
-            elif run != 15:  # EOBn
-                state["eobrun"] = 1 << run
-                if run:
-                    state["eobrun"] += r.bits(run)
-                break
-            # advance over `run` zero-history positions, absorbing
-            # correction bits at nonzero-history positions en route
+            if size == 0:
+                if run != 15:  # EOBn: band ends; run covers 2^r-1 more blocks
+                    self.eobrun = (1 << run) - 1
+                    if run:
+                        self.eobrun += self.bits(run)
+                    return
+                k += 16  # ZRL
+                continue
+            k += run
+            if k > se:
+                raise ValueError("corrupt JPEG AC run")
+            blk[k] = _extend(self.bits(size), size) << al
+            k += 1
+
+    def ac_refine(self, si: int, i: int, ss: int, se: int, al: int) -> None:
+        """AC refinement scan (Ah=Al+1): newly-significant coefficients
+        arrive as (run,1) symbols whose run counts ZERO-HISTORY positions;
+        every already-nonzero position traversed absorbs one correction
+        bit (T.81 G.1.2.3; the libjpeg-compatible Huffman refinement)."""
+        ac_tbl, row = self.ac_tbl[si], self.coefs[si][i]
+        p1, m1 = 1 << al, -1 << al
+        # plain-int working copy: the loop below reads/writes single
+        # elements, and numpy scalar indexing is ~10x a list's (r12 opt —
+        # this function was 45% of the progressive decode profile)
+        blk = row.tolist()
+        k = ss
+        if self.eobrun == 0:
+            while k <= se:
+                rs = self.huff(ac_tbl)
+                run, size = rs >> 4, rs & 0x0F
+                sval = 0
+                if size:
+                    if size != 1:
+                        raise ValueError("corrupt AC refinement symbol")
+                    sval = p1 if self.bit() else m1
+                elif run != 15:  # EOBn
+                    self.eobrun = 1 << run
+                    if run:
+                        self.eobrun += self.bits(run)
+                    break
+                # advance over `run` zero-history positions, absorbing
+                # correction bits at nonzero-history positions en route
+                while k <= se:
+                    if blk[k] != 0:
+                        if self.bit() and (blk[k] & p1) == 0:
+                            blk[k] += p1 if blk[k] >= 0 else m1
+                    else:
+                        run -= 1
+                        if run < 0:
+                            break
+                    k += 1
+                if sval:
+                    if k > se:
+                        raise ValueError("corrupt AC refinement run")
+                    blk[k] = sval
+                k += 1
+        if self.eobrun > 0:
+            # inside an EOB run: remaining nonzero positions in the band
+            # still carry correction bits
             while k <= se:
                 if blk[k] != 0:
-                    if r.bit() and (blk[k] & p1) == 0:
+                    if self.bit() and (blk[k] & p1) == 0:
                         blk[k] += p1 if blk[k] >= 0 else m1
-                else:
-                    run -= 1
-                    if run < 0:
-                        break
                 k += 1
-            if sval:
-                if k > se:
-                    raise ValueError("corrupt AC refinement run")
-                blk[k] = sval
-            k += 1
-    if state["eobrun"] > 0:
-        # inside an EOB run: remaining nonzero positions in the band
-        # still carry correction bits
-        while k <= se:
-            if blk[k] != 0:
-                if r.bit() and (blk[k] & p1) == 0:
-                    blk[k] += p1 if blk[k] >= 0 else m1
-            k += 1
-        state["eobrun"] -= 1
-    row[:] = blk
+            self.eobrun -= 1
+        row[:] = blk
 
 
 # Progressive AC symbol set: every (run, size) pair is meaningful —
@@ -2233,28 +2038,10 @@ def _jpeg_encode_progressive(
     dc_codes = _canonical_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
     ac_codes = _canonical_codes(_JPEG_AC_PROG_BITS, _JPEG_AC_PROG_VALS)
     n_blocks = len(comp_blocks[0])
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes(q))
-    out += seg(
-        0xC4,
-        bytes([0x00]) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes([0x10]) + bytes(_JPEG_AC_PROG_BITS) + bytes(_JPEG_AC_PROG_VALS),
-    )
-    sof_body = bytes([8]) + struct.pack(">HH", h, w) + bytes([ncomp])
-    for ci in range(ncomp):
-        sof_body += bytes([ci + 1, 0x11, 0])
-    out += seg(0xC2, sof_body)
+    out = _jpeg_header(0xC2, w, h, q, [0x11] * ncomp)
     for kind, comp_sel, ss, se, ah, al in _JPEG_PROG_SCRIPT:
         if kind == "dc":
-            sos = bytes([ncomp])
-            for ci in range(ncomp):
-                sos += bytes([ci + 1, 0x00])
-            sos += bytes([ss, se, (ah << 4) | al])
-            out += seg(0xDA, sos)
+            out += _jpeg_sos(range(1, ncomp + 1), ss, se, ah, al)
             wtr = _BitWriter()
             if ah == 0:
                 preds = [0] * ncomp
@@ -2276,8 +2063,7 @@ def _jpeg_encode_progressive(
             out += wtr.flush()
         else:
             for ci in range(ncomp):  # AC scans are per-component
-                sos = bytes([1, ci + 1, 0x00, ss, se, (ah << 4) | al])
-                out += seg(0xDA, sos)
+                out += _jpeg_sos([ci + 1], ss, se, ah, al)
                 wtr = _BitWriter()
                 state = {"eobrun": 0, "pending": []}
                 enc = _enc_ac_first if ah == 0 else _enc_ac_refine
@@ -2547,18 +2333,20 @@ def _qm_decode_dc(dec, st, ctx, cond):
     return (-v if sign else v), ctx
 
 
-def _qm_decode_ac(dec, st, fixed, zz, kx):
-    """All AC coefficients of one block (T.81 F.2.4.2) into zz[1..63]."""
-    k = 1
-    while k <= 63:
+def _qm_decode_ac(dec, st, fixed, zz, kx, ss, se, al):
+    """The AC coefficients of one block in band [ss, se] (T.81 F.2.4.2;
+    the same model band-bounded for a progressive first pass, G.1.3.2),
+    scaled by 2^al, into zz[ss..se]."""
+    k = ss
+    while k <= se:
         base = 3 * (k - 1)
         if dec.decode(st, base):
             return  # EOB
         while dec.decode(st, base + 1) == 0:
             k += 1
             base += 3
-            if k > 63:
-                raise ValueError("arithmetic JPEG: AC run past k=63")
+            if k > se:
+                raise ValueError("arithmetic JPEG: AC run past Se")
         sign = dec.decode(fixed, 0)
         stx = base + 2
         m = dec.decode(st, stx)
@@ -2579,168 +2367,92 @@ def _qm_decode_ac(dec, st, fixed, zz, kx):
                 v |= mm
             mm >>= 1
         v += 1
-        zz[k] = -v if sign else v
+        zz[k] = (-v if sign else v) << al
         k += 1
 
 
-def _jpeg_pixels_arith(data: bytes) -> tuple[int, int, bytes]:
-    """REAL arithmetic-coded JPEG decode (SOF9, extended sequential):
-    marker walk (DQT/DAC/DRI/SOF9/SOS), QM entropy decode of the DCT
-    coefficients with the spec's DC/AC conditioning models, then the
-    same dequant → IDCT → upsample → color-convert tail as baseline
-    (_jpeg_finish). Grayscale and color at any integer sampling layout,
-    restart markers included (restart resets the coder, the statistics
-    areas, and the DC predictors, per F.1.4.correspondence). Validated
-    byte-exact against libjpeg's arithmetic codec in
-    tests/test_multimodal.py."""
-    import numpy as np
+class _ArithmeticScan:
+    """QM-coded decoding of one scan (T.81 F.1.4 sequential, G.1.3
+    progressive) for _jpeg_coefs: the decoder, the statistics areas (64
+    DC and 256 AC bins per conditioning table), DC contexts and
+    predictors — all fresh at the scan start and at every restart
+    marker (F.1.4.4.1). `sel` = [(td, ta), ...] picks each scan
+    component's DAC conditioning; blocks are rows of the zigzag
+    coefficient stores `coefs`, as for _HuffmanScan."""
 
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    dc_cond = {t: (0, 1) for t in range(4)}  # DAC defaults: L=0, U=1
-    ac_cond = {t: 5 for t in range(4)}  # Kx = 5
-    w = h = None
-    restart_interval = 0
-    comps: list[dict] = []
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:
-            raise ValueError("JPEG has no scan data")
-        seglen = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        seg = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                qtables[tq] = list(seg[p + 1 : p + 65])
-                p += 65
-        elif marker == 0xC9:  # SOF9
-            prec, h, w, ncomp = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            if prec != 8:
-                raise NotImplementedError("only 8-bit JPEG supported")
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG unsupported")
-            for ci in range(ncomp):
-                cid, sampling, tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = sampling >> 4, sampling & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"bad JPEG sampling factors {hi}x{vi}")
-                comps.append({"cid": cid, "tq": tq, "hi": hi, "vi": vi})
-        elif marker == 0xCC:  # DAC: arithmetic conditioning
-            p = 0
-            while p < len(seg):
-                tc, tb = seg[p] >> 4, seg[p] & 0x0F
-                cs = seg[p + 1]
-                if tc == 0:
-                    dc_cond[tb] = (cs & 0x0F, cs >> 4)
-                else:
-                    ac_cond[tb] = cs
-                p += 2
-        elif marker == 0xDD:
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:
-            ns = seg[0]
-            if ns != len(comps):
-                raise NotImplementedError("non-interleaved scans unsupported")
-            by_cid = {c["cid"]: c for c in comps}
-            for si in range(ns):
-                cid, tids = seg[1 + 2 * si], seg[2 + 2 * si]
-                if cid not in by_cid:
-                    raise ValueError("SOS names unknown component")
-                by_cid[cid]["dc"], by_cid[cid]["ac"] = tids >> 4, tids & 0x0F
-            pos = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-    else:
-        raise ValueError("JPEG missing SOS")
-    if w is None or not comps:
-        raise ValueError("JPEG missing SOF9")
-    for c in comps:
-        if c["tq"] not in qtables:
-            raise ValueError("JPEG missing DQT for a component")
-        c["q"] = qtables[c["tq"]]
-    a = _idct_matrix()
-    hmax = max(c["hi"] for c in comps)
-    vmax = max(c["vi"] for c in comps)
-    if any(hmax % c["hi"] or vmax % c["vi"] for c in comps):
-        raise NotImplementedError("non-integer chroma sampling ratios")
-    mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-    mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-    planes = [
-        np.zeros((mcus_y * 8 * c["vi"], mcus_x * 8 * c["hi"])) for c in comps
-    ]
+    def __init__(self, data: bytes, pos: int, coefs, sel, dc_cond: dict, ac_cond: dict):
+        self.data, self.coefs, self.sel = data, coefs, sel
+        self.dc_cond, self.ac_cond = dc_cond, ac_cond
+        self.fixed = bytearray([_QM_FIXED_BIN])
+        self._reset(pos)
 
-    def fresh():
-        return (
-            {t: bytearray(64) for t in range(4)},
-            {t: bytearray(256) for t in range(4)},
-            bytearray([_QM_FIXED_BIN]),
+    def _reset(self, pos: int) -> None:
+        self.dec = _QMDecoder(self.data, pos)
+        self.dc_stats = {t: bytearray(64) for t in range(4)}
+        self.ac_stats = {t: bytearray(256) for t in range(4)}
+        self.dc_ctx = [0] * len(self.sel)
+        self.last_dc = [0] * len(self.sel)
+
+    def restart(self, m: int) -> None:
+        # the decoder either stopped AT the marker (it consumed the 0xFF
+        # and holds Dn) or unconsumed flush bytes remain before it
+        dec = self.dec
+        self._reset(_jpeg_restart(self.data, dec.pos - (dec.marker is not None), m))
+
+    def dc_first(self, si: int, i: int, al: int) -> None:
+        """DC, first (or only) pass: the sequential DC model, on the
+        scaled-down domain in a progressive scan."""
+        td = self.sel[si][0]
+        diff, self.dc_ctx[si] = _qm_decode_dc(
+            self.dec, self.dc_stats[td], self.dc_ctx[si], self.dc_cond[td]
+        )
+        self.last_dc[si] += diff
+        self.coefs[si][i, 0] = self.last_dc[si] << al
+
+    def dc_refine(self, si: int, i: int, al: int) -> None:
+        """DC refinement: one fixed-bin bit per block."""
+        if self.dec.decode(self.fixed, 0):
+            self.coefs[si][i, 0] |= 1 << al
+
+    def ac_first(self, si: int, i: int, ss: int, se: int, al: int) -> None:
+        ta = self.sel[si][1]
+        _qm_decode_ac(
+            self.dec, self.ac_stats[ta], self.fixed, self.coefs[si][i], self.ac_cond[ta], ss, se, al
         )
 
-    dc_stats, ac_stats, fixed = fresh()
-    dec = _QMDecoder(data, pos)
-    dc_ctx = [0] * len(comps)
-    last_dc = [0] * len(comps)
-    mcu_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                # RSTn: the coder, the statistics areas, and the DC
-                # predictors all reset. The decoder either stopped AT
-                # the marker (it consumed the 0xFF and holds Dn) or
-                # unconsumed flush bytes remain before it — scan.
-                if dec.marker is not None and 0xD0 <= dec.marker <= 0xD7:
-                    rst, p2 = dec.marker, dec.pos + 1
-                else:
-                    p = dec.pos
-                    while p + 1 < len(data) and not (
-                        data[p] == 0xFF and 0xD0 <= data[p + 1] <= 0xD7
-                    ):
-                        p += 1
-                    if p + 1 >= len(data):
-                        raise ValueError("expected JPEG restart marker")
-                    rst, p2 = data[p + 1], p + 2
-                # RSTn sequence check (r7 ADVICE): a dropped/duplicated
-                # restart segment in a corrupt file must raise, not
-                # resync to the wrong marker and decode garbage
-                # silently — libjpeg's behavior. The m-th restart
-                # (1-based) carries marker RST((m-1) mod 8).
-                want = 0xD0 + (mcu_count // restart_interval - 1) % 8
-                if rst != want:
-                    raise ValueError(
-                        f"JPEG restart marker out of sequence: got RST{rst - 0xD0}, "
-                        f"expected RST{want - 0xD0}"
-                    )
-                dec = _QMDecoder(data, p2)
-                dc_stats, ac_stats, fixed = fresh()
-                dc_ctx = [0] * len(comps)
-                last_dc = [0] * len(comps)
-            mcu_count += 1
-            for ci, c in enumerate(comps):
-                for byi in range(c["vi"]):
-                    for bxi in range(c["hi"]):
-                        zz = [0] * 64
-                        diff, dc_ctx[ci] = _qm_decode_dc(
-                            dec, dc_stats[c["dc"]], dc_ctx[ci], dc_cond[c["dc"]]
-                        )
-                        last_dc[ci] += diff
-                        zz[0] = last_dc[ci]
-                        _qm_decode_ac(
-                            dec, ac_stats[c["ac"]], fixed, zz, ac_cond[c["ac"]]
-                        )
-                        f = np.zeros((8, 8))
-                        for i in range(64):
-                            f[_ZIGZAG[i] // 8, _ZIGZAG[i] % 8] = zz[i] * c["q"][i]
-                        y0 = (my * c["vi"] + byi) * 8
-                        x0 = (mx * c["hi"] + bxi) * 8
-                        planes[ci][y0 : y0 + 8, x0 : x0 + 8] = a.T @ f @ a + 128.0
-    return _jpeg_finish(planes, comps, w, h, hmax, vmax)
+    def ac_refine(self, si: int, i: int, ss: int, se: int, al: int) -> None:
+        """AC refinement (G.1.3.3): per-k EOB decisions only past the
+        previous pass's end-of-block index, a correction bit for each
+        history-nonzero coefficient, significance plus a fixed-bin sign
+        for newly-nonzero ones."""
+        dec, st, fixed = self.dec, self.ac_stats[self.sel[si][1]], self.fixed
+        blk = self.coefs[si][i]
+        p1 = 1 << al
+        m1 = -1 << al
+        kex = 0
+        for kk in range(se, 0, -1):
+            if blk[kk]:
+                kex = kk
+                break
+        k = ss
+        while k <= se:
+            base = 3 * (k - 1)
+            if k > kex and dec.decode(st, base):
+                return  # EOB past the previous pass's end-of-block
+            while True:
+                cur = int(blk[k])
+                if cur:
+                    if dec.decode(st, base + 2):
+                        blk[k] = cur + (m1 if cur < 0 else p1)
+                    break
+                if dec.decode(st, base + 1):
+                    blk[k] = m1 if dec.decode(fixed, 0) else p1
+                    break
+                base += 3
+                k += 1
+                if k > se:
+                    raise ValueError("arithmetic JPEG: refine run past Se")
+            k += 1
 
 
 def _qm_encode_dc(enc, st, ctx, diff, cond):
@@ -2845,17 +2557,9 @@ def _jpeg_encode_arith_gray(
         ctx = _qm_encode_dc(enc, dc_stats, ctx, zz[0] - last, (0, 1))
         last = zz[0]
         _qm_encode_ac(enc, ac_stats, fixed, zz, 5)
-    entropy = enc.flush()
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes(q))
-    out += seg(0xC9, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]))
-    out += seg(0xCC, bytes([0x00, 0x10, 0x10, 5]))  # DC: L=0,U=1; AC: Kx=5
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
-    out += entropy
+    out = _jpeg_header(0xC9, w, h, q, [0x11])
+    out += _jpeg_sos([1], 0, 63, 0, 0)
+    out += enc.flush()
     out += b"\xff\xd9"
     return bytes(out)
 
@@ -2901,321 +2605,12 @@ def synthesize_jpeg_arith_blobs(df: DataFrame, id_col: str = "doc_id") -> DataFr
 # band-bounded; AC-refinement codes per-k EOB decisions past the
 # previous pass's end-of-block index, correction bits for history-
 # nonzero coefficients, significance+fixed-bin sign for newly-nonzero
-# ones). Statistics areas and the coder reset at every scan and at
-# every restart marker. Validated byte-exact against libjpeg
-# (jpeg_simple_progression + arith_code) across gray/4:4:4/4:2:0/
-# odd-dims/restart gold files in tests/test_multimodal.py. With this,
-# the only JPEG classes left out of scope are the lossless modes
+# ones — _ArithmeticScan). Statistics areas and the coder reset at
+# every scan and at every restart marker. Validated byte-exact against
+# libjpeg (jpeg_simple_progression + arith_code) across gray/4:4:4/
+# 4:2:0/odd-dims/restart gold files in tests/test_multimodal.py. With
+# this, the only JPEG classes left out of scope are the lossless modes
 # (SOF3/SOF11).
-
-
-def _qm_prog_scan(
-    data, pos, comps, scomps, coefs, ss, se, ah, al,
-    dc_cond, ac_cond, restart_interval, mcus_x, mcus_y,
-):
-    """Decode one progressive-arithmetic scan into the zigzag-indexed
-    coefficient grids; returns the stream position of the next marker."""
-    def fresh():
-        return (
-            {t: bytearray(64) for t in range(4)},
-            {t: bytearray(256) for t in range(4)},
-            bytearray([_QM_FIXED_BIN]),
-        )
-
-    dc_stats, ac_stats, fixed = fresh()
-    dec = _QMDecoder(data, pos)
-    dc_ctx = {ci: 0 for ci, *_ in scomps}
-    last_dc = {ci: 0 for ci, *_ in scomps}
-
-    def dc_first(ci, dtbl, blk):
-        diff, dc_ctx[ci] = _qm_decode_dc(
-            dec, dc_stats[dtbl], dc_ctx[ci], dc_cond[dtbl]
-        )
-        last_dc[ci] += diff
-        blk[0] = last_dc[ci] << al
-
-    def dc_refine(blk):
-        if dec.decode(fixed, 0):
-            blk[0] |= 1 << al
-
-    def ac_first(atbl, blk):
-        st = ac_stats[atbl]
-        kx = ac_cond[atbl]
-        k = ss
-        while k <= se:
-            base = 3 * (k - 1)
-            if dec.decode(st, base):
-                return  # EOB
-            while dec.decode(st, base + 1) == 0:
-                k += 1
-                base += 3
-                if k > se:
-                    raise ValueError("arithmetic JPEG: AC run past Se")
-            sign = dec.decode(fixed, 0)
-            stx = base + 2
-            m = dec.decode(st, stx)
-            if m:
-                if dec.decode(st, stx):
-                    m = 2
-                    stx = 189 if k <= kx else 217
-                    while dec.decode(st, stx):
-                        m <<= 1
-                        if m == 0x8000:
-                            raise ValueError("arithmetic JPEG: AC overflow")
-                        stx += 1
-            v = m
-            stx += 14
-            mm = m >> 1
-            while mm:
-                if dec.decode(st, stx):
-                    v |= mm
-                mm >>= 1
-            v += 1
-            blk[k] = (-v if sign else v) << al
-            k += 1
-
-    def ac_refine(atbl, blk):
-        st = ac_stats[atbl]
-        p1 = 1 << al
-        m1 = -1 << al
-        kex = 0
-        for kk in range(se, 0, -1):
-            if blk[kk]:
-                kex = kk
-                break
-        k = ss
-        while k <= se:
-            base = 3 * (k - 1)
-            if k > kex and dec.decode(st, base):
-                return  # EOB past the previous pass's end-of-block
-            while True:
-                cur = int(blk[k])
-                if cur:
-                    if dec.decode(st, base + 2):
-                        blk[k] = cur + (m1 if cur < 0 else p1)
-                    break
-                if dec.decode(st, base + 1):
-                    blk[k] = m1 if dec.decode(fixed, 0) else p1
-                    break
-                base += 3
-                k += 1
-                if k > se:
-                    raise ValueError("arithmetic JPEG: refine run past Se")
-            k += 1
-
-    n = 0
-
-    def maybe_restart():
-        nonlocal dec, dc_stats, ac_stats, fixed
-        if not (restart_interval and n and n % restart_interval == 0):
-            return
-        if dec.marker is not None and 0xD0 <= dec.marker <= 0xD7:
-            rst, p2 = dec.marker, dec.pos + 1
-        else:
-            p = dec.pos
-            while p + 1 < len(data) and not (
-                data[p] == 0xFF and 0xD0 <= data[p + 1] <= 0xD7
-            ):
-                p += 1
-            if p + 1 >= len(data):
-                raise ValueError("expected JPEG restart marker")
-            rst, p2 = data[p + 1], p + 2
-        # RSTn sequence check (r7 ADVICE): raise on a dropped or
-        # duplicated restart segment instead of silently resyncing —
-        # the m-th restart (1-based) carries RST((m-1) mod 8)
-        want = 0xD0 + (n // restart_interval - 1) % 8
-        if rst != want:
-            raise ValueError(
-                f"JPEG restart marker out of sequence: got RST{rst - 0xD0}, "
-                f"expected RST{want - 0xD0}"
-            )
-        dec = _QMDecoder(data, p2)
-        dc_stats, ac_stats, fixed = fresh()
-        for ci in dc_ctx:
-            dc_ctx[ci] = 0
-            last_dc[ci] = 0
-
-    if ss == 0:  # DC scan (Se must be 0)
-        if se != 0:
-            raise ValueError("progressive DC scan with Se != 0")
-        if len(scomps) > 1:  # interleaved over the MCU grid
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    maybe_restart()
-                    n += 1
-                    for ci, c, dtbl, _atbl in scomps:
-                        for byi in range(c["vi"]):
-                            for bxi in range(c["hi"]):
-                                blk = coefs[ci][my * c["vi"] + byi, mx * c["hi"] + bxi]
-                                if ah == 0:
-                                    dc_first(ci, dtbl, blk)
-                                else:
-                                    dc_refine(blk)
-        else:
-            ci, c, dtbl, _atbl = scomps[0]
-            for br in range(c["bh"]):
-                for bc in range(c["bw"]):
-                    maybe_restart()
-                    n += 1
-                    if ah == 0:
-                        dc_first(ci, dtbl, coefs[ci][br, bc])
-                    else:
-                        dc_refine(coefs[ci][br, bc])
-    else:  # AC scan: single-component by spec
-        if len(scomps) != 1:
-            raise ValueError("progressive AC scan must be single-component")
-        ci, c, _dtbl, atbl = scomps[0]
-        for br in range(c["bh"]):
-            for bc in range(c["bw"]):
-                maybe_restart()
-                n += 1
-                if ah == 0:
-                    ac_first(atbl, coefs[ci][br, bc])
-                else:
-                    ac_refine(atbl, coefs[ci][br, bc])
-    # next true marker after this scan's entropy data
-    if dec.marker is not None and dec.marker != 0xD9:
-        return dec.pos - 1 if data[dec.pos - 1] == 0xFF else dec.pos
-    p = dec.pos
-    while p + 1 < len(data) and not (
-        data[p] == 0xFF and data[p + 1] not in (0x00, 0xFF)
-    ):
-        p += 1
-    return p
-
-
-def _jpeg_arith_prog_coefs(data: bytes):
-    """The SOF10 marker walk + QM scan decode, stopping at the
-    coefficient level: returns (coefs, comps, w, h, qtables, hmax,
-    vmax) with coefs[ci] an int32[bh, bw, 64] zigzag-indexed grid —
-    exposed separately so tests can compare coefficients byte-exact
-    against libjpeg's dump (pixel space would blur the comparison
-    through two different IDCT roundings)."""
-    import numpy as np
-
-    if data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG")
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    dc_cond = {t: (0, 1) for t in range(4)}
-    ac_cond = {t: 5 for t in range(4)}
-    w = h = None
-    restart_interval = 0
-    comps: list[dict] = []
-    coefs: list = []
-    mcus_x = mcus_y = hmax = vmax = 0
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("bad JPEG marker alignment")
-        marker = data[pos + 1]
-        if marker == 0xD9:
-            break
-        if 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if pos + 4 > len(data):
-            raise ValueError("truncated JPEG segment")
-        seglen = struct.unpack(">H", data[pos + 2 : pos + 4])[0]
-        seg = data[pos + 4 : pos + 2 + seglen]
-        if marker == 0xDB:
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 0x0F
-                if pq != 0:
-                    raise NotImplementedError("16-bit quant tables unsupported")
-                qtables[tq] = list(seg[p + 1 : p + 65])
-                p += 65
-        elif marker == 0xCA:  # SOF10
-            prec, h, w, ncomp = seg[0], *struct.unpack(">HH", seg[1:5]), seg[5]
-            if prec != 8:
-                raise NotImplementedError("only 8-bit JPEG supported")
-            if ncomp not in (1, 3):
-                raise NotImplementedError(f"{ncomp}-component JPEG unsupported")
-            for ci in range(ncomp):
-                cid, sampling, tq = seg[6 + 3 * ci : 9 + 3 * ci]
-                hi, vi = sampling >> 4, sampling & 0x0F
-                if not (1 <= hi <= 4 and 1 <= vi <= 4):
-                    raise ValueError(f"bad JPEG sampling factors {hi}x{vi}")
-                comps.append({"cid": cid, "tq": tq, "hi": hi, "vi": vi})
-            hmax = max(c["hi"] for c in comps)
-            vmax = max(c["vi"] for c in comps)
-            if any(hmax % c["hi"] or vmax % c["vi"] for c in comps):
-                raise NotImplementedError("non-integer chroma sampling ratios")
-            mcus_x = (w + 8 * hmax - 1) // (8 * hmax)
-            mcus_y = (h + 8 * vmax - 1) // (8 * vmax)
-            for c in comps:
-                cw = (w * c["hi"] + hmax - 1) // hmax
-                ch = (h * c["vi"] + vmax - 1) // vmax
-                c["bw"], c["bh"] = (cw + 7) // 8, (ch + 7) // 8
-                coefs.append(
-                    np.zeros((mcus_y * c["vi"], mcus_x * c["hi"], 64), np.int32)
-                )
-        elif marker == 0xCC:
-            p = 0
-            while p < len(seg):
-                tc, tb, cs = seg[p] >> 4, seg[p] & 0x0F, seg[p + 1]
-                if tc == 0:
-                    dc_cond[tb] = (cs & 0x0F, cs >> 4)
-                else:
-                    ac_cond[tb] = cs
-                p += 2
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCB):
-            raise ValueError("mixed/unsupported SOF in progressive-arithmetic decode")
-        elif marker == 0xDD:
-            restart_interval = struct.unpack(">H", seg[:2])[0]
-        elif marker == 0xDA:
-            if not comps:
-                raise ValueError("JPEG SOS before SOF10")
-            ns = seg[0]
-            scomps = []
-            by_cid = {c["cid"]: (i, c) for i, c in enumerate(comps)}
-            for si in range(ns):
-                cid, tids = seg[1 + 2 * si], seg[2 + 2 * si]
-                if cid not in by_cid:
-                    raise ValueError("SOS names unknown component")
-                ci, c = by_cid[cid]
-                scomps.append((ci, c, tids >> 4, tids & 0x0F))
-            ss, se, ahal = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
-            pos = _qm_prog_scan(
-                data, pos + 2 + seglen, comps, scomps, coefs, ss, se,
-                ahal >> 4, ahal & 0x0F, dc_cond, ac_cond,
-                restart_interval, mcus_x, mcus_y,
-            )
-            continue
-        pos += 2 + seglen
-    if w is None or not comps:
-        raise ValueError("JPEG missing SOF10")
-    return coefs, comps, w, h, qtables, hmax, vmax
-
-
-def _jpeg_pixels_arith_prog(data: bytes) -> tuple[int, int, bytes]:
-    """REAL progressive-arithmetic (SOF10) JPEG decode: the SOF2 scan
-    walk with QM-coded scan bodies (see the section comment above for
-    the G.2 model mapping), then the shared batched dequant/IDCT/
-    upsample/YCbCr tail."""
-    import numpy as np
-
-    coefs, comps, w, h, qtables, hmax, vmax = _jpeg_arith_prog_coefs(data)
-    a = _idct_matrix()
-    planes = []
-    for ci, c in enumerate(comps):
-        if c["tq"] not in qtables:
-            raise ValueError("JPEG missing DQT for a component")
-        q = np.array(qtables[c["tq"]], np.float64)
-        grid = coefs[ci].astype(np.float64) * q
-        bh_full, bw_full = grid.shape[:2]
-        f = np.zeros((bh_full, bw_full, 8, 8))
-        zz_rows = [z // 8 for z in _ZIGZAG]
-        zz_cols = [z % 8 for z in _ZIGZAG]
-        f[:, :, zz_rows, zz_cols] = grid
-        # a.T @ f @ a batched over (bh, bw) blocks — identical
-        # contraction order to the baseline per-block path, without
-        # einsum's per-call path search (~20% of the decode profile)
-        px = (a.T @ f) @ a
-        planes.append(
-            px.transpose(0, 2, 1, 3).reshape(bh_full * 8, bw_full * 8) + 128.0
-        )
-    return _jpeg_finish(planes, comps, w, h, hmax, vmax)
 
 
 def _jpeg_encode_arith_prog_gray(
@@ -3228,13 +2623,7 @@ def _jpeg_encode_arith_prog_gray(
     AC model. (An AC-refinement ENCODER is deliberately out of scope:
     the decode path for it is pinned by the libjpeg gold files, whose
     jpeg_simple_progression script emits AC refinement scans.)"""
-    def seg(marker: int, body: bytes) -> bytes:
-        return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes(q))
-    out += seg(0xCA, bytes([8]) + struct.pack(">HH", h, w) + bytes([1, 1, 0x11, 0]))
-    out += seg(0xCC, bytes([0x00, 0x10, 0x10, 5]))
+    out = _jpeg_header(0xCA, w, h, q, [0x11])
 
     # scan 1: DC first, Al=1 (codes diffs of DC>>1)
     enc = _QMEncoder()
@@ -3244,7 +2633,7 @@ def _jpeg_encode_arith_prog_gray(
         v = zz[0] >> 1  # arithmetic shift matches the decoder's <<1 + refine bit
         ctx = _qm_encode_dc(enc, dc_stats, ctx, v - last, (0, 1))
         last = v
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x01]))
+    out += _jpeg_sos([1], 0, 0, 0, 1)
     out += enc.flush()
 
     # scan 2: DC refinement, Ah=1 Al=0 (one fixed-bin bit per block)
@@ -3252,7 +2641,7 @@ def _jpeg_encode_arith_prog_gray(
     fixed = bytearray([_QM_FIXED_BIN])
     for zz in blocks_zz:
         enc.encode(fixed, 0, zz[0] & 1)
-    out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x10]))
+    out += _jpeg_sos([1], 0, 0, 1, 0)
     out += enc.flush()
 
     # scan 3: AC first, band 1..63, Al=0
@@ -3261,7 +2650,7 @@ def _jpeg_encode_arith_prog_gray(
     fixed = bytearray([_QM_FIXED_BIN])
     for zz in blocks_zz:
         _qm_encode_ac(enc, ac_stats, fixed, zz, 5)
-    out += seg(0xDA, bytes([1, 1, 0x00, 1, 63, 0x00]))
+    out += _jpeg_sos([1], 1, 63, 0, 0)
     out += enc.flush()
 
     out += b"\xff\xd9"

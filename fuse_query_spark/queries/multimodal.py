@@ -315,7 +315,7 @@ def multimodal_jpeg_arith_decode(spark, sf_dir):
     (operators/multimodal._jpeg_encode_arith_gray), and run the full
     decoder — marker walk with DAC conditioning, QM probability-
     estimation state machine, DC/AC statistical models, dequant, IDCT
-    (_jpeg_pixels_arith). Same oracle as multimodal_jpeg_decode, so a
+    (_jpeg_pixels; QM scans in _ArithmeticScan). Same oracle as multimodal_jpeg_decode, so a
     hash match proves the arithmetic entropy path reproduces exactly
     what the Huffman path encodes. The codec is additionally validated
     byte-exact against libjpeg's own arithmetic coder in BOTH
@@ -351,9 +351,9 @@ def multimodal_jpeg_arith_progressive_decode(spark, sf_dir):
     boundary is lossless JPEG only): synthesize SOF10 files whose DC
     arrives across two successive-approximation QM scans plus a banded
     AC scan (operators/multimodal._jpeg_encode_arith_prog_gray), decode
-    via the progressive scan walk with arithmetic scan bodies
-    (_jpeg_pixels_arith_prog: per-scan coder + statistics reset, G.2
-    DC/AC models, AC-refinement correction bits). Flat-DC closed form
+    via the one scan walk with the arithmetic coder (_jpeg_pixels;
+    _ArithmeticScan: per-scan coder + statistics reset, G.2 DC/AC
+    models, AC-refinement correction bits). Flat-DC closed form
     — same oracle as the baseline/progressive/arithmetic twins. The
     decode path is additionally pinned byte-exact against libjpeg's
     jpeg_simple_progression + arith_code output in

@@ -475,19 +475,23 @@ def _run_actions_interruptibly(
 
 
 def probe_alive(candidates: list[str], timeout: float = 10.0) -> list[str]:
-    """Peers that answer a Flight handshake right now, probed
-    CONCURRENTLY — a dead peer costs one timeout, not a serial stall
-    each. Shared by the stage runner's retries and the Engine.sql
+    """Peers that answer one Flight RPC (list_actions) within `timeout`
+    seconds, probed CONCURRENTLY. The deadline only bounds a slow but
+    live peer: a refused port fails the call at once, where waiting
+    for the channel to become available would sit out the whole
+    timeout. Shared by the stage runner's retries and the Engine.sql
     reachability check."""
     from concurrent.futures import ThreadPoolExecutor
 
     def _probe(p: str) -> str | None:
         try:
             c = flight.connect(p)
-            c.wait_for_available(timeout=timeout)
-            c.close()
+            try:
+                list(c.list_actions(flight.FlightCallOptions(timeout=timeout)))
+            finally:
+                c.close()
             return p
-        except Exception:
+        except pa.ArrowException:
             return None
 
     with ThreadPoolExecutor(max_workers=max(1, len(candidates))) as ex:

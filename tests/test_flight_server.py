@@ -120,6 +120,23 @@ class TestSurface:
         kinds = {a.type for a in client.list_actions()}
         assert kinds == {"PrepareShuffleAction"}
 
+    def test_probe_reports_refused_port_dead_at_once(self, server):
+        """probe_alive answers for a peer whose port refuses connections
+        at once, not after its timeout (which only bounds a slow, live
+        peer), and still reports a live peer alive."""
+        import socket
+        import time
+
+        from fuse_query_spark.servers.flight_server import probe_alive
+
+        with socket.socket() as s:  # a port that was free: now refused
+            s.bind(("localhost", 0))
+            dead = f"grpc://localhost:{s.getsockname()[1]}"
+        live = f"grpc://localhost:{server.port}"
+        t0 = time.monotonic()
+        assert probe_alive([dead, live], timeout=30) == [live]
+        assert time.monotonic() - t0 < 1.0
+
     def test_unknown_action_unimplemented(self, client):
         import pyarrow as pa
 

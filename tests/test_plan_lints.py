@@ -422,3 +422,63 @@ def test_distributed_planner_reads_no_sql_text():
         elif isinstance(node, ast.Import):
             imported += [a.name for a in node.names]
     assert [m for m in imported if m.startswith("fuse_query_spark.dialect")] == []
+
+
+# A JPEG segment-length read: the two bytes after a marker at `pos`,
+# sliced `data[pos + 2 : pos + 4]` or shifted `data[pos + 2] << 8`.
+_SEGMENT_LENGTH = re.compile(r"\[\s*(\w+)\s*\+\s*2\s*(?::\s*\1\s*\+\s*4\s*\]|\]\s*<<\s*8)")
+
+
+def _jpeg_walk_report(src: str) -> tuple[set[str], list[str]]:
+    """(functions that read a JPEG segment length, nested `seg`
+    helpers as outer.seg) in one module's source."""
+    import ast
+
+    funcs = [
+        n for n in ast.walk(ast.parse(src))
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+
+    def owner(lineno: int) -> str:
+        inner = [f for f in funcs if f.lineno <= lineno <= f.end_lineno]
+        return min(inner, key=lambda f: f.end_lineno - f.lineno).name if inner else "<module>"
+
+    readers = {
+        owner(n) for n, line in enumerate(src.splitlines(), 1) if _SEGMENT_LENGTH.search(line)
+    }
+    nested = [
+        f"{outer.name}.{f.name}"
+        for outer in funcs
+        for f in ast.walk(outer)
+        if f is not outer and isinstance(f, ast.FunctionDef) and f.name == "seg"
+    ]
+    return readers, nested
+
+
+def test_one_jpeg_segment_walk():
+    """One function reads JPEG segment lengths: in
+    operators/multimodal.py only _jpeg_segments takes the two length
+    bytes after a marker, and no function defines a nested `seg`
+    writer. The header probes and the decoder walk through
+    _jpeg_segments, and every encoder writes through _jpeg_seg, so a
+    second marker walk cannot drift from the first."""
+    import pathlib
+
+    src = pathlib.Path(__file__).resolve().parent.parent / "fuse_query_spark/operators/multimodal.py"
+    assert _jpeg_walk_report(src.read_text()) == ({"_jpeg_segments"}, [])
+
+
+def test_jpeg_walk_lint_flags_second_walks():
+    """The lint recognizes the shapes it forbids."""
+    src = """
+def _jpeg_segments(data, pos):
+    end = pos + 2 + (data[pos + 2] << 8 | data[pos + 3])
+
+def _jpeg_dims(b, pos):
+    seglen = struct.unpack(">H", b[pos + 2 : pos + 4])[0]
+
+def encode():
+    def seg(marker, body):
+        return body
+"""
+    assert _jpeg_walk_report(src) == ({"_jpeg_segments", "_jpeg_dims"}, ["encode.seg"])

@@ -1,7 +1,11 @@
 /* Tiny libjpeg harness used ONLY by tests as an external differential
- * oracle for the arithmetic-coded JPEG implementation:
- *   encode <w> <h> <ncomp> [h2v2]  : raw pixels on stdin  -> arithmetic JPEG on stdout
+ * oracle for the JPEG implementation:
+ *   encode <w> <h> <ncomp> [h2v2]  : raw pixels on stdin  -> JPEG on stdout
  *   decode                          : JPEG on stdin        -> "w h ncomp\n" + raw pixels on stdout
+ *   coefs                           : JPEG on stdin        -> quantized DCT coefficients
+ * encode writes arithmetic coding unless HARNESS_HUFFMAN is set;
+ * HARNESS_PROGRESSIVE selects jpeg_simple_progression and
+ * HARNESS_RESTART=<n> a restart interval of n MCUs.
  * Public libjpeg API only. */
 #include <stdio.h>
 #include <stdlib.h>
@@ -29,7 +33,7 @@ static int enc(int w, int h, int ncomp, int subsample) {
   c.in_color_space = ncomp == 1 ? JCS_GRAYSCALE : JCS_YCbCr;
   jpeg_set_defaults(&c);
   jpeg_set_quality(&c, 95, TRUE);
-  c.arith_code = TRUE;
+  c.arith_code = getenv("HARNESS_HUFFMAN") ? FALSE : TRUE;
   { const char *ri = getenv("HARNESS_RESTART"); if (ri) c.restart_interval = atoi(ri); }
   if (getenv("HARNESS_PROGRESSIVE")) jpeg_simple_progression(&c);
   c.optimize_coding = FALSE;
