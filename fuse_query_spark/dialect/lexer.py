@@ -2,7 +2,8 @@
 dialect rewriter, distributed planner, wire servers) finds string
 literals, quoted identifiers and comments here, so a statement is
 lexed the same way at every step. No other module tests for a quote
-character.
+character. Cursor, at the end, is the grammar of every statement but a
+query: word, punctuation and name tokens read left to right.
 
 Rules, as Spark 4.1's parser applies them (checked against pyspark
 4.1.2 with default settings):
@@ -37,6 +38,8 @@ from __future__ import annotations
 import re
 from collections.abc import Callable, Iterator
 
+from fuse_query_spark.errors import SyntaxError_
+
 _SQ = r"'(?:[^'\\]|\\[\s\S]|'')*+'"
 _DQ = r'"(?:[^"\\]|\\[\s\S]|"")*+"'
 _RAW = r"""(?:'[^']*'|"[^"]*")"""
@@ -68,6 +71,22 @@ _ESCAPE = re.compile(
 _ESCAPED = {"0": "\0", "b": "\b", "n": "\n", "r": "\r", "t": "\t", "Z": "\x1a", "%": "\\%", "_": "\\_"}
 
 
+def _close(sql: str, m: re.Match) -> tuple[str, int]:
+    """Kind and end of the token _TOKEN matched at ``m``."""
+    kind, end = _KINDS[m.lastgroup], m.end()
+    if kind == "open":
+        end = len(sql)
+    elif m.lastgroup == "block":
+        depth = 1
+        while depth:
+            edge = _BLOCK_EDGE.search(sql, end)
+            if edge is None:
+                return "open", len(sql)
+            depth += 1 if edge.group() == "/*" else -1
+            end = edge.end()
+    return kind, end
+
+
 def _tokens(sql: str) -> Iterator[tuple[str, int, int]]:
     """``(kind, start, end)`` of each literal, quoted identifier,
     comment and hint, in order; the text between them is code. Kinds:
@@ -75,18 +94,7 @@ def _tokens(sql: str) -> Iterator[tuple[str, int, int]]:
     the text)."""
     pos = 0
     while (m := _TOKEN.search(sql, pos)) is not None:
-        kind, end = _KINDS[m.lastgroup], m.end()
-        if kind == "open":
-            end = len(sql)
-        elif m.lastgroup == "block":
-            depth = 1
-            while depth:
-                edge = _BLOCK_EDGE.search(sql, end)
-                if edge is None:
-                    kind, end = "open", len(sql)
-                    break
-                depth += 1 if edge.group() == "/*" else -1
-                end = edge.end()
+        kind, end = _close(sql, m)
         yield kind, m.start(), end
         pos = end
 
@@ -210,3 +218,153 @@ def string_value(text: str) -> str | None:
 def quote(value: str) -> str:
     """``value`` as a string literal that decodes back to it."""
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def quote_name(name: str) -> str:
+    """``name`` as a quoted identifier that reads back as it."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+# ---------- the statement grammar ----------
+
+_SPACE = re.compile(r"\s*")
+_WORD = re.compile(r"(\w+)|[^\w\s]")
+
+
+def _token_at(sql: str, pos: int) -> tuple[str, int, int] | None:
+    """``(kind, start, end)`` of the first token at or after ``pos``
+    past whitespace and comments — kind ``word`` (word characters),
+    ``punct`` (one other character) or a _tokens kind — or None."""
+    while (pos := _SPACE.match(sql, pos).end()) < len(sql):
+        m = _TOKEN.match(sql, pos)
+        if m is None:
+            w = _WORD.match(sql, pos)
+            return ("word" if w.lastindex else "punct"), pos, w.end()
+        kind, end = _close(sql, m)
+        if kind != "comment":
+            return kind, pos, end
+        pos = end
+    return None
+
+
+class Cursor:
+    """A statement read token by token from the left: the grammar of
+    every statement but a query. A statement kind is a short pattern of
+    keywords (any case), names and punctuation, with any whitespace and
+    comments between tokens. The expression parts it hands on
+    (predicates, values, column types, a query) are slices of the
+    source text, taken without lexing them. Input that does not fit
+    raises SyntaxError_."""
+
+    def __init__(self, sql: str, pos: int = 0):
+        self.sql, self.pos = sql, pos  # pos: the end of the last token read
+        self.tok = _token_at(sql, pos)  # the next token, None at the end
+
+    def take(self) -> tuple[str, int, int]:
+        """Read the next token, whatever it is."""
+        tok, self.pos = self.tok, self.tok[2]
+        self.tok = _token_at(self.sql, self.pos)
+        return tok
+
+    def error(self, expected: str) -> SyntaxError_:
+        at = repr(self.sql[self.tok[1] :][:40]) if self.tok else "the end"
+        return SyntaxError_(f"Syntax error: expected {expected} at {at} in: {self.sql[:80]}")
+
+    def at(self, *words: str) -> bool:
+        """True when the next tokens are ``words``: upper-case keywords
+        or punctuation characters."""
+        tok = self.tok
+        for w in words:
+            if tok is None or tok[0] == "ident" or self.sql[tok[1] : tok[2]].upper() != w:
+                return False
+            tok = _token_at(self.sql, tok[2])
+        return True
+
+    def accept(self, *words: str) -> bool:
+        """Read ``words`` if they come next; whether they did."""
+        if self.at(*words):
+            for _w in words:
+                self.take()
+            return True
+        return False
+
+    def expect(self, *words: str) -> None:
+        if not self.accept(*words):
+            raise self.error(" ".join(words))
+
+    def end(self) -> None:
+        if self.tok is not None:
+            raise self.error("the end of the statement")
+
+    def name(self) -> str:
+        """A bare word or a backtick-quoted name (``` `` ``` is one
+        backtick)."""
+        kind, a, b = self.tok or ("", 0, 0)
+        if kind not in ("word", "ident") or self.sql[a:b] == "``":
+            raise self.error("a name")
+        self.take()
+        return self.sql[a + 1 : b - 1].replace("``", "`") if kind == "ident" else self.sql[a:b]
+
+    def table(self) -> tuple[str | None, str]:
+        """``[db.]table``: (the database or None, the table)."""
+        first = self.name()
+        return (first, self.name()) if self.accept(".") else (None, first)
+
+    def names(self) -> list[str]:
+        """``(name, …)``."""
+        self.expect("(")
+        out = [self.name()]
+        while self.accept(","):
+            out.append(self.name())
+        self.expect(")")
+        return out
+
+    def number(self) -> int:
+        if self.tok is None or not self.sql[self.tok[1] : self.tok[2]].isdecimal():
+            raise self.error("a number")
+        _kind, a, b = self.take()
+        return int(self.sql[a:b])
+
+    def string(self) -> str:
+        """The value of a string literal (adjacent ones concatenate)."""
+        if self.tok is None or self.tok[0] != "string":
+            raise self.error("a string literal")
+        start = self.tok[1]
+        while self.tok is not None and self.tok[0] == "string":
+            self.take()
+        return string_value(self.sql[start : self.pos])
+
+    def upto(self, word: str | None) -> str:
+        """The source text up to the keyword ``word`` outside
+        parentheses (the cursor stops before it) or to the end; with no
+        ``word``, through the ``)`` closing an open parenthesis."""
+        start, depth = self.tok[1] if self.tok else self.pos, 0
+        while self.tok is not None and not (word and depth == 0 and self.at(word)):
+            kind, a, _b = self.take()
+            if kind == "punct" and self.sql[a] in "()":
+                depth += 1 if self.sql[a] == "(" else -1
+                if depth < 0 and word is None:
+                    return self.sql[start:a].strip()
+        if word is None:
+            raise self.error("')'")
+        return self.sql[start : self.tok[1] if self.tok else len(self.sql)].strip()
+
+    def group(self) -> str:
+        """The source text inside the parenthesized group that comes
+        next (nested groups and literals included), stripped."""
+        self.expect("(")
+        return self.upto(None)
+
+    def rest(self) -> str:
+        """The source text from the next token to the end, not empty."""
+        if self.tok is None:
+            raise self.error("more")
+        text, self.tok, self.pos = self.sql[self.tok[1] :].strip(), None, len(self.sql)
+        return text
+
+    def query(self) -> str:
+        """The rest of the statement, which must be a query."""
+        if not (self.at("SELECT") or self.at("WITH") or self.at("(")):
+            raise self.error("a query")
+        return self.rest()
+

@@ -2,14 +2,16 @@
 the reference's query lifecycle (SURVEY §3) re-expressed over Spark.
 
 Statement routing mirrors InterpreterFactory (interpreters/
-interpreter_factory.rs:25): DDL/utility statements are interpreted
-directly against the engine catalog; SELECTs go through the dialect
-rewriter into spark.sql, where Catalyst plays the role of the
-reference's 4-pass optimizer + pipeline builder.
+interpreter_factory.rs:25): DDL/utility statements are read by the
+statement grammar (dialect.lexer.Cursor) and interpreted directly
+against the engine catalog; SELECTs go through the dialect rewriter
+into spark.sql, where Catalyst plays the role of the reference's
+4-pass optimizer + pipeline builder.
 """
 
 from __future__ import annotations
 
+import collections
 import itertools
 import json
 import os
@@ -17,15 +19,19 @@ import re
 import threading
 import time
 from dataclasses import dataclass, field
+from functools import partialmethod
 
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType, _parse_datatype_string
 
 from fuse_query_spark import session as _session
+from fuse_query_spark.cluster import ClusterRegistry
 from fuse_query_spark.dialect.lexer import (
-    STRING_LITERAL,
+    Cursor,
     mask,
+    quote,
+    quote_name,
     split,
     string_value,
     strip_comments,
@@ -36,19 +42,22 @@ from fuse_query_spark.errors import (
     BadDataValueType,
     DatabaseAlreadyExists,
     QueryAborted,
+    SyntaxError_,
     TableAlreadyExists,
+    UnknownColumn,
     UnknownDatabase,
     UnknownTable,
     UnsupportedStatement,
 )
 from fuse_query_spark.functions.registry import register_udfs
-from fuse_query_spark.sources import system_tables as systbl
+from fuse_query_spark.sources import snapshots, system_tables as systbl
 from fuse_query_spark.sources.storage import (
     PARTITIONABLE,
     Mutation,
     Storage,
     parquet_schema,
     partition_columns,
+    partition_names,
     partition_path,
     partition_prefix,
     storage_for,
@@ -140,43 +149,26 @@ class Engine:
         self.catalog = Catalog()
         self.current_db = "default"
         self.store = None  # StoreClient once attach_store() is called
-        # live-statement registry backing system.processes
+        # live statements by pid, for system.processes
         # (processes_table.rs:27 keeps a ProcessInfo per running query)
         self._live: dict[str, dict] = {}
-        # one StatementRecord per executed statement, backing both
-        # system.query_log and system.tracing (which derives its
-        # bunyan fields from each record at read time)
-        import collections
-
+        # one StatementRecord per executed statement, for
+        # system.query_log and system.tracing
         self._statements: collections.deque = collections.deque(maxlen=4096)
-        # cluster-membership metadata (clusters/cluster.rs:23-27),
-        # mutated by the HTTP API and read by system.clusters; lives
-        # in core so the engine never imports the servers layer
-        from fuse_query_spark.cluster import ClusterRegistry
-
+        # cluster membership (clusters/cluster.rs:23-27), mutated by the
+        # HTTP API and read by system.clusters
         self.cluster = ClusterRegistry()
-        # per-thread record of flight_stream() temp views awaiting
-        # cleanup by the Flight stage actions — EAGER init: a lazy
-        # `if not hasattr` under two concurrent stage actions could
-        # replace the other thread's local and orphan its view
-        # (code-review r10)
+        # per thread: the flight_stream() temp views a Flight stage
+        # action drops after its plan ran, and whether the thread is in
+        # one (only there do refs resolve to gRPC connections)
         self._fs_views_tl = threading.local()
-        # per-thread flag set by the Flight stage actions while they
-        # execute their plan: flight_stream() table refs resolve ONLY
-        # under it (advice r10 — resolvable from the general SQL
-        # surface, any wire client could make this server open gRPC
-        # connections to arbitrary client-supplied addresses and pin
-        # one materialized view per distinct id for the session)
         self._stage_action_tl = threading.local()
         # serializes the session-global groupByOrdinal toggle around
-        # statement ANALYSIS (see _select); execution stays concurrent
-        # (threading comes from the module import — a function-local
-        # re-import here shadowed it for the whole body)
+        # statement analysis (see _analyze); execution stays concurrent
         self._ordinal_lock = threading.Lock()
         self._view_local = threading.local()  # per-thread view-expansion stack
-        # per-thread pid of the statement currently executing — lets
-        # deep paths (the distributed gather's abort check) see their
-        # own KILL without threading pid through every signature
+        # per thread: the pid of the statement executing, so deep paths
+        # (the distributed gather's abort check) see their own KILL
         self._stmt_local = threading.local()
         self.settings: dict[str, Setting] = {
             # reference defaults: sessions/settings.rs:20-34
@@ -186,10 +178,8 @@ class Engine:
             ),
             "max_block_size": Setting(10000, 10000, "no-op: Spark sizes batches internally"),
             # the standalone-vs-cluster scatter thresholds
-            # (optimizer_scatters.rs:150-210): a clustered engine
-            # fans a distributable statement out only when the read
-            # source meets either bound — below them the fan-out's
-            # fixed stage premium dominates (SCALE.md r10/r11)
+            # (optimizer_scatters.rs:150-210): a clustered engine fans a
+            # statement out only when its source meets either bound
             "min_distributed_rows": Setting(
                 100_000_000, 100_000_000,
                 "distribute only sources with at least this many rows",
@@ -203,16 +193,13 @@ class Engine:
     # ---------- public API ----------
 
     def attach_store(self, url: str) -> None:
-        """Attach a remote store (sources/remote_store.FuseStore). The
-        reference connects to fusestore at session build
-        (store_client_provider.rs) and registers its databases
-        (datasource.rs register_remote_database); here: every store
-        database becomes a remote-engine catalog entry, and CREATE
-        DATABASE without `ENGINE = Local` lands store-side from now
-        on (09_0000_remote_create_table: engine shows `remote`).
-        grpc:// urls attach over the Arrow Flight transport (the
-        reference store's actual protocol — remote_store_flight.py);
-        http:// over the HTTP/JSON transport. Same client surface."""
+        """Attach a remote store (sources/remote_store.FuseStore), as the
+        reference registers fusestore's databases at session build
+        (datasource.rs register_remote_database): every store database
+        becomes a remote-engine catalog entry, and CREATE DATABASE
+        without `ENGINE = Local` lands store-side from now on. grpc://
+        urls attach over Arrow Flight (remote_store_flight.py), http://
+        over HTTP/JSON; the client surface is the same."""
         if url.startswith("grpc://"):
             from fuse_query_spark.sources.remote_store_flight import StoreFlightClient
 
@@ -261,12 +248,11 @@ class Engine:
         return result
 
     def sql_collect(self, text: str):
-        """Execute statements and COLLECT the final result INSIDE the
-        statement scope — the serving-path API (MySQL front-end): the
-        expensive collect runs while the pid is live in
-        system.processes, under the cancellable job group (so KILL
-        QUERY works on it), and the tracing record bills the real
-        execution time. Returns (DataFrame | None, rows | None)."""
+        """Execute statements and collect the final result inside the
+        statement scope — the serving path: the collect runs while the
+        pid is live in system.processes, under the cancellable job group
+        (KILL QUERY reaches it), and its time is traced. Returns
+        (DataFrame | None, rows | None)."""
         result = None
         for stmt in split(text, ";"):
             if strip_comments(stmt).strip():
@@ -278,12 +264,10 @@ class Engine:
     _pid_counter = itertools.count(1)
 
     def _execute(self, stmt: str, eager: bool = False):
-        """Dispatch one statement, tracking it in the live-process
-        registry for system.processes (processes_table.rs parity: the
-        reference registers a ProcessInfo per running query), inside a
-        cancellable Spark job group (AbortStream/KILL analogue —
-        stream_abort.rs:19-26), and recording a tracing span on exit
-        (tracing_table.rs:26)."""
+        """Dispatch one statement, listed in system.processes while it
+        runs, inside a cancellable Spark job group (the AbortStream/KILL
+        analogue, stream_abort.rs:19-26), recorded for system.tracing
+        on exit (tracing_table.rs:26)."""
         s = strip_comments(stmt).strip()
         pid = str(next(Engine._pid_counter))
         self._live[pid] = {
@@ -302,13 +286,10 @@ class Engine:
         try:
             out = self._dispatch(s)
             if eager and isinstance(out, DataFrame):
-                # collect INSIDE the statement scope: live pid, active
-                # job group, honest trace timing (see sql_collect).
-                # KILL QUERY may land BEFORE the collect submits its
-                # first job — cancelJobGroup only cancels jobs already
-                # running — so check the abort flag on both sides of
-                # the collect; cancel()'s re-cancel loop covers jobs
-                # that start in between.
+                # collect inside the statement scope (see sql_collect).
+                # A KILL that lands before the collect submits a job
+                # cancels nothing, so the abort flag is checked on both
+                # sides; cancel()'s re-cancel loop covers the jobs between
                 if self._live.get(pid, {}).get("state") == "Aborted":
                     raise QueryAborted(f"query {pid} killed")
                 rows = out.collect()
@@ -344,31 +325,20 @@ class Engine:
         )
 
     def cancel(self, pid: str) -> bool:
-        """Cancel a running statement by its system.processes id — the
-        engine's KILL QUERY / AbortStream analogue (stream_abort.rs:
-        19-26; the reference wires an AbortHandle into every result
-        stream). Returns True if the pid was live; the executing
-        thread's action raises SparkException (job group cancelled).
-
-        Scope: cancels work executing INSIDE the engine (INSERT ...
-        SELECT writes, sleep(), eager interpreter steps) — the unit a
-        server-side reference query maps to. A SELECT returned to the
-        caller as a lazy DataFrame and collected later runs outside
-        any engine statement; cancel that through Spark's own job-group
-        API on the collecting thread."""
+        """Cancel a running statement by its system.processes id — KILL
+        QUERY (stream_abort.rs:19-26). Returns True if the pid was live;
+        the executing thread's action raises SparkException. It cancels
+        work executing inside the engine (INSERT … SELECT writes,
+        sleep(), eager collects); a SELECT returned as a lazy DataFrame
+        and collected later runs outside any statement."""
         info = self._live.get(pid)
         if info is None:
             return False
         info["state"] = "Aborted"
         self.spark.sparkContext.cancelJobGroup(f"fq-{pid}")
 
-        # cancelJobGroup only cancels jobs ALREADY RUNNING: a KILL that
-        # lands between the pid registering and the collect submitting
-        # its first job (or between two jobs of a multi-job statement)
-        # would otherwise be a no-op and the query would run to
-        # completion. Re-issue the cancel while the pid stays live so
-        # late-starting jobs in the group die too (bounded — the
-        # statement scope pops the pid in its finally).
+        # cancelJobGroup cancels only running jobs: re-issue it while
+        # the pid stays live, so jobs that start later die too
         def _reap():
             deadline = time.time() + 60
             while pid in self._live and time.time() < deadline:
@@ -381,329 +351,261 @@ class Engine:
         threading.Thread(target=_reap, name=f"fq-kill-{pid}", daemon=True).start()
         return True
 
-    def _dispatch(self, s: str):
-        up = s.upper()
-        if up.startswith("CREATE TABLE"):
-            return self._create_table(s)
-        if up.startswith("DROP TABLE"):
-            return self._drop_table(s)
-        if up.startswith("CREATE VIEW") or up.startswith("CREATE OR REPLACE VIEW"):
-            return self._create_view(s)
-        if up.startswith("CREATE MATERIALIZED VIEW"):
-            return self._create_materialized_view(s)
-        if up.startswith("REFRESH "):
-            return self._refresh_materialized_view(s)
-        if up.startswith("DROP VIEW"):
-            # regex-swap ONLY the keyword: a naive str.replace on the
-            # statement text mangles identifiers containing "view"
-            # ('DROP VIEW page_views' -> 'DROP TABLE page_TABLEs')
-            return self._drop_table(re.sub(r"(?i)^DROP\s+VIEW\b", "DROP TABLE", s, count=1))
-        if up.startswith("CREATE DATABASE"):
-            return self._create_database(s)
-        if up.startswith("DROP DATABASE"):
-            return self._drop_database(s)
-        if up.startswith("USE "):
-            return self._use(s)
-        if up.startswith("DESCRIBE ") or up.startswith("DESC "):
-            return self._describe(s)
-        if up.startswith("SHOW "):
-            return self._show(s)
-        if up.startswith("SET "):
-            return self._set(s)
-        if up.startswith("INSERT "):
-            return self._insert(s)
-        if up.startswith("ALTER TABLE"):
-            return self._alter_table(s)
-        if up.startswith("RENAME TABLE"):
-            m = re.match(r"(?is)^RENAME\s+TABLE\s+([\w.]+)\s+TO\s+([\w.]+)\s*$", s)
-            if not m:
-                raise UnsupportedStatement(f"Cannot parse RENAME TABLE: {s[:60]}")
-            return self._alter_schema(
-                f"ALTER TABLE {m.group(1)} RENAME TO {m.group(2)}"
-            )
-        if up.startswith("TRUNCATE "):
-            return self._truncate(s)
-        if up.startswith("ROLLBACK TABLE"):
-            return self._rollback_table(s)
-        if up.startswith("VACUUM "):
-            return self._vacuum(s)
-        if up.startswith("OPTIMIZE "):
-            return self._optimize(s)
-        if up.startswith("DELETE "):
-            return self._delete(s)
-        if up.startswith("UPDATE "):
-            return self._update(s)
-        if up.startswith("EXPLAIN"):
-            return self._explain(s)
-        if up.startswith("KILL "):
-            return self._kill(s)
-        if up.startswith(("SELECT", "WITH", "(")):
-            return self._select(s)
-        raise UnsupportedStatement(f"Unsupported statement: {s[:60]}")
+    # statement kinds by their leading keywords; each handler reads the
+    # rest of its statement through the cursor (dialect.lexer.Cursor)
+    _STATEMENTS = (
+        (("CREATE", "TABLE"), "_create_table"),
+        (("CREATE", "VIEW"), "_create_view"),
+        (("CREATE", "OR", "REPLACE", "VIEW"), "_replace_view"),
+        (("CREATE", "MATERIALIZED", "VIEW"), "_create_materialized_view"),
+        (("CREATE", "DATABASE"), "_create_database"),
+        (("DROP", "TABLE"), "_drop_table"),
+        (("DROP", "VIEW"), "_drop_table"),
+        (("DROP", "DATABASE"), "_drop_database"),
+        (("REFRESH", "MATERIALIZED", "VIEW"), "_refresh_materialized_view"),
+        (("USE",), "_use"),
+        (("DESCRIBE",), "_describe"),
+        (("DESC",), "_describe"),
+        (("SHOW",), "_show"),
+        (("SET",), "_set"),
+        (("INSERT", "INTO"), "_insert"),
+        (("INSERT", "OVERWRITE"), "_insert_overwrite"),
+        (("ALTER", "TABLE"), "_alter_table"),
+        (("RENAME", "TABLE"), "_rename_table"),
+        (("TRUNCATE", "TABLE"), "_truncate"),
+        (("ROLLBACK", "TABLE"), "_rollback_table"),
+        (("VACUUM",), "_vacuum"),
+        (("OPTIMIZE", "TABLE"), "_optimize"),
+        (("DELETE", "FROM"), "_delete"),
+        (("UPDATE",), "_update"),
+        (("EXPLAIN",), "_explain"),
+        (("KILL", "QUERY"), "_kill"),
+    )
 
-    def _rollback_table(self, s: str) -> None:
+    def _dispatch(self, s: str):
+        """A query goes to _select as written; every other statement is
+        read by the handler its leading keywords name. A known leading
+        keyword with a statement that does not fit raises SyntaxError_
+        (code 1), an unknown one UnsupportedStatement (code 5)."""
+        c = Cursor(s)
+        if c.at("SELECT") or c.at("WITH") or c.at("("):
+            return self._select(s)
+        for words, handler in self._STATEMENTS:
+            if c.accept(*words):
+                return getattr(self, handler)(c)
+        known = [words for words, _h in self._STATEMENTS if c.at(words[0])]
+        if not known:
+            raise UnsupportedStatement(f"Unsupported statement: {s[:60]}")
+        c.accept(known[0][0])
+        raise c.error(" or ".join(" ".join(words[1:]) for words in known))
+
+    def _rollback_table(self, c: Cursor) -> None:
         """ROLLBACK TABLE t TO VERSION n — restore an old snapshot's
         file list as a NEW version (history preserved; the rollback is
         itself in SHOW SNAPSHOTS and can be rolled back)."""
-        m = re.match(
-            r"(?is)^ROLLBACK\s+TABLE\s+([\w.]+)\s+TO\s+VERSION\s+(\d+)\s*$", s
-        )
-        if not m:
-            raise UnsupportedStatement(f"Cannot parse ROLLBACK TABLE: {s[:60]}")
-        from fuse_query_spark.sources.snapshots import snapshot_rollback
-
-        tdef = self.resolve_table(m.group(1))
-        snapshot_rollback(tdef.storage.versions(tdef, "ROLLBACK TABLE"), int(m.group(2)))
+        ref = c.table()
+        c.expect("TO", "VERSION")
+        version = c.number()
+        c.end()
+        tdef = self.resolve_table(ref)
+        snapshots.snapshot_rollback(tdef.storage.versions(tdef, "ROLLBACK TABLE"), version)
         return None
 
-    def _vacuum(self, s: str) -> DataFrame:
+    def _vacuum(self, c: Cursor) -> DataFrame:
         """VACUUM t [KEEP n] — reclaim data files referenced by none of
         the n (default 1) newest snapshots. Returns the deleted file
         list; time travel beyond the kept window is gone (the
         documented retention trade)."""
-        m = re.match(r"(?is)^VACUUM\s+([\w.]+)(?:\s+KEEP\s+(\d+))?\s*$", s)
-        if not m:
-            raise UnsupportedStatement(f"Cannot parse VACUUM: {s[:60]}")
-        from fuse_query_spark.sources.snapshots import snapshot_vacuum
-
-        tdef = self.resolve_table(m.group(1))
-        deleted = snapshot_vacuum(tdef.storage.versions(tdef, "VACUUM"), int(m.group(2) or 1))
+        ref = c.table()
+        keep = c.number() if c.accept("KEEP") else 1
+        c.end()
+        tdef = self.resolve_table(ref)
+        deleted = snapshots.snapshot_vacuum(tdef.storage.versions(tdef, "VACUUM"), keep)
         return local_rows(self.spark, [(f,) for f in deleted], "deleted_file STRING")
 
-    def _truncate(self, s: str) -> None:
+    def _truncate(self, c: Cursor) -> None:
         """TRUNCATE TABLE — extension (sources/storage.py)."""
-        m = re.match(r"(?is)^TRUNCATE\s+TABLE\s+([\w.]+)\s*$", s)
-        if not m:
-            raise UnsupportedStatement(f"Cannot parse TRUNCATE: {s[:60]}")
-        tdef = self.resolve_table(m.group(1))
+        tdef = self._whole_table(c)
         tdef.storage.truncate(self, tdef)
         return None
 
-    def _show_partitions(self, name: str) -> DataFrame:
-        """SHOW PARTITIONS [FROM] t — Spark's `p=v/q=w` line format.
+    def _whole_table(self, c: Cursor) -> TableDef:
+        """The table named by the rest of the statement."""
+        ref = c.table()
+        c.end()
+        return self.resolve_table(ref)
 
-        Single-process stand-in enumerates the hive directory tree; on
-        a real deployment this is a metastore listing (partition values
-        are metadata, never a data scan — same contract either way).
-        """
-        tdef = self.resolve_table(name)
-        if not tdef.partition_by:
-            raise UnsupportedStatement(f"Table '{tdef.database}.{tdef.name}' is not partitioned")
-        parts: list[tuple[str]] = []
+    @staticmethod
+    def _partition_spec(c: Cursor) -> list[tuple[str, str]]:
+        """`(col='v'[, col2=3])` as (column, value) pairs: a string
+        literal's value, any other value as written."""
+        pairs = []
+        for part in split(c.group(), ","):
+            p = Cursor(part)
+            col = p.name()
+            p.expect("=")
+            raw = p.rest()
+            value = string_value(raw)
+            pairs.append((col, raw if value is None else value))
+        return pairs
 
-        def descend(path: str, depth: int, prefix: str):
-            if depth == len(tdef.partition_by):
-                parts.append((prefix,))
-                return
-            col = tdef.partition_by[depth]
-            if not os.path.isdir(path):
-                return
-            for d in sorted(os.listdir(path)):
-                if d.startswith(f"{col}="):
-                    descend(
-                        os.path.join(path, d),
-                        depth + 1,
-                        f"{prefix}/{d}" if prefix else d,
-                    )
+    def _alter_table(self, c: Cursor):
+        """ALTER TABLE t DROP PARTITION (col='v'[, …]) — partition
+        retention: removing one directory subtree, no rewrite of live
+        data; the spec names a PREFIX of the partition columns.
 
-        if tdef.location:
-            descend(tdef.location, 0, "")
-        return local_rows(self.spark, parts, "partition STRING")
-
-    _ALTER_DROP_PARTITION = re.compile(
-        r"(?is)^ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+PARTITION\s*\(([^)]*)\)\s*$"
-    )
-
-    def _alter_table(self, s: str):
-        """ALTER TABLE t DROP PARTITION (col='v'[, col2='w']) —
-        partition retention, the operational companion to PARTITION BY
-        (dropping an expired day = removing one directory, no rewrite
-        of live data). The spec must name a PREFIX of the partition
-        columns in order: dropping `(day='d')` on a (day, source)
-        layout removes the whole day subtree.
-        """
+        ALTER TABLE t ADD COLUMN / DROP COLUMN / RENAME TO — extension:
+        metadata-only schema evolution (readers conform stored files to
+        the declared schema), so ADD/DROP touch no data file. DROP of a
+        re-added name resurfaces old file data, as in any
+        schema-on-read store; partition columns cannot be dropped."""
         import shutil
 
-        m = self._ALTER_DROP_PARTITION.match(s)
-        if not m:
-            return self._alter_schema(s)
-        name, spec = m.groups()
-        tdef = self.resolve_table(name)
-        pairs = partition_prefix(tdef, spec)
-        if tdef.location:
-            target = partition_path(self.spark, tdef, pairs)
-            if os.path.isdir(target):
-                shutil.rmtree(target)
-        return None
-
-    _ALTER_ADD_COL = re.compile(
-        r"(?is)^ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+COLUMN\s+"
-        r"(IF\s+NOT\s+EXISTS\s+)?(\w+)\s+(.+?)\s*$"
-    )
-    _ALTER_DROP_COL = re.compile(
-        r"(?is)^ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+COLUMN\s+"
-        r"(IF\s+EXISTS\s+)?(\w+)\s*$"
-    )
-    _ALTER_RENAME = re.compile(
-        r"(?is)^ALTER\s+TABLE\s+([\w.]+)\s+RENAME\s+TO\s+([\w.]+)\s*$"
-    )
-
-    def _alter_schema(self, s: str):
-        """ALTER TABLE ADD COLUMN / DROP COLUMN / RENAME TO — extension:
-        metadata-only schema evolution (readers conform stored files to
-        the declared schema), so ADD/DROP touch ZERO data files — at
-        100 TB a column add must not rewrite the table. DROP of a
-        re-added name resurfaces old file data, same as any
-        schema-on-read store; partition columns cannot be dropped (they
-        are the directory layout)."""
-        m = self._ALTER_ADD_COL.match(s)
-        if m:
-            name, if_not, col_name, col_type = m.groups()
-            tdef = self.resolve_table(name)
+        ref = c.table()
+        if c.accept("DROP", "PARTITION"):
+            spec = self._partition_spec(c)
+            c.end()
+            tdef = self.resolve_table(ref)
+            pairs = partition_prefix(tdef, spec)
+            if tdef.location:
+                target = partition_path(self.spark, tdef, pairs)
+                if os.path.isdir(target):
+                    shutil.rmtree(target)
+            return None
+        if c.accept("RENAME", "TO"):
+            new = c.table()
+            c.end()
+            return self._rename(ref, new)
+        if c.accept("ADD", "COLUMN"):
+            if_not = c.accept("IF", "NOT", "EXISTS")
+            col_name = c.name()
+            new_field = self._column(col_name, c.rest())
+            tdef = self.resolve_table(ref)
             if col_name in tdef.schema.names:
                 if if_not:
                     return None
                 raise UnsupportedStatement(f"Column already exists: '{col_name}'")
-            new_field = self._parse_schema(f"{col_name} {col_type}")[0]
             tdef.schema = StructType(list(tdef.schema.fields) + [new_field])
             tdef.storage.schema_changed(self, tdef)
             return None
-        m = self._ALTER_DROP_COL.match(s)
-        if m:
-            name, if_exists, col_name = m.groups()
-            tdef = self.resolve_table(name)
-            if col_name not in tdef.schema.names:
-                if if_exists:
-                    return None
-                raise UnsupportedStatement(f"Unknown column: '{col_name}'")
-            if col_name in (tdef.partition_by or ()):
-                raise UnsupportedStatement(
-                    f"Cannot drop partition column '{col_name}'"
-                )
-            if len(tdef.schema.fields) == 1:
-                raise UnsupportedStatement("Cannot drop the only column")
-            tdef.schema = StructType(
-                [f for f in tdef.schema.fields if f.name != col_name]
-            )
-            tdef.storage.schema_changed(self, tdef)
-            return None
-        m = self._ALTER_RENAME.match(s)
-        if m:
-            old, new = m.groups()
-            tdef = self.resolve_table(old)
-            new_db, new_table = self._qualify(new)
-            dest = self.catalog.db(new_db)
-            if new_table in dest:
-                raise UnsupportedStatement(
-                    f"Table already exists: '{new_db}.{new_table}'"
-                )
-            del self.catalog.db(tdef.database)[tdef.name]
-            tdef.name, tdef.database = new_table, new_db
-            dest[new_table] = tdef
-            return None
-        raise UnsupportedStatement(f"Unsupported ALTER TABLE: {s[:80]}")
+        c.expect("DROP", "COLUMN")
+        if_exists = c.accept("IF", "EXISTS")
+        col_name = c.name()
+        c.end()
+        tdef = self.resolve_table(ref)
+        if col_name not in tdef.schema.names:
+            if if_exists:
+                return None
+            raise UnsupportedStatement(f"Unknown column: '{col_name}'")
+        if col_name in (tdef.partition_by or ()):
+            raise UnsupportedStatement(f"Cannot drop partition column '{col_name}'")
+        if len(tdef.schema.fields) == 1:
+            raise UnsupportedStatement("Cannot drop the only column")
+        tdef.schema = StructType([f for f in tdef.schema.fields if f.name != col_name])
+        tdef.storage.schema_changed(self, tdef)
+        return None
 
-    _DELETE = re.compile(r"(?is)^DELETE\s+FROM\s+([\w.]+)\s+WHERE\s+(.+)$")
+    def _rename_table(self, c: Cursor) -> None:
+        """RENAME TABLE t TO u — the same as ALTER TABLE t RENAME TO u."""
+        old = c.table()
+        c.expect("TO")
+        new = c.table()
+        c.end()
+        return self._rename(old, new)
 
-    def _delete(self, s: str):
+    def _rename(self, old: tuple[str | None, str], new: tuple[str | None, str]) -> None:
+        tdef = self.resolve_table(old)
+        new_db, new_table = new[0] or self.current_db, new[1]
+        dest = self.catalog.db(new_db)
+        if new_table in dest:
+            raise UnsupportedStatement(f"Table already exists: '{new_db}.{new_table}'")
+        del self.catalog.db(tdef.database)[tdef.name]
+        tdef.name, tdef.database = new_table, new_db
+        dest[new_table] = tdef
+        return None
+
+    def _rewrite(self, tdef: TableDef, ref, verb: str, select: str, keep=None, where=None):
+        """Run a DELETE or UPDATE through the table's storage, reading
+        the table as a temp view of this statement aliased as the
+        statement names it (`t`, or `db__t`: the dialect's `db.t`), so
+        SET and WHERE may qualify columns with that name."""
+        view = f"__fq_dml_{self._stmt_local.pid}"
+        self._table_df(tdef).createOrReplaceTempView(view)
+        try:
+            source = f"{view} AS {quote_name('__'.join(filter(None, ref)))}"
+            tdef.storage.rewrite(self, tdef, Mutation(verb, source, select, keep, where))
+        finally:
+            self.spark.catalog.dropTempView(view)
+
+    def _delete(self, c: Cursor):
         """DELETE FROM t WHERE pred — extension (the reference has no
-        mutations): the GDPR/expiry delete a long-lived warehouse needs.
-        SQL semantics: rows where pred is TRUE are removed; NULL-pred
-        rows are KEPT (keep-condition = COALESCE(NOT pred, TRUE), not
-        plain NOT pred). How each engine rewrites: sources/storage.py."""
-        m = self._DELETE.match(s)
-        if not m:
-            raise UnsupportedStatement(f"Cannot parse DELETE: {s[:80]}")
-        name, pred = m.groups()
-        tdef = self.resolve_table(name)
-        tdef.storage.rewrite(
-            self, tdef,
-            Mutation("DELETE from", name, "*", keep=f"COALESCE(NOT ({pred}), TRUE)", where=pred),
-        )
+        mutations): rows where pred is TRUE go; NULL-pred rows are kept
+        (keep = COALESCE(NOT pred, TRUE)). Engines: sources/storage.py."""
+        ref = c.table()
+        c.expect("WHERE")
+        pred = c.rest()
+        tdef = self.resolve_table(ref)
+        keep = f"COALESCE(NOT ({pred}), TRUE)"
+        self._rewrite(tdef, ref, "DELETE from", "*", keep=keep, where=pred)
         return None
 
-    _UPDATE = re.compile(r"(?is)^UPDATE\s+([\w.]+)\s+SET\s+(.+)$")
-
-    def _update(self, s: str):
-        """UPDATE t SET col = expr[, …] [WHERE pred] — extension (the
-        reference has no mutations): the correction/backfill write a
-        long-lived warehouse needs. SQL semantics: rows where pred is
-        TRUE get the new values; FALSE **and NULL** predicate rows are
-        unchanged (CASE WHEN pred THEN new ELSE old END gives exactly
-        that). SET expressions may reference any column and the full
-        dialect function surface. A SET that writes a partition column
-        can MOVE rows between leaves, so it is not bounded by pred."""
-        m = self._UPDATE.match(s)
-        if not m:
-            raise UnsupportedStatement(f"Cannot parse UPDATE: {s[:80]}")
-        name, rest = m.groups()
-        # the first WHERE outside literals and parentheses ends the SET list
-        set_clause, pred = rest, None
-        masked = mask(rest)
-        for w in re.finditer(r"(?i)\sWHERE\s", masked):
-            if masked.count("(", 0, w.start()) == masked.count(")", 0, w.start()):
-                set_clause, pred = rest[: w.start()], rest[w.end() :]
-                break
-        tdef = self.resolve_table(name)
+    def _update(self, c: Cursor):
+        """UPDATE t SET col = expr[, …] [WHERE pred] — extension: rows
+        where pred is TRUE get the new values, FALSE and NULL rows keep
+        theirs (CASE WHEN pred THEN new ELSE old END). A SET that writes
+        a partition column can move rows between leaves, so it is not
+        bounded by pred."""
+        ref = c.table()
+        c.expect("SET")
+        assignments = c.upto("WHERE")
+        pred = c.rest() if c.accept("WHERE") else None
         sets: dict[str, str] = {}
-        for part in split(set_clause, ","):
-            eq = part.find("=")
-            if eq < 0:
-                raise UnsupportedStatement(f"Cannot parse SET assignment: {part[:60]}")
-            col_name, expr = part[:eq].strip(), part[eq + 1 :].strip()
-            if col_name not in tdef.schema.names:
-                raise UnknownTable(f"Unknown column in SET: '{col_name}'")
-            sets[col_name] = expr
-        proj = ", ".join(
-            (
-                f"CASE WHEN ({pred}) THEN ({sets[c]}) ELSE {c} END AS {c}"
-                if pred is not None
-                else f"({sets[c]}) AS {c}"
-            )
-            if c in sets
-            else c
-            for c in tdef.schema.names
-        )
-        moves_rows = any(c in sets for c in tdef.partition_by)
-        tdef.storage.rewrite(
-            self, tdef, Mutation("UPDATE", name, proj, where=None if moves_rows else pred)
-        )
+        for part in split(assignments, ","):
+            a = Cursor(part)
+            name = a.name()
+            a.expect("=")
+            sets[name] = a.rest()
+        tdef = self.resolve_table(ref)
+        for name in sets:
+            if name not in tdef.schema.names:
+                raise UnknownTable(f"Unknown column in SET: '{name}'")
+
+        def item(col: str) -> str:
+            q = quote_name(col)
+            if col not in sets:
+                return q
+            if pred is None:
+                return f"({sets[col]}) AS {q}"
+            return f"CASE WHEN ({pred}) THEN ({sets[col]}) ELSE {q} END AS {q}"
+
+        proj = ", ".join(item(col) for col in tdef.schema.names)
+        moves_rows = any(col in sets for col in tdef.partition_by)
+        self._rewrite(tdef, ref, "UPDATE", proj, where=None if moves_rows else pred)
         return None
 
-    _OPTIMIZE = re.compile(
-        r"(?is)^OPTIMIZE\s+TABLE\s+([\w.]+)"
-        r"(?:\s+PARTITION\s*\(([^)]*)\))?(\s+FINAL)?"
-        r"(?:\s+ZORDER\s+BY\s*\(([^)]*)\))?\s*$"
-    )
-
-    def _optimize(self, s: str) -> DataFrame:
+    def _optimize(self, c: Cursor) -> DataFrame:
         """OPTIMIZE TABLE t [PARTITION (col='v', …)] [FINAL]
         [ZORDER BY (cols)] — small-files compaction (ClickHouse's
         part-merge surface mapped onto file geometry; extension — the
-        reference has no OPTIMIZE). Returns one summary row.
+        reference has no OPTIMIZE). Returns one summary row. Every
+        INSERT adds a file per partition it touches; with PARTITION the
+        unit of rewrite is one subtree, not the whole table."""
+        ref = c.table()
+        spec = self._partition_spec(c) if c.accept("PARTITION") else None
+        c.accept("FINAL")
+        zorder = c.names() if c.accept("ZORDER", "BY") else None
+        c.end()
+        tdef = self.resolve_table(ref)
+        return tdef.storage.optimize(self, tdef, spec, zorder)
 
-        Production posture: every INSERT INTO appends at least one file
-        per partition touched, so long-lived partitioned tables need
-        this pass; always give PARTITION so the unit of rewrite is one
-        subtree (one day), not the whole table.
-        """
-        m = self._OPTIMIZE.match(s)
-        if not m:
-            raise UnsupportedStatement(f"Cannot parse OPTIMIZE: {s[:80]}")
-        name, spec, _final, zorder = m.groups()
-        tdef = self.resolve_table(name)
-        cols = [c.strip() for c in zorder.split(",")] if zorder else None
-        return tdef.storage.optimize(self, tdef, spec, cols)
-
-    def _kill(self, s: str) -> DataFrame:
+    def _kill(self, c: Cursor) -> DataFrame:
         """KILL QUERY <id> — cancels the statement with that
         system.processes id via Engine.cancel (the reference aborts
         result streams through AbortStream handles,
-        stream_abort.rs:19-26)."""
-        m = re.match(r"(?is)^KILL\s+QUERY\s+(.+?)\s*$", s)
-        qid = m and (string_value(m.group(1)) or m.group(1))
-        if not qid or not re.fullmatch(r"[\w-]+", qid):
-            raise UnsupportedStatement(f"Unsupported KILL: {s[:60]}")
+        stream_abort.rs:19-26). The id is a number or a string
+        literal."""
+        qid = c.string() if c.tok is not None and c.tok[0] == "string" else str(c.number())
+        c.end()
         killed = self.cancel(qid)
         # LOCAL relation (no Spark job): KILL must work when the pool
         # is saturated by the very query being killed
@@ -730,21 +632,30 @@ class Engine:
         the same table in one query work (each pin is its own view).
         Clauses are found in the masked statement (lexer.mask), so a
         literal holding `t VERSION AS OF 1` stays a literal."""
-        from fuse_query_spark.sources.snapshots import snapshot_read
-
         if not re.search(r"(?i)\bVERSION\s+AS\s+OF\b", s):
             return s
-        out, pos = [], 0
-        for m in re.finditer(r"(?is)\b([\w.]+)\s+VERSION\s+AS\s+OF\s+(\d+)\b", mask(s)):
-            tdef = self.resolve_table(m.group(1))
-            ver = int(m.group(2))
-            view = f"{tdef.database}__{tdef.name}__v{ver}"
-            snapshot_read(
-                self.spark, tdef.storage.versions(tdef, "VERSION AS OF"),
-                version=ver, schema=tdef.schema,
-            ).createOrReplaceTempView(view)
-            out += [s[pos : m.start()], view]
-            pos = m.end()
+        out, pos, ref = [], 0, None  # ref: (offset, (db, table)) just read
+        c = Cursor(s)
+        while c.tok is not None:
+            if ref is not None and c.accept("VERSION", "AS", "OF"):
+                ver = c.number()
+                tdef = self.resolve_table(ref[1])
+                view = f"{tdef.database}__{tdef.name}__v{ver}"
+                snapshots.snapshot_read(
+                    self.spark, tdef.storage.versions(tdef, "VERSION AS OF"),
+                    version=ver, schema=tdef.schema,
+                ).createOrReplaceTempView(view)
+                out += [s[pos : ref[0]], view]
+                pos, ref = c.pos, None
+            elif c.tok[0] in ("word", "ident"):
+                start, first = c.tok[1], c.name()
+                ref = (start, (None, first))
+                if c.accept("."):
+                    named = c.tok is not None and c.tok[0] in ("word", "ident")
+                    ref = (start, (first, c.name())) if named else None
+            else:
+                c.take()
+                ref = None
         out.append(s[pos:])
         return "".join(out)
 
@@ -758,27 +669,18 @@ class Engine:
 
     def _analyze(self, s: str, sleep: bool = False) -> tuple[DataFrame, DialectContext]:
         """The analyzed local DataFrame of a SELECT and the dialect
-        context its rewrite filled (the distributed planner reads both:
-        the plan, and which numbers() kinds the rewrite substituted).
+        context its rewrite filled (the distributed planner reads both).
         With `sleep`, recorded ``sleep()`` requests are performed once,
-        before analysis — EXPLAIN and the planner's own analyses must
-        not block (judge r2/r3 carried low)."""
+        before analysis; EXPLAIN and the planner's analyses never block."""
         if "flight_stream" in s.lower() and self.in_stage_action():
             s = self._resolve_flight_streams(s)
         s = self._resolve_time_travel(s)
         self._register_views(s)
-        # ClickHouse GROUP BY 1 groups by the CONSTANT 1, not the first
-        # select item (03_0003_select_group_by.sql) — disable Spark's
-        # ordinal resolution just for analysis of dialect SQL (spark.sql
-        # analyzes eagerly, so restoring right after is safe). The conf
-        # is SESSION-GLOBAL, so the toggle+analyze+restore must be
-        # serialized: with the MySQL front-end, concurrent connection
-        # threads would otherwise race thread A's restore against
-        # thread B's analysis. Execution (collect) happens outside the
-        # lock — only analysis is serialized. The rewrite and any
-        # recorded sleep() run BEFORE acquiring it: a 3-second
-        # SELECT sleep(3) must block its own caller, not every other
-        # connection's analysis.
+        # ClickHouse GROUP BY 1 groups by the CONSTANT 1
+        # (03_0003_select_group_by.sql), so Spark's ordinal resolution
+        # is off while spark.sql analyzes. The conf is session-global:
+        # toggle, analysis and restore hold the lock, execution does
+        # not, and the rewrite and sleep() run before taking it.
         ctx = self._dialect_ctx()
         rewritten = rewrite_select(s, ctx)
         if sleep:
@@ -786,12 +688,6 @@ class Engine:
                 time.sleep(_sec)
         with self._ordinal_lock:
             return self._select_locked(s, rewritten), ctx
-
-    _FLIGHT_STREAM = re.compile(
-        r"(?i)\bflight_stream\s*\(\s*"
-        + r"\s*,\s*".join([f"({STRING_LITERAL})"] * 4)
-        + r"\s*\)"
-    )
 
     def in_stage_action(self) -> bool:
         """True while THIS thread is executing a Flight stage action's
@@ -801,20 +697,13 @@ class Engine:
 
     def _resolve_flight_streams(self, s: str) -> str:
         """Materialize ``flight_stream('addr', 'query_id', 'stage_id',
-        'sink')`` table references: fetch the ONE-SHOT stage stream
-        over Arrow Flight and substitute a temp view of the result.
-        This is the consuming side of a distributed BROADCAST stage —
-        a peer's partial join plan reads the dim table this way
-        (flight_scatter_broadcast.rs hands every downstream node the
-        full stage output; plans/distributed.py emits the refs).
-        Fetch errors propagate: the coordinator's retry layer owns
-        recovery, a peer must fail its stage loudly.
-
-        Substitution runs over LITERAL-MASKED offsets (judge r10 /
-        the module's one-literal-lexer discipline): a statement whose
-        string literal merely CONTAINS the flight_stream(...) text
-        passes through verbatim instead of having the literal's body
-        replaced with a view name (or raising on a dead address)."""
+        'sink')`` table references: fetch the one-shot stage stream
+        over Arrow Flight and substitute a temp view of the result —
+        the consuming side of a distributed broadcast stage
+        (flight_scatter_broadcast.rs; plans/distributed.py emits the
+        refs). Fetch errors propagate: the coordinator's retry layer
+        owns recovery. Call sites are found in the masked statement, so
+        a literal holding the text stays a literal."""
 
         def fetch(addr: str, qid: str, sid: str, sink: str) -> str:
             import pyarrow.flight as flight
@@ -828,12 +717,8 @@ class Engine:
                 con.close()
             view = "__fq_fs_" + re.sub(r"\W", "_", f"{qid}_{sid}_{sink}")
             local_rows(self.spark, tbl).createOrReplaceTempView(view)
-            # record for the caller (the Flight stage action) to DROP
-            # after materialization: the view holds the full broadcast
-            # dim in memory and its name is query-unique, so without
-            # cleanup a long-lived peer pins one dim copy per join
-            # query forever (code-review r10). Thread-local: concurrent
-            # stage actions on one peer each clean only their own.
+            # the stage action drops it after its plan ran (the view
+            # holds the whole broadcast side under a query-unique name)
             if getattr(self._fs_views_tl, "views", None) is None:
                 self._fs_views_tl.views = []
             self._fs_views_tl.views.append(view)
@@ -844,40 +729,35 @@ class Engine:
             # the masked text locates call sites outside literals; the
             # call's own literal arguments are read from the original
             # text at the same offsets (masking is length-preserving)
-            real = self._FLIGHT_STREAM.match(s, m.start())
-            if real is None:
+            c = Cursor(s, m.end())
+            try:
+                args = [c.string()]
+                for _arg in range(3):
+                    c.expect(",")
+                    args.append(c.string())
+                c.expect(")")
+            except SyntaxError_:
                 continue
             out.append(s[pos : m.start()])
-            out.append(fetch(*[string_value(a) for a in real.groups()]))
-            pos = real.end()
+            out.append(fetch(*args))
+            pos = c.pos
         out.append(s[pos:])
         return "".join(out)
 
     def pop_flight_stream_views(self) -> list:
         """Names of the temp views _resolve_flight_streams registered
-        on THIS thread since the last pop; clears the record.
-
-        Contract: the Flight STAGE ACTIONS are the cleanup owners —
-        they pop-and-drop after materializing (the views must outlive
-        Engine.sql itself because execution is lazy). Resolution only
-        happens UNDER a stage action (advice r10: from the general SQL
-        surface a flight_stream ref is an unresolved function, not a
-        server-side gRPC connect), so every registered view has an
-        owner and none outlives its statement."""
-        tl = getattr(self, "_fs_views_tl", None)
-        views = getattr(tl, "views", None) if tl is not None else None
-        if tl is not None:
-            tl.views = []
-        return views or []
+        on this thread since the last pop; clears the record. The Flight
+        stage actions, the only place refs resolve, drop them after
+        materializing (execution is lazy, so they outlive Engine.sql)."""
+        views = getattr(self._fs_views_tl, "views", None) or []
+        self._fs_views_tl.views = []
+        return views
 
     def _select(self, s: str) -> DataFrame:
         df, ctx = self._analyze(s, sleep=True)
-        # transparent cluster rescheduling (interpreter_select.rs:40-73
-        # / plan_scheduler.rs:96): with reachable peers registered, a
-        # two-phase-decomposable plan fans out as per-peer partial
-        # stages over Flight and finalizes here; every other statement
-        # (and an empty/unreachable registry) returns the local plan
-        # just analyzed. plans/distributed.py for scope.
+        # cluster rescheduling (interpreter_select.rs:40-73): with
+        # reachable peers, a two-phase plan fans out as per-peer partial
+        # stages over Flight (plans/distributed.py); else the local plan
         nodes = self.cluster.get_nodes()
         if nodes:
             from fuse_query_spark.plans.distributed import try_distributed_select
@@ -905,10 +785,10 @@ class Engine:
                         return self.spark.sql(undemoted)
                 raise
         except Exception as e:  # map to reference-style error codes
-            from fuse_query_spark.errors import UnknownColumn, UnknownTable
-
             msg = str(e)
             first = msg.splitlines()[0] if msg else ""
+            if "PARSE_SYNTAX_ERROR" in msg:
+                raise SyntaxError_(msg.strip().splitlines()[0]) from e
             if "UNRESOLVED_COLUMN" in msg or "UNRESOLVED_FIELD" in msg:
                 # reference: `SELECT x` → ErrorCode 6, while a QUALIFIED
                 # unresolved name (`b.number` with no table b) is an
@@ -931,16 +811,14 @@ class Engine:
         finally:
             self.spark.conf.set("spark.sql.groupByOrdinal", old_ordinal)
 
-    def _explain(self, s: str) -> DataFrame:
-        inner = re.sub(r"(?i)^EXPLAIN(\s+PIPELINE)?\s+", "", s)
-        pipeline = bool(re.match(r"(?i)^EXPLAIN\s+PIPELINE", s))
-        # reference parity (interpreter_explain.rs:62-67): plain
-        # EXPLAIN optimizes WITH the scatters pass, so under a
-        # registered cluster a distributable statement shows its staged
-        # form ahead of the local physical plan; EXPLAIN PIPELINE uses
-        # without_scatters and stays purely local.
+    def _explain(self, c: Cursor) -> DataFrame:
+        pipeline = c.accept("PIPELINE")
+        inner = c.query()
+        # interpreter_explain.rs:62-67: under a cluster, plain EXPLAIN
+        # shows a distributable statement's stages ahead of the local
+        # plan; EXPLAIN PIPELINE stays local
         nodes = [] if pipeline else self.cluster.get_nodes()
-        if nodes and inner.upper().startswith(("SELECT", "WITH", "(")):
+        if nodes:
             from fuse_query_spark.plans.distributed import explain_distributed
 
             try:
@@ -963,28 +841,20 @@ class Engine:
 
     def _register_views(self, s: str) -> None:
         """Register any catalog/system tables the query references as
-        temp views. No rows move, but resolving a table is not free:
-        a file or Snapshot table's relation is reused while its key
-        (declared schema, partition columns, a stat fingerprint of its
-        files; see sources/storage.py) is unchanged, so a statement over an
-        unchanged table costs one directory walk with stat and submits
-        no footer job. Remote tables re-ask the store for their parts,
-        and views re-expand over their base tables' relations.
+        temp views. No rows move; a file or Snapshot table's relation is
+        reused while its key is unchanged (sources/storage.py), remote
+        tables re-ask the store for their parts, and views re-expand.
 
-        The name scan runs over the masked statement (literal bodies
-        and comments blanked; see lexer.mask), so a name inside a
-        literal ('system.logs') neither raises UnknownTable nor hides
-        the names after it, and a registration that fails is SKIPPED
-        rather than failing the whole statement — a bare word that
-        merely collides with a broken view's name (SELECT 1 AS v after
-        v's base table was dropped) must not poison unrelated queries;
-        if the query truly references the broken table, Spark's own
-        TABLE_OR_VIEW_NOT_FOUND names it. The skipped errors are kept
-        per thread, for this thread's _select_locked to re-raise."""
+        Names are found in the masked statement (lexer.mask), so one
+        inside a literal ('system.logs') is not a reference. A
+        registration that fails is skipped, not fatal — a bare word
+        that collides with a broken view's name must not poison
+        unrelated queries — and its error is kept per thread for
+        _select_locked to raise if analysis proves the name was used."""
         scan = mask(s)
         deferred: dict[str, Exception] = {}
-        for m in re.finditer(r"\bsystem\.(\w+)", scan):
-            name = m.group(1).lower()
+        for m in re.finditer(r"\bsystem\.(?=\w)", scan):
+            name = Cursor(s, m.end()).name().lower()
             if name in self.SYSTEM_TABLES:
                 self.SYSTEM_TABLES[name](self).createOrReplaceTempView(f"system__{name}")
             elif name not in ("numbers", "numbers_mt", "numbers_local"):  # rewritten
@@ -1039,218 +909,147 @@ class Engine:
 
     # ---------- DDL ----------
 
-    # head only — the column list needs balanced-paren scanning (types
-    # like decimal(10,2) nest parens; a greedy regex would swallow the
-    # PARTITION BY clause's parens instead)
-    _CREATE_TABLE_HEAD = re.compile(
-        r"(?is)^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*\("
-    )
-    _CREATE_TABLE_TAIL = re.compile(
-        r"(?is)^\s*(?:ENGINE\s*=\s*(\w+))?\s*"
-        r"(?:PARTITION\s+BY\s*\(([^)]*)\))?\s*"
-        rf"(?:location\s*=\s*({STRING_LITERAL}))?\s*$"
-    )
+    def _table_options(self, c: Cursor) -> tuple[str | None, list[str], str | None]:
+        """`[ENGINE = e] [PARTITION BY (cols)] [location = '…']`, in
+        that order: (engine or None, partition columns, location)."""
+        engine = c.name() if c.accept("ENGINE", "=") else None
+        partition_by = c.names() if c.accept("PARTITION", "BY") else []
+        location = c.string() if c.accept("LOCATION", "=") else None
+        return engine, partition_by, location
 
-    _CREATE_TABLE_AS = re.compile(
-        r"(?is)^CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
-        r"(?:ENGINE\s*=\s*(\w+))?\s*"
-        r"(?:PARTITION\s+BY\s*\(([^)]*)\))?\s*"
-        rf"(?:location\s*=\s*({STRING_LITERAL}))?\s*"
-        r"AS\s+(SELECT\b.*)$"
-    )
-
-    def _create_table_as(self, m) -> None:
-        """CTAS — capability extension: the reference's table_create
-        interpreter has no query form (interpreter_table_create.rs).
-        Schema is inferred from the SELECT."""
-        if_not_exists, name, engine, partition_by, location, select = m.groups()
-        location = location and string_value(location)
-        engine = (engine or "Memory").strip()
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table in tables:
+    def _new_table(self, ref: tuple[str | None, str], if_not_exists: bool):
+        """(database, table) of a table a CREATE makes, or None when it
+        exists and IF NOT EXISTS was given."""
+        db, table = ref[0] or self.current_db, ref[1]
+        if table in self.catalog.db(db):
             if if_not_exists:
                 return None
             raise TableAlreadyExists(f"Table '{db}.{table}' already exists")
-        df = self._select(select)
+        return db, table
+
+    def _create_table(self, c: Cursor, materialized: bool = False):
+        """CREATE TABLE [IF NOT EXISTS] t (cols) [options], or with
+        `AS query` in place of the columns (CTAS — capability
+        extension: the reference's table_create interpreter has no
+        query form, interpreter_table_create.rs; the schema is the
+        query's).
+
+        CREATE MATERIALIZED VIEW mv [ENGINE = Parquet] [PARTITION BY
+        (cols)] location = '…' AS SELECT … — capability extension (the
+        reference has no view interpreter at all): a file-engine table
+        that REMEMBERS its defining SELECT, computed at create time and
+        recomputable with REFRESH. Reads hit the parquet directly — the
+        precompute-once/read-many shape that turns a repeated expensive
+        aggregation into a partition-pruned scan at fleet scale."""
+        if_not_exists = c.accept("IF", "NOT", "EXISTS")
+        ref = c.table()
+        cols = c.group() if c.at("(") and not materialized else None
+        engine, partition_by, location = self._table_options(c)
+        if cols is None:
+            c.expect("AS")
+            select = c.query()
+        c.end()
+        if materialized:
+            engine = engine or "Parquet"
+            if location is None:
+                raise SyntaxError_("CREATE MATERIALIZED VIEW needs location = '…'")
+            if not storage_for(engine).partitionable:
+                raise UnsupportedStatement(
+                    f"MATERIALIZED VIEW needs a file engine {PARTITIONABLE}, got {engine}"
+                )
+        target = self._new_table(ref, if_not_exists)
+        if target is None:
+            return None
+        db, table = target
+        if cols is None:
+            df = self._select(select)
+            schema, engine = df.schema, engine or "Memory"
+        else:
+            schema = self._parse_schema(cols)
+            # reference: missing ENGINE defaults to Null (sql_parser.rs:441-443)
+            engine = engine or "Null"
+            storage_for(engine).check_create(schema, location)
+            if db in self.catalog.remote_dbs:
+                # a remote database stores ALL its tables store-side
+                # (remote_database.rs create_table goes through MetaApi;
+                # the engine clause is not part of the remote schema) —
+                # 09_0000 expects engine `remote` for a bare CREATE TABLE
+                self.store.create_table(db, table, json.dumps(schema.jsonValue()))
+                engine = "remote"
         tdef = TableDef(
-            name=table,
-            database=db,
-            engine=engine,
-            schema=df.schema,
-            location=location,
-            partition_by=partition_columns(engine, partition_by, df.schema),
-        )
-        tdef.storage.create_as(self, tdef, df)
-        tables[table] = tdef
-        return None
-
-    _CREATE_VIEW = re.compile(
-        r"(?is)^CREATE\s+(OR\s+REPLACE\s+)?VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s+AS\s+(SELECT\b.*)$"
-    )
-
-    def _create_view(self, s: str) -> None:
-        """CREATE [OR REPLACE] VIEW — capability extension (no view
-        interpreter exists in the reference). The SELECT text is stored
-        and re-expanded per query, so views track their base tables;
-        creation validates it once through the dialect path."""
-        m = self._CREATE_VIEW.match(s)
-        if not m:
-            raise UnsupportedStatement(f"Cannot parse CREATE VIEW: {s[:80]}")
-        or_replace, if_not_exists, name, select = m.groups()
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table in tables and not or_replace:
-            if if_not_exists:
-                return None
-            raise TableAlreadyExists(f"Table '{db}.{table}' already exists")
-        df = self._select(select)  # validate + capture schema NOW
-        tables[table] = TableDef(
-            name=table, database=db, engine="View", schema=df.schema, view_sql=select
-        )
-        return None
-
-    _CREATE_MV = re.compile(
-        r"(?is)^CREATE\s+MATERIALIZED\s+VIEW\s+(IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s*"
-        r"(?:ENGINE\s*=\s*(\w+))?\s*"
-        r"(?:PARTITION\s+BY\s*\(([^)]*)\))?\s*"
-        rf"location\s*=\s*({STRING_LITERAL})\s*"
-        r"AS\s+(SELECT\b.*)$"
-    )
-
-    def _create_materialized_view(self, s: str) -> None:
-        """CREATE MATERIALIZED VIEW mv ENGINE = Parquet
-        [PARTITION BY (cols)] location = '…' AS SELECT … — capability
-        extension (the reference has no view interpreter at all): a
-        file-engine table that REMEMBERS its defining SELECT, computed
-        at create time and recomputable with REFRESH. Reads hit the
-        parquet directly — the precompute-once/read-many shape that
-        turns a repeated expensive aggregation into a partition-pruned
-        scan at fleet scale."""
-        m = self._CREATE_MV.match(s)
-        if not m:
-            raise UnsupportedStatement(f"Cannot parse CREATE MATERIALIZED VIEW: {s[:80]}")
-        if_not_exists, name, engine, partition_by, location, select = m.groups()
-        location = string_value(location)
-        engine = (engine or "Parquet").strip()
-        if not storage_for(engine).partitionable:
-            raise UnsupportedStatement(
-                f"MATERIALIZED VIEW needs a file engine {PARTITIONABLE}, got {engine}"
-            )
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table in tables:
-            if if_not_exists:
-                return None
-            raise TableAlreadyExists(f"Table '{db}.{table}' already exists")
-        df = self._select(select)
-        tdef = TableDef(
-            name=table,
-            database=db,
-            engine=engine,
-            schema=df.schema,
-            location=location,
-            view_sql=select,
-            partition_by=partition_columns(engine, partition_by, df.schema),
-        )
-        tables[table] = tdef
-        tdef.storage.overwrite(self, tdef, df)
-        return None
-
-    _REFRESH_MV = re.compile(
-        r"(?is)^REFRESH\s+MATERIALIZED\s+VIEW\s+([\w.]+)"
-        r"(?:\s+PARTITION\s*\(([^)]*)\))?\s*$"
-    )
-
-    def _refresh_materialized_view(self, s: str) -> None:
-        """REFRESH MATERIALIZED VIEW mv [PARTITION (col='v', …)] —
-        recompute the stored SELECT and replace the stored data, whole
-        or one partition subtree (sources/storage.File.refresh)."""
-        m = self._REFRESH_MV.match(s)
-        if not m:
-            raise UnsupportedStatement(f"Cannot parse REFRESH: {s[:80]}")
-        name, spec = m.groups()
-        tdef = self.resolve_table(name)
-        tdef.storage.refresh(self, tdef, spec)
-        return None
-
-    def _create_table(self, s: str):
-        mas = self._CREATE_TABLE_AS.match(s)
-        if mas:
-            return self._create_table_as(mas)
-        m = self._CREATE_TABLE_HEAD.match(s)
-        if not m:
-            raise UnsupportedStatement(f"Cannot parse CREATE TABLE: {s[:80]}")
-        if_not_exists, name = m.groups()
-        open_at = m.end() - 1
-        depth = 0
-        close_at = -1
-        for i in range(open_at, len(s)):
-            if s[i] == "(":
-                depth += 1
-            elif s[i] == ")":
-                depth -= 1
-                if depth == 0:
-                    close_at = i
-                    break
-        if close_at < 0:
-            raise UnsupportedStatement(f"Unbalanced parens in CREATE TABLE: {s[:80]}")
-        cols = s[open_at + 1 : close_at]
-        mt = self._CREATE_TABLE_TAIL.match(s[close_at + 1 :])
-        if not mt:
-            raise UnsupportedStatement(f"Cannot parse CREATE TABLE: {s[:80]}")
-        engine, partition_by, location = mt.groups()
-        location = location and string_value(location)
-        # reference: missing ENGINE defaults to Null (sql_parser.rs:441-443)
-        engine = (engine or "Null").strip()
-        db, table = self._qualify(name)
-        tables = self.catalog.db(db)
-        if table in tables:
-            if if_not_exists:
-                return None
-            raise TableAlreadyExists(f"Table '{db}.{table}' already exists")
-        schema = self._parse_schema(cols)
-        storage_for(engine).check_create(schema, location)
-        if db in self.catalog.remote_dbs:
-            # a remote database stores ALL its tables store-side
-            # (remote_database.rs create_table goes through MetaApi;
-            # the engine clause is not part of the remote schema) —
-            # 09_0000 expects engine `remote` for a bare CREATE TABLE
-            self.store.create_table(db, table, json.dumps(schema.jsonValue()))
-            engine = "remote"
-        tables[table] = TableDef(
             name=table,
             database=db,
             engine=engine,
             schema=schema,
             location=location,
+            view_sql=select if materialized else None,
             partition_by=partition_columns(engine, partition_by, schema),
+        )
+        if materialized:
+            tdef.storage.overwrite(self, tdef, df)
+        elif cols is None:
+            tdef.storage.create_as(self, tdef, df)
+        self.catalog.db(db)[table] = tdef
+        return None
+
+    def _create_view(self, c: Cursor, replace: bool = False) -> None:
+        """CREATE [OR REPLACE] VIEW — capability extension (no view
+        interpreter exists in the reference). The SELECT text is stored
+        and re-expanded per query, so views track their base tables;
+        creation validates it once through the dialect path."""
+        if_not_exists = c.accept("IF", "NOT", "EXISTS")
+        ref = c.table()
+        c.expect("AS")
+        select = c.query()
+        db, table = ref[0] or self.current_db, ref[1]
+        if not replace and self._new_table(ref, if_not_exists) is None:
+            return None
+        df = self._select(select)  # validate + capture schema NOW
+        self.catalog.db(db)[table] = TableDef(
+            name=table, database=db, engine="View", schema=df.schema, view_sql=select
         )
         return None
 
+    _create_materialized_view = partialmethod(_create_table, materialized=True)
+    _replace_view = partialmethod(_create_view, replace=True)
+
+    def _refresh_materialized_view(self, c: Cursor) -> None:
+        """REFRESH MATERIALIZED VIEW mv [PARTITION (col='v', …)] —
+        recompute the stored SELECT and replace the stored data, whole
+        or one partition subtree (sources/storage.File.refresh)."""
+        ref = c.table()
+        spec = self._partition_spec(c) if c.accept("PARTITION") else None
+        c.end()
+        tdef = self.resolve_table(ref)
+        tdef.storage.refresh(self, tdef, spec)
+        return None
+
     def _parse_schema(self, cols: str) -> StructType:
+        """A CREATE TABLE column list: `name type, …`."""
         fields = []
         for part in split(cols, ","):
-            mm = re.match(r"(?s)^\s*(\w+)\s+(.+?)\s*$", part)
-            if not mm:
-                raise UnsupportedStatement(f"Cannot parse column def: {part}")
-            cname, ctype = mm.group(1), mm.group(2).strip().lower()
-            ctype = re.sub(r"varchar\s*\(\d+\)", "string", ctype)
-            ctype = _COL_TYPES.get(ctype, ctype)
-            fields.append(StructField(cname, _parse_datatype_string(ctype), True))
+            c = Cursor(part)
+            name = c.name()
+            fields.append(self._column(name, c.rest()))
         return StructType(fields)
 
-    def _qualify(self, name: str) -> tuple[str, str]:
-        if "." in name:
-            db, table = name.split(".", 1)
-            return db, table
-        return self.current_db, name
-
-    def _drop_table(self, s: str):
-        m = re.match(r"(?is)^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.]+)\s*$", s)
-        if_exists, name = m.groups()
+    @staticmethod
+    def _column(name: str, ctype: str) -> StructField:
+        """A column of SQL/ClickHouse type text `ctype`."""
+        ctype = re.sub(r"varchar\s*\(\d+\)", "string", ctype.lower())
         try:
-            tdef = self.resolve_table(name)
+            dtype = _parse_datatype_string(_COL_TYPES.get(ctype, ctype))
+        except PySparkException as e:
+            first = str(e).strip().splitlines()[0]
+            raise SyntaxError_(f"Cannot parse column type {ctype!r}: {first}") from e
+        return StructField(name, dtype, True)
+
+    def _drop_table(self, c: Cursor):
+        if_exists = c.accept("IF", "EXISTS")
+        ref = c.table()
+        c.end()
+        try:
+            tdef = self.resolve_table(ref)
         except UnknownTable:
             if if_exists:
                 return None
@@ -1263,14 +1062,11 @@ class Engine:
         self.spark.catalog.dropTempView(f"{db}__{table}")
         return None
 
-    def _create_database(self, s: str):
-        m = re.match(
-            r"(?is)^CREATE\s+DATABASE\s+(IF\s+NOT\s+EXISTS\s+)?(\w+)\s*(?:ENGINE\s*=\s*(\w+))?\s*$",
-            s,
-        )
-        if m is None:
-            raise UnsupportedStatement(f"Cannot parse CREATE DATABASE: {s[:80]}")
-        if_not_exists, name, engine = m.groups()
+    def _create_database(self, c: Cursor):
+        if_not_exists = c.accept("IF", "NOT", "EXISTS")
+        name = c.name()
+        engine = c.name() if c.accept("ENGINE", "=") else None
+        c.end()
         if name in self.catalog.databases or name == "system":
             if if_not_exists:
                 return None
@@ -1279,16 +1075,17 @@ class Engine:
         # (datasource.rs:70-96): `ENGINE = Local` → LocalDatabase; no
         # engine clause → the remote store when one is attached
         # (09_0000: tables there report engine `remote`), else local.
-        remote = self.store is not None and (engine or "").strip().lower() != "local"
+        remote = self.store is not None and (engine or "").lower() != "local"
         if remote:
             self.store.create_database(name)
             self.catalog.remote_dbs.add(name)
         self.catalog.databases[name] = {}
         return None
 
-    def _drop_database(self, s: str):
-        m = re.match(r"(?is)^DROP\s+DATABASE\s+(IF\s+EXISTS\s+)?(\w+)", s)
-        if_exists, name = m.groups()
+    def _drop_database(self, c: Cursor):
+        if_exists = c.accept("IF", "EXISTS")
+        name = c.name()
+        c.end()
         if name not in self.catalog.databases:
             if if_exists:
                 return None
@@ -1301,15 +1098,16 @@ class Engine:
             self.current_db = "default"
         return None
 
-    def _use(self, s: str):
-        name = s.split()[1].strip()
+    def _use(self, c: Cursor):
+        name = c.name()
+        c.end()
         if name != "system" and name not in self.catalog.databases:
             raise UnknownDatabase(f"Unknown database: '{name}'")
         self.current_db = name
         return None
 
-    def _describe(self, s: str):
-        tdef = self.resolve_table(s.split()[1].strip())
+    def _describe(self, c: Cursor):
+        tdef = self._whole_table(c)
         # Reference DESCRIBE prints its own type names and NO for the
         # (default) non-nullable columns (10_0000_describe_table.result:
         # `a  Int64  NO`); map Spark names through the same table
@@ -1319,48 +1117,47 @@ class Engine:
         rows = [(f.name, _fq_typename(f.dataType.simpleString()), "NO") for f in tdef.schema]
         return local_rows(self.spark, rows, "Field STRING, Type STRING, Null STRING")
 
-    def _show(self, s: str):
-        up = s.upper().rstrip()
-        if up.startswith("SHOW TABLES"):
-            # reference rewrites SHOW onto system tables (plan_parser.rs:105-127)
-            return self._select(
-                f"SELECT name FROM system.tables WHERE database = '{self.current_db}' ORDER BY name"
-            )
-        if up.startswith("SHOW DATABASES"):
-            return self._select("SELECT name FROM system.databases ORDER BY name")
-        if up.startswith("SHOW SETTINGS"):
-            return self._select("SELECT name, value FROM system.settings ORDER BY name")
-        if up.startswith("SHOW PROCESSLIST"):
-            return self._select("SELECT * FROM system.processes")
-        m = re.match(r"(?is)^SHOW\s+PARTITIONS\s+(?:FROM\s+)?([\w.]+)\s*$", s)
-        if m:
-            return self._show_partitions(m.group(1))
-        m = re.match(r"(?is)^SHOW\s+SNAPSHOTS\s+(?:FROM\s+)?([\w.]+)\s*$", s)
-        if m:
-            from fuse_query_spark.sources.snapshots import snapshot_history
+    # SHOW statements the reference rewrites onto system tables
+    # (plan_parser.rs:105-127)
+    _SHOW_SELECTS = {
+        "TABLES": "SELECT name FROM system.tables WHERE database = {db} ORDER BY name",
+        "DATABASES": "SELECT name FROM system.databases ORDER BY name",
+        "SETTINGS": "SELECT name, value FROM system.settings ORDER BY name",
+        "PROCESSLIST": "SELECT * FROM system.processes",
+    }
 
-            tdef = self.resolve_table(m.group(1))
-            return snapshot_history(self.spark, tdef.storage.versions(tdef, "SHOW SNAPSHOTS"))
-        m = re.match(r"(?is)^SHOW\s+CREATE\s+TABLE\s+([\w.]+)\s*$", s)
-        if m:
-            tdef = self.resolve_table(m.group(1))
+    def _show(self, c: Cursor):
+        for word, select in self._SHOW_SELECTS.items():
+            if c.accept(word):
+                c.end()
+                return self._select(select.format(db=quote(self.current_db)))
+        if c.accept("PARTITIONS"):
+            c.accept("FROM")
+            tdef = self._whole_table(c)
+            return local_rows(self.spark, [(p,) for p in partition_names(tdef)], "partition STRING")
+        if c.accept("SNAPSHOTS"):
+            c.accept("FROM")
+            tdef = self._whole_table(c)
+            versions = tdef.storage.versions(tdef, "SHOW SNAPSHOTS")
+            return snapshots.snapshot_history(self.spark, versions)
+        if c.accept("CREATE", "TABLE"):
+            tdef = self._whole_table(c)
             return local_rows(
                 self.spark, [(tdef.name, tdef.storage.ddl(tdef))], "Table STRING, CreateTable STRING"
             )
-        raise UnsupportedStatement(f"Unsupported SHOW: {s}")
+        raise c.error(", ".join(self._SHOW_SELECTS) + ", PARTITIONS, SNAPSHOTS or CREATE TABLE")
 
-    # settings whose consumers need an integer; rejected at SET time
-    # (advice r11: `SET min_distributed_rows = 'abc'` used to store the
-    # string, and meets_distribution_threshold's fail-open except then
-    # silently forced every distributable statement to fan out)
+    # settings whose consumers need an integer; anything else is
+    # refused at SET time
     _INT_SETTINGS = (
         "max_threads", "max_block_size",
         "min_distributed_rows", "min_distributed_bytes",
     )
 
-    def _set(self, s: str):
-        m = re.match(r"(?is)^SET\s+(\w+)\s*=\s*(.+)$", s)
-        key, raw = m.group(1).lower(), m.group(2).strip()
+    def _set(self, c: Cursor):
+        key = c.name().lower()
+        c.expect("=")
+        raw = c.rest()
         value = string_value(raw)
         if value is None:
             value = raw
@@ -1382,27 +1179,20 @@ class Engine:
 
     # ---------- INSERT ----------
 
-    _INSERT = re.compile(
-        r"(?is)^INSERT\s+INTO\s+([\w.]+)\s*(?:\(([^)]*)\))?\s*VALUES\s*(.+)$"
-    )
-    _INSERT_SELECT = re.compile(r"(?is)^INSERT\s+INTO\s+([\w.]+)\s*(?:\(([^)]*)\))?\s*(SELECT\s.+)$")
-    _INSERT_OVERWRITE = re.compile(
-        r"(?is)^INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([\w.]+)\s*(?:\(([^)]*)\))?\s*(SELECT\s.+)$"
-    )
+    def _insert_overwrite(self, c: Cursor):
+        """INSERT OVERWRITE [TABLE] t [(cols)] query."""
+        c.accept("TABLE")
+        ref = c.table()
+        cols = c.names() if c.at("(") else None
+        return self._insert_select(ref, cols, c.query(), overwrite=True)
 
-    def _insert(self, s: str):
-        mo = self._INSERT_OVERWRITE.match(s)
-        if mo:
-            return self._insert_select(*mo.groups(), overwrite=True)
-        m = self._INSERT.match(s)
-        if not m:
-            ms = self._INSERT_SELECT.match(s)
-            if ms:
-                return self._insert_select(*ms.groups())
-            raise UnsupportedStatement(f"Cannot parse INSERT: {s[:80]}")
-        name, cols, values = m.groups()
-        tdef = self.resolve_table(name)
-        colnames = [c.strip() for c in cols.split(",")] if cols else [f.name for f in tdef.schema]
+    def _insert(self, c: Cursor):
+        """INSERT INTO t [(cols)] VALUES (…), … | query."""
+        ref = c.table()
+        cols = c.names() if c.at("(") else None
+        if not c.accept("VALUES"):
+            return self._insert_select(ref, cols, c.query())
+        values = c.rest()
         # one list of item texts per parenthesized tuple; an empty item
         # or a tuple without parentheses is malformed
         tuples = [
@@ -1410,7 +1200,9 @@ class Engine:
             for t in split(values, ",")
         ]
         if any("" in items for items in tuples):
-            raise UnsupportedStatement(f"Cannot parse INSERT VALUES: {values[:80]}")
+            raise SyntaxError_(f"Cannot parse INSERT VALUES: {values[:80]}")
+        tdef = self.resolve_table(ref)
+        colnames = self._target_columns(tdef, cols)
         if tdef.storage.keeps_literal_text:  # the remote engine's parity
             rows = [tuple(items) for items in tuples]
         else:
@@ -1429,14 +1221,11 @@ class Engine:
 
     def _coerce_literals(self, rows: list[tuple], colnames: list[str], schema: StructType) -> DataFrame:
         """VALUES rows (one literal text or None per column) as a local
-        relation of the declared column types: the texts load as STRING
-        columns and CAST to each declared type, so coercion follows
-        Spark's cast rules (1 → DOUBLE, '2021-01-02' → DATE, and a
-        DECIMAL from the literal's digits, never through a binary
-        double). The casts fold into the local relation while the plan
-        is optimized, which happens here, on the driver: a value the
-        cast rejects (300 into TINYINT) fails this INSERT as
-        BadDataValueType instead of a later scan."""
+        relation of the declared column types: STRING columns CAST to
+        each type, so coercion follows Spark's cast rules (a DECIMAL
+        from the literal's digits, never through a double). The casts
+        fold while the plan is optimized, here on the driver, so a value
+        the cast rejects fails this INSERT as BadDataValueType."""
         bad = [r for r in rows if len(r) != len(colnames)]
         if bad:
             raise BadArguments(
@@ -1448,22 +1237,42 @@ class Engine:
         )
         try:
             df = text.selectExpr(
-                *[f"CAST(`{c}` AS {schema[c].dataType.simpleString()}) AS `{c}`" for c in colnames]
+                *[
+                    f"CAST({q} AS {schema[c].dataType.simpleString()}) AS {q}"
+                    for c, q in zip(colnames, map(quote_name, colnames))
+                ]
             )
             df._jdf.queryExecution().optimizedPlan()
         except PySparkException as e:
             raise BadDataValueType(str(e).splitlines()[0]) from e
         return df
 
-    def resolve_table(self, name: str) -> TableDef:
-        """Catalog lookup for `[db.]table` against the current
-        database (wire front-ends resolve INSERT targets through
-        this)."""
-        db, table = self._qualify(name)
+    def resolve_table(self, ref: str | tuple[str | None, str]) -> TableDef:
+        """Catalog lookup of a table reference: `[db.]table` text, or
+        the (database or None, table) pair Cursor.table() reads; no
+        database means the current one (wire front-ends resolve INSERT
+        targets through this)."""
+        if isinstance(ref, str):
+            c = Cursor(ref)
+            ref = c.table()
+            c.end()
+        db, table = ref
+        db = db or self.current_db
         tables = self.catalog.db(db)
         if table not in tables:
             raise UnknownTable(f"Unknown table: '{db}.{table}'")
         return tables[table]
+
+    @staticmethod
+    def _target_columns(tdef: TableDef, cols: list[str] | None) -> list[str]:
+        """The columns an INSERT writes: `cols`, each of which must be
+        the table's, or all of them."""
+        if cols is None:
+            return tdef.schema.names
+        for col in cols:
+            if col not in tdef.schema.names:
+                raise UnknownColumn(f"Unknown column '{col}' in '{tdef.database}.{tdef.name}'")
+        return cols
 
     def append_rows(self, tdef: TableDef, colnames: list[str], rows: list[tuple]):
         """Append already-decoded Python rows to a table — the wire
@@ -1480,25 +1289,23 @@ class Engine:
         return None
 
     def _insert_select(
-        self, name: str, cols: str | None, select_sql: str, overwrite: bool = False
+        self,
+        ref: tuple[str | None, str],
+        cols: list[str] | None,
+        select_sql: str,
+        overwrite: bool = False,
     ):
-        """INSERT INTO t [(cols)] SELECT … — the reference streams
-        SELECT output into Table::append_data (interpreter_insert_into
-        .rs:33-45); here the SELECT's columns are matched by position
-        and cast to the declared types.
-
-        INSERT OVERWRITE (extension) is dynamic on a PARTITION BY
-        table: only the partitions present in the SELECT output are
-        replaced, so re-running a backfill for one day rewrites that
-        day's directory and nothing else — the idempotence partitioned
-        pipelines rely on at fleet scale."""
-        tdef = self.resolve_table(name)
+        """INSERT INTO t [(cols)] query (interpreter_insert_into.rs:
+        33-45): the query's columns match by position and cast to the
+        declared types. INSERT OVERWRITE (extension) is dynamic on a
+        PARTITION BY table: only the partitions present in the output
+        are replaced, so re-running one day's backfill rewrites that
+        day's directory and nothing else."""
+        tdef = self.resolve_table(ref)
         df = self._select(select_sql)
-        colnames = [c.strip() for c in cols.split(",")] if cols else [f.name for f in tdef.schema]
+        colnames = self._target_columns(tdef, cols)
         if len(df.columns) != len(colnames):
-            # standard SQL (and the reference) reject arity mismatch;
-            # zip() previously dropped extras / null-filled silently
-            # (code-review r8)
+            # standard SQL (and the reference) reject arity mismatch
             raise UnsupportedStatement(
                 f"INSERT INTO {tdef.database}.{tdef.name}: SELECT produces {len(df.columns)} "
                 f"column(s) but {len(colnames)} target column(s) were specified"

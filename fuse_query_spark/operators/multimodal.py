@@ -1532,6 +1532,8 @@ def _jpeg_coefs(data: bytes) -> tuple[int, int, list[dict]]:
             k0 = max(ss, 1)  # the AC band; a sequential scan's DC comes first
             try:
                 for si, i in _jpeg_scan_blocks(scan, mcus_x, mcus_y, restart_interval, coder.restart):
+                    if coder.dry:  # a QM scan whose file ends before its last block
+                        raise ValueError("JPEG entropy data exhausted")
                     if dc:
                         dc(si, i, al)
                     if ac:
@@ -1796,6 +1798,8 @@ class _HuffmanScan(_BitReader):
     ...] and must exist for every pass the scan's band [ss, se] at Ah
     = `ah` codes. Each method decodes one block's part of the scan into
     row i of scan component si's zigzag coefficient store coefs[si]."""
+
+    dry = False  # the bit reader raises itself when the data runs out
 
     def __init__(self, data: bytes, pos: int, coefs, sel, htables: dict, ss: int, se: int, ah: int):
         _BitReader.__init__(self, data, pos)
@@ -2166,29 +2170,34 @@ class _QMDecoder:
     segment. JPEG arithmetic data is BYTE-stuffed like Huffman data
     (an 0xFF data byte travels as 0xFF 0x00; a real marker ends the
     segment, after which zero bytes are fed) — NOT the bit-stuffing
-    JBIG/JPEG2000 use. Renormalization is lazy (performed at the top
-    of the next decision) with `ct` counting surplus low bits in the
-    code register, so the interval register A aligns against C via one
-    shift per comparison. Statistics bins travel as one byte per
-    context: (MPS << 7) | state-index."""
+    JBIG/JPEG2000 use. Data that ends with no marker at all is a file
+    cut short: zeros are fed as well, and `dry` says so. Renormalization
+    is lazy (performed at the top of the next decision) with `ct`
+    counting surplus low bits in the code register, so the interval
+    register A aligns against C via one shift per comparison.
+    Statistics bins travel as one byte per context: (MPS << 7) |
+    state-index."""
 
     def __init__(self, data: bytes, pos: int):
         self.data, self.pos = data, pos
-        self.marker = None
+        self.marker, self.dry = None, False
         self.c = (self._byte() << 8) | self._byte()
         self.ct = 0
         self.a = 0x10000
 
     def _byte(self) -> int:
-        if self.marker is not None or self.pos >= len(self.data):
-            return 0  # zero-feed past a marker / end of data
+        if self.marker is not None:
+            return 0  # zero-feed past a marker
+        if self.pos >= len(self.data):
+            self.dry = True
+            return 0
         b = self.data[self.pos]
         self.pos += 1
         if b == 0xFF:
             while self.pos < len(self.data) and self.data[self.pos] == 0xFF:
                 self.pos += 1  # fill bytes before a marker
             if self.pos >= len(self.data):
-                self.marker = 0xD9
+                self.marker, self.dry = 0xD9, True
                 return 0
             nxt = self.data[self.pos]
             if nxt == 0x00:
@@ -2392,6 +2401,10 @@ class _ArithmeticScan:
         self.ac_stats = {t: bytearray(256) for t in range(4)}
         self.dc_ctx = [0] * len(self.sel)
         self.last_dc = [0] * len(self.sel)
+
+    @property
+    def dry(self) -> bool:
+        return self.dec.dry
 
     def restart(self, m: int) -> None:
         # the decoder either stopped AT the marker (it consumed the 0xFF

@@ -43,7 +43,6 @@ statement inside the engine's live/cancellable/traced scope.
 
 from __future__ import annotations
 
-import re
 import select
 import socket
 import socketserver
@@ -52,6 +51,8 @@ import threading
 import time
 from datetime import date, datetime, timedelta as _timedelta, timezone
 
+from fuse_query_spark.dialect.lexer import Cursor
+from fuse_query_spark.errors import SyntaxError_
 from fuse_query_spark.servers.common import ReusableThreadingTCPServer, first_line
 from fuse_query_spark.servers.metrics import (
     METRIC_CLICKHOUSE_PROCESSOR_REQUEST_DURATION,
@@ -102,13 +103,24 @@ BLOCK_ROWS = 65536
 
 _EPOCH_DATE = date(1970, 1, 1)
 
-# Wire-INSERT form: the query text ends at VALUES / FORMAT <fmt> and
-# the data follows as native Data blocks. "INSERT INTO t VALUES (1)"
-# (inline data) deliberately does NOT match — that stays on the SQL
-# path.
-_WIRE_INSERT = re.compile(
-    r"(?is)^\s*INSERT\s+INTO\s+([\w.]+)\s*(\([^)]*\))?\s*(?:VALUES|FORMAT\s+\w+)?\s*$"
-)
+
+def _wire_insert(query: str) -> tuple[tuple[str | None, str], list[str] | None] | None:
+    """(table, columns or None) when the query ends at VALUES / FORMAT
+    <fmt> and its data follows as Data blocks; inline data ("INSERT
+    INTO t VALUES (1)") stays on the SQL path."""
+    c = Cursor(query)
+    if not c.accept("INSERT", "INTO"):
+        return None
+    try:
+        ref = c.table()
+        cols = c.names() if c.at("(") else None
+        if not c.accept("VALUES") and c.accept("FORMAT"):
+            c.name()
+        c.end()
+    except SyntaxError_:
+        return None
+    return ref, cols
+
 
 _first_line = first_line  # shared wire-front error rendering
 
@@ -552,13 +564,13 @@ class _CHConn:
         if n_client_rows:
             self.send_exception("External tables with data are not supported")
             return
-        m = _WIRE_INSERT.match(query)
-        if m:
-            self.handle_wire_insert(m.group(1), m.group(2))
+        wire = _wire_insert(query)
+        if wire is not None:
+            self.handle_wire_insert(*wire)
             return
         self.run_query(query)
 
-    def handle_wire_insert(self, name: str, cols_clause: str | None) -> None:
+    def handle_wire_insert(self, ref: tuple[str | None, str], cols: list[str] | None) -> None:
         """Native-protocol streamed INSERT (judge r5 ask #2): the query
         text ends at VALUES/FORMAT, the data arrives as client Data
         blocks. Real ClickHouse clients (clickhouse-driver et al.)
@@ -576,20 +588,16 @@ class _CHConn:
         on the parquet-sink path, same as the reference's store
         ingestion."""
         try:
-            tdef = self.engine.resolve_table(name)
+            tdef = self.engine.resolve_table(ref)
         except Exception as e:
             self.send_exception(_first_line(e))
             return
-        colnames = (
-            [c.strip() for c in cols_clause.strip("()").split(",")]
-            if cols_clause
-            else [f.name for f in tdef.schema.fields]
-        )
+        colnames = cols or [f.name for f in tdef.schema.fields]
         try:
             columns = []
             for c in colnames:
                 if c not in tdef.schema.names:
-                    raise ValueError(f"Unknown column {c} in table {name}")
+                    raise ValueError(f"Unknown column {c} in table {tdef.database}.{tdef.name}")
                 f = tdef.schema[c]
                 mapped = _ch_type_of(f.dataType.simpleString())
                 if mapped is None:

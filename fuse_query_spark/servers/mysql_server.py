@@ -42,7 +42,7 @@ import threading
 import time
 from datetime import date, datetime
 
-from fuse_query_spark.dialect.lexer import mask, quote
+from fuse_query_spark.dialect.lexer import mask, quote, quote_name
 from fuse_query_spark.servers.common import ReusableThreadingTCPServer, first_line
 from fuse_query_spark.servers.metrics import (
     METRIC_MYSQL_PROCESSOR_REQUEST_DURATION,
@@ -367,7 +367,7 @@ class _Conn:
             # r8) — with replacement the statement fails downstream as a
             # normal parse error while the connection survives
             elif cmd == COM_INIT_DB:
-                self._run_sql(f"USE {arg.decode(errors='replace')}", init_db=True)
+                self._run_sql(f"USE {quote_name(arg.decode(errors='replace'))}", init_db=True)
             elif cmd == COM_QUERY:
                 self._run_sql(arg.decode(errors="replace"))
             elif cmd == COM_STMT_PREPARE:

@@ -51,7 +51,6 @@ from __future__ import annotations
 
 import glob
 import os
-import re
 import shutil
 from dataclasses import dataclass
 
@@ -67,7 +66,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from fuse_query_spark.dialect.lexer import quote, split, string_value
+from fuse_query_spark.dialect.lexer import quote, quote_name
 from fuse_query_spark.errors import UnsupportedStatement
 from fuse_query_spark.sources import snapshots
 from fuse_query_spark.sources.tables import local_rows
@@ -227,20 +226,14 @@ def _local_concat(a: DataFrame, b: DataFrame) -> DataFrame | None:
 # ---------- partitions ----------
 
 
-def partition_prefix(tdef, spec: str) -> list[tuple[str, str]]:
-    """Parse `col='v'[, col2='w']` and validate it names a PREFIX of
-    the table's partition columns in declaration order — the shared
-    contract of DROP PARTITION, OPTIMIZE … PARTITION and REFRESH …
-    PARTITION: a prefix selects exactly one subtree of the layout."""
+def partition_prefix(tdef, pairs: list[tuple[str, str]]) -> list[tuple[str, str]]:
+    """Check that a partition spec's (column, value) pairs name a
+    PREFIX of the table's partition columns in declaration order — the
+    shared contract of DROP PARTITION, OPTIMIZE … PARTITION and
+    REFRESH … PARTITION: a prefix selects exactly one subtree of the
+    layout."""
     if not tdef.partition_by:
         raise UnsupportedStatement(f"Table '{tdef.database}.{tdef.name}' is not partitioned")
-    pairs = []
-    for part in split(spec, ","):
-        mm = re.match(r"(?s)^(\w+)\s*=\s*(.+)$", part)
-        if not mm:
-            raise UnsupportedStatement(f"Cannot parse partition spec: {part}")
-        value = string_value(mm.group(2))
-        pairs.append((mm.group(1), mm.group(2) if value is None else value))
     got = tuple(c for c, _ in pairs)
     if got != tdef.partition_by[: len(pairs)]:
         raise UnsupportedStatement(
@@ -250,38 +243,57 @@ def partition_prefix(tdef, spec: str) -> list[tuple[str, str]]:
     return pairs
 
 
-def partition_path(spark, tdef, pairs) -> str:
-    """Directory of the partition (prefix) `pairs` — (column, value)
-    in partition order — escaped exactly the way Spark writes it
-    (ExternalCatalogUtils.escapePathName; NULL is
-    __HIVE_DEFAULT_PARTITION__). A raw `col=value` path misses every
-    leaf whose value holds a character Spark escapes (`:`, `'`, `/`)."""
+def partition_name(spark, pairs) -> str:
+    """The partition (prefix) `pairs`, (column, value) in partition
+    order, as Spark names it on disk and in SHOW PARTITIONS: `col=value/…`,
+    each part escaped by ExternalCatalogUtils.escapePathName (NULL is
+    __HIVE_DEFAULT_PARTITION__), so `10:00` is `10%3A00`."""
     esc = spark._jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    return os.path.join(
-        tdef.location,
-        *[
-            f"{esc.escapePathName(c)}="
-            + ("__HIVE_DEFAULT_PARTITION__" if v is None else esc.escapePathName(str(v)))
-            for c, v in pairs
-        ],
+    return "/".join(
+        f"{esc.escapePathName(c)}="
+        + ("__HIVE_DEFAULT_PARTITION__" if v is None else esc.escapePathName(str(v)))
+        for c, v in pairs
     )
+
+
+def partition_path(spark, tdef, pairs) -> str:
+    """Directory of the partition (prefix) `pairs`."""
+    name = partition_name(spark, pairs)
+    return os.path.join(tdef.location, name) if name else tdef.location
+
+
+def partition_names(tdef) -> list[str]:
+    """SHOW PARTITIONS: the partition_name of every leaf, read off the
+    directories Spark wrote (a stand-in for a metastore listing)."""
+    if not tdef.partition_by:
+        raise UnsupportedStatement(f"Table '{tdef.database}.{tdef.name}' is not partitioned")
+    names = [""] if tdef.location else []
+    for col in tdef.partition_by:
+        names = [
+            os.path.join(name, d)
+            for name in names
+            if os.path.isdir(os.path.join(tdef.location, name))
+            for d in sorted(os.listdir(os.path.join(tdef.location, name)))
+            if d.startswith(f"{col}=")
+        ]
+    return names
 
 
 @dataclass
 class Mutation:
     """A DELETE or UPDATE as the rows it leaves: `SELECT {select} FROM
-    {name}` restricted to `keep`. `where` bounds the rows it changes
+    {source}` restricted to `keep`. `where` bounds the rows it changes
     (None: it may move rows anywhere, so no partition scoping)."""
 
     verb: str  # as refusals name it: "DELETE from" | "UPDATE"
-    name: str
+    source: str  # a FROM item over the table
     select: str
     keep: str | None = None
     where: str | None = None
 
     def rows(self, member: str | None = None) -> str:
         conds = [c for c in (member and f"({member})", self.keep) if c]
-        return f"SELECT {self.select} FROM {self.name}" + (
+        return f"SELECT {self.select} FROM {self.source}" + (
             " WHERE " + " AND ".join(conds) if conds else ""
         )
 
@@ -624,14 +636,15 @@ class File(_Cached):
             shutil.rmtree(tdef.location)
             os.rename(tmp, tdef.location)
             return
-        pcols = ", ".join(tdef.partition_by)
-        affected = eng._select(f"SELECT DISTINCT {pcols} FROM {m.name} WHERE ({m.where})").collect()
+        pcols = ", ".join(map(quote_name, tdef.partition_by))
+        query = f"SELECT DISTINCT {pcols} FROM {m.source} WHERE ({m.where})"
+        affected = eng._select(query).collect()
         if not affected:
             return
         member = " OR ".join(
             "("
             + " AND ".join(
-                f"{c} IS NULL" if r[c] is None else f"{c} = {quote(str(r[c]))}"
+                quote_name(c) + (" IS NULL" if r[c] is None else f" = {quote(str(r[c]))}")
                 for c in tdef.partition_by
             )
             + ")"
@@ -666,7 +679,7 @@ class File(_Cached):
         from fuse_query_spark.sources.sinks import compact_parquet
 
         pairs = partition_prefix(tdef, spec) if spec else []
-        label = "/".join(f"{c}={v}" for c, v in pairs) or "<table>"
+        label = partition_name(eng.spark, pairs) or "<table>"
         target = partition_path(eng.spark, tdef, pairs)
 
         def summary(*vals) -> DataFrame:
@@ -705,7 +718,7 @@ class File(_Cached):
             return super().refresh(eng, tdef, spec)
         if spec:
             pairs = partition_prefix(tdef, spec)
-            where = " AND ".join(f"{c} = {quote(v)}" for c, v in pairs)
+            where = " AND ".join(f"{quote_name(c)} = {quote(v)}" for c, v in pairs)
             df = eng._select(f"SELECT * FROM ({tdef.view_sql}) AS __mv WHERE {where}")
             target = partition_path(eng.spark, tdef, pairs)
         else:
@@ -858,16 +871,16 @@ def storage_for(engine: str) -> Storage:
     return ENGINES.get(engine, _NO_STORAGE)
 
 
-def partition_columns(engine: str, clause: str | None, schema: StructType) -> tuple[str, ...]:
+def partition_columns(engine: str, cols: list[str], schema: StructType) -> tuple[str, ...]:
     """Validate a PARTITION BY clause against engine + schema.
 
     Capability extension past the reference's DDL (sql_parser.rs has
     no PARTITION BY): hive-partitioned files are how Spark prunes
     whole directory trees at planning time instead of scanning them
     (see the PartitionFilters plan gate in test_engine_sql.py)."""
-    if not clause:
+    if not cols:
         return ()
-    cols = tuple(c.strip() for c in clause.split(",") if c.strip())
+    cols = tuple(cols)
     if not storage_for(engine).partitionable:
         raise UnsupportedStatement(
             f"PARTITION BY requires a partitionable file engine {PARTITIONABLE}, got {engine}"

@@ -706,3 +706,29 @@ def test_column_packed_block_keeps_range_errors(kind, value):
             _block_bytes([kind], True, rows, per_value)
         errors.append(str(e.value))
     assert errors[0] == errors[1]
+
+
+@pytest.mark.parametrize(
+    "head",
+    [
+        "INSERT INTO `wi6` VALUES",
+        "INSERT INTO wdb.wi6 FORMAT Native",
+        "INSERT INTO `wdb`.`wi6` (`b c`, a) VALUES",
+        "insert\n  into /* streamed */ wi6\n(`b c`,\n a)\nvalues\n",
+    ],
+)
+def test_wire_insert_head_read_by_the_grammar(insert_client, head):
+    """A backtick table, db.t, a backtick column list and multi-line
+    text all take the Data-block path (a header block comes back)."""
+    c = insert_client
+    for db in ("default", "wdb"):
+        c.query(f"CREATE DATABASE IF NOT EXISTS {db}")
+        c.query(f"DROP TABLE IF EXISTS {db}.wi6")
+        c.query(f"CREATE TABLE {db}.wi6(a int, `b c` string) ENGINE = Memory")
+    block = [["x", "y"], [1, 2]] if "(" in head else [[1, 2], ["x", "y"]]
+    header, progresses, exc = c.wire_insert(head, [block])
+    assert exc is None, exc
+    assert progresses[-1][0] == 2
+    db = "wdb" if "wdb" in head else "default"
+    _, rows, _, _ = c.query(f"SELECT a, `b c` FROM {db}.wi6 ORDER BY a")
+    assert rows == [(1, "x"), (2, "y")]

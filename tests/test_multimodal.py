@@ -1506,3 +1506,52 @@ class TestLibraryDecoder:
             rgb = Image.open(io.BytesIO(bytes(r.content))).convert("RGB")
             lib[r.doc_id] = (rgb.width, rgb.height, rgb.tobytes())
         assert lib == pure and len(lib) == 40
+
+
+def _torn_arithmetic_files(harness=None):
+    """QM-coded files whose last bytes (EOI included) are missing, as a
+    torn download leaves them: SOF9 and SOF10 from the synthetic
+    encoders, and libjpeg's own when the harness is built."""
+    from fuse_query_spark.operators.multimodal import _jpeg_arith_bytes, _jpeg_arith_prog_bytes
+
+    files = {"SOF9": _jpeg_arith_bytes(4)[:-6], "SOF10": _jpeg_arith_prog_bytes(4)[:-5]}
+    if harness is not None:
+        for progressive, name in ((False, "libjpeg-SOF9"), (True, "libjpeg-SOF10")):
+            jpg = _libjpeg_file(harness, 70, 50, 3, True, None, progressive=progressive)
+            files[name] = jpg[: len(jpg) * 9 // 10]
+    return files
+
+
+def test_arithmetic_scan_cut_short_raises(harness):
+    """A QM scan whose data ends, with no marker, before its last block
+    raises the Huffman decoder's "entropy data exhausted" instead of
+    decoding the missing bytes as zeros (the QM decoder feeds zeros
+    only past a marker, as T.81 has it)."""
+    from fuse_query_spark.operators.multimodal import _jpeg_pixels
+
+    for name, data in _torn_arithmetic_files(harness).items():
+        with pytest.raises(ValueError, match="JPEG entropy data exhausted"):
+            _jpeg_pixels(data)
+            pytest.fail(f"{name} decoded")
+
+
+def test_quarantine_catches_torn_arithmetic_jpeg(spark):
+    import pandas as pd
+
+    from fuse_query_spark.operators.multimodal import (
+        _jpeg_arith_bytes,
+        image_pixel_stats_quarantine,
+    )
+
+    payloads = list(_torn_arithmetic_files().values()) + [_jpeg_arith_bytes(4)]
+
+    def _gen(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                {"doc_id": pdf["doc_id"], "content": [payloads[int(i)] for i in pdf["doc_id"]]}
+            )
+
+    docs = spark.range(0, len(payloads)).withColumnRenamed("id", "doc_id")
+    blobs = docs.select("doc_id").mapInPandas(_gen, "doc_id LONG, content BINARY")
+    status = {r.doc_id: r.status for r in image_pixel_stats_quarantine(blobs).collect()}
+    assert status == {0: "quarantined", 1: "quarantined", 2: "decoded"}

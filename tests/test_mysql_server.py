@@ -490,3 +490,21 @@ def test_batched_resultset_bytes_equal_per_row_writer(binary):
     assert b"".join(conn.sock.sent) == b"".join(want)
     assert len(want) > 3000 + len(fields)
     assert len(conn.sock.sent) < 10
+
+
+def test_init_db_takes_the_name_as_written(server, client):
+    """COM_INIT_DB carries a bare database name: one a SQL word cannot
+    spell (a dash, a space, a backtick) selects that database, and
+    trailing text is part of the name, not more statement."""
+    from fuse_query_spark.dialect.lexer import quote_name
+
+    try:
+        for name in ["my-db", "a b", "it`s"]:
+            server.engine.sql(f"CREATE DATABASE {quote_name(name)}")
+            assert client.init_db(name) is True
+            assert client.query("SELECT database()")[1] == [[name]]
+        assert client.init_db("default oops") is False
+        assert client.init_db("default") is True
+    finally:
+        for name in ["my-db", "a b", "it`s"]:
+            server.engine.sql(f"DROP DATABASE IF EXISTS {quote_name(name)}")

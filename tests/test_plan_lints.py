@@ -482,3 +482,54 @@ def encode():
         return body
 """
     assert _jpeg_walk_report(src) == ({"_jpeg_segments", "_jpeg_dims"}, ["encode.seg"])
+
+
+# Statement text read by hand: a name regex (`[\w.]+`, `(\w+)`), a
+# re.match / re.compile (every one in these modules read statement
+# text), or a keyword prefix test (`.upper().startswith(`,
+# `.startswith("DROP TABLE")`).
+_STATEMENT_REGEX = re.compile(
+    r"\[\\w\.\]\+|\(\\w\+\)|\bre\.(?:match|compile|fullmatch)\("
+    r"|\.upper\(\)\.startswith\(|\.startswith\(\(?\"[A-Z][A-Z ]*\""
+)
+
+
+def _statement_regexes(pkg) -> list[str]:
+    files = [pkg / "engine.py"] + sorted((pkg / "servers").glob("*.py"))
+    return [
+        f"{path.relative_to(pkg)}:{n}: {line.strip()}"
+        for path in files
+        if path.exists()
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if _STATEMENT_REGEX.search(line)
+    ]
+
+
+def test_statements_are_read_by_the_grammar():
+    """The engine and the wire servers read statements through the one
+    statement grammar (dialect.lexer.Cursor): no name regex, no
+    re.match/re.compile and no upper-cased prefix test over statement
+    text, so whitespace, comments, keyword case and quoted names mean
+    the same in every statement kind."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "fuse_query_spark"
+    assert _statement_regexes(pkg) == []
+
+
+def test_statement_lint_flags_hand_written_parsers(tmp_path):
+    """The lint recognizes the shapes it forbids."""
+    src = r"""
+if up.startswith("CREATE TABLE"):
+if inner.upper().startswith(("SELECT", "WITH", "(")):
+m = re.match(r"(?is)^DROP\s+TABLE\s+(IF\s+EXISTS\s+)?([\w.]+)\s*$", s)
+_DELETE = re.compile(r"(?is)^DELETE\s+FROM\s+(\S+)\s+WHERE\s+(.+)$")
+m = re.search(r"(?is)^SET\s+(\w+)\s*=\s*(.+)$", s)
+if not qid or not re.fullmatch(r"[\w-]+", qid):
+""".strip().splitlines()
+    (tmp_path / "servers").mkdir()
+    (tmp_path / "engine.py").write_text("\n".join(src) + "\nc.accept('DROP', 'TABLE')\n")
+    (tmp_path / "servers" / "wire.py").write_text(src[0] + "\n")
+    assert [hit.split(":")[:2] for hit in _statement_regexes(tmp_path)] == [
+        ["engine.py", str(n)] for n in range(1, len(src) + 1)
+    ] + [["servers/wire.py", "1"]]

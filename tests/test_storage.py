@@ -355,3 +355,24 @@ def test_binary_file_is_read_only(engine, tmp_path):
     assert parts == []
     assert os.path.exists(tmp_path / "b.bin")
     engine.sql("DROP TABLE bf")
+
+
+def test_one_rendering_of_a_partition(engine, tmp_path):
+    """SHOW PARTITIONS, OPTIMIZE's summary label and its "No such
+    partition" error name a partition one way: Spark's own SHOW
+    PARTITIONS form, `col=value` with the value path-escaped (pyspark
+    4.1.2 prints `day=2021-01-01 10%3A00` for a datasource table)."""
+    loc = tmp_path / "psp"
+    engine.sql(
+        f"CREATE TABLE psp (v BIGINT, day STRING) ENGINE = Parquet PARTITION BY (day) "
+        f"location = '{loc}'"
+    )
+    engine.sql("INSERT INTO psp VALUES (1, '2021-01-01 10:00')")
+    name = "day=2021-01-01 10%3A00"
+    assert [r[0] for r in engine.sql("SHOW PARTITIONS psp").collect()] == [name]
+    assert name in os.listdir(loc)
+    row = engine.sql("OPTIMIZE TABLE psp PARTITION (day = '2021-01-01 10:00')").collect()[0]
+    assert row.partition == name
+    with pytest.raises(UnsupportedStatement, match="No such partition day=2021-01-02 10%3A00 in"):
+        engine.sql("OPTIMIZE TABLE psp PARTITION (day = '2021-01-02 10:00')")
+    engine.sql("DROP TABLE psp")
