@@ -225,6 +225,14 @@ def quote_name(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
+_PLAIN_NAME = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
+
+
+def sql_name(name: str) -> str:
+    """``name`` as SQL text: bare when it is a plain word, else quoted."""
+    return name if _PLAIN_NAME.fullmatch(name) else quote_name(name)
+
+
 # ---------- the statement grammar ----------
 
 _SPACE = re.compile(r"\s*")
@@ -245,6 +253,26 @@ def _token_at(sql: str, pos: int) -> tuple[str, int, int] | None:
             return kind, pos, end
         pos = end
     return None
+
+
+def table_refs(sql: str) -> Iterator[tuple[str | None, str, int, int]]:
+    """Each name in ``sql`` that may reference a table, read as
+    Cursor.table reads one: ``(db, name, start, end)`` for ``db.name``,
+    ``(None, name, start, end)`` for a name alone, bare or
+    backtick-quoted (```my-db`.`t``` is ``("my-db", "t", …)``).
+    Literals and comments are skipped; column references (``t.a``)
+    come out too, for the caller to match against its tables."""
+    c = Cursor(sql)
+    while c.tok is not None:
+        kind, a, b = c.tok
+        if kind not in ("word", "ident") or sql[a:b] == "``":
+            c.take()
+            continue
+        first = c.name()
+        if c.accept(".") and c.tok is not None and c.tok[0] in ("word", "ident"):
+            yield first, c.name(), a, c.pos
+        else:
+            yield None, first, a, b
 
 
 class Cursor:

@@ -29,7 +29,15 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-from fuse_query_spark.dialect.lexer import mask, outside_literals, split, string_value, strip_comments
+from fuse_query_spark.dialect.lexer import (
+    mask,
+    outside_literals,
+    split,
+    sql_name,
+    string_value,
+    strip_comments,
+    table_refs,
+)
 
 
 @dataclass
@@ -464,6 +472,24 @@ def _having_without_group_is_where(s: str, masked: str) -> str:
     return s[: h.start()] + word + s[h.end() :]
 
 
+def _table_rewrites(s: str, ctx: DialectContext) -> str:
+    """Known system.X tables and db-qualified tables → the names of the
+    views Engine._register_views registers (system__X, db__t), found
+    with the lexer's name reader, so quoted names (`my-db`.`t 5`) are
+    rewritten as bare ones are."""
+    out, pos = [], 0
+    for db, name, a, b in table_refs(s):
+        if db == "system" and name.lower() in ctx.system_tables:
+            view = f"system__{name}"
+        elif db is not None and db in ctx.known_dbs:
+            view = f"{db}__{name}"
+        else:
+            continue
+        out += [s[pos:a], sql_name(view)]
+        pos = b
+    return "".join(out) + s[pos:]
+
+
 def rewrite_select(sql: str, ctx: DialectContext | None = None, demote_user: bool = True) -> str:
     """fuse-query dialect SELECT → Spark SQL text."""
     ctx = ctx or DialectContext()
@@ -482,19 +508,7 @@ def rewrite_select(sql: str, ctx: DialectContext | None = None, demote_user: boo
     s, masked = _rewrite_numbers(s, mask(s), ctx)
     s = _having_without_group_is_where(s, masked)
 
-    def _table_rewrites(seg: str) -> str:
-        # known system.X tables → registered views
-        seg = re.sub(
-            r"\bsystem\.(\w+)",
-            lambda m: f"system__{m[1]}" if m[1].lower() in ctx.system_tables else m[0],
-            seg,
-        )
-        # known db-qualified tables → view names
-        for db in ctx.known_dbs:
-            seg = re.sub(rf"\b{re.escape(db)}\.(\w+)", rf"{db}__\1", seg)
-        return seg
-
-    s = outside_literals(s, _table_rewrites)
+    s = _table_rewrites(s, ctx)
     # LIMIT n BY cols → row_number rewrite (before call rewriting; the
     # wrapped query is rewritten recursively)
     s = _rewrite_limit_by(s)

@@ -35,6 +35,7 @@ from fuse_query_spark.dialect.lexer import (
     split,
     string_value,
     strip_comments,
+    table_refs,
 )
 from fuse_query_spark.dialect.rewriter import DialectContext, rewrite_select
 from fuse_query_spark.errors import (
@@ -50,6 +51,7 @@ from fuse_query_spark.errors import (
     UnsupportedStatement,
 )
 from fuse_query_spark.functions.registry import register_udfs
+from fuse_query_spark.results import collect_arrow, preload
 from fuse_query_spark.sources import snapshots, system_tables as systbl
 from fuse_query_spark.sources.storage import (
     PARTITIONABLE,
@@ -146,6 +148,7 @@ class Engine:
         self.spark = spark or _session.get_spark("fuse-query-spark-engine")
         _session.tune(self.spark)
         register_udfs(self.spark)
+        preload(self.spark)
         self.catalog = Catalog()
         self.current_db = "default"
         self.store = None  # StoreClient once attach_store() is called
@@ -252,7 +255,7 @@ class Engine:
         statement scope — the serving path: the collect runs while the
         pid is live in system.processes, under the cancellable job group
         (KILL QUERY reaches it), and its time is traced. Returns
-        (DataFrame | None, rows | None)."""
+        (DataFrame | None, pyarrow.Table | None)."""
         result = None
         for stmt in split(text, ";"):
             if strip_comments(stmt).strip():
@@ -292,10 +295,10 @@ class Engine:
                 # sides; cancel()'s re-cancel loop covers the jobs between
                 if self._live.get(pid, {}).get("state") == "Aborted":
                     raise QueryAborted(f"query {pid} killed")
-                rows = out.collect()
+                table = collect_arrow(out)
                 if self._live.get(pid, {}).get("state") == "Aborted":
                     raise QueryAborted(f"query {pid} killed")
-                return out, rows
+                return out, table
             return (out, None) if eager else out
         except BaseException:
             info = self._live.get(pid) or {}
@@ -360,7 +363,7 @@ class Engine:
         (("CREATE", "MATERIALIZED", "VIEW"), "_create_materialized_view"),
         (("CREATE", "DATABASE"), "_create_database"),
         (("DROP", "TABLE"), "_drop_table"),
-        (("DROP", "VIEW"), "_drop_table"),
+        (("DROP", "VIEW"), "_drop_view"),
         (("DROP", "DATABASE"), "_drop_database"),
         (("REFRESH", "MATERIALIZED", "VIEW"), "_refresh_materialized_view"),
         (("USE",), "_use"),
@@ -845,34 +848,36 @@ class Engine:
         reused while its key is unchanged (sources/storage.py), remote
         tables re-ask the store for their parts, and views re-expand.
 
-        Names are found in the masked statement (lexer.mask), so one
-        inside a literal ('system.logs') is not a reference. A
-        registration that fails is skipped, not fatal — a bare word
-        that collides with a broken view's name must not poison
-        unrelated queries — and its error is kept per thread for
-        _select_locked to raise if analysis proves the name was used."""
-        scan = mask(s)
+        Names are read with the lexer (lexer.table_refs), bare or
+        backtick-quoted, so one inside a literal ('system.logs') is not
+        a reference and `q 5` or `my-db`.`t` is. A registration that
+        fails is skipped, not fatal — a bare word that collides with a
+        broken view's name must not poison unrelated queries — and its
+        error is kept per thread for _select_locked to raise if
+        analysis proves the name was used."""
+        qualified, words = set(), set()
+        for db, name, _a, _b in table_refs(s):
+            qualified.add((db, name))
+            words.update((db, name))
         deferred: dict[str, Exception] = {}
-        for m in re.finditer(r"\bsystem\.(?=\w)", scan):
-            name = Cursor(s, m.end()).name().lower()
+        for db, name in qualified:
+            if db != "system":
+                continue
+            name = name.lower()
             if name in self.SYSTEM_TABLES:
                 self.SYSTEM_TABLES[name](self).createOrReplaceTempView(f"system__{name}")
             elif name not in ("numbers", "numbers_mt", "numbers_local"):  # rewritten
-                # maybe no table at all (a backtick alias `system.x`):
-                # the rewriter leaves the name as written
                 deferred[f"system.{name}"] = UnknownTable(f"Unknown system table: '{name}'")
         for db, tables in self.catalog.databases.items():
             for name, tdef in tables.items():
                 try:
                     df = None  # read once per statement
-                    if re.search(rf"\b{re.escape(db)}\.{re.escape(name)}\b", scan):
+                    if (db, name) in qualified:
                         df = self._table_df(tdef)
-                        df.createOrReplaceTempView(f"{db}__{name}")
-                    if db == self.current_db and re.search(
-                        rf"\b{re.escape(name)}\b", scan
-                    ):
+                        df.createOrReplaceTempView(quote_name(f"{db}__{name}"))
+                    if db == self.current_db and name in words:
                         df = self._table_df(tdef) if df is None else df
-                        df.createOrReplaceTempView(name)
+                        df.createOrReplaceTempView(quote_name(name))
                 except Exception as e:
                     # broken/unreachable source (see docstring): defer —
                     # if analysis then proves the name was genuinely
@@ -1044,7 +1049,9 @@ class Engine:
             raise SyntaxError_(f"Cannot parse column type {ctype!r}: {first}") from e
         return StructField(name, dtype, True)
 
-    def _drop_table(self, c: Cursor):
+    def _drop_table(self, c: Cursor, view: bool = False):
+        """DROP TABLE drops any table, a view included; DROP VIEW only a
+        view or a materialized view."""
         if_exists = c.accept("IF", "EXISTS")
         ref = c.table()
         c.end()
@@ -1055,12 +1062,16 @@ class Engine:
                 return None
             raise
         db, table = tdef.database, tdef.name
+        if view and tdef.view_sql is None:
+            raise BadArguments(f"Table {db}.{table} is not a View")
         if db in self.catalog.remote_dbs:
             self.store.drop_table(db, table)
         del self.catalog.db(db)[table]
         self.spark.catalog.dropTempView(table)
         self.spark.catalog.dropTempView(f"{db}__{table}")
         return None
+
+    _drop_view = partialmethod(_drop_table, view=True)
 
     def _create_database(self, c: Cursor):
         if_not_exists = c.accept("IF", "NOT", "EXISTS")

@@ -51,9 +51,24 @@ import threading
 import time
 from datetime import date, datetime, timedelta as _timedelta, timezone
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+
 from fuse_query_spark.dialect.lexer import Cursor
 from fuse_query_spark.errors import SyntaxError_
-from fuse_query_spark.servers.common import ReusableThreadingTCPServer, first_line
+from fuse_query_spark.results import local_micros
+from fuse_query_spark.servers.common import (
+    SEND_BYTES,
+    ReusableThreadingTCPServer,
+    data_bytes,
+    epoch_seconds,
+    first_line,
+    join,
+    numbers,
+    valid_mask,
+    var_binary,
+)
 from fuse_query_spark.servers.metrics import (
     METRIC_CLICKHOUSE_PROCESSOR_REQUEST_DURATION,
     METRIC_SESSION_CLOSE_NUMBERS,
@@ -101,8 +116,6 @@ SERVER_TIMEZONE = "UTC"
 # rows per server Data packet; mirrors ClickHouse's default block size
 BLOCK_ROWS = 65536
 
-_EPOCH_DATE = date(1970, 1, 1)
-
 
 def _wire_insert(query: str) -> tuple[tuple[str | None, str], list[str] | None] | None:
     """(table, columns or None) when the query ends at VALUES / FORMAT
@@ -124,78 +137,103 @@ def _wire_insert(query: str) -> tuple[tuple[str | None, str], list[str] | None] 
 
 _first_line = first_line  # shared wire-front error rendering
 
-# Spark simpleString -> (ClickHouse type name, struct code of the
-# fixed-width column or None for String, value converter). A Data block
-# packs each fixed-width column with one struct call over the converted
-# values. Parity with writers/query_writer.rs:140-170: ints/floats map
-# width-for-width, Utf8 -> String, Boolean -> UInt8, Date32 -> Date,
-# Date64 (timestamps) -> DateTime.
-def _date_days(v) -> int:
-    if isinstance(v, datetime):
-        v = v.date()
-    days = (v - _EPOCH_DATE).days
-    if not 0 <= days <= 0xFFFF:
-        # refuse rather than silently wrap/clamp — same contract as the
-        # unsupported-type path (a DB:Exception on the wire)
-        raise ValueError(f"Date out of ClickHouse Date range 1970..2149: {v}")
-    return days
-
-
-def _datetime_epoch(v) -> int:
-    """TimestampType values are INSTANTS. PySpark's collect() renders
-    them as naive datetimes in the HOST-LOCAL zone (fromInternal uses
-    datetime.fromtimestamp — the session timeZone conf does not change
-    the Python conversion), so a naive value round-trips through
-    .timestamp(), which applies the same local interpretation."""
-    if isinstance(v, date) and not isinstance(v, datetime):
-        v = datetime(v.year, v.month, v.day)
-    epoch = int(v.timestamp())
-    if not 0 <= epoch <= 0xFFFFFFFF:
-        raise ValueError(f"Timestamp out of ClickHouse DateTime range 1970..2106: {v}")
-    return epoch
-
-
-def _datetime_ntz_epoch(v) -> int:
-    """TIMESTAMP_NTZ is a wall clock without a zone; expose it on the
-    wire as that wall clock read in UTC (the server's declared tz)."""
-    if isinstance(v, date) and not isinstance(v, datetime):
-        v = datetime(v.year, v.month, v.day)
-    if v.tzinfo is None:
-        v = v.replace(tzinfo=timezone.utc)
-    epoch = int(v.timestamp())
-    if not 0 <= epoch <= 0xFFFFFFFF:
-        raise ValueError(f"Timestamp out of ClickHouse DateTime range 1970..2106: {v}")
-    return epoch
-
-
+# Spark simpleString -> ClickHouse type name. Parity with
+# writers/query_writer.rs:140-170: ints/floats map width-for-width,
+# Utf8 -> String, Boolean -> UInt8, Date32 -> Date, Date64
+# (timestamps) -> DateTime. A Data block packs each column from its
+# Arrow buffers (_column_bytes), so the value encoding follows the
+# Arrow type: a zoned timestamp is its instant, a TIMESTAMP_NTZ its
+# wall clock read in UTC (the server's declared tz).
 _SPARK_TO_CH = {
-    "tinyint": ("Int8", "b", int),
-    "smallint": ("Int16", "h", int),
-    "int": ("Int32", "i", int),
-    "bigint": ("Int64", "q", int),
-    "float": ("Float32", "f", float),
-    "double": ("Float64", "d", float),
-    "string": ("String", None, str),
-    "boolean": ("UInt8", "B", lambda v: 1 if v else 0),
-    "date": ("Date", "H", _date_days),
-    "timestamp": ("DateTime", "I", _datetime_epoch),
-    "timestamp_ntz": ("DateTime", "I", _datetime_ntz_epoch),
+    "tinyint": "Int8",
+    "smallint": "Int16",
+    "int": "Int32",
+    "bigint": "Int64",
+    "float": "Float32",
+    "double": "Float64",
+    "string": "String",
+    "boolean": "UInt8",
+    "date": "Date",
+    "timestamp": "DateTime",
+    "timestamp_ntz": "DateTime",
 }
 
-def _ch_type_of(spark_simple: str):
-    """(ch_type, struct code, converter) for a Spark simpleString, or
-    None. Decimals lower to Float64: the reference's 2021 datavalues has
-    no decimal — its parser types fractional literals Float64
+
+def _ch_type_of(spark_simple: str) -> str | None:
+    """ClickHouse type name for a Spark simpleString, or None. Decimals
+    lower to Float64: the reference's 2021 datavalues has no decimal —
+    its parser types fractional literals Float64
     (common/datavalues/src/data_type.rs), so this wire surface exposes
     the same."""
     if spark_simple.startswith("decimal("):
-        return _SPARK_TO_CH["double"]
+        return "Float64"
     return _SPARK_TO_CH.get(spark_simple)
 
 
-# Wire-decoder inverses of the encoders above (wire-INSERT path).
-# DateTime uses datetime.fromtimestamp — the exact inverse of
-# _datetime_epoch's local-instant .timestamp() rendering.
+def _out_of_range(col: pa.Array, values: np.ndarray, hi: int) -> None:
+    """Refuse a Date/DateTime value outside 0..hi rather than silently
+    wrap or clamp it — the same contract as the unsupported-type path
+    (a DB:Exception on the wire). The message names the first such
+    value as a Row renders it. NULL slots hold 0, which is in range."""
+    bad = np.flatnonzero((values < 0) | (values > hi))
+    if not len(bad):
+        return
+    t = col.type
+    if pa.types.is_date(t):
+        raise ValueError(f"Date out of ClickHouse Date range 1970..2149: {col[int(bad[0])].as_py()}")
+    wall = int((local_micros(col) if t.tz else numbers(col.cast(pa.int64())))[bad[0]])
+    v = datetime(1970, 1, 1) + _timedelta(microseconds=wall)
+    if not t.tz:
+        v = v.replace(tzinfo=timezone.utc)
+    raise ValueError(f"Timestamp out of ClickHouse DateTime range 1970..2106: {v}")
+
+
+def _varint_prefixes(n: np.ndarray) -> pa.Array:
+    """The unsigned LEB128 varint of each length in n."""
+    mat = np.empty((len(n), 10), np.uint8)
+    widths = np.ones(len(n), np.int64)
+    rest = n.astype(np.int64)
+    for i in range(10):
+        more = rest >= 0x80
+        mat[:, i] = (rest & 0x7F) | (more << 7)
+        widths += more
+        rest >>= 7
+    return var_binary(mat, widths)
+
+
+def _column_bytes(col: pa.Array, nullable: bool) -> bytes:
+    """One column of a Data block, packed from the Arrow array: the
+    null mask (Nullable), then fixed-width little-endian values with
+    zero in NULL slots, or varint-prefixed bytes (String, empty for a
+    NULL)."""
+    t, valid = col.type, valid_mask(col)
+    if not nullable and col.null_count:
+        raise ValueError(f"NULL in a non-Nullable column of type {t}")
+    mask = (~valid).astype(np.uint8).tobytes() if nullable else b""
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        cells = col.cast(pa.large_binary()).fill_null(b"")
+        return mask + data_bytes(join([_varint_prefixes(numbers(pc.binary_length(cells))), cells])).tobytes()
+    if pa.types.is_boolean(t):
+        values = numbers(col.cast(pa.uint8()))
+    elif pa.types.is_decimal(t):
+        # through the decimal text, so the double is float(Decimal): correctly rounded
+        values = numbers(col.cast(pa.string()).cast(pa.float64()))
+    elif pa.types.is_date(t):
+        values = numbers(col.cast(pa.int32()))
+        _out_of_range(col, values, 0xFFFF)
+        values = values.astype("<u2")
+    elif pa.types.is_timestamp(t):
+        values = epoch_seconds(col)
+        _out_of_range(col, values, 0xFFFFFFFF)
+        values = values.astype("<u4")
+    else:
+        values = numbers(col)
+    return mask + np.ascontiguousarray(values, values.dtype.newbyteorder("<")).tobytes()
+
+
+# Wire decoders (wire-INSERT path). DateTime uses
+# datetime.fromtimestamp: the host-local wall clock of the instant, as
+# a Row holds a TimestampType value.
 _CH_UNPACK = {
     "Int8": (1, lambda b: struct.unpack("<b", b)[0]),
     "UInt8": (1, lambda b: b[0]),
@@ -207,7 +245,7 @@ _CH_UNPACK = {
     "UInt64": (8, lambda b: struct.unpack("<Q", b)[0]),
     "Float32": (4, lambda b: struct.unpack("<f", b)[0]),
     "Float64": (8, lambda b: struct.unpack("<d", b)[0]),
-    "Date": (2, lambda b: _EPOCH_DATE + _timedelta(days=struct.unpack("<H", b)[0])),
+    "Date": (2, lambda b: date(1970, 1, 1) + _timedelta(days=struct.unpack("<H", b)[0])),
     "DateTime": (4, lambda b: datetime.fromtimestamp(struct.unpack("<I", b)[0])),
 }
 
@@ -264,10 +302,18 @@ class _CHConn:
         self.r = _Reader(sock)
         self.engine = engine
         self.client_revision = 0
+        self.out = bytearray()
 
     # -- server-side packet writers --
     def _send(self, payload: bytes) -> None:
-        self.sock.sendall(payload)
+        """Buffer a packet; flush() sends what a reply buffered in one
+        sendall (a large result every SEND_BYTES)."""
+        self.out += payload
+
+    def flush(self) -> None:
+        if self.out:
+            self.sock.sendall(self.out)
+            self.out.clear()
 
     def send_hello(self) -> None:
         out = _varint(SERVER_HELLO) + _chstring(DBMS_NAME)
@@ -306,16 +352,11 @@ class _CHConn:
     def send_end_of_stream(self) -> None:
         self._send(_varint(SERVER_END_OF_STREAM))
 
-    def send_block(
-        self, columns: list[tuple[str, str, bool, str | None, object]], rows, lo: int, hi: int
-    ) -> None:
-        """One server Data packet. columns: (name, ch_type, nullable,
-        struct code, converter) — the converter travels with the column
-        because one CH type name can have two encodings (DateTime from
-        timestamp vs timestamp_ntz). rows[lo:hi] is the slice to encode
-        (lo == hi -> header block, query_writer.rs:99-104 sends the
-        empty schema block first). A fixed-width column is packed by one
-        struct call; a String column value by value."""
+    def send_block(self, columns: list[tuple[str, str, bool]], table: pa.Table | None) -> None:
+        """One server Data packet. columns: (name, ch_type, nullable);
+        table holds the block's rows (None -> header block,
+        query_writer.rs:99-104 sends the empty schema block first).
+        Each column is packed from its Arrow buffers (_column_bytes)."""
         rev = min(self.client_revision, SERVER_REVISION)
         out = bytearray(_varint(SERVER_DATA))
         if rev >= MIN_REVISION_WITH_TEMPORARY_TABLES:
@@ -323,25 +364,13 @@ class _CHConn:
         if rev >= MIN_REVISION_WITH_BLOCK_INFO:
             # BlockInfo: field 1 is_overflows=0, field 2 bucket_num=-1
             out += _varint(1) + b"\x00" + _varint(2) + struct.pack("<i", -1) + _varint(0)
-        n_rows = hi - lo
-        out += _varint(len(columns)) + _varint(n_rows)
-        for ci, (name, ch_type, nullable, code, conv) in enumerate(columns):
+        out += _varint(len(columns)) + _varint(0 if table is None else table.num_rows)
+        for ci, (name, ch_type, nullable) in enumerate(columns):
             out += _chstring(name)
             out += _chstring(f"Nullable({ch_type})" if nullable else ch_type)
-            values = [rows[i][ci] for i in range(lo, hi)]
-            if nullable:
-                # Nullable(T): null mask first, then values with zero
-                # (String: empty) placeholders in null slots
-                out += bytes(v is None for v in values)
-            if code is None:
-                for v in values:
-                    out += b"\x00" if v is None and nullable else _chstring(conv(v))
-            else:
-                out += struct.pack(
-                    f"<{n_rows}{code}",
-                    *[0 if v is None and nullable else conv(v) for v in values],
-                )
-        self._send(bytes(out))
+            if table is not None:
+                out += _column_bytes(table.column(ci).combine_chunks(), nullable)
+        self._send(out)
 
     # -- client-side packet readers --
     def read_hello(self) -> None:
@@ -504,7 +533,10 @@ class _CHConn:
         # sessions.rs:73/114 counts every connect/close
         METRICS.counter(METRIC_SESSION_CONNECT_NUMBERS)
         try:
-            self._serve()
+            try:
+                self._serve()
+            finally:
+                self.flush()  # an Exception sent before the connection drops
         finally:
             METRICS.counter(METRIC_SESSION_CLOSE_NUMBERS)
 
@@ -512,6 +544,7 @@ class _CHConn:
         self.read_hello()
         self.send_hello()
         while True:
+            self.flush()  # the previous reply, whole, before the next read
             try:
                 ptype = self.r.varint()
             except ConnectionError:
@@ -599,15 +632,16 @@ class _CHConn:
                 if c not in tdef.schema.names:
                     raise ValueError(f"Unknown column {c} in table {tdef.database}.{tdef.name}")
                 f = tdef.schema[c]
-                mapped = _ch_type_of(f.dataType.simpleString())
-                if mapped is None:
+                ch_type = _ch_type_of(f.dataType.simpleString())
+                if ch_type is None:
                     raise ValueError(f"Unsupported column type:{f.dataType.simpleString()}")
-                columns.append((c, mapped[0], bool(f.nullable), *mapped[1:]))
+                columns.append((c, ch_type, bool(f.nullable)))
         except ValueError as e:
             self.send_exception(str(e))
             return
         # header block: the insert structure the client must follow
-        self.send_block(columns, [], 0, 0)
+        self.send_block(columns, None)
+        self.flush()
         rows: list[tuple] = []
         is_bool = [tdef.schema[c].dataType.simpleString() == "boolean" for c in colnames]
         while True:
@@ -674,7 +708,7 @@ class _CHConn:
             # serving path: collect inside the engine's statement scope
             # (live in system.processes, cancellable, traced) — same
             # rationale as mysql_server._run_sql
-            df, rows = self.engine.sql_collect(query)
+            df, table = self.engine.sql_collect(query)
         except Exception as e:
             self.send_exception(_first_line(e))
             return
@@ -683,42 +717,41 @@ class _CHConn:
             # like the reference's empty interpreter streams
             self.send_end_of_stream()
             return
-        rows = rows or []
         try:
             columns = []
             for f in df.schema.fields:
                 st = f.dataType.simpleString()
-                mapped = _ch_type_of(st)
-                if mapped is None:
+                ch_type = _ch_type_of(st)
+                if ch_type is None:
                     # query_writer.rs:165-169 verbatim behavior
                     raise ValueError(f"Unsupported column type:{st}")
-                columns.append((f.name, mapped[0], bool(f.nullable), *mapped[1:]))
+                columns.append((f.name, ch_type, bool(f.nullable)))
         except ValueError as e:
             self.send_exception(str(e))
             return
         # header block (schema, zero rows), then data in BLOCK_ROWS chunks
         try:
-            self.send_block(columns, rows, 0, 0)
+            self.send_block(columns, None)
             sent = 0
-            while sent < len(rows):
+            while sent < table.num_rows:
                 if self._cancel_requested():
                     break
-                hi = min(sent + BLOCK_ROWS, len(rows))
-                self.send_block(columns, rows, sent, hi)
-                sent = hi
+                self.send_block(columns, table.slice(sent, BLOCK_ROWS))
+                sent = min(sent + BLOCK_ROWS, table.num_rows)
+                if len(self.out) >= SEND_BYTES:
+                    self.flush()
         except (ConnectionError, OSError):
             raise  # socket gone — nothing can be sent to this client
         except Exception as e:
-            # out-of-range Date/DateTime, a None in a column Spark
-            # declared non-nullable (TypeError/struct.error in the
-            # encoding), or any other serialization fault mid-stream:
-            # the protocol permits an Exception packet after data
-            # blocks; refuse loudly instead of dying silently with
-            # the error lost (ADVICE r4: only ValueError was caught,
-            # so encoder TypeErrors escaped to Handler.handle)
+            # out-of-range Date/DateTime, a NULL in a column Spark
+            # declared non-nullable, or any other serialization fault
+            # mid-stream: the protocol permits an Exception packet after
+            # data blocks; refuse loudly instead of dying silently with
+            # the error lost (ADVICE r4: only ValueError was caught, so
+            # encoder TypeErrors escaped to Handler.handle)
             self.send_exception(_first_line(e))
             return
-        self.send_progress(len(rows), 0)
+        self.send_progress(table.num_rows, 0)
         self.send_end_of_stream()
 
 

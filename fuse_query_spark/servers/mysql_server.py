@@ -40,10 +40,25 @@ import socketserver
 import struct
 import threading
 import time
-from datetime import date, datetime
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Row
 
 from fuse_query_spark.dialect.lexer import mask, quote, quote_name
-from fuse_query_spark.servers.common import ReusableThreadingTCPServer, first_line
+from fuse_query_spark.results import decimal_text, local_micros
+from fuse_query_spark.servers.common import (
+    SEND_BYTES,
+    ReusableThreadingTCPServer,
+    data_bytes,
+    first_line,
+    fixed_binary,
+    join,
+    numbers,
+    valid_mask,
+    var_binary,
+)
 from fuse_query_spark.servers.metrics import (
     METRIC_MYSQL_PROCESSOR_REQUEST_DURATION,
     METRIC_SESSION_CLOSE_NUMBERS,
@@ -70,7 +85,7 @@ COM_STMT_CLOSE = 0x19
 COM_STMT_RESET = 0x1A
 
 _EOF = b"\xfe" + struct.pack("<HH", 0, 2)  # EOF packet: no warnings, autocommit
-_SEND_BYTES = 1 << 16  # a result set's frames go out per this many bytes
+ROWS_PER_SLICE = 8192  # rows encoded per pass over the columns
 
 # column types, mirroring the reference's mapping
 # (writers/query_result_writer.rs:42-57: all ints -> MYSQL_TYPE_LONG,
@@ -111,65 +126,30 @@ MYSQL_TYPE_NEWDECIMAL = 0xF6
 MYSQL_TYPE_VAR_STRING = 0xFD
 
 
-def _bin_date(v) -> bytes:
-    if isinstance(v, datetime):
-        v = v.date()
-    return bytes([4]) + struct.pack("<H", v.year) + bytes([v.month, v.day])
-
-
-def _bin_datetime(v) -> bytes:
-    if isinstance(v, date) and not isinstance(v, datetime):
-        v = datetime(v.year, v.month, v.day)
-    if v.microsecond:
-        return (
-            bytes([11])
-            + struct.pack("<H", v.year)
-            + bytes([v.month, v.day, v.hour, v.minute, v.second])
-            + struct.pack("<I", v.microsecond)
-        )
-    return (
-        bytes([7])
-        + struct.pack("<H", v.year)
-        + bytes([v.month, v.day, v.hour, v.minute, v.second])
-    )
-
-
-def _bin_str(v) -> bytes:
-    # render like the TEXT path (code-review r8: str(b'..') put the
-    # Python repr on the wire for binary columns, and arrays diverged
-    # from the text renderer's NULL spelling)
-    if isinstance(v, (bytes, bytearray)):
-        b = bytes(v)
-    elif isinstance(v, (list, tuple)):
-        b = ("[" + ",".join("NULL" if x is None else str(x) for x in v) + "]").encode()
-    else:
-        b = str(v).encode()
-    return _lenenc_int(len(b)) + b
-
-
-# Spark simpleString -> (binary column type, encoder)
+# Spark simpleString -> binary column type; the values are encoded from
+# the column's Arrow type (_binary_cells)
 _SPARK_TO_MYSQL_BINARY = {
-    "tinyint": (MYSQL_TYPE_TINY, lambda v: struct.pack("<b", int(v))),
-    "smallint": (MYSQL_TYPE_SHORT, lambda v: struct.pack("<h", int(v))),
-    "int": (MYSQL_TYPE_LONG, lambda v: struct.pack("<i", int(v))),
-    "bigint": (MYSQL_TYPE_LONGLONG, lambda v: struct.pack("<q", int(v))),
-    "float": (MYSQL_TYPE_FLOAT, lambda v: struct.pack("<f", float(v))),
-    "double": (MYSQL_TYPE_DOUBLE, lambda v: struct.pack("<d", float(v))),
-    "boolean": (MYSQL_TYPE_TINY, lambda v: struct.pack("<b", 1 if v else 0)),
-    "date": (MYSQL_TYPE_DATE, _bin_date),
-    "timestamp": (MYSQL_TYPE_DATETIME, _bin_datetime),
-    "timestamp_ntz": (MYSQL_TYPE_DATETIME, _bin_datetime),
-    "string": (MYSQL_TYPE_VAR_STRING, _bin_str),
+    "tinyint": MYSQL_TYPE_TINY,
+    "smallint": MYSQL_TYPE_SHORT,
+    "int": MYSQL_TYPE_LONG,
+    "bigint": MYSQL_TYPE_LONGLONG,
+    "float": MYSQL_TYPE_FLOAT,
+    "double": MYSQL_TYPE_DOUBLE,
+    "boolean": MYSQL_TYPE_TINY,
+    "date": MYSQL_TYPE_DATE,
+    "timestamp": MYSQL_TYPE_DATETIME,
+    "timestamp_ntz": MYSQL_TYPE_DATETIME,
+    "string": MYSQL_TYPE_VAR_STRING,
 }
 
 
-def _binary_type_of(dtype: str):
-    """(column type, encoder) for binary rows; decimals travel as
-    NEWDECIMAL strings (the protocol's own binary decimal form), any
-    other type stringifies as VAR_STRING."""
+def _binary_type_of(dtype: str) -> int:
+    """Binary column type; decimals travel as NEWDECIMAL strings (the
+    protocol's own binary decimal form), any other type stringifies as
+    VAR_STRING."""
     if dtype.startswith("decimal("):
-        return MYSQL_TYPE_NEWDECIMAL, _bin_str
-    return _SPARK_TO_MYSQL_BINARY.get(dtype, (MYSQL_TYPE_VAR_STRING, _bin_str))
+        return MYSQL_TYPE_NEWDECIMAL
+    return _SPARK_TO_MYSQL_BINARY.get(dtype, MYSQL_TYPE_VAR_STRING)
 
 
 def _lenenc_int(n: int) -> bytes:
@@ -216,23 +196,129 @@ def _sql_literal(v) -> str:
     return quote(str(v))
 
 
-def _text_value(v) -> bytes:
-    """MySQL text-protocol cell: lenenc string, NULL = 0xfb."""
-    if v is None:
-        return b"\xfb"
-    if isinstance(v, bool):
-        return _lenenc_str(b"1" if v else b"0")
-    if isinstance(v, float):
-        return _lenenc_str(repr(v).encode())
-    if isinstance(v, datetime):
-        return _lenenc_str(v.strftime("%Y-%m-%d %H:%M:%S.%f").encode())
-    if isinstance(v, date):
-        return _lenenc_str(v.isoformat().encode())
-    if isinstance(v, (bytes, bytearray)):
-        return _lenenc_str(bytes(v))
-    if isinstance(v, (list, tuple)):
-        return _lenenc_str(("[" + ",".join("NULL" if x is None else str(x) for x in v) + "]").encode())
-    return _lenenc_str(str(v).encode())
+# ------------------------------------------------------------ row cells
+# A result set is encoded column-at-a-time from the Arrow table
+# (servers/common.py): each function below turns one column into one
+# large_binary cell per row.
+
+_ONE = pa.scalar(b"1", pa.large_binary())
+_ZERO = pa.scalar(b"0", pa.large_binary())
+_NULL_CELL = pa.scalar(b"\xfb", pa.large_binary())
+
+
+def _text_cells(col: pa.Array) -> pa.Array:
+    """Each value's text as the text protocol sends it, NULL kept:
+    1/0 for booleans, repr() for floats, str() for ints, decimals and
+    strings, ISO dates, and '%Y-%m-%d %H:%M:%S.%f' on the wall clock
+    a Row gives for timestamps."""
+    t = col.type
+    if pa.types.is_boolean(t):
+        return pc.if_else(col, _ONE, _ZERO)
+    if pa.types.is_floating(t):
+        # Arrow's own float formatting differs from repr (1 for 1.0,
+        # shortest float32 digits), so the digits come from repr
+        text = pa.array(list(map(repr, numbers(col).tolist())), pa.large_string())
+        return pc.if_else(col.is_valid(), text, None).cast(pa.large_binary())
+    if pa.types.is_decimal(t):
+        return decimal_text(col).cast(pa.large_binary())
+    if pa.types.is_timestamp(t):
+        micros = local_micros(col) if t.tz else numbers(col.cast(pa.int64()))
+        wall = pa.array(micros, pa.timestamp("us"), mask=~valid_mask(col))
+        # %S carries the six fractional digits at microsecond unit;
+        # datetime.strftime (glibc) does not pad a year below 1000
+        text = pc.strftime(wall, format="%Y-%m-%d %H:%M:%S")
+        return pc.replace_substring_regex(text, r"^0{1,3}", "").cast(pa.large_binary())
+    if pa.types.is_integer(t) or pa.types.is_date(t):
+        return col.cast(pa.large_string()).cast(pa.large_binary())
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_binary(t) \
+            or pa.types.is_large_binary(t):
+        return col.cast(pa.large_binary())
+    return pa.array([None if v is None else _text_of(v, t).encode() for v in col.to_pylist()],
+                    pa.large_binary())
+
+
+def _text_of(v, t: pa.DataType) -> str:
+    """Text of a nested or interval value, the types no column kernel
+    encodes: lists as [a,b,NULL], structs as Row(...) and maps as dicts,
+    str() otherwise, as these values print in PySpark."""
+    if pa.types.is_map(t):
+        return str(dict(v))
+    if pa.types.is_struct(t):
+        return str(Row(**v))
+    if isinstance(v, list):
+        return "[" + ",".join("NULL" if x is None else str(x) for x in v) + "]"
+    return str(v)
+
+
+def _lenenc_prefixes(n: np.ndarray) -> pa.Array:
+    """The length-encoded-integer prefix of each length in n."""
+    wide, wider = n >= 1 << 16, n >= 1 << 24
+    mat = np.empty((len(n), 9), np.uint8)
+    mat[:, 0] = np.where(n < 251, n, 0xFC + wide + wider)  # 0xFC/0xFD/0xFE: 2/3/8 bytes follow
+    mat[:, 1:] = n.astype("<u8").view(np.uint8).reshape(len(n), 8)
+    return var_binary(mat, 1 + 2 * (n >= 251) + wide + 5 * wider)
+
+
+def _lenenc_cells(cells: pa.Array, null: pa.Scalar | None = _NULL_CELL) -> pa.Array:
+    """Each cell as a length-encoded string; a NULL cell becomes `null`
+    (text rows) or stays NULL (binary rows leave it to the bitmap)."""
+    out = join([_lenenc_prefixes(numbers(pc.binary_length(cells))), cells])
+    return out.fill_null(null) if null is not None and out.null_count else out
+
+
+def _datetime_cells(col: pa.Array) -> pa.Array:
+    """Binary DATETIME: length 7 (no microseconds) or 11, year, month,
+    day, hour, minute, second[, microsecond], on a Row's wall clock."""
+    micros = local_micros(col) if col.type.tz else numbers(col.cast(pa.int64()))
+    secs, frac = np.divmod(micros, 1_000_000)
+    days, sod = np.divmod(secs, 86400)
+    mat = np.empty((len(col), 12), np.uint8)
+    mat[:, 0] = np.where(frac != 0, 11, 7)
+    mat[:, 1:5] = _date_bytes(pa.array(days.astype(np.int32), pa.date32()))
+    mat[:, 5], mat[:, 6], mat[:, 7] = sod // 3600, sod // 60 % 60, sod % 60
+    mat[:, 8:] = frac.astype("<u4").view(np.uint8).reshape(len(col), 4)
+    return var_binary(mat, np.where(frac != 0, 12, 8), valid_mask(col))
+
+
+def _date_bytes(days: pa.Array) -> np.ndarray:
+    """(n, 4) uint8: little-endian year, month, day."""
+    out = np.empty((len(days), 4), np.uint8)
+    out[:, :2] = numbers(pc.year(days), "<u2").view(np.uint8).reshape(len(days), 2)
+    out[:, 2], out[:, 3] = numbers(pc.month(days)), numbers(pc.day(days))
+    return out
+
+
+def _binary_cells(col: pa.Array) -> pa.Array:
+    """Each value as the binary protocol encodes its declared column
+    type (_binary_type_of), NULL kept for the bitmap."""
+    t, valid = col.type, valid_mask(col)
+    if pa.types.is_boolean(t):
+        return fixed_binary(numbers(col.cast(pa.int8())), valid)
+    if pa.types.is_integer(t) or pa.types.is_floating(t):
+        return fixed_binary(numbers(col), valid)
+    if pa.types.is_date(t):
+        mat = np.empty((len(col), 5), np.uint8)
+        mat[:, 0] = 4
+        mat[:, 1:] = _date_bytes(col)
+        return var_binary(mat, np.full(len(col), 5), valid)
+    if pa.types.is_timestamp(t):
+        return _datetime_cells(col)
+    return _lenenc_cells(_text_cells(col), null=None)
+
+
+def _text_rows(cols: list[pa.Array]) -> pa.Array:
+    return join([_lenenc_cells(_text_cells(c)) for c in cols])
+
+
+def _binary_rows(cols: list[pa.Array]) -> pa.Array:
+    """0x00, the NULL bitmap (offset 2), then the non-NULL values."""
+    n = len(cols[0])
+    bits = np.zeros((n, 8 + 8 * ((len(cols) + 2 + 7) // 8)), bool)  # first byte: the 0x00 header
+    for i, c in enumerate(cols):
+        bits[:, 10 + i] = ~valid_mask(c)
+    head = np.packbits(bits, axis=1, bitorder="little")
+    head_cells = var_binary(head, np.full(n, head.shape[1]))
+    return join([head_cells, *map(_binary_cells, cols)], skip_nulls=True)
 
 
 class _Conn:
@@ -287,17 +373,19 @@ class _Conn:
         self.frame(out, payload)
         self.sock.sendall(out)
 
-    def send_packets(self, payloads) -> None:
-        """Frame `payloads` into one buffer, sent every _SEND_BYTES: a
-        result set costs one send per ~64 KiB, not one per row."""
-        out = bytearray()
-        for payload in payloads:
-            self.frame(out, payload)
-            if len(out) >= _SEND_BYTES:
-                self.sock.sendall(out)
-                out.clear()
-        if out:
-            self.sock.sendall(out)
+    def send_rows(self, out: bytearray, payloads: pa.Array) -> None:
+        """Append one frame per row payload to `out`: the 4-byte headers
+        are built as one numpy column and joined to the payloads. A
+        payload that needs splitting (0xFFFFFF bytes or more) sends
+        its slice through frame() row by row."""
+        lengths = numbers(pc.binary_length(payloads))
+        if len(lengths) and lengths.max() >= 0xFFFFFF:
+            for payload in payloads:
+                self.frame(out, payload.as_py())
+            return
+        seqs = (self.seq + np.arange(len(lengths))) & 0xFF
+        self.seq += len(lengths)
+        out += data_bytes(join([fixed_binary((lengths | seqs << 24).astype("<u4")), payloads]))
 
     # -- composite packets --
     def send_ok(self, affected: int = 0) -> None:
@@ -511,60 +599,51 @@ class _Conn:
             # visible in system.processes, cancellable via KILL QUERY,
             # and traced with its real execution time — a lazy
             # DataFrame collected here would escape all three.
-            df, rows = self.engine.sql_collect(sql)
+            df, table = self.engine.sql_collect(sql)
         except Exception as e:
             self.send_err(first_line(e))
             return
-        if df is None or rows is None or init_db:
+        if df is None or table is None or init_db:
             self.send_ok()
             return
         fields = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
         if binary:
-            self._write_binary_resultset(fields, rows)
+            self._write_binary_resultset(fields, table)
         else:
-            self._write_resultset(fields, rows)
+            self._write_resultset(fields, table)
 
-    def _write_resultset(self, fields, rows) -> None:
-        self.send_packets(
-            itertools.chain(
-                [_lenenc_int(len(fields))],
-                (self._column_def(name, dtype) for name, dtype in fields),
-                [_EOF],
-                (b"".join(_text_value(v) for v in row) for row in rows),
-                [_EOF],
-            )
+    def _write_resultset(self, fields, table: pa.Table) -> None:
+        """Text-protocol resultset: column count, column definitions,
+        EOF, one lenenc-cell row packet per row, EOF."""
+        self._send_resultset(
+            [self._column_def(name, dtype) for name, dtype in fields], table, _text_rows
         )
 
-    def _write_binary_resultset(self, fields, rows) -> None:
+    def _write_binary_resultset(self, fields, table: pa.Table) -> None:
         """Binary-protocol resultset (COM_STMT_EXECUTE response): 0x00
         row header, NULL bitmap with 2-bit offset, values encoded per
         the declared column type — what strict connectors require from
         a prepared-statement execution."""
-        encs = [_binary_type_of(dtype) for _, dtype in fields]
-        n = len(fields)
-
-        def row_packet(row) -> bytes:
-            bitmap = bytearray((n + 2 + 7) // 8)
-            body = bytearray()
-            for i, v in enumerate(row):
-                if v is None:
-                    bitmap[(i + 2) // 8] |= 1 << ((i + 2) % 8)
-                else:
-                    body += encs[i][1](v)
-            return b"\x00" + bytes(bitmap) + bytes(body)
-
-        self.send_packets(
-            itertools.chain(
-                [_lenenc_int(len(fields))],
-                (
-                    self._column_def(name, dtype, coltype)
-                    for (name, dtype), (coltype, _) in zip(fields, encs)
-                ),
-                [_EOF],
-                map(row_packet, rows),
-                [_EOF],
-            )
+        self._send_resultset(
+            [self._column_def(name, dtype, _binary_type_of(dtype)) for name, dtype in fields],
+            table, _binary_rows,
         )
+
+    def _send_resultset(self, column_defs: list[bytes], table: pa.Table, rows) -> None:
+        """Frame the resultset into one buffer, sent every SEND_BYTES:
+        rows are encoded ROWS_PER_SLICE at a time, so the first bytes
+        leave before the last rows are encoded."""
+        out = bytearray()
+        for payload in [_lenenc_int(len(column_defs)), *column_defs, _EOF]:
+            self.frame(out, payload)
+        for lo in range(0, table.num_rows, ROWS_PER_SLICE):
+            part = table.slice(lo, ROWS_PER_SLICE)
+            self.send_rows(out, rows([c.combine_chunks() for c in part.columns]))
+            if len(out) >= SEND_BYTES:
+                self.sock.sendall(out)
+                out.clear()
+        self.frame(out, _EOF)
+        self.sock.sendall(out)
 
     @staticmethod
     def _column_def(name: str, dtype: str, coltype: int | None = None) -> bytes:

@@ -66,7 +66,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from fuse_query_spark.dialect.lexer import quote, quote_name
+from fuse_query_spark.dialect.lexer import quote, quote_name, sql_name
 from fuse_query_spark.errors import UnsupportedStatement
 from fuse_query_spark.sources import snapshots
 from fuse_query_spark.sources.tables import local_rows
@@ -301,6 +301,10 @@ class Mutation:
 # ---------- engine kinds ----------
 
 
+def _ddl_name(tdef) -> str:
+    return f"{sql_name(tdef.database)}.{sql_name(tdef.name)}"
+
+
 class Storage:
     """An engine kind that supports nothing: the refusals every kind
     inherits for what it lacks, and what an unknown ENGINE gets."""
@@ -371,15 +375,17 @@ class Storage:
         return []
 
     def ddl(self, tdef) -> str:
-        """SHOW CREATE TABLE text."""
-        part = f" PARTITION BY ({', '.join(tdef.partition_by)})" if tdef.partition_by else ""
+        """SHOW CREATE TABLE text; it reads back through Engine.sql."""
+        part = (
+            f" PARTITION BY ({', '.join(map(sql_name, tdef.partition_by))})" if tdef.partition_by else ""
+        )
         if tdef.view_sql is not None:
             return (
-                f"CREATE MATERIALIZED VIEW {tdef.database}.{tdef.name} ENGINE = {tdef.engine}"
+                f"CREATE MATERIALIZED VIEW {_ddl_name(tdef)} ENGINE = {tdef.engine}"
                 f"{part} location = {quote(tdef.location)} AS {tdef.view_sql}"
             )
-        cols = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in tdef.schema)
-        return f"CREATE TABLE {tdef.database}.{tdef.name} ({cols}) ENGINE = {tdef.engine}{part}"
+        cols = ", ".join(f"{sql_name(f.name)} {f.dataType.simpleString()}" for f in tdef.schema)
+        return f"CREATE TABLE {_ddl_name(tdef)} ({cols}) ENGINE = {tdef.engine}{part}"
 
 
 class Memory(Storage):
@@ -451,7 +457,7 @@ class View(Storage):
             stack.discard(key)
 
     def ddl(self, tdef):
-        return f"CREATE VIEW {tdef.database}.{tdef.name} AS {tdef.view_sql}"
+        return f"CREATE VIEW {_ddl_name(tdef)} AS {tdef.view_sql}"
 
 
 class _Cached(Storage):

@@ -284,11 +284,12 @@ def gen_dialect_case(seed: int) -> tuple[str, str]:
 
 def run_dialect_case(engine, con, seed: int) -> list[str]:
     """Engine.sql (dialect path) vs DuckDB; returns problems."""
+    from fuse_query_spark.results import to_rows
     from fuse_query_spark.testing import table_hash
 
     fuse_sql, duck_sql = gen_dialect_case(seed)
-    df, srows = engine.sql_collect(fuse_sql)
-    srows = [tuple(r) for r in srows]
+    df, table = engine.sql_collect(fuse_sql)
+    srows = [tuple(r) for r in to_rows(table)]
     ores = con.execute(duck_sql)
     ocols = [d[0] for d in ores.description]
     orows = ores.fetchall()

@@ -602,8 +602,8 @@ def test_wire_insert_binary_string_survives(insert_client):
 
 
 # ---------------------------------------------------------------------------
-# Data blocks pack each fixed-width column with one struct call; the
-# per-value packer they replaced is kept here as the differential oracle.
+# Data blocks pack each column from its Arrow buffers; the per-value
+# packer over Rows they replaced is kept here as the differential oracle.
 # ---------------------------------------------------------------------------
 
 
@@ -640,11 +640,28 @@ def _per_value_packers():
         "date": pack_date,
         "timestamp": pack_datetime,
         "timestamp_ntz": lambda v: pack_datetime(v, utc=True),
-        "decimal(10,2)": lambda v: struct.pack("<d", float(v)),
+        "decimal": lambda v: struct.pack("<d", float(v)),
     }
 
 
-def _block_bytes(types, nullable, rows, per_value: bool) -> bytes:
+def _arrow_of(types, rows):
+    """The Arrow table Engine.sql_collect returns for these Rows: zoned
+    timestamps are instants (a Row holds their host-local wall clock)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = to_arrow_schema(_parse_datatype_string(", ".join(f"c{i} {t}" for i, t in enumerate(types))))
+    cols = [[r[i] for r in rows] for i in range(len(types))]
+    for i, t in enumerate(types):
+        if t == "timestamp":
+            cols[i] = [None if v is None else v.astimezone() for v in cols[i]]
+    return pa.Table.from_arrays([pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema)
+
+
+def _block_bytes(types, nullable, rows, per_value: bool, table=None) -> bytes:
+    """One Data block of `rows`, packed per value from the Rows or by
+    send_block from the Arrow table (`table`, else _arrow_of(rows))."""
     from fuse_query_spark.servers.clickhouse_server import _CHConn, _ch_type_of
 
     class Recorder:
@@ -655,41 +672,56 @@ def _block_bytes(types, nullable, rows, per_value: bool) -> bytes:
 
     conn = _CHConn(Recorder(), None)
     conn.client_revision = CLIENT_REVISION
-    columns = [(f"c{i}", *_ch_type_of(t)[:1], nullable, *_ch_type_of(t)[1:]) for i, t in enumerate(types)]
+    columns = [(f"c{i}", _ch_type_of(t), nullable) for i, t in enumerate(types)]
     if per_value:
         packers = _per_value_packers()
-        zero = {"b": 1, "h": 2, "i": 4, "q": 8, "f": 4, "d": 8, "B": 1, "H": 2, "I": 4, None: 1}
+        zero = {"Int8": 1, "Int16": 2, "Int32": 4, "Int64": 8, "Float32": 4, "Float64": 8,
+                "UInt8": 1, "Date": 2, "DateTime": 4, "String": 1}
         head = bytearray(_varint(1) + _s("") + _varint(1) + b"\x00" + _varint(2))
         head += struct.pack("<i", -1) + _varint(0) + _varint(len(columns)) + _varint(len(rows))
-        for ci, (name, ch_type, _n, code, _conv) in enumerate(columns):
+        for ci, (name, ch_type, _n) in enumerate(columns):
             head += _s(name) + _s(f"Nullable({ch_type})" if nullable else ch_type)
             if nullable:
                 head += bytes(r[ci] is None for r in rows)
+            pack = packers[types[ci].split("(")[0]]
             for r in rows:
                 v = r[ci]
-                head += b"\x00" * zero[code] if v is None and nullable else packers[types[ci]](v)
+                head += b"\x00" * zero[ch_type] if v is None and nullable else pack(v)
         return bytes(head)
-    conn.send_block(columns, rows, 0, len(rows))
+    conn.send_block(columns, _arrow_of(types, rows) if table is None else table)
+    conn.flush()
     return conn.sock.sent
 
 
 @pytest.mark.parametrize("nullable", [False, True], ids=["plain", "nullable"])
-def test_column_packed_block_equals_per_value_packer(nullable):
-    from datetime import date, datetime
+def test_column_packed_block_equals_per_value_packer(spark, nullable):
+    """A Data block packed from the Arrow table of a result equals the
+    per-value packer's bytes over the Rows of the same result, for
+    every mapped type: a driver-side relation of edge values (NULLs,
+    float specials, tiny decimals, 0-, 251- and 70000-byte strings,
+    the ends of the Date and DateTime ranges), a result of more rows
+    than BLOCK_ROWS computed by Spark tasks, and an empty result."""
+    from conftest import wire_frames
+    from pyspark.sql import functions as F
 
-    types = ["tinyint", "smallint", "int", "bigint", "float", "double", "string", "boolean",
-             "date", "timestamp", "timestamp_ntz", "decimal(10,2)"]
-    rows = [
-        (i % 100 - 50, i * 7 - 300, i * 1000, i << 33, i / 4, i / 3, f"s{i}", i % 2 == 0,
-         date(2000, 1, 1 + i % 28), datetime(2001, 2, 3, 4, 5, i % 60), datetime(2002, 3, 4, 5, 6, 7),
-         i / 8)
-        for i in range(300)
-    ]
-    if nullable:
-        rows = [tuple(None if (i + j) % 4 == 0 else v for j, v in enumerate(r)) for i, r in enumerate(rows)]
-    assert _block_bytes(types, nullable, rows, per_value=False) == _block_bytes(
-        types, nullable, rows, per_value=True
-    )
+    from fuse_query_spark.results import collect_arrow
+    from fuse_query_spark.servers.clickhouse_server import BLOCK_ROWS
+
+    defaults = {"string": "''", "boolean": "false", "date": "DATE'1970-01-02'",
+                "timestamp": "TIMESTAMP'1970-01-02 00:00:00'",
+                "timestamp_ntz": "TIMESTAMP_NTZ'1970-01-02 00:00:00'"}
+    for label, df in wire_frames(spark).items():
+        types = [f.dataType.simpleString() for f in df.schema.fields]
+        if not nullable:
+            df = df.select([
+                F.coalesce(F.col(f.name), F.expr(defaults.get(t, f"CAST(0 AS {t})"))).alias(f.name)
+                for f, t in zip(df.schema.fields, types)
+            ])
+        rows = df.collect()
+        if label == "job":
+            assert len(rows) > BLOCK_ROWS
+        got = _block_bytes(types, nullable, rows, per_value=False, table=collect_arrow(df))
+        assert got == _block_bytes(types, nullable, rows, per_value=True), label
 
 
 @pytest.mark.parametrize("kind,value", [

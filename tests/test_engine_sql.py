@@ -9,10 +9,12 @@ import pytest
 
 from fuse_query_spark.engine import Engine
 from fuse_query_spark.errors import (
+    BadArguments,
     DatabaseAlreadyExists,
     TableAlreadyExists,
     UnknownDatabase,
 )
+from fuse_query_spark.results import to_rows
 
 
 @pytest.fixture(scope="module")
@@ -680,6 +682,7 @@ class TestSqlCollect:
 def test_cast_text_varchar_execute(engine):
     """sql_common.rs:27-28 type aliases end-to-end."""
     _, rows = engine.sql_collect("SELECT cast(42 as text), cast(7 as varchar)")
+    rows = to_rows(rows)
     assert rows[0][0] == "42" and rows[0][1] == "7"
 
 
@@ -689,6 +692,7 @@ def test_reference_type_aliases_execute(engine):
     _, rows = engine.sql_collect(
         "SELECT cast(65 as char), cast(1 as real), cast('x' as char(4))"
     )
+    rows = to_rows(rows)
     assert rows[0][0] == "65"
     assert isinstance(rows[0][1], float) and rows[0][1] == 1.0
     assert rows[0][2].rstrip() == "x"  # CHAR(4) pads per SQL standard
@@ -703,12 +707,14 @@ def test_ctas_memory(engine):
         " SELECT number, number * 2 AS d FROM numbers(10)"
     )
     _, rows = engine.sql_collect("SELECT count(*), sum(d) FROM ctas_m")
+    rows = to_rows(rows)
     assert tuple(rows[0]) == (10, 90)
     # IF NOT EXISTS is a no-op on the existing table
     engine.sql(
         "CREATE TABLE IF NOT EXISTS ctas_m ENGINE = Memory AS SELECT 1 AS x"
     )
     _, rows = engine.sql_collect("SELECT count(*) FROM ctas_m")
+    rows = to_rows(rows)
     assert rows[0][0] == 10
     engine.sql("DROP TABLE ctas_m")
 
@@ -721,6 +727,7 @@ def test_ctas_parquet_location(engine, tmp_path):
         " SELECT number % 5 AS k, number AS v FROM numbers(100)"
     )
     _, rows = engine.sql_collect("SELECT count(*), count(DISTINCT k) FROM ctas_p")
+    rows = to_rows(rows)
     assert tuple(rows[0]) == (100, 5)
     engine.sql("DROP TABLE ctas_p")
 
@@ -736,15 +743,19 @@ def test_create_view_tracks_base_table(engine):
         "CREATE VIEW v_sums AS SELECT k, sum(v) AS s FROM v_base GROUP BY k"
     )
     _, rows = engine.sql_collect("SELECT count(*), sum(s) FROM v_sums")
+    rows = to_rows(rows)
     assert tuple(rows[0]) == (2, 30)
     engine.sql("INSERT INTO v_base VALUES (3, 5)")
     _, rows = engine.sql_collect("SELECT count(*), sum(s) FROM v_sums")
+    rows = to_rows(rows)
     assert tuple(rows[0]) == (3, 35)  # the view saw the new row
     _, t = engine.sql_collect("SELECT engine FROM system.tables WHERE name = 'v_sums'")
+    t = to_rows(t)
     assert t[0][0] == "View"
     # OR REPLACE swaps the definition
     engine.sql("CREATE OR REPLACE VIEW v_sums AS SELECT 42 AS only")
     _, rows = engine.sql_collect("SELECT only FROM v_sums")
+    rows = to_rows(rows)
     assert rows[0][0] == 42
     engine.sql("DROP VIEW v_sums")
     engine.sql("DROP TABLE v_base")
@@ -772,9 +783,11 @@ def test_truncate_table(engine, tmp_path):
     engine.sql("INSERT INTO tr_m VALUES (1), (2)")
     engine.sql("TRUNCATE TABLE tr_m")
     _, rows = engine.sql_collect("SELECT count(*) FROM tr_m")
+    rows = to_rows(rows)
     assert rows[0][0] == 0
     engine.sql("INSERT INTO tr_m VALUES (9)")  # still writable
     _, rows = engine.sql_collect("SELECT count(*) FROM tr_m")
+    rows = to_rows(rows)
     assert rows[0][0] == 1
     engine.sql("DROP TABLE tr_m")
     loc = str(tmp_path / "tr_pq")
@@ -782,6 +795,7 @@ def test_truncate_table(engine, tmp_path):
     engine.sql("INSERT INTO tr_p VALUES (1), (2), (3)")
     engine.sql("TRUNCATE TABLE tr_p")
     _, rows = engine.sql_collect("SELECT count(*) FROM tr_p")
+    rows = to_rows(rows)
     assert rows[0][0] == 0
     engine.sql("DROP TABLE tr_p")
 
@@ -789,8 +803,71 @@ def test_truncate_table(engine, tmp_path):
 def test_show_create_view(engine):
     engine.sql("CREATE OR REPLACE VIEW scv AS SELECT 1 AS one")
     _, rows = engine.sql_collect("SHOW CREATE TABLE scv")
+    rows = to_rows(rows)
     assert rows[0][1] == "CREATE VIEW default.scv AS SELECT 1 AS one"
     engine.sql("DROP VIEW scv")
+
+
+def test_drop_view_refuses_a_table(engine):
+    """DROP VIEW drops views and materialized views only; on a Memory
+    table it raises and the table stays. DROP TABLE drops a view."""
+    engine.sql("CREATE TABLE dv_m (a INT) ENGINE = Memory")
+    engine.sql("INSERT INTO dv_m VALUES (1)")
+    with pytest.raises(BadArguments, match="not a View"):
+        engine.sql("DROP VIEW dv_m")
+    with pytest.raises(BadArguments):
+        engine.sql("DROP VIEW IF EXISTS default.dv_m")
+    assert one(engine.sql("SELECT count(*) FROM dv_m")) == 1
+    engine.sql("CREATE VIEW dv_v AS SELECT a FROM dv_m")
+    engine.sql("DROP VIEW dv_v")
+    engine.sql("CREATE VIEW dv_v AS SELECT a FROM dv_m")
+    engine.sql("DROP TABLE dv_v")
+    assert "dv_v" not in engine.catalog.db("default")
+    engine.sql("DROP TABLE dv_m")
+
+
+@pytest.mark.parametrize("db,table", [("default", "q 5"), ("my-db", "t"), ("my-db", "c`d")])
+def test_show_create_table_reads_back(engine, db, table):
+    """SHOW CREATE TABLE quotes the names that need it, so its text run
+    back through Engine.sql creates the same table."""
+    from fuse_query_spark.dialect.lexer import quote_name
+
+    engine.sql(f"CREATE DATABASE IF NOT EXISTS {quote_name(db)}")
+    ref = f"{quote_name(db)}.{quote_name(table)}"
+    engine.sql(f"CREATE TABLE {ref} (`a b` INT, c STRING, `d-e` DOUBLE) ENGINE = Memory")
+    ddl = engine.sql(f"SHOW CREATE TABLE {ref}").collect()[0]["CreateTable"]
+    want = engine.resolve_table((db, table)).schema
+    engine.sql(f"DROP TABLE {ref}")
+    engine.sql(ddl)
+    assert engine.resolve_table((db, table)).schema == want
+    engine.sql(f"CREATE VIEW {quote_name(db)}.{quote_name(table + ' v')} AS SELECT 1 AS `x y`")
+    view_ddl = engine.sql(f"SHOW CREATE TABLE {quote_name(db)}.{quote_name(table + ' v')}").collect()[0][1]
+    engine.sql(f"DROP VIEW {quote_name(db)}.{quote_name(table + ' v')}")
+    engine.sql(view_ddl)
+    assert engine.sql(f"SELECT * FROM {quote_name(db)}.{quote_name(table + ' v')}").columns == ["x y"]
+    engine.sql(f"DROP VIEW {quote_name(db)}.{quote_name(table + ' v')}")
+    engine.sql(f"DROP TABLE {ref}")
+
+
+@pytest.mark.parametrize("create,read", [
+    ("`q 5`", "`q 5`"),
+    ("`my-db`.`t`", "`my-db`.`t`"),
+    ("`my-db`.`t`", "`my-db`.t"),
+    ("qdb.`x y`", "`qdb`.`x y`"),
+])
+def test_query_reads_tables_whose_names_need_quotes(engine, create, read):
+    """A query finds a catalog table by the name as the lexer reads it,
+    bare or backtick-quoted, alone or after its database."""
+    for db in ("my-db", "qdb"):
+        engine.sql(f"CREATE DATABASE IF NOT EXISTS `{db}`")
+    engine.sql(f"DROP TABLE IF EXISTS {create}")
+    engine.sql(f"CREATE TABLE {create} (a INT, `b c` STRING) ENGINE = Memory")
+    engine.sql(f"INSERT INTO {create} VALUES (1, 'x'), (2, 'y')")
+    got = engine.sql(f"SELECT a, `b c` FROM {read} WHERE a > 0 ORDER BY a").collect()
+    assert [tuple(r) for r in got] == [(1, "x"), (2, "y")]
+    joined = engine.sql(f"SELECT count(*) FROM {read} AS l JOIN {read} AS r ON l.a = r.a")
+    assert one(joined) == 2
+    engine.sql(f"DROP TABLE {create}")
 
 
 class TestPartitionedTables:
@@ -1598,6 +1675,7 @@ def test_update_where_inside_string_literal(engine):
     engine.sql("INSERT INTO up_lit VALUES (1, 'old'), (2, 'keep')")
     engine.sql("UPDATE up_lit SET note = 'fix where broken' WHERE id = 1")
     _, rows = engine.sql_collect("SELECT * FROM up_lit")
+    rows = to_rows(rows)
     got = {r["id"]: r["note"] for r in rows}
     assert got == {1: "fix where broken", 2: "keep"}
     engine.sql("DROP TABLE up_lit")
@@ -1623,8 +1701,10 @@ def test_table_name_in_literal_or_comment_not_registered(engine):
     """code-review r8: 'system.logs' inside a string literal (or a
     block comment) raised UnknownTable for an otherwise-valid query."""
     _, rows = engine.sql_collect("SELECT 'system.logs' AS hint")
+    rows = to_rows(rows)
     assert rows[0]["hint"] == "system.logs"
     _, rows = engine.sql_collect("SELECT /* see system.logs */ 1 AS one")
+    rows = to_rows(rows)
     assert rows[0]["one"] == 1
 
 
@@ -1643,6 +1723,7 @@ def test_broken_view_does_not_poison_unrelated_queries(engine):
     engine.sql("DROP TABLE bv_base")
     # unrelated query that merely collides with the bare name
     _, rows = engine.sql_collect("SELECT 1 AS bv_view")
+    rows = to_rows(rows)
     assert rows[0]["bv_view"] == 1
     # a genuine reference surfaces the original typed error
     with _pytest.raises(FuseQueryError):
@@ -2019,6 +2100,7 @@ class TestRelationCache:
         engine.sql_collect(stmt)  # resolves the relation
         engine.sql_collect(stmt)  # the second read makes it resident
         _, rows = engine.sql_collect(stmt)
+        rows = to_rows(rows)
         assert len(rows) == 1
         assert _jobs_of_last_statement(engine) == 0
         engine.sql("DROP DATABASE rc_att")
@@ -2062,6 +2144,7 @@ class TestResidentTables:
     def test_point_lookup_on_sf001_submits_no_job(self, engine, sf001, stmt):
         for _ in range(3):
             _, rows = engine.sql_collect(stmt)
+            rows = to_rows(rows)
         assert len(rows) == 1
         assert _jobs_of_last_statement(engine) == 0
 
@@ -2095,6 +2178,7 @@ class TestResidentTables:
             for i in range(3):
                 engine.sql(f"INSERT INTO rs_once VALUES ({i})")
                 _, rows = engine.sql_collect("SELECT count(*), sum(id) FROM rs_once")
+                rows = to_rows(rows)
                 assert tuple(rows[0]) == (i + 1, sum(range(i + 1)))
                 # still the file relation, materialization pending
                 assert engine.resolve_table("rs_once").relation[2]

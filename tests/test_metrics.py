@@ -5,6 +5,7 @@ sessions/metrics.rs:5-6)."""
 
 import urllib.request
 
+from fuse_query_spark.results import to_rows
 from fuse_query_spark.servers.metrics import MetricService, MetricsRegistry
 
 
@@ -109,6 +110,7 @@ class TestSystemMetricsTable:
         METRICS.observe("mysql.process_request_duration", 0.01)
         engine = Engine(spark)
         df, rows = engine.sql_collect("SELECT metric, value FROM system.metrics")
+        rows = to_rows(rows)
         got = {r["metric"]: r["value"] for r in rows}
         assert got.get("session.connect_numbers", 0) >= 1
         assert got.get("mysql.process_request_duration_count", 0) >= 1
@@ -116,4 +118,5 @@ class TestSystemMetricsTable:
         df, rows = engine.sql_collect(
             "SELECT name FROM system.tables WHERE database = 'system'"
         )
+        rows = to_rows(rows)
         assert any(r["name"] == "metrics" for r in rows)

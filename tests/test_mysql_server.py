@@ -431,15 +431,79 @@ class _Recorder:
         self.sent.append(bytes(data))
 
 
+# The per-value encoders the column kernels replaced, kept as the
+# differential oracle: they encode the Rows of df.collect().
+
+
+def _lenenc_int(n: int) -> bytes:
+    if n < 251:
+        return bytes([n])
+    if n < 1 << 16:
+        return b"\xfc" + struct.pack("<H", n)
+    if n < 1 << 24:
+        return b"\xfd" + struct.pack("<I", n)[:3]
+    return b"\xfe" + struct.pack("<Q", n)
+
+
+def _lenenc_str(s: bytes) -> bytes:
+    return _lenenc_int(len(s)) + s
+
+
+def _text_value(v) -> bytes:
+    """MySQL text-protocol cell: lenenc string, NULL = 0xfb."""
+    from datetime import date, datetime
+
+    if v is None:
+        return b"\xfb"
+    if isinstance(v, bool):
+        return _lenenc_str(b"1" if v else b"0")
+    if isinstance(v, float):
+        return _lenenc_str(repr(v).encode())
+    if isinstance(v, datetime):
+        return _lenenc_str(v.strftime("%Y-%m-%d %H:%M:%S.%f").encode())
+    if isinstance(v, date):
+        return _lenenc_str(v.isoformat().encode())
+    if isinstance(v, (bytes, bytearray)):
+        return _lenenc_str(bytes(v))
+    if isinstance(v, (list, tuple)):
+        return _lenenc_str(("[" + ",".join("NULL" if x is None else str(x) for x in v) + "]").encode())
+    return _lenenc_str(str(v).encode())
+
+
+def _bin_date(v) -> bytes:
+    return bytes([4]) + struct.pack("<H", v.year) + bytes([v.month, v.day])
+
+
+def _bin_datetime(v) -> bytes:
+    head = struct.pack("<H", v.year) + bytes([v.month, v.day, v.hour, v.minute, v.second])
+    if v.microsecond:
+        return bytes([11]) + head + struct.pack("<I", v.microsecond)
+    return bytes([7]) + head
+
+
+def _bin_str(v) -> bytes:
+    b = bytes(v) if isinstance(v, (bytes, bytearray)) else str(v).encode()
+    return _lenenc_int(len(b)) + b
+
+
+_BINARY_ENCODERS = {
+    "tinyint": lambda v: struct.pack("<b", int(v)),
+    "smallint": lambda v: struct.pack("<h", int(v)),
+    "int": lambda v: struct.pack("<i", int(v)),
+    "bigint": lambda v: struct.pack("<q", int(v)),
+    "float": lambda v: struct.pack("<f", float(v)),
+    "double": lambda v: struct.pack("<d", float(v)),
+    "boolean": lambda v: struct.pack("<b", 1 if v else 0),
+    "date": _bin_date,
+    "timestamp": _bin_datetime,
+    "timestamp_ntz": _bin_datetime,
+}
+
+
 def _per_row_resultset(fields, rows, binary: bool) -> list[bytes]:
     """The result-set writer as it was before batching, kept as the
     differential oracle: one sendall per frame."""
-    from fuse_query_spark.servers.mysql_server import (
-        _Conn,
-        _binary_type_of,
-        _lenenc_int,
-        _text_value,
-    )
+    from fuse_query_spark.servers.mysql_server import _Conn, _binary_type_of
 
     sock, seq = _Recorder(), [0]
 
@@ -452,10 +516,10 @@ def _per_row_resultset(fields, rows, binary: bool) -> list[bytes]:
                 break
 
     eof = b"\xfe" + struct.pack("<HH", 0, 2)
-    encs = [_binary_type_of(dtype) for _, dtype in fields]
+    encs = [_BINARY_ENCODERS.get(dtype, _bin_str) for _, dtype in fields]
     send_packet(_lenenc_int(len(fields)))
-    for (name, dtype), (coltype, _) in zip(fields, encs):
-        send_packet(_Conn._column_def(name, dtype, coltype if binary else None))
+    for name, dtype in fields:
+        send_packet(_Conn._column_def(name, dtype, _binary_type_of(dtype) if binary else None))
     send_packet(eof)
     n = len(fields)
     for row in rows:
@@ -468,28 +532,36 @@ def _per_row_resultset(fields, rows, binary: bool) -> list[bytes]:
             if v is None:
                 bitmap[(i + 2) // 8] |= 1 << ((i + 2) % 8)
             else:
-                body += encs[i][1](v)
+                body += encs[i](v)
         send_packet(b"\x00" + bytes(bitmap) + bytes(body))
     send_packet(eof)
     return sock.sent
 
 
 @pytest.mark.parametrize("binary", [False, True], ids=["text", "binary"])
-def test_batched_resultset_bytes_equal_per_row_writer(binary):
-    """Rows are framed into one buffer sent per ~64 KiB: the byte
-    stream equals the per-row writer's, including NULLs, floats,
-    strings and a row split over two frames (> 0xFFFFFF bytes)."""
+def test_batched_resultset_bytes_equal_per_row_writer(spark, binary):
+    """The column-encoded resultset of an Arrow table equals the
+    per-row writer's bytes over the Rows of the same result: every
+    mapped type, NULLs, float specials, decimals below 1e-6, years
+    below 1000, long strings, an empty result, a result computed by
+    Spark tasks and a row split over two frames (> 0xFFFFFF bytes)."""
+    from conftest import wire_frames
+    from fuse_query_spark.results import collect_arrow
     from fuse_query_spark.servers.mysql_server import _Conn
 
-    fields = [("id", "bigint"), ("x", "double"), ("f", "float"), ("s", "string"), ("d", "decimal(10,2)")]
-    rows = [(i, i / 3, None if i % 5 else 1.5, f"s{i}" * (i % 7), None if i % 3 else "1.25") for i in range(3000)]
-    rows.insert(1500, (-1, None, 2.5, "x" * (0xFFFFFF + 7), None))
-    conn = _Conn(_Recorder(), None)
-    (conn._write_binary_resultset if binary else conn._write_resultset)(fields, rows)
-    want = _per_row_resultset(fields, rows, binary)
-    assert b"".join(conn.sock.sent) == b"".join(want)
-    assert len(want) > 3000 + len(fields)
-    assert len(conn.sock.sent) < 10
+    frames = wire_frames(spark, wide_dates=True)
+    frames["split"] = spark.sql(
+        "SELECT id, repeat('x', CAST(16777222 - id AS INT)) AS s, id / 3 AS x FROM range(3)"
+    )
+    for label, df in frames.items():
+        fields = [(f.name, f.dataType.simpleString()) for f in df.schema.fields]
+        conn = _Conn(_Recorder(), None)
+        write = conn._write_binary_resultset if binary else conn._write_resultset
+        write(fields, collect_arrow(df))
+        want = _per_row_resultset(fields, df.collect(), binary)
+        assert b"".join(conn.sock.sent) == b"".join(want), label
+        if label == "job":
+            assert len(want) > 70000 and len(conn.sock.sent) < len(want) / 1000
 
 
 def test_init_db_takes_the_name_as_written(server, client):

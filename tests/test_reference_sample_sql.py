@@ -8,6 +8,7 @@ import duckdb
 import pytest
 
 from fuse_query_spark.engine import Engine
+from fuse_query_spark.results import to_rows
 
 SAMPLE_SQL = "/root/reference/tests/data/sample.sql"
 DATA_DIR = "/root/reference/tests/data"
@@ -25,12 +26,14 @@ def test_sample_sql_registers_both_tables(engine):
     _, rows = engine.sql_collect(
         "SELECT name, engine FROM system.tables WHERE database = 'default'"
     )
+    rows = to_rows(rows)
     got = {(r[0], r[1]) for r in rows}
     assert ("test_csv", "CSV") in got and ("test_parquet", "Parquet") in got
 
 
 def test_csv_engine_matches_duckdb(engine):
     _, rows = engine.sql_collect("SELECT id, name, rank FROM test_csv ORDER BY id")
+    rows = to_rows(rows)
     duck = duckdb.sql(
         f"SELECT id, name, rank FROM read_csv('{DATA_DIR}/sample.csv',"
         " header=false, columns={'id': 'INT', 'name': 'VARCHAR', 'rank': 'INT'})"
@@ -46,6 +49,7 @@ def test_parquet_engine_matches_duckdb(engine):
         "SELECT id, bool_col, int_col, bigint_col, double_col, string_col,"
         " timestamp_col FROM test_parquet ORDER BY id"
     )
+    rows = to_rows(rows)
     duck = duckdb.sql(
         "SELECT id, bool_col, int_col, bigint_col, double_col, string_col,"
         f" timestamp_col FROM '{DATA_DIR}/alltypes_plain.parquet' ORDER BY id"
@@ -72,6 +76,7 @@ def test_nyctaxi_csv_attaches(engine):
         "SELECT count(*), round(sum(total_amount), 2) FROM nyctaxi"
         " WHERE passenger_count >= 1"
     )
+    rows = to_rows(rows)
     n_duck, amt_duck = duckdb.sql(
         f"SELECT count(*), round(sum(total_amount), 2) FROM '{DATA_DIR}/nyctaxi.csv'"
         " WHERE passenger_count >= 1"

@@ -15,6 +15,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from fuse_query_spark.results import to_rows
 from fuse_query_spark.sources.tables import _normalize_event_ts, read_parquet_maybe_nanos
 
 UTC = datetime.timezone.utc
@@ -197,13 +198,16 @@ def test_orc_engine_roundtrip(spark, sf_dir, tmp_path):
     _, rows = eng.sql_collect(
         "SELECT count(*), min(doc_id), sum(n_chars) FROM docs_orc"
     )
+    rows = to_rows(rows)
     _, want = eng.sql_collect(
         "SELECT count(*), min(doc_id), sum(n_chars) FROM documents"
     )
+    want = to_rows(want)
     assert tuple(rows[0]) == tuple(want[0])
     _, t = eng.sql_collect(
         "SELECT engine FROM system.tables WHERE name = 'docs_orc'"
     )
+    t = to_rows(t)
     assert t[0][0] == "ORC"
 
 

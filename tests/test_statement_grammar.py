@@ -61,7 +61,8 @@ T, T2 = N("T"), N("T2")
 
 # kind → (fixture, template, compare rows?) — fixture "mem": Memory
 # tables; "pq": a Parquet table partitioned by day; "mv": a partitioned
-# materialized view; "snap": a Snapshot table with two versions.
+# materialized view; "view": a view; "snap": a Snapshot table with two
+# versions.
 KINDS = {
     "create_table": ("mem", K("CREATE TABLE") + T2 + P("(") + N("c") + K("INT") + P(",")
                      + N("c2") + K("STRING") + P(")") + K("ENGINE") + P("=") + N("Memory"), True),
@@ -80,7 +81,7 @@ KINDS = {
                         + N("Local"), True),
     "drop_table": ("mem", K("DROP TABLE") + T, True),
     "drop_table_if_exists": ("mem", K("DROP TABLE IF EXISTS") + T2, True),
-    "drop_view": ("mem", K("DROP VIEW") + T, True),
+    "drop_view": ("view", K("DROP VIEW") + T, True),
     "drop_database": ("mem", K("DROP DATABASE IF EXISTS") + N("db"), True),
     "use": ("mem", K("USE") + N("db"), True),
     "describe": ("mem", K("DESCRIBE") + T, True),
@@ -204,6 +205,8 @@ def _reset(engine: Engine, fixture: str, names: dict, qualified: bool, tmp) -> N
         )
         engine.sql(f"INSERT INTO {home} VALUES (1, 'd1'), (2, 'd2'), (3, 'd1')")
         engine.sql(f"INSERT INTO {home} VALUES (4, 'd1')")
+    elif fixture == "view":
+        engine.sql(f"CREATE VIEW {home} AS SELECT 1 AS {q['c']}, 'x' AS {q['c2']}")
     elif fixture == "mv":
         engine.sql(
             f"CREATE MATERIALIZED VIEW {home} ENGINE = Parquet PARTITION BY ({q['c']}) "

