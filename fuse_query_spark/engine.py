@@ -57,6 +57,8 @@ from fuse_query_spark.sources.storage import (
     PARTITIONABLE,
     Mutation,
     Storage,
+    _dataset,
+    _jclass,
     parquet_schema,
     partition_columns,
     partition_names,
@@ -94,6 +96,59 @@ _COL_TYPES = {
     "float32": "float",
     "float64": "double",
 }
+
+# Catalyst tree patterns of the logical operators that require a
+# distribution of their input (aggregation, DISTINCT, window, sort,
+# joins, INTERSECT and EXCEPT): a plan with none of them plans no
+# Exchange. _WIDE holds them as one Scala Seq per JVM view.
+_WIDE_PATTERNS = ("AGGREGATE", "DISTINCT_LIKE", "WINDOW", "SORT", "JOIN", "INTERSECT", "EXCEPT")
+_WIDE: dict = {}
+
+
+def _one_partition(df: DataFrame) -> DataFrame:
+    """`df` with every leaf of its analyzed plan read as one partition
+    (Repartition(1, shuffle=false), planned as a Coalesce) when the
+    plan has an operator that requires a distribution and its leaves'
+    Catalyst size estimates add up to at most
+    spark.sql.files.openCostInBytes: Spark's own size for an input not
+    worth a task of its own (SCALE.md "Single-partition statements").
+    Each operator then sees SinglePartition children and
+    EnsureRequirements adds no Exchange, so the statement runs as one
+    task of one job. Otherwise `df` itself. The check costs a narrow
+    plan three py4j calls. The new plan keeps the analyzed mark of its
+    subtrees, so it is not analyzed a second time."""
+    spark = df.sparkSession
+    jvm = spark._jvm
+    if jvm not in _WIDE:
+        patterns = getattr(jvm.org.apache.spark.sql.catalyst.trees, "TreePattern$").__getattr__("MODULE$")
+        seq = [getattr(patterns, name)() for name in _WIDE_PATTERNS]
+        _WIDE[jvm] = _jclass(spark, "scala.jdk.javaapi.CollectionConverters").asScala(seq).toList()
+    plan = df._jdf.queryExecution().analyzed()
+    if not plan.containsAnyPattern(_WIDE[jvm]):
+        return df
+    leaves = plan.collectLeaves()
+    leaves = [leaves.apply(i) for i in range(leaves.size())]
+    bound = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    if sum(leaf.stats().sizeInBytes() for leaf in leaves) > bound:
+        return df
+    return coalesce_leaves(spark, plan, leaves)
+
+
+def coalesce_leaves(spark: SparkSession, plan, leaves: list) -> DataFrame:
+    """The DataFrame of the analyzed JVM `plan` with each of its
+    `leaves` read as one partition, whatever their size (the rule is
+    _one_partition's; tools/single_partition_sweep.py measures it on
+    both sides of the bound)."""
+    coalesce = _jclass(spark, "org.apache.spark.sql.catalyst.plans.logical.Repartition")
+    wrapped = _jclass(spark, "java.util.IdentityHashMap")()
+    for leaf in leaves:
+        wrapped.put(leaf, coalesce(1, False, leaf))
+    # a Scala Map is a PartialFunction, so transformUp swaps each leaf
+    # for its wrapper; keyed by identity, no node (nor a LocalRelation's
+    # rows) is hashed
+    plan = plan.transformUp(_jclass(spark, "scala.jdk.javaapi.CollectionConverters").asScala(wrapped))
+    plan.setAnalyzed()
+    return _dataset(spark, plan)
 
 
 @dataclass
@@ -757,10 +812,19 @@ class Engine:
         return views
 
     def _select(self, s: str) -> DataFrame:
+        """The DataFrame a SELECT runs. Under a cluster with reachable
+        peers, a two-phase plan fans out as per-peer partial stages
+        over Flight (interpreter_select.rs:40-73, plans/distributed.py).
+        Otherwise it runs the local plan, and a local plan whose inputs
+        are small runs as one partition (`_one_partition`). The
+        reference builds one pipe per source partition, so a
+        one-partition source runs partial and final aggregation, sort
+        and limit in one pipe with no merge or scatter
+        (pipeline_builder.rs:56). Spark would otherwise hash- or
+        range-partition every GROUP BY, window and ORDER BY into
+        spark.sql.shuffle.partitions, and under AQE each exchange is a
+        job of its own."""
         df, ctx = self._analyze(s, sleep=True)
-        # cluster rescheduling (interpreter_select.rs:40-73): with
-        # reachable peers, a two-phase plan fans out as per-peer partial
-        # stages over Flight (plans/distributed.py); else the local plan
         nodes = self.cluster.get_nodes()
         if nodes:
             from fuse_query_spark.plans.distributed import try_distributed_select
@@ -768,7 +832,7 @@ class Engine:
             dist = try_distributed_select(self, df, ctx, nodes)
             if dist is not None:
                 return dist
-        return df
+        return _one_partition(df)
 
     def _select_locked(self, s: str, rewritten: str) -> DataFrame:
         old_ordinal = self.spark.conf.get("spark.sql.groupByOrdinal", "true")
@@ -815,32 +879,25 @@ class Engine:
             self.spark.conf.set("spark.sql.groupByOrdinal", old_ordinal)
 
     def _explain(self, c: Cursor) -> DataFrame:
+        """EXPLAIN [PIPELINE] query: the plan of the DataFrame _select's
+        local path builds (EXTENDED, or FORMATTED for PIPELINE), with no
+        recorded sleep() performed. Under a cluster, plain EXPLAIN shows
+        a distributable statement's stages ahead of it; EXPLAIN PIPELINE
+        stays local (interpreter_explain.rs:62-67)."""
         pipeline = c.accept("PIPELINE")
         inner = c.query()
-        # interpreter_explain.rs:62-67: under a cluster, plain EXPLAIN
-        # shows a distributable statement's stages ahead of the local
-        # plan; EXPLAIN PIPELINE stays local
+        df, ctx = self._analyze(inner)
+        text = self.spark._jvm.PythonSQLUtils.explainString(
+            _one_partition(df)._jdf.queryExecution(), "formatted" if pipeline else "extended"
+        )
         nodes = [] if pipeline else self.cluster.get_nodes()
         if nodes:
             from fuse_query_spark.plans.distributed import explain_distributed
 
-            try:
-                df, ctx = self._analyze(inner)
-            except Exception:
-                df = None  # the plain EXPLAIN below reports the error
-            if df is not None:
-                text = self.spark._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "extended"
-                )
-                staged = explain_distributed(self, df, ctx, nodes)
-                if staged is not None:
-                    text = staged + "\n\n== Local Physical Plan ==\n" + text
-                return local_rows(self.spark, [(text,)], "plan: string")
-        mode = "FORMATTED" if pipeline else "EXTENDED"
-        self._register_views(inner)
-        return self.spark.sql(
-            f"EXPLAIN {mode} {rewrite_select(inner, self._dialect_ctx())}"
-        )
+            staged = explain_distributed(self, df, ctx, nodes)
+            if staged is not None:
+                text = staged + "\n\n== Local Physical Plan ==\n" + text
+        return local_rows(self.spark, [(text,)], "plan: string")
 
     def _register_views(self, s: str) -> None:
         """Register any catalog/system tables the query references as

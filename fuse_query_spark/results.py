@@ -17,12 +17,14 @@ from decimal import Decimal
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import _create_row
 
 
 _CONVERTERS: dict = {}  # JVM view -> the ArrowConverters object in that JVM
+_ONE_ROW: dict = {}  # JVM view -> Seq(a LocalRelation of one empty row)
 
 
 def collect_arrow(df: DataFrame) -> pa.Table:
@@ -35,10 +37,14 @@ def collect_arrow(df: DataFrame) -> pa.Table:
     task slot is busy. Its batches come back as the py4j return values
     of the JVM iterator; a socket server per statement
     (PythonRDD.serveIterator) measured ~4 ms slower on a point lookup.
-    Every other plan runs as a job through toArrow."""
-    plan = df._jdf.queryExecution().executedPlan()
+    A constant SELECT is answered there too (_constant_scan). Every
+    other plan runs as a job through toArrow."""
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
     if plan.nodeName() != "LocalTableScan":
-        return df.toArrow()
+        plan = _constant_scan(df.sparkSession, qe.optimizedPlan())
+        if plan is None:
+            return df.toArrow()
     # a local relation is small (RESIDENT_BYTES, system tables): one
     # batch. The time zone only labels the column; the values are UTC
     # instants, and the cast below gives each column toArrow's type.
@@ -46,6 +52,29 @@ def collect_arrow(df: DataFrame) -> pa.Table:
     tables = [pa.ipc.open_stream(s).read_all() for s in streams]
     schema = to_arrow_schema(df.schema)
     return pa.concat_tables(tables).cast(schema) if tables else schema.empty_table()
+
+
+def _constant_scan(spark: SparkSession, plan):
+    """The LocalTableScan of a constant SELECT (`SELECT 1`, the liveness
+    check wire clients send): an optimized plan that is a deterministic
+    Project over OneRowRelation, re-planned over a LocalRelation of one
+    empty row, which Catalyst's ConvertToLocalRelation evaluates on the
+    driver. OneRowRelation itself plans as a one-row RDD scan, a job.
+    None for any other plan, or when the projection holds an expression
+    the driver does not evaluate (a Python UDF)."""
+    if plan.nodeName() != "Project" or plan.child().nodeName() != "OneRowRelation" or not plan.deterministic():
+        return None
+    jvm = spark._jvm
+    if jvm not in _ONE_ROW:
+        gateway = jvm._gateway_client
+        rows = JavaClass("scala.jdk.javaapi.CollectionConverters", gateway).asScala(
+            [JavaClass("org.apache.spark.sql.Row", gateway).empty()]
+        )
+        local = JavaClass("org.apache.spark.sql.catalyst.plans.logical.LocalRelation", gateway)
+        _ONE_ROW[jvm] = plan.children().updated(0, local.fromExternalRows(plan.child().output(), rows.toSeq()))
+    dataset = JavaClass("org.apache.spark.sql.classic.Dataset", jvm._gateway_client)
+    scan = dataset.ofRows(spark._jsparkSession, plan.withNewChildren(_ONE_ROW[jvm])).queryExecution().executedPlan()
+    return scan if scan.nodeName() == "LocalTableScan" else None
 
 
 def _arrow_streams(jvm, rows, schema) -> list:

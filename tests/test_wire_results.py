@@ -179,3 +179,59 @@ def test_wire_reads_tables_whose_names_need_quotes(served, proto, ref):
         wire.query(f"DROP TABLE {ref}")
     finally:
         wire.close()
+
+
+AGG_CH = ("SELECT l_returnflag, uniq(l_suppkey) AS u, sumIf(l_quantity, l_discount > 0.05) AS q, "
+          "countIf(l_quantity > 25) AS n FROM lineitem WHERE l_orderkey < 400 GROUP BY l_returnflag")
+LIMITBY_MYSQL = ("SELECT user_id, event_id, value FROM events WHERE user_id < 20 "
+                 "ORDER BY user_id, event_id LIMIT 2 BY user_id")
+
+
+@pytest.mark.parametrize("sql", [AGG_CH, LIMITBY_MYSQL, "SELECT count(*) AS n, sum(o_orderkey) AS s FROM orders"])
+def test_small_wide_statement_runs_one_job(served, sql):
+    """The serving benchmark's aggregate and LIMIT BY shapes, and the
+    count/sum readback, over small tables: one task of one job, with
+    no Exchange (their inputs are under spark.sql.files.openCostInBytes)."""
+    engine = served[0]
+    for _ in range(2):  # the second read makes a small table resident
+        engine.sql_collect(sql)
+    df = engine.sql(sql)
+    assert "Exchange" not in df._jdf.queryExecution().executedPlan().toString()
+    assert _jobs(engine, lambda: engine.sql_collect(sql)) == 1
+
+
+def test_memory_readback_runs_one_job(served):
+    """The serving benchmark's readback of a Memory table its INSERT
+    batches filled: a global aggregate over one LocalRelation, one job."""
+    engine = served[0]
+    engine.sql("CREATE TABLE pb_mem (id BIGINT, k INT) ENGINE = Memory")
+    try:
+        for b in range(3):
+            engine.sql("INSERT INTO pb_mem VALUES " + ", ".join(f"({b * 10 + i}, {i})" for i in range(10)))
+        sql = "SELECT count(*) AS n, sum(id) AS s FROM pb_mem"
+        assert _jobs(engine, lambda: engine.sql_collect(sql)) == 1
+        assert to_rows(engine.sql_collect(sql)[1])[0] == (30, sum(range(30)))
+    finally:
+        engine.sql("DROP TABLE pb_mem")
+
+
+def test_constant_select_submits_no_job(served):
+    """SELECT 1, the liveness check wire clients send, is answered on
+    the driver through sql_collect and both servers, with the Arrow
+    table toArrow() gives."""
+    engine, ports, _ = served
+    for sql in ("SELECT 1", "SELECT 1 AS one, 'x' AS s, 2.5 AS d, toDate('2020-01-02') AS day"):
+        assert _jobs(engine, lambda: engine.sql_collect(sql)) == 0, sql
+        _, table = engine.sql_collect(sql)
+        assert table.equals(engine.sql(sql).toArrow()), sql
+    for proto, port in ports.items():
+        wire = _Wire(proto, port)
+        try:
+            got = []
+            assert _jobs(engine, lambda: got.extend(wire.query("SELECT 1"))) == 0, proto
+            assert int(got[0][0]) == 1, proto
+        finally:
+            wire.close()
+    # a nondeterministic projection still runs as a job
+    _, table = engine.sql_collect("SELECT rand(3) < 2 AS r")
+    assert table.column("r").to_pylist() == [True]
